@@ -20,6 +20,12 @@ import scala.collection.mutable
   * query whose cost is in the computed columns.
   */
 object Bench {
+  /** A JSON number with `digits` decimals, formatted under `Locale.ROOT`
+    * so a comma-decimal default locale cannot break the emitted JSON.
+    */
+  def jnum(v: Double, digits: Int = 3): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // The driver contract runs the bench at local[32] (32-thread, 128 GiB
@@ -290,11 +296,11 @@ object Bench {
           f"$graphSec%.1f lines/s=${nLines / graphSec}%.0f " +
           f"stats=$statsG alerts=$alertsG (in-mem sec=$streamSec%.1f)")
         val streamCore =
-          f""","stream":{"lines":$nLines,"sec":$streamSec%.1f,"lines_per_sec":${nLines / streamSec}%.0f,"stats_rows":$statsRows,"stats_rows_per_sec":${statsRows / streamSec}%.0f,"alerts":$alertRows,"s34_sec":$s34Sec%.1f}"""
+          s""","stream":{"lines":$nLines,"sec":${jnum(streamSec, 1)},"lines_per_sec":${jnum(nLines / streamSec, 0)},"stats_rows":$statsRows,"stats_rows_per_sec":${jnum(statsRows / streamSec, 0)},"alerts":$alertRows,"s34_sec":${jnum(s34Sec, 1)}}"""
         (streamCore +
-          f""","stream_file":{"s34_sec":$fileSec%.1f,"alerts":$alertsF,"graph_sec":$graphSec%.1f,"graph_lines_per_sec":${nLines / graphSec}%.0f,"graph_stats_rows":$statsG,"graph_stats_rows_per_sec":${statsG / graphSec}%.0f,"graph_alerts":$alertsG}""",
+          s""","stream_file":{"s34_sec":${jnum(fileSec, 1)},"alerts":$alertsF,"graph_sec":${jnum(graphSec, 1)},"graph_lines_per_sec":${jnum(nLines / graphSec, 0)},"graph_stats_rows":$statsG,"graph_stats_rows_per_sec":${jnum(statsG / graphSec, 0)},"graph_alerts":$alertsG}""",
          streamCore +
-          f""","stream_file":{"s34_sec":$fileSec%.1f,"g_lps":${nLines / graphSec}%.0f}""")
+          s""","stream_file":{"s34_sec":${jnum(fileSec, 1)},"g_lps":${jnum(nLines / graphSec, 0)}}""")
       } catch { case e: Throwable =>
         System.err.println(s"[bench] stream bench FAILED: ${e.getClass.getName}: ${e.getMessage}")
         errors("stream_graph") = e.getClass.getSimpleName
@@ -303,11 +309,10 @@ object Bench {
     }
     val streamJson = streamPair._1
     val streamJsonCompact = streamPair._2
-    def jnum(v: Double): String = f"$v%.3f"
     val qs = results.map { case (k, w, _, _) => s""""$k":${jnum(w)}""" }.mkString("{", ",", "}")
     val cpu = results.map { case (k, _, c, _) => s""""$k":${jnum(c)}""" }.mkString("{", ",", "}")
     val passJson = results.map { case (k, _, _, ps) =>
-      s""""$k":${ps.map(jnum).mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
+      s""""$k":${ps.map(jnum(_)).mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
     val errJson = errors.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -374,7 +379,7 @@ object Bench {
     // when the tail buffer is large enough and sees no change when it
     // is not (a clipped fragment no longer starts with '{' and parses
     // as nothing). Centisecond precision keeps it ~3.5 KB.
-    val qsCenti = results.map { case (k, w, _, _) => s""""$k":${f"$w%.2f"}""" }
+    val qsCenti = results.map { case (k, w, _, _) => s""""$k":${jnum(w, 2)}""" }
       .mkString("{", ",", "}")
     val cpusJson = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus
       else "\"" + cpus.replace("\"", "") + "\""

@@ -129,15 +129,18 @@ object VecOps {
   /** Index-order fold sum `(((0.0 + a[0]) + a[1]) + ...)` — the same
     * operation sequence as `aggregate(a, 0.0, (acc, x) => acc + x)` (and
     * the oracle's `list_reduce(list_prepend(0.0, a), ...)`), so results
-    * are bit-identical. Elements must be non-null (the callers feed
-    * `collect_list` outputs / `getField` over non-null structs — the
-    * same invariant the HOF form silently relied on: a null element
-    * would have nulled its whole fold).
+    * are bit-identical. A null element nulls the sum, as it nulled the
+    * HOF fold; arrays typed without null elements skip the check.
     */
   case class VecSum(child: Expression) extends UnaryExpression {
     override def checkInputDataTypes(): TypeCheckResult =
       checkVecInputs("vec_sum", Seq(child.dataType))
     override def dataType: DataType = DoubleType
+    private def elemNullable: Boolean = child.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => false
+    }
+    override def nullable: Boolean = child.nullable || elemNullable
     override protected def withNewChildInternal(newChild: Expression): VecSum =
       copy(child = newChild)
 
@@ -146,7 +149,11 @@ object VecOps {
       val n = x.numElements()
       var acc = 0.0
       var i = 0
-      while (i < n) { acc += x.getDouble(i); i += 1 }
+      while (i < n) {
+        if (x.isNullAt(i)) return null
+        acc += x.getDouble(i)
+        i += 1
+      }
       java.lang.Double.valueOf(acc)
     }
 
@@ -155,10 +162,14 @@ object VecOps {
         val i = ctx.freshName("i")
         val n = ctx.freshName("n")
         val acc = ctx.freshName("acc")
+        val nullCheck =
+          if (elemNullable) s"if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }"
+          else ""
         s"""
           int $n = $a.numElements();
           double $acc = 0.0;
           for (int $i = 0; $i < $n; $i++) {
+            $nullCheck
             $acc += $a.getDouble($i);
           }
           ${ev.value} = $acc;

@@ -1550,17 +1550,19 @@ object Similarity {
 
   /** Byte-copy `rels` parquet relation dirs from one snapshot dir to
     * another (overwrite). Filesystem metadata+data copy only — no Spark
-    * jobs, no decode.
+    * jobs, no decode. Each side resolves its own FileSystem, so the two
+    * roots may live on different ones.
     */
-  private def copyParquetDir(spark: SparkSession, fromDir: String,
+  private[graft] def copyParquetDir(spark: SparkSession, fromDir: String,
       toDir: String, rels: Seq[String]): Unit = {
     import org.apache.hadoop.fs.{FileUtil, Path}
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(toDir).getFileSystem(conf)
+    val srcFs = new Path(fromDir).getFileSystem(conf)
+    val dstFs = new Path(toDir).getFileSystem(conf)
     rels.foreach { rel =>
       val dst = new Path(s"$toDir/$rel")
-      fs.delete(dst, true)
-      FileUtil.copy(fs, new Path(s"$fromDir/$rel"), fs, dst,
+      dstFs.delete(dst, true)
+      FileUtil.copy(srcFs, new Path(s"$fromDir/$rel"), dstFs, dst,
         false, true, conf)
     }
   }

@@ -51,14 +51,18 @@ object ApmGraph {
     * the RocksDB state store (transformWithState requires it).
     *
     * `stage1MaxFiles` is stage 1's per-micro-batch file admission bound
-    * (LogFileSource's `maxFilesPerTrigger`). It interacts with the
-    * stats window's GLOBAL watermark on a COLD BACKFILL: rotated log
-    * files from many hosts cover the same time range, so admitting them
-    * across several micro-batches advances the watermark past the
-    * still-unadmitted files' whole span and silently window-drops them
-    * (alarmed on `t_ops`, but dropped). Live tailing is immune — new
-    * files carry only recent event times — but a backfill must either
-    * admit the backlog in one batch (raise this above the backlog's
+    * (the `graftlogs` source's `maxFilesPerTrigger`; files are admitted
+    * oldest modification time first, and listing them runs no Spark
+    * job however many there are). It interacts with the stats window's
+    * GLOBAL watermark on a COLD BACKFILL: host logs that each cover the
+    * same time range, admitted across several micro-batches, advance
+    * the watermark past the still-unadmitted files' whole span and
+    * silently window-drop them (alarmed on `t_ops`, but dropped).
+    * Rotated chunk files written in time order are safe under any bound
+    * as long as one chunk's event-time span fits in `lateness`
+    * (LogFileStreamSpec drains 104 such files 10 at a time with no
+    * drop), and so is live tailing; a backfill of whole host logs must
+    * either admit them in one batch (raise this above the backlog's
     * file count; StreamScaleProbe's hosts axis measures that shape) or
     * size `lateness` to the backlog's event-time span, the same
     * recovery-skew discipline the ordered cooldown documents.

@@ -273,4 +273,27 @@ class AnnIndexSpec extends AnyFunSuite {
     // each compaction strictly shrinks the codes relation
     assert(out(0)._2 > out(1)._2 && out(1)._2 > out(2)._2)
   }
+
+  test("snapshot byte-copy reads the source through its own filesystem") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.aliaslocal.impl", classOf[AliasLocalFs].getName)
+    val base = java.nio.file.Files.createTempDirectory("graft_copy").toString
+    val from = s"$base/from"
+    spark.range(20).selectExpr("id", "id * 1.5 AS v")
+      .write.parquet(s"$from/centroids")
+    spark.range(7).write.parquet(s"$from/codebook")
+    // the source lives on another scheme than the destination
+    Similarity.copyParquetDir(spark, s"aliaslocal:$from", s"file:$base/to",
+      Seq("centroids", "codebook"))
+    Seq("centroids", "codebook").foreach { rel =>
+      def rows(dir: String) = spark.read.parquet(s"$dir/$rel").collect().toSet
+      assert(rows(s"$base/to") == rows(from), rel)
+    }
+  }
+}
+
+/** The local filesystem under a second scheme, `aliaslocal:`. */
+class AliasLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("aliaslocal:///")
+  override def getScheme: String = "aliaslocal"
 }

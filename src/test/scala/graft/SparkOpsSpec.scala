@@ -343,6 +343,37 @@ class SparkOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("vec_sum nulls on a null element like the HOF fold, interpreted == codegen") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("arr", ArrayType(DoubleType, containsNull = true))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, Seq(1.5, null, 2.0)), Row(2L, Seq(1.5, 2.0)), Row(3L, null),
+      Row(4L, Seq.empty[Double]), Row(5L, Seq(null)))), schema)
+    def run(codegen: Boolean): Seq[(Long, Option[Double], Option[Double])] = {
+      spark.conf.set("spark.sql.codegen.factoryMode",
+        if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+      spark.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+      try df.select(col("id"),
+          graft.functions.VecOps.vec_sum(col("arr")),
+          aggregate(col("arr"), lit(0.0), (a, x) => a + x))
+        .collect().toSeq
+        .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Double]),
+          Option(r.get(2)).map(_.asInstanceOf[Double])))
+        .sortBy(_._1)
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+    val interpreted = run(codegen = false)
+    assert(interpreted == run(codegen = true))
+    assert(interpreted.map(r => r._1 -> r._2) == Seq(1L -> None, 2L -> Some(3.5),
+      3L -> None, 4L -> Some(0.0), 5L -> None))
+    interpreted.foreach(r => assert(r._2 == r._3, s"id=${r._1}: native vs HOF"))
+  }
+
   test("zScoreWindowed stacked lags == union of single-lag evaluations") {
     // r15 restructured zScoreWindowed from union-per-lag to a stacked
     // explode; a single-lag call degenerates to the old per-branch
