@@ -264,11 +264,11 @@ object Bench {
         // transport delta at identical data and identical stage code.
         val workF = base.resolve("workf").toString
         val f0 = System.nanoTime()
+        val firedTopic = graft.streaming.ApmGraph.Topic("bench_fired",
+          Some(base.resolve("qdir").toString))
         graft.streaming.ApmGraph.runStage3Queued(spark, workF, cfg,
-          "bench_fired", queueDir = Some(base.resolve("qdir").toString),
-          zscoreDir = Some(s"$work/zscore"))
-        graft.streaming.ApmGraph.runStage4Queued(spark, workF, cfg,
-          "bench_fired", queueDir = Some(base.resolve("qdir").toString))
+          graft.streaming.ApmGraph.ParquetDir(s"$work/zscore"), firedTopic)
+        graft.streaming.ApmGraph.runStage4Queued(spark, workF, cfg, firedTopic)
         val fileSec = (System.nanoTime() - f0) / 1e9
         val alertsF = cnt(s"$workF/alerts")
         System.err.println(f"[bench] stream_file s34=$fileSec%.1f s " +

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.operators.{Alerts, Parsing, ZScore}
 import graft.sources.LogFileSource
@@ -12,30 +12,37 @@ import graft.sources.LogFileSource
   * tail -> parse -> stats -> z-score -> alerts, processes connected by
   * RabbitMQ queues, config/apm_config.json:87-178).
   *
-  * Spark-native realization: a chain of Structured Streaming queries
-  * connected by append-only parquet directories — the queue analogue
-  * available in this container (each directory is a durable, replayable
-  * topic; `readStream.parquet` is the consumer (S4), the upstream query's
-  * sink the producer (S3); with a Kafka connector jar each handoff becomes
-  * `writeStream.format("kafka")` / `readStream.format("kafka")` with the
-  * same stage code unchanged). Checkpoints give each stage S7
-  * resume-exactly-once; `Trigger.AvailableNow` drains whatever is pending
-  * and stops, which is also the deterministic test harness mode. The
-  * broker contract the Kafka transport would add (partitioned offsets,
-  * poll batching, committed-offset resume, at-least-once redelivery) is
-  * modeled and test-pinned by [[QueueContract]] so the stage code's
-  * assumptions stay documented even without a connector jar.
-  *
-  * Stages:
-  *  1. tail+route (S1/P1, LogFileSource) -> parse exits (P5) -> TEE (R6):
-  *     the parsed tx stream lands both raw (`tee/`) and into the stats
-  *     window aggregation (A1-A7) -> `stats/`.
-  *  2. `stats/` -> lag fan-out (Z5) -> keyed z-score state (Z1/Z2) ->
-  *     `zscore/`.
-  *  3. `zscore/` -> candidate predicates (R1/R2, stream-static broadcast
-  *     config join) -> leaky-bucket vote fold (R3) -> `fired/`.
-  *  4. `fired/` -> per-service cooldown (R4) -> ordered sink (A7) ->
+  * Spark-native realization: a chain of Structured Streaming queries,
+  * one per stage, each stage's transform written once:
+  *  1. tail+route (S1/P1, LogFileSource) -> parse exits (P5) -> stats
+  *     window aggregation (A1-A7) -> `stats`; over the parquet handoff
+  *     the parsed tx stream also lands raw in `tee/` (R6).
+  *  2. `stats` -> lag fan-out (Z5) -> keyed z-score state (Z1/Z2) ->
+  *     `zscore`.
+  *  3. `zscore` -> candidate predicates (R1/R2, stream-static broadcast
+  *     config join) -> leaky-bucket vote fold (R3) -> `fired`.
+  *  4. `fired` -> per-service cooldown (R4; arrival order, or event-time
+  *     order under `GraphCfg.orderedCooldown`) -> ordered sink (A7) ->
   *     `alerts/`.
+  *
+  * Each stage boundary is an [[ApmGraph.Edge]], and the same stage code
+  * runs over either transport:
+  *  - a parquet topic directory under the work dir ([[runStage1]] ..
+  *    [[runStage4]]): each directory is a durable, replayable topic;
+  *    the upstream query's file sink is the producer (S3),
+  *    `readStream.parquet` the consumer (S4);
+  *  - a `graftqueue` topic ([[runStageQueued]] and the `...Queued`
+  *    entry points): key + JSON value over the in-JVM registry, a
+  *    file-backed topic directory shared across processes, or a TCP
+  *    broker. With a Kafka connector jar the same edge helpers would
+  *    become `format("kafka")`.
+  *
+  * Checkpoints give each stage S7 resume-exactly-once;
+  * `Trigger.AvailableNow` drains whatever is pending and stops, which is
+  * also the deterministic test harness mode. The broker contract the
+  * Kafka transport would add (partitioned offsets, poll batching,
+  * committed-offset resume, at-least-once redelivery) is modeled and
+  * test-pinned by [[QueueContract]].
   *
   * (3 and 4 are separate queries because a flatMapGroupsWithState must be
   * the last stateful operator of its query — exactly the reason the
@@ -43,7 +50,8 @@ import graft.sources.LogFileSource
   */
 object ApmGraph {
 
-  /** `orderedCooldown` opts stage 4 into the DETERMINISTIC cooldown
+  /** `orderedCooldown` opts stage 4 (over either handoff) into the
+    * DETERMINISTIC cooldown
     * ([[ApmStateV2.cooldownStreamOrdered]]): fired candidates fold in
     * event-time order across servers (the batch oracle's semantics)
     * instead of the reference-faithful arrival order, at the price of a
@@ -87,116 +95,217 @@ object ApmGraph {
   private val zOutSchema: StructType = Encoders.product[ApmStreaming.ZOut].schema
   private val voteOutSchema: StructType = Encoders.product[ApmStreaming.VoteOut].schema
 
-  private def await(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def await(q: StreamingQuery): Unit = {
     q.awaitTermination(); ()
   }
 
-  // Each stage has a `startStageN` (returns the running query — a real
-  // deployment starts all four concurrently on processing-time triggers;
-  // GraphFaultSpec uses the handles to kill queries mid-drain) and a
-  // `runStageN` that drains it to completion (AvailableNow), which is
-  // also the deterministic test mode.
+  // ------------------------------------------------------------- handoffs
 
-  /** Stage 1: tail logs -> route -> parse -> [tee] + window stats. Runs
-    * both sinks to completion (AvailableNow).
+  /** One stage boundary. Every stage's transform is written once; the
+    * edge around it picks the transport, and only [[read]] and [[write]]
+    * know the difference.
     */
-  def runStage1(spark: SparkSession, logsGlob: String, workDir: String,
-      cfg: GraphCfg): Unit = {
+  sealed trait Edge
+
+  /** A parquet topic directory: the upstream query's file sink produces
+    * (S3), `readStream.parquet` consumes (S4). One writer, any number of
+    * readers, each with its own checkpoint — so a reader may name a
+    * directory OWNED by another pipeline's work dir. (A file-sink output
+    * cannot be symlinked or copied instead: its `_spark_metadata` log
+    * records absolute paths, and a relocated clone lists as empty.)
+    */
+  final case class ParquetDir(path: String) extends Edge
+
+  /** A `format("graftqueue")` topic — the handoff the reference runs over
+    * RabbitMQ (config/apm_config.json:87-178) and a cluster would run
+    * over Kafka. `queueDir` is the connector's `dir` option: `None` is
+    * the in-JVM registry; a directory is the file-backed transport,
+    * shared across PROCESSES, so each stage can run in its own JVM (the
+    * reference's deployment topology); a `broker://` URL dials a
+    * [[SocketBroker]].
+    */
+  final case class Topic(name: String, queueDir: Option[String] = None)
+      extends Edge
+
+  /** `in` as a streaming frame of `schema`'s columns: a schema'd parquet
+    * read, or a topic read whose JSON `value` is parsed back. `group` is
+    * the topic consumer group; `limit` bounds one micro-batch's
+    * admission (files per trigger for a directory, records per partition
+    * for a topic) — the backfill rate limiter.
+    */
+  private def read(spark: SparkSession, in: Edge, schema: StructType,
+      group: String, limit: Option[Int] = None): DataFrame = in match {
+    case ParquetDir(path) =>
+      val r = spark.readStream.schema(schema)
+      limit.foreach(n => r.option("maxFilesPerTrigger", n))
+      r.parquet(path)
+    case Topic(name, queueDir) =>
+      val r = spark.readStream.format("graftqueue")
+        .option("topic", name).option("group", group)
+      queueDir.foreach(d => r.option("dir", d))
+      limit.foreach(n => r.option("maxpoll", n))
+      r.load().select(from_json(col("value"), schema).as("r"))
+        .select(col("r.*"))
+  }
+
+  /** Start the query that drains `df` to `out`, repartitioned by `keys`.
+    *
+    * Keyed-stage ordering contract (all stage boundaries): an upstream
+    * stateful operator's sink tasks are hashed by its own grouping, so
+    * ONE epoch's rows for a key would span several tasks/files — a
+    * downstream admission boundary (maxFilesPerTrigger, a queue drain
+    * end) landing mid-epoch could then deliver a key's rows
+    * ts-misordered ACROSS micro-batches, which the keyed folds
+    * (within-batch sort only) cannot repair. Repartitioning by the
+    * downstream KEY puts each key's whole epoch in one task (one file /
+    * one atomic queue batch), so any split between files or task
+    * batches preserves per-key order; cross-epoch order is
+    * watermark-monotonic. On a topic the record key is `keys` joined by
+    * '|' and the value is the row as JSON, so partition-local queue
+    * order — the only order a broker guarantees — is per-key order.
+    */
+  private def write(df: DataFrame, keys: Seq[String], out: Edge,
+      checkpoint: String): StreamingQuery = {
+    val w = out match {
+      case ParquetDir(path) =>
+        df.repartition(keys.map(col): _*)
+          .writeStream.format("parquet").option("path", path)
+      case Topic(name, queueDir) =>
+        val w = df.select(concat_ws("|", keys.map(col): _*).as("key"),
+            to_json(struct(col("*"))).as("value"))
+          .repartition(col("key"))
+          .writeStream.format("graftqueue").option("topic", name)
+        queueDir.foreach(d => w.option("dir", d))
+        w
+    }
+    w.option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+  }
+
+  /** A stage's checkpoint under `workDir`, named for the edge it drains
+    * to (stage 4: from): a queue edge's is suffixed `_q`, so one work dir
+    * can hold both handoffs' progress.
+    */
+  private def checkpoint(workDir: String, name: String, edge: Edge): String =
+    edge match {
+      case _: Topic => s"$workDir/ckpt_${name}_q"
+      case _: ParquetDir => s"$workDir/ckpt_$name"
+    }
+
+  // ---------------------------------------------------------- the stages
+
+  /** Stage 1: tail logs -> route -> parse exits -> window stats -> `out`,
+    * run to completion. Over a parquet handoff the parsed tx stream is
+    * also teed raw to `tee/` (R6: same stream, second sink, own
+    * checkpoint). Over a queue the stats window's watermark drops are
+    * published on `t_ops` ([[awaitWithDropMetrics]]).
+    */
+  private def stage1(spark: SparkSession, logsGlob: String, workDir: String,
+      cfg: GraphCfg, out: Edge): Unit = {
     val lines = LogFileSource.stream(spark, logsGlob, cfg.stage1MaxFiles)
     val parsed = Parsing.extractStdExit(
         lines.filter(col("log_type") === "server_log"))
       .select(col("server"), col("service"),
         timestamp_millis(col("end_ms")).as("end_ts"), col("elapsed"))
-    // R6 passthrough tee: same stream, second sink (own checkpoint).
-    val tee = parsed.writeStream
-      .format("parquet")
-      .option("path", s"$workDir/tee")
-      .option("checkpointLocation", s"$workDir/ckpt_tee")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    // Keyed-stage ordering contract (all four stage boundaries): the
-    // window agg's sink tasks are hashed by (key, window), so ONE
-    // epoch's rows for a key would span several tasks/files — a
-    // downstream admission boundary (maxFilesPerTrigger, a queue drain
-    // end) landing mid-epoch could then deliver a key's rows
-    // ts-misordered ACROSS micro-batches, which the keyed folds
-    // (within-batch sort only) cannot repair. Repartitioning by KEY
-    // before every stage sink puts each key's whole epoch in one task
-    // (one file / one atomic queue batch), so any split between files
-    // or task batches preserves per-key order; cross-epoch order is
-    // watermark-monotonic.
     val stats = ApmStreaming.slidingStatsStream(
-        parsed, cfg.windowLen, cfg.slide, cfg.lateness)
-      .repartition(col("server"), col("service"))
-      .writeStream
-      .format("parquet")
-      .option("path", s"$workDir/stats")
-      .option("checkpointLocation", s"$workDir/ckpt_stats")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    await(tee); await(stats)
+      parsed, cfg.windowLen, cfg.slide, cfg.lateness)
+    def start = write(stats, Seq("server", "service"), out,
+      checkpoint(workDir, "stats", out))
+    out match {
+      case _: ParquetDir =>
+        val tee = parsed.writeStream
+          .format("parquet")
+          .option("path", s"$workDir/tee")
+          .option("checkpointLocation", s"$workDir/ckpt_tee")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        val q = start
+        await(tee); await(q)
+      case Topic(_, queueDir) =>
+        awaitWithDropMetrics(spark, start, "stage1", queueDir)
+    }
   }
 
-  /** Stage 2: stats -> lag fan-out -> keyed z-score state.
-    * `maxFilesPerTrigger` caps how many stats files one micro-batch
-    * admits — the backfill rate limiter (and the knob GraphFaultSpec
-    * uses to split a drain into epochs it can kill between).
+  /** Stage 2: stats -> lag fan-out (Z5) -> keyed z-score state (Z1/Z2). */
+  private def stage2(spark: SparkSession, workDir: String, cfg: GraphCfg,
+      in: Edge, out: Edge, limit: Option[Int]): StreamingQuery = {
+    val stats = read(spark, in, statsSchema, "stage2", limit)
+    write(ApmStreaming.zScoreStream(
+        ApmStreaming.fanOutLags(stats, Seq(cfg.lag))).toDF(),
+      Seq("server", "service"), out, checkpoint(workDir, "z", out))
+  }
+
+  /** Stage 3: z-scored rows -> candidate flags (R1/R2, stream-static
+    * broadcast config join) -> leaky-bucket vote fold (R3). Fired rows
+    * are keyed by SERVICE, the key the stage-4 cooldown groups on.
+    */
+  private def stage3(spark: SparkSession, workDir: String, cfg: GraphCfg,
+      in: Edge, out: Edge): StreamingQuery = {
+    import spark.implicits._
+    val cand = Alerts.candidates(read(spark, in, zOutSchema, "stage3"), cfg.alert)
+      .select(col("server"), col("service"), col("lag"), col("ts_ms"),
+        col("bad"), col("causes")).as[ApmStreaming.VoteIn]
+    write(ApmStreaming.voteStream(cand, cfg.alert).toDF(), Seq("service"),
+      out, checkpoint(workDir, "fired", out))
+  }
+
+  /** Stage 4: per-service cooldown (R4) -> ordered alert sink (A7)
+    * `alerts/`. The cooldown is the arrival-order fold, or the
+    * event-time one when `cfg.orderedCooldown` is set (see [[GraphCfg]]).
+    * `afterBatch` is [[ApmStreaming.sinkToParquet]]'s fault-injection
+    * point.
+    */
+  private def stage4(spark: SparkSession, workDir: String, cfg: GraphCfg,
+      in: Edge, group: String, limit: Option[Int],
+      afterBatch: Long => Unit): StreamingQuery = {
+    import spark.implicits._
+    val fired = read(spark, in, voteOutSchema, group, limit)
+      .as[ApmStreaming.VoteOut]
+    val alerts =
+      if (cfg.orderedCooldown)
+        ApmStateV2.cooldownStreamOrdered(fired, cfg.alert, cfg.orderedDelay)
+      else ApmStreaming.cooldownStream(fired, cfg.alert)
+    ApmStreaming.sinkToParquet(alerts.toDF(), s"$workDir/alerts",
+      checkpoint(workDir, "alerts", in), orderCol = Some("ts_ms"),
+      availableNow = true, afterBatch = afterBatch)
+  }
+
+  // ------------------------------------------------ parquet-handoff graph
+  // Each stage has a `runStageN` that drains it to completion
+  // (AvailableNow), which is also the deterministic test mode; stages 2
+  // and 4 also have a `startStageN` returning the running query (a real
+  // deployment starts all four concurrently on processing-time
+  // triggers; GraphFaultSpec uses the handles to kill queries
+  // mid-drain).
+
+  def runStage1(spark: SparkSession, logsGlob: String, workDir: String,
+      cfg: GraphCfg): Unit =
+    stage1(spark, logsGlob, workDir, cfg, ParquetDir(s"$workDir/stats"))
+
+  /** `maxFilesPerTrigger` caps how many stats files one micro-batch
+    * admits (GraphFaultSpec uses it to split a drain into epochs it can
+    * kill between).
     */
   def startStage2(spark: SparkSession, workDir: String, cfg: GraphCfg,
-      maxFilesPerTrigger: Option[Int] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val reader = spark.readStream.schema(statsSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stats = reader.parquet(s"$workDir/stats")
-    val z = ApmStreaming.zScoreStream(
-      ApmStreaming.fanOutLags(stats, Seq(cfg.lag)))
-    // key-repartitioned before the sink: per-key epoch atomicity (see
-    // runStage1's ordering-contract note)
-    z.repartition(col("server"), col("service"))
-      .writeStream
-      .format("parquet")
-      .option("path", s"$workDir/zscore")
-      .option("checkpointLocation", s"$workDir/ckpt_z")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    stage2(spark, workDir, cfg, ParquetDir(s"$workDir/stats"),
+      ParquetDir(s"$workDir/zscore"), maxFilesPerTrigger)
 
   def runStage2(spark: SparkSession, workDir: String, cfg: GraphCfg): Unit =
     await(startStage2(spark, workDir, cfg))
 
-  /** Stage 3: z-scored frame -> candidate flags -> vote fold. */
-  def runStage3(spark: SparkSession, workDir: String, cfg: GraphCfg): Unit = {
-    import spark.implicits._
-    val z = spark.readStream.schema(zOutSchema).parquet(s"$workDir/zscore")
-    val cand = Alerts.candidates(z, cfg.alert)
-      .select(col("server"), col("service"), col("lag"), col("ts_ms"),
-        col("bad"), col("causes")).as[ApmStreaming.VoteIn]
-    val fired = ApmStreaming.voteStream(cand, cfg.alert)
-    await(fired.repartition(col("service")) // per-key epoch atomicity
-      .writeStream
-      .format("parquet")
-      .option("path", s"$workDir/fired")
-      .option("checkpointLocation", s"$workDir/ckpt_fired")
-      .trigger(Trigger.AvailableNow())
-      .start())
-  }
+  def runStage3(spark: SparkSession, workDir: String, cfg: GraphCfg): Unit =
+    await(stage3(spark, workDir, cfg, ParquetDir(s"$workDir/zscore"),
+      ParquetDir(s"$workDir/fired")))
 
-  /** Stage 4: cooldown dedup -> ordered alert sink (A7). `afterBatch`
-    * is [[ApmStreaming.sinkToParquet]]'s fault-injection point (runs in
-    * the window between the sink's data write and the epoch commit);
-    * production callers leave it a no-op.
+  /** `afterBatch` runs in the window between the alert sink's data write
+    * and the epoch commit; production callers leave it a no-op.
     */
   def startStage4(spark: SparkSession, workDir: String, cfg: GraphCfg,
-      afterBatch: Long => Unit = _ => ())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val fired = spark.readStream.schema(voteOutSchema)
-      .parquet(s"$workDir/fired").as[ApmStreaming.VoteOut]
-    val alerts = ApmStreaming.cooldownStream(fired, cfg.alert)
-    ApmStreaming.sinkToParquet(alerts.toDF(), s"$workDir/alerts",
-      s"$workDir/ckpt_alerts", orderCol = Some("ts_ms"),
-      availableNow = true, afterBatch = afterBatch)
-  }
+      afterBatch: Long => Unit = _ => ()): StreamingQuery =
+    stage4(spark, workDir, cfg, ParquetDir(s"$workDir/fired"), "stage4",
+      None, afterBatch)
 
   def runStage4(spark: SparkSession, workDir: String, cfg: GraphCfg): Unit =
     await(startStage4(spark, workDir, cfg))
@@ -210,150 +319,27 @@ object ApmGraph {
     runStage4(spark, workDir, cfg)
   }
 
-  // ------------------------------------------- queue-transport handoff
-  // The same stage 3 -> stage 4 boundary, but through the
-  // `format("graftqueue")` connector (S3/S4) instead of a parquet topic
-  // directory — the handoff the reference runs over RabbitMQ
-  // (config/apm_config.json:87-178) and a cluster would run over Kafka.
-  // The wire value is the JSON-serialized VoteOut keyed by SERVICE, so
-  // partition-local queue ordering preserves per-service order — exactly
-  // the property the stage-4 cooldown fold relies on (and the broker
-  // contract guarantees only within a partition).
+  // -------------------------------------------------- queue-handoff graph
 
-  /** Stage 3 variant producing fired rows to a queue topic. `queueDir`
-    * selects the file-backed transport (see GraftQueueConnector's `dir`
-    * option): the topic directory is shared across PROCESSES, so stage 4
-    * can run in a separate JVM — the reference's actual deployment
-    * topology. `zscoreDir` lets this producer read a zscore topic
-    * directory OWNED by another pipeline's work dir (a parquet topic has
-    * one writer, many consumers — each consumer only needs its own
-    * checkpoint, which stays under `workDir`); a file-sink output cannot
-    * be symlinked or copied instead, since its `_spark_metadata` log
-    * records absolute paths and a relocated clone lists as empty.
+  /** Stage 3 from `in` — a zscore directory or a z topic — to the fired
+    * topic `out`.
     */
   def runStage3Queued(spark: SparkSession, workDir: String, cfg: GraphCfg,
-      topic: String, nPartitions: Int = 4,
-      queueDir: Option[String] = None,
-      zscoreDir: Option[String] = None): Unit = {
-    import spark.implicits._
-    val z = spark.readStream.schema(zOutSchema)
-      .parquet(zscoreDir.getOrElse(s"$workDir/zscore"))
-    val cand = Alerts.candidates(z, cfg.alert)
-      .select(col("server"), col("service"), col("lag"), col("ts_ms"),
-        col("bad"), col("causes")).as[ApmStreaming.VoteIn]
-    val fired = ApmStreaming.voteStream(cand, cfg.alert)
-    val w = fired
-      .select(col("service").as("key"),
-        to_json(struct(col("server"), col("service"), col("lag"),
-          col("ts_ms"), col("causes"))).as("value"))
-      .repartition(col("key")) // per-key epoch atomicity (runStage1 note)
-      .writeStream
-      .format("graftqueue")
-      .option("topic", topic)
-      .option("partitions", nPartitions)
-      .option("checkpointLocation", s"$workDir/ckpt_fired_q")
-      .trigger(Trigger.AvailableNow())
-    queueDir.foreach(d => w.option("dir", d))
-    await(w.start())
-  }
+      in: Edge, out: Topic): Unit =
+    await(stage3(spark, workDir, cfg, in, out))
 
-  /** Stage 1 variant producing STATS rows to a queue topic instead of a
-    * parquet directory — the first handoff of the fully-queued topology
-    * ([[runStageQueued]]): every stage boundary over the file-backed
-    * broker, one OS process per stage, the reference's actual
-    * deployment shape (six processes wired by a broker,
-    * config/apm_config.json:58-81). Rows are keyed by `server|service`
-    * so partition-local queue order preserves per-key order — the only
-    * ordering the downstream keyed folds need (and the only one a
-    * broker guarantees). The value is the JSON StatsRow.
+  /** Stage 4 consuming fired rows from the topic `in` under consumer
+    * `group`. `maxPoll` bounds records per micro-batch (the connector's
+    * admission option) — production leaves it unbounded; the drop-
+    * exactness spec uses it to force a >100-batch drain. Watermark and
+    * ledger drops are published on `t_ops`.
     */
-  def runStage1Queued(spark: SparkSession, logsGlob: String, workDir: String,
-      cfg: GraphCfg, topic: String, nPartitions: Int = 4,
-      queueDir: Option[String] = None): Unit = {
-    val lines = LogFileSource.stream(spark, logsGlob, cfg.stage1MaxFiles)
-    val parsed = Parsing.extractStdExit(
-        lines.filter(col("log_type") === "server_log"))
-      .select(col("server"), col("service"),
-        timestamp_millis(col("end_ms")).as("end_ts"), col("elapsed"))
-    val w = ApmStreaming.slidingStatsStream(
-        parsed, cfg.windowLen, cfg.slide, cfg.lateness)
-      .select(concat_ws("|", col("server"), col("service")).as("key"),
-        to_json(struct(col("*"))).as("value"))
-      .repartition(col("key")) // per-key epoch atomicity (runStage1 note)
-      .writeStream
-      .format("graftqueue")
-      .option("topic", topic)
-      .option("partitions", nPartitions)
-      .option("checkpointLocation", s"$workDir/ckpt_stats_q")
-      .trigger(Trigger.AvailableNow())
-    queueDir.foreach(d => w.option("dir", d))
-    // the stats window's lateness bound is the graph's OTHER silent
-    // watermark drop point — same t_ops alarm channel as stage 4
-    awaitWithDropMetrics(spark, w.start(), "stage1", queueDir)
-  }
-
-  /** Stage 2 variant: consume stats from a queue topic, produce z-scored
-    * rows to another. Same key discipline as [[runStage1Queued]].
-    */
-  def runStage2Queued(spark: SparkSession, workDir: String, cfg: GraphCfg,
-      inTopic: String, outTopic: String, group: String = "stage2",
-      nPartitions: Int = 4, queueDir: Option[String] = None): Unit = {
-    import spark.implicits._
-    val r = spark.readStream.format("graftqueue")
-      .option("topic", inTopic).option("group", group)
-    queueDir.foreach(d => r.option("dir", d))
-    val stats = r.load()
-      .select(from_json(col("value"), statsSchema).as("r"))
-      .select(col("r.*"))
-    val z = ApmStreaming.zScoreStream(
-      ApmStreaming.fanOutLags(stats, Seq(cfg.lag)))
-    val w = z
-      .select(concat_ws("|", col("server"), col("service")).as("key"),
-        to_json(struct(col("*"))).as("value"))
-      .repartition(col("key")) // per-key epoch atomicity (runStage1 note)
-      .writeStream
-      .format("graftqueue")
-      .option("topic", outTopic)
-      .option("partitions", nPartitions)
-      .option("checkpointLocation", s"$workDir/ckpt_z_q")
-      .trigger(Trigger.AvailableNow())
-    queueDir.foreach(d => w.option("dir", d))
-    await(w.start())
-  }
-
-  /** Stage 3 variant: consume z-scored rows from a queue topic, produce
-    * fired rows to another (the queue-in flavor of [[runStage3Queued]],
-    * which reads a parquet zscore topic). Fired rows are keyed by
-    * SERVICE — the key the stage-4 cooldown fold is grouped on.
-    */
-  def runStage3FromQueue(spark: SparkSession, workDir: String, cfg: GraphCfg,
-      inTopic: String, outTopic: String, group: String = "stage3",
-      nPartitions: Int = 4, queueDir: Option[String] = None): Unit = {
-    import spark.implicits._
-    val r = spark.readStream.format("graftqueue")
-      .option("topic", inTopic).option("group", group)
-    queueDir.foreach(d => r.option("dir", d))
-    val z = r.load()
-      .select(from_json(col("value"), zOutSchema).as("r"))
-      .select(col("r.*"))
-    val cand = Alerts.candidates(z, cfg.alert)
-      .select(col("server"), col("service"), col("lag"), col("ts_ms"),
-        col("bad"), col("causes")).as[ApmStreaming.VoteIn]
-    val fired = ApmStreaming.voteStream(cand, cfg.alert)
-    val w = fired
-      .select(col("service").as("key"),
-        to_json(struct(col("server"), col("service"), col("lag"),
-          col("ts_ms"), col("causes"))).as("value"))
-      .repartition(col("key")) // per-key epoch atomicity (runStage1 note)
-      .writeStream
-      .format("graftqueue")
-      .option("topic", outTopic)
-      .option("partitions", nPartitions)
-      .option("checkpointLocation", s"$workDir/ckpt_fired_q")
-      .trigger(Trigger.AvailableNow())
-    queueDir.foreach(d => w.option("dir", d))
-    await(w.start())
-  }
+  def runStage4Queued(spark: SparkSession, workDir: String, cfg: GraphCfg,
+      in: Topic, group: String = "stage4",
+      maxPoll: Option[Int] = None): Unit =
+    awaitWithDropMetrics(spark,
+      stage4(spark, workDir, cfg, in, group, maxPoll, _ => ()),
+      "stage4", in.queueDir, includeLedger = true)
 
   /** Stage 5 — the reference's DB-insert process
     * (stream_insert_db.js:277-353): a SECOND consumer group on the z
@@ -366,15 +352,9 @@ object ApmGraph {
     * DB writer; the parent asserts its contents after the process
     * exits.
     */
-  def runStage5DbQueued(spark: SparkSession, workDir: String, cfg: GraphCfg,
-      inTopic: String, group: String = "s6db",
-      queueDir: Option[String] = None): Unit = {
-    val r = spark.readStream.format("graftqueue")
-      .option("topic", inTopic).option("group", group)
-    queueDir.foreach(d => r.option("dir", d))
-    val z0 = r.load()
-      .select(from_json(col("value"), zOutSchema).as("r"))
-      .select(col("r.*"))
+  def runStage5DbQueued(spark: SparkSession, workDir: String,
+      in: Topic): Unit = {
+    val z0 = read(spark, in, zOutSchema, "s6db")
     // The in-flight ZOut encodes the reference's `undefined` as NaN
     // (a case-class Double has no null); the DB payload's convention is
     // SQL NULL — what the batch chain emits and the registered
@@ -390,57 +370,30 @@ object ApmGraph {
   }
 
   /** One drain pass of stage `n` in the fully-queued topology (every
-    * handoff a file topic under `queueDir`): 1 tails `logsGlob`,
-    * 2 consumes `t_stats`, 3 consumes `t_z`, 4 consumes `t_fired` and
+    * handoff a file topic under `queueDir`): 1 tails `logsGlob` and
+    * produces `t_stats`, 2 consumes `t_stats` and produces `t_z`,
+    * 3 consumes `t_z` and produces `t_fired`, 4 consumes `t_fired` and
     * lands `workDir/alerts`, 5 consumes `t_z` under its own group and
     * inserts the stats-table rows into an embedded Derby. Each stage
     * keeps its own checkpoints under its own `workDir`; only `queueDir`
     * (and, for 1, the log directory) is shared — which is exactly what
     * makes the stages runnable as separate OS processes
-    * (MultiProcessGraphSpec forks them).
+    * (MultiProcessGraphSpec forks them; the reference's six processes
+    * wired by a broker, config/apm_config.json:58-81).
     */
   def runStageQueued(spark: SparkSession, stage: Int, logsGlob: String,
-      workDir: String, queueDir: String, cfg: GraphCfg): Unit = stage match {
-    case 1 => runStage1Queued(spark, logsGlob, workDir, cfg, "t_stats",
-      queueDir = Some(queueDir))
-    case 2 => runStage2Queued(spark, workDir, cfg, "t_stats", "t_z",
-      queueDir = Some(queueDir))
-    case 3 => runStage3FromQueue(spark, workDir, cfg, "t_z", "t_fired",
-      queueDir = Some(queueDir))
-    case 4 => runStage4Queued(spark, workDir, cfg, "t_fired",
-      queueDir = Some(queueDir))
-    case 5 => runStage5DbQueued(spark, workDir, cfg, "t_z",
-      queueDir = Some(queueDir))
-    case other => sys.error(s"no stage $other")
-  }
-
-  /** Stage 4 variant consuming fired rows from the queue topic.
-    * `maxPoll` bounds records per micro-batch (the connector's
-    * admission option) — production leaves it unbounded; the drop-
-    * exactness spec uses it to force a >100-batch drain.
-    */
-  def runStage4Queued(spark: SparkSession, workDir: String, cfg: GraphCfg,
-      topic: String, group: String = "stage4",
-      queueDir: Option[String] = None, maxPoll: Option[Int] = None): Unit = {
-    import spark.implicits._
-    val r = spark.readStream
-      .format("graftqueue")
-      .option("topic", topic)
-      .option("group", group)
-    queueDir.foreach(d => r.option("dir", d))
-    maxPoll.foreach(m => r.option("maxpoll", m.toString))
-    val fired = r.load()
-      .select(from_json(col("value"), voteOutSchema).as("r"))
-      .select(col("r.*")).as[ApmStreaming.VoteOut]
-    val alerts =
-      if (cfg.orderedCooldown)
-        ApmStateV2.cooldownStreamOrdered(fired, cfg.alert, cfg.orderedDelay)
-      else ApmStreaming.cooldownStream(fired, cfg.alert)
-    awaitWithDropMetrics(spark,
-      ApmStreaming.sinkToParquet(alerts.toDF(), s"$workDir/alerts",
-        s"$workDir/ckpt_alerts_q", orderCol = Some("ts_ms"),
-        availableNow = true),
-      "stage4", queueDir, includeLedger = true)
+      workDir: String, queueDir: String, cfg: GraphCfg): Unit = {
+    def topic(name: String) = Topic(name, Some(queueDir))
+    stage match {
+      case 1 => stage1(spark, logsGlob, workDir, cfg, topic("t_stats"))
+      case 2 => await(stage2(spark, workDir, cfg, topic("t_stats"),
+        topic("t_z"), None))
+      case 3 => runStage3Queued(spark, workDir, cfg, topic("t_z"),
+        topic("t_fired"))
+      case 4 => runStage4Queued(spark, workDir, cfg, topic("t_fired"))
+      case 5 => runStage5DbQueued(spark, workDir, topic("t_z"))
+      case other => sys.error(s"no stage $other")
+    }
   }
 
   /** Drop observability ACROSS processes: watermark-gated stages drop
@@ -520,7 +473,7 @@ object ApmGraph {
     * drain below then waits until the last batch's event has arrived.
     */
   private def awaitWithDropMetrics(spark: SparkSession,
-      start: => org.apache.spark.sql.streaming.StreamingQuery,
+      start: => StreamingQuery,
       stage: String, queueDir: Option[String],
       includeLedger: Boolean = false): Unit = {
     val l = new DropListener

@@ -6,27 +6,23 @@ import org.apache.spark.sql.streaming._
 import graft.operators.Alerts
 import ApmStreaming._
 
-/** The keyed streaming folds on the `transformWithState` API (Spark 4's
-  * StatefulProcessor), replacing `flatMapGroupsWithState` — same
-  * semantics, modern state machinery:
+/** The keyed streaming folds that need the `transformWithState` API
+  * (Spark 4's StatefulProcessor) rather than `flatMapGroupsWithState`:
   *
-  *  - typed composite state (ValueState/ListState/MapState) persisted in
-  *    the RocksDB state store with changelog checkpointing — the store
-  *    that holds hundreds of millions of keys per executor at 100 TB,
-  *    where the default HDFS-backed in-memory map store OOMs;
-  *  - first-class event-time timers (register/delete per key) instead of
-  *    the single implicit GroupStateTimeout slot — the J2 park/flush/
-  *    expire deadline becomes an explicit timer;
-  *  - per-state TTL (TTLConfig) for self-cleaning caches.
+  *  - the DETERMINISTIC R4 cooldown ([[OrderedCooldownProcessor]]):
+  *    per-service ListState buffers plus first-class event-time timers,
+  *    which the single GroupStateTimeout slot cannot express;
+  *  - the ingest-time twins of batch operators with no V1 form: volume
+  *    z-score (Z6), histogram sliding quantile (A10), LOCF gap-fill (A11)
+  *    and seasonal decomposition (A12), each with typed composite state
+  *    and the observable bucket discipline of [[LateDrops]].
   *
-  * Reference mapping is identical to [[ApmStreaming]] (the V1 shapes):
-  * z-score recurrence `stream_calc_z_score.js:232-307`, leaky-bucket
-  * votes `stream_process_alerts.js:341-418`, cooldown `:420-447`, J2
-  * enrichment park/flush/expire `stream_parse_transactions.js:218-327`.
-  * The step functions themselves are shared with V1 — only the state
-  * plumbing differs, and StateV2Spec pins V2 == V1 == batch.
+  * The arrival-order folds of the core chain (z-score, votes, cooldown,
+  * J2 enrich) exist once, in [[ApmStreaming]]; they run on either state
+  * store provider (StreamingSpec pins both).
   *
-  * Cluster config this targets (set in the session that runs the graph):
+  * transformWithState requires the RocksDB state store; the cluster
+  * config this targets (set in the session that runs these folds):
   * {{{
   *   spark.sql.streaming.stateStore.providerClass=
   *     org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
@@ -76,85 +72,6 @@ object ApmStateV2 {
     def reset(): Unit = { dropped.set(0L); droppedWithData.set(0L) }
   }
 
-  /** Z1-Z5 — the per-(server,service,lag) z-score recurrence. State: the
-    * three bounded influenced-value lists (O(lag) doubles per key).
-    */
-  class ZScoreProcessor extends StatefulProcessor[ZKey, ZIn, ZOut] {
-    @transient private var st: ValueState[ZState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[ZState]("zstate",
-        Encoders.product[ZState], TTLConfig.NONE)
-    override def handleInputRows(key: ZKey, rows: Iterator[ZIn],
-        tv: TimerValues): Iterator[ZOut] = {
-      val cur = if (st.exists()) st.get() else ZState(Nil, Nil, Nil)
-      val (out, next) = zScoreStep(rows, cur, key)
-      val arr = out.toArray // materialize before the state write
-      st.update(next)
-      arr.iterator
-    }
-  }
-
-  def zScoreStreamV2(stats: Dataset[ZIn]): Dataset[ZOut] = {
-    import stats.sparkSession.implicits._
-    stats.groupByKey(r => ZKey(r.server, r.service, r.lag, r.threshold, r.influence))
-      .transformWithState(new ZScoreProcessor, TimeMode.None(), OutputMode.Append())
-  }
-
-  /** R3 — leaky-bucket vote counter. State: one Int per key. */
-  class VoteProcessor(cfg: Alerts.AlertCfg)
-      extends StatefulProcessor[(String, String, Int), VoteIn, VoteOut] {
-    @transient private var st: ValueState[Int] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Int]("votes", Encoders.scalaInt, TTLConfig.NONE)
-    override def handleInputRows(key: (String, String, Int),
-        rows: Iterator[VoteIn], tv: TimerValues): Iterator[VoteOut] = {
-      var c = if (st.exists()) st.get() else 0
-      val out = rows.toArray.sortBy(_.ts_ms).flatMap { r =>
-        var fire = false
-        if (r.bad == 1) {
-          if (c <= cfg.windowSz) c += 1
-          fire = c >= cfg.voteThreshold
-        } else if (c > 0) c -= 1
-        if (fire) Some(VoteOut(r.server, r.service, r.lag, r.ts_ms, r.causes))
-        else None
-      }
-      st.update(c)
-      out.iterator
-    }
-  }
-
-  def voteStreamV2(cand: Dataset[VoteIn], cfg: Alerts.AlertCfg): Dataset[VoteOut] = {
-    import cand.sparkSession.implicits._
-    cand.groupByKey(r => (r.server, r.service, r.lag))
-      .transformWithState(new VoteProcessor(cfg), TimeMode.None(), OutputMode.Append())
-  }
-
-  /** R4 — per-service cooldown dedup. State: last-fired epoch ms. */
-  class CooldownProcessor(cfg: Alerts.AlertCfg)
-      extends StatefulProcessor[String, VoteOut, VoteOut] {
-    @transient private var st: ValueState[Long] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Long]("lastFired",
-        Encoders.scalaLong, TTLConfig.NONE)
-    override def handleInputRows(svc: String, rows: Iterator[VoteOut],
-        tv: TimerValues): Iterator[VoteOut] = {
-      var last = if (st.exists()) st.get() else Long.MinValue
-      val out = rows.toArray.sortBy(r => (r.ts_ms, r.server, r.lag)).flatMap { r =>
-        val emit = last == Long.MinValue ||
-          (r.ts_ms - last) / 1000.0 > cfg.cooldownMs / 1000.0
-        if (emit) { last = r.ts_ms; Some(r) } else None
-      }
-      st.update(last)
-      out.iterator
-    }
-  }
-
-  def cooldownStreamV2(fired: Dataset[VoteOut], cfg: Alerts.AlertCfg): Dataset[VoteOut] = {
-    import fired.sparkSession.implicits._
-    fired.groupByKey(_.service)
-      .transformWithState(new CooldownProcessor(cfg), TimeMode.None(), OutputMode.Append())
-  }
-
   // ------------------------------- R4 ordered (deterministic) cooldown
 
   /** VoteOut plus the event-time column the watermark rides on. */
@@ -163,9 +80,8 @@ object ApmStateV2 {
   /** R4 cooldown, DETERMINISTIC opt-in variant: folds fired candidates
     * in EVENT-TIME order across keys instead of arrival order.
     *
-    * The arrival-order cooldown ([[CooldownProcessor]],
-    * [[ApmStreaming.cooldownStream]]) is reference-faithful — the
-    * reference folds bus ARRIVAL order
+    * The arrival-order cooldown ([[ApmStreaming.cooldownStream]]) is
+    * reference-faithful — the reference folds bus ARRIVAL order
     * (stream_process_alerts.js:420-447), so when two servers fire the
     * same service near-simultaneously the winner depends on which
     * upstream per-(server,service,lag) chain reaches the consumer
@@ -287,70 +203,6 @@ object ApmStateV2 {
       .as[OrdRow]
       .groupByKey(_._2)
       .transformWithState(new OrderedCooldownProcessor(cfg),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  // -------------------------------------------------- J2 park-and-expire
-
-  private type ERow = (Long, String, String, Long, Double, String, java.sql.Timestamp)
-
-  /** J2 — enrichment with park/flush/expire. The V1 GroupStateTimeout
-    * deadline becomes an EXPLICIT event-time timer: re-parking deletes
-    * the previous timer and registers the new deadline, and expiry is
-    * handled in `handleExpiredTimer` (emit parked rows with acct='',
-    * drop the key's state).
-    */
-  class EnrichProcessor(ttlMs: Long)
-      extends StatefulProcessor[Long, ERow, EnrichOut] {
-    @transient private var st: ValueState[EnrichState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[EnrichState]("enrich",
-        Encoders.product[EnrichState], TTLConfig.NONE)
-    override def handleInputRows(logId: Long, rows: Iterator[ERow],
-        tv: TimerValues): Iterator[EnrichOut] = {
-      // deadlineMs doubles as "the currently registered timer" (0 = none)
-      var cur = if (st.exists()) st.get() else EnrichState(Nil, "", 0L)
-      val prevTimer = cur.deadlineMs
-      val out = scala.collection.mutable.Buffer.empty[EnrichOut]
-      val batch = rows.toArray.sortBy(_._4)
-      batch.foreach {
-        case (_, "acct", _, _, _, acct, _) =>
-          cur.txs.foreach { case (svc, ts, el) =>
-            out += EnrichOut(logId, svc, ts, el, acct, matched = true)
-          }
-          cur = EnrichState(Nil, acct, cur.deadlineMs)
-        case (_, _, svc, ts, el, _, _) =>
-          if (cur.acct.nonEmpty)
-            out += EnrichOut(logId, svc, ts, el, cur.acct, matched = true)
-          else cur = cur.copy(txs = cur.txs :+ ((svc, ts, el)),
-            deadlineMs = math.max(cur.deadlineMs, ts + ttlMs))
-      }
-      if (cur.txs.nonEmpty || cur.acct.nonEmpty) {
-        val deadline = math.max(cur.deadlineMs, batch.map(_._4).max + ttlMs)
-        if (prevTimer != 0L && prevTimer != deadline)
-          getHandle.deleteTimer(prevTimer)
-        if (prevTimer != deadline) getHandle.registerTimer(deadline)
-        st.update(cur.copy(deadlineMs = deadline))
-      }
-      out.iterator
-    }
-    override def handleExpiredTimer(logId: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[EnrichOut] = {
-      val cur = if (st.exists()) st.get() else EnrichState(Nil, "", 0L)
-      st.clear()
-      cur.txs.iterator.map { case (svc, ts, el) =>
-        EnrichOut(logId, svc, ts, el, "", matched = false)
-      }
-    }
-  }
-
-  def enrichStreamV2(in: Dataset[EnrichIn], ttlMs: Long = 30000L): Dataset[EnrichOut] = {
-    import in.sparkSession.implicits._
-    in.withColumn("event_ts", timestamp_millis(col("ts_ms")))
-      .withWatermark("event_ts", "10 seconds")
-      .as[ERow]
-      .groupByKey(_._1)
-      .transformWithState(new EnrichProcessor(ttlMs),
         TimeMode.EventTime(), OutputMode.Append())
   }
 

@@ -8,13 +8,15 @@ import graft.streaming.{ApmStateV2, ApmStreaming}
 
 /** Dev harness: measured evidence for the day-lag z-score state claim.
   *
-  * The fold/V2 z-score keeps O(lag) state per key (three influenced-value
-  * lists); the reference's day-over-day config is lag=8640 (24 h of 10 s
-  * buckets, config/apm_config.json's 86400 s lag). This probe runs the
-  * production [[ApmStateV2.zScoreStreamV2]] fold on the RocksDB state
-  * store with changelog checkpointing at that lag and reports sustained
-  * rows/s plus the store's own size metrics, next to a small-lag control
-  * on identical input volume — the numbers SCALING.md cites. Per-row
+  * The streaming z-score keeps O(lag) state per key (three
+  * influenced-value lists); the reference's day-over-day config is
+  * lag=8640 (24 h of 10 s buckets, config/apm_config.json's 86400 s
+  * lag). This probe runs the graph's z-score fold
+  * ([[ApmStreaming.zScoreStream]], flatMapGroupsWithState) on the
+  * RocksDB state store with changelog checkpointing at that lag and
+  * reports sustained rows/s plus the store's own size metrics, next to
+  * a small-lag control on identical input volume — the numbers
+  * SCALING.md cites. Per-row
   * arithmetic is O(lag) BY REFERENCE SEMANTICS (null-skipping window
   * mean/sigma recomputed per step, stream_calc_z_score.js:66-104 — the
   * left-to-right double sums pin bit parity, so no incremental-moment
@@ -49,7 +51,7 @@ object RocksLagProbe {
     def run(tag: String, lagN: Int): String = {
       val rnd = new scala.util.Random(7)
       val in = MemoryStream[ApmStreaming.ZIn]
-      val out = ApmStateV2.zScoreStreamV2(in.toDS())
+      val out = ApmStreaming.zScoreStream(in.toDS())
       val q = out.writeStream.outputMode(OutputMode.Append)
         .format("noop")
         .option("checkpointLocation",

@@ -153,7 +153,7 @@ class MultiProcessGraphSpec extends AnyFunSuite {
     // wave 1: quiet half — warms every stage's state. Elapsed VARIES
     // (100 + i%5): constant values would make per-key reordering
     // invisible to the z fold, and the ordering contract (per-key epoch
-    // atomicity + within-batch sort, ApmGraph.runStage1 note) is one of
+    // atomicity + within-batch sort, ApmGraph.write note) is one of
     // the claims this spec exists to exercise.
     Seq("hostA", "hostB").foreach { srv =>
       writeLog(logs, srv, "server.log", (0 until 10).map(i =>

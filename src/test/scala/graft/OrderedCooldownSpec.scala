@@ -154,8 +154,8 @@ class OrderedCooldownSpec extends AnyFunSuite with RocksDbSupport {
       (0 until 30).foreach(i => t.produce("k", fired(1000L + i)))
       (0 until 150).foreach(i => t.produce("k", fired(2000000L + i * 20000L)))
       val cfg = ApmGraph.GraphCfg(orderedCooldown = true)
-      ApmGraph.runStage4Queued(spark, s"$base/work", cfg, "t_fired",
-        queueDir = Some(qdir), maxPoll = Some(1))
+      ApmGraph.runStage4Queued(spark, s"$base/work", cfg,
+        ApmGraph.Topic("t_fired", Some(qdir)), maxPoll = Some(1))
       val alarms = new ContractConsumer(
         new FileTopic(Paths.get(qdir, "t_ops")), "spec_dropx")
         .poll(1000).map(_.value)
@@ -221,6 +221,75 @@ class OrderedCooldownSpec extends AnyFunSuite with RocksDbSupport {
         assert(sparkDropped + ledgerDropped >= 1L,
           "late row vanished with no observable drop record")
       } finally q.stop()
+    }
+  }
+
+  test("parquet handoff honours orderedCooldown: both servers fire the " +
+      "same service at identical window ends, stage 4 runs the " +
+      "transformWithState fold and == the batch oracle") {
+    import java.nio.file.{Files, Paths}
+    import java.time.{Instant, ZoneOffset}
+    import java.time.format.DateTimeFormatter
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.functions.col
+    import graft.streaming.ApmGraph
+    withRocksDb {
+      val base = Files.createTempDirectory("graft_ordparq").toString
+      val (logs, work) = (s"$base/logs", s"$base/work")
+      val glob = s"$logs/net/*/*"
+      val fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss,SSS")
+        .withZone(ZoneOffset.UTC)
+      val t0 = 1578391200000L
+      def writeLog(server: String, lines: Seq[(Int, Long, Long)]): Unit = {
+        val p = Paths.get(logs, "net", server, "server.log")
+        Files.createDirectories(p.getParent)
+        Files.writeString(p, lines.map { case (id, ms, elapsed) =>
+          s"[$id] ${fmt.format(Instant.ofEpochMilli(ms))} [a:b:42] INFO " +
+            s"CommonTiming::Stop S:checkout handled in time $elapsed"
+        }.mkString("", "\n", "\n"))
+        ()
+      }
+      // both hosts turn slow at the same interval: every firing window
+      // is a cross-server tie only event-time order (ts, server, lag)
+      // resolves like the oracle
+      Seq("hostA", "hostB").foreach(srv => writeLog(srv, (0 until 19).map(i =>
+        (i, t0 + i * 10000L, if (i < 10) 100L else 300L + (i % 5) * 7))))
+      // the firing sentinel (zzf) fires the same service far in the
+      // future, so its fired rows move stage 4's watermark past every
+      // real row; the quiet zz2 closes zzf's stats windows
+      writeLog("zzf", (0 until 9).map(i =>
+        (900 + i, t0 + 200000000L + i * 10000L, 300L)))
+      writeLog("zz2", Seq((999, t0 + 300000000L, 1L)))
+      val cfg = ApmGraph.GraphCfg(orderedCooldown = true)
+      ApmGraph.runStage1(spark, glob, work, cfg)
+      ApmGraph.runStage1(spark, glob, work, cfg) // window-close pass
+      ApmGraph.runStage2(spark, work, cfg)
+      ApmGraph.runStage3(spark, work, cfg)
+      val q = ApmGraph.startStage4(spark, work, cfg)
+      q.awaitTermination()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan.toString
+      assert(plan.contains("TransformWithState") &&
+        !plan.contains("FlatMapGroupsWithState"),
+        s"stage 4 did not run the event-time cooldown:\n$plan")
+      ApmGraph.runStage4(spark, work, cfg) // timer-firing pass
+
+      val cand = TopologyOracle.candidates(spark, glob, cfg)
+      val badTs = cand.filter(_._5).groupBy(_._1)
+        .view.mapValues(_.map(_._4).toSet).toMap
+      assert(badTs.getOrElse("hostA", Set.empty).nonEmpty &&
+        badTs.getOrElse("hostA", Set.empty) == badTs.getOrElse("hostB", Set.empty),
+        s"no cross-server ties: ${badTs.view.mapValues(_.size).toMap}")
+      val exp = Alerts.alertsRef(cand.toIndexedSeq, cfg.alert)
+        .map(a => (a._1, a._2, a._3, a._4)).sorted.toList
+      val got = spark.read.option("recursiveFileLookup", "true")
+        .parquet(s"$work/alerts")
+        .filter(!col("server").isin(TopologyOracle.sentinelServers: _*))
+        .select("ts_ms", "server", "service", "lag").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3)))
+        .sorted.toList
+      assert(exp.nonEmpty, "oracle produced no alerts")
+      assert(got == exp, s"alerts mismatch: got=$got exp=$exp")
     }
   }
 }

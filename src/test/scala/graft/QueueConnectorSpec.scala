@@ -233,8 +233,9 @@ class QueueConnectorSpec extends AnyFunSuite {
     // queue handoff over the same zscore input, writing alerts elsewhere
     val topic = "t_graph_fired"
     QueueRegistry.drop(topic)
-    ApmGraph.runStage3Queued(spark, work, cfg, topic)
-    ApmGraph.runStage4Queued(spark, workQ, cfg, topic)
+    ApmGraph.runStage3Queued(spark, work, cfg,
+      ApmGraph.ParquetDir(s"$work/zscore"), ApmGraph.Topic(topic))
+    ApmGraph.runStage4Queued(spark, workQ, cfg, ApmGraph.Topic(topic))
     def alerts(dir: String): Set[(Long, String, String, Int)] =
       spark.read.option("recursiveFileLookup", "true")
         .parquet(s"$dir/alerts")
@@ -253,16 +254,17 @@ class QueueConnectorSpec extends AnyFunSuite {
     // the same frames, topic + fences + commits living on disk
     val workF = s"$base/workf" // own checkpoints; same zscore topic input
     val qdir = s"$base/qdir"
-    ApmGraph.runStage3Queued(spark, workF, cfg, "t_graph_fired_f",
-      queueDir = Some(qdir), zscoreDir = Some(s"$work/zscore"))
+    ApmGraph.runStage3Queued(spark, workF, cfg,
+      ApmGraph.ParquetDir(s"$work/zscore"),
+      ApmGraph.Topic("t_graph_fired_f", Some(qdir)))
     assert(!QueueRegistry.exists("t_graph_fired_f"),
       "file-backed topic leaked into the JVM-local registry")
     val fOffs = new graft.streaming.FileTopic(
       Paths.get(qdir, "t_graph_fired_f")).endOffsets
     assert(fOffs.values.sum > 0L,
       s"stage 3 produced nothing to the file topic: $fOffs")
-    ApmGraph.runStage4Queued(spark, workF, cfg, "t_graph_fired_f",
-      queueDir = Some(qdir))
+    ApmGraph.runStage4Queued(spark, workF, cfg,
+      ApmGraph.Topic("t_graph_fired_f", Some(qdir)))
     assert(alerts(workF) == viaParquet,
       "file-backed queue handoff diverged from the parquet handoff")
 
@@ -296,8 +298,9 @@ class QueueConnectorSpec extends AnyFunSuite {
     val broker = new graft.streaming.SocketBroker()
     try {
       val workB = s"$base/workb"
-      ApmGraph.runStage3Queued(spark, workB, cfg, "t_graph_fired_b",
-        queueDir = Some(broker.url), zscoreDir = Some(s"$work/zscore"))
+      ApmGraph.runStage3Queued(spark, workB, cfg,
+        ApmGraph.ParquetDir(s"$work/zscore"),
+        ApmGraph.Topic("t_graph_fired_b", Some(broker.url)))
       val bOffs = QueueRegistry.topic("t_graph_fired_b",
         dir = Some(broker.url)).endOffsets
       assert(bOffs.values.sum > 0,

@@ -401,6 +401,20 @@ class SparkOpsSpec extends AnyFunSuite {
     assert(stacked.nonEmpty && stacked == unioned)
   }
 
+  test("zScoreWindowed rejects duplicate lag values, naming them") {
+    // the stacked per-lag columns are keyed on the lag value, so two
+    // configs with the same lag (even with different thresholds) must
+    // fail at the call, not alias each other's columns
+    import spark.implicits._
+    val df = Seq(("s0", "svc", 0L, Some(1.0), Some(1.0), Some(1.0), Some(1.0)))
+      .toDF("server", "service", "ts_ms", "tpm", "average", "per75", "per95")
+    val lags = List(ZScore.LagCfg(4, 2.0, 0.5), ZScore.LagCfg(12, 1.5, 0.0),
+      ZScore.LagCfg(4, 3.0, 0.0))
+    val e = intercept[IllegalArgumentException](ZScore.zScoreWindowed(df, lags))
+    assert(e.getMessage == "requirement failed: zScoreWindowed requires " +
+      "distinct lag values, got List(4, 12, 4)")
+  }
+
   test("q29 window census == EXISTS/NOT-EXISTS semi+anti reference") {
     // r15 replaced the semi+anti self-join pair with a per-order window
     // census; this pins the equivalence against the declared join form.

@@ -13,9 +13,10 @@ import graft.functions.RefStats
 /** Structured Streaming semantics tests with MemoryStream: watermarked
   * sliding-window stats (A4/A5), stateful z-score (Z2), alert folds
   * (R3/R4) — streaming output must agree with the batch folds / reference
-  * ports on the same data.
+  * ports on the same data. The keyed folds run once per state store
+  * provider: the default and RocksDB.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with RocksDbSupport {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -27,6 +28,15 @@ class StreamingSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def ts(sec: Long): Timestamp = new Timestamp(sec * 1000)
+
+  /** Register `body` as two tests: on the default state store provider,
+    * and (name suffixed " [RocksDB]") on RocksDB. `body` gets a suffix
+    * that keeps the two runs' memory-sink query names apart.
+    */
+  private def onBothProviders(name: String)(body: String => Unit): Unit = {
+    test(name)(body(""))
+    test(s"$name [RocksDB]")(withRocksDb(body("_rocks")))
+  }
 
   test("sliding-window stats stream: exact percentiles per closed window") {
     import spark.implicits._
@@ -58,7 +68,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("z-score stream == batch fold on same data") {
+  onBothProviders("z-score stream == batch fold on same data") { tag =>
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val rnd = new scala.util.Random(17)
@@ -71,13 +81,13 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[ApmStreaming.ZIn]
     val out = ApmStreaming.zScoreStream(in.toDS())
     val q = out.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("z_out").start()
+      .format("memory").queryName(s"z_out$tag").start()
     try {
       // feed in two chunks to exercise state persistence across batches
       val (c1, c2) = data.partition(_.ts_ms < 15000L)
       in.addData(c1); q.processAllAvailable()
       in.addData(c2); q.processAllAvailable()
-      val got = spark.table("z_out").as[ApmStreaming.ZOut].collect()
+      val got = spark.table(s"z_out$tag").as[ApmStreaming.ZOut].collect()
         .map(o => (o.server, o.ts_ms) -> ((o.average_avg, o.average_signal))).toMap
       // batch fold over the same data
       val statsDf = data.map(z => (z.server, z.service, z.ts_ms, Some(z.tpm),
@@ -96,7 +106,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("alert vote + cooldown streams == reference fold") {
+  onBothProviders("alert vote + cooldown streams == reference fold") { tag =>
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val cfg = Alerts.AlertCfg(windowSz = 5, voteThreshold = 3, cooldownMs = 8000L)
@@ -110,12 +120,12 @@ class StreamingSpec extends AnyFunSuite {
     val fired = ApmStreaming.voteStream(in.toDS(), cfg)
     val alerts = ApmStreaming.cooldownStream(fired, cfg)
     val q = alerts.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("alerts_out").start()
+      .format("memory").queryName(s"alerts_out$tag").start()
     try {
       // single ordered chunk: streaming arrival order == batch ts order
       in.addData(rows)
       q.processAllAvailable()
-      val got = spark.table("alerts_out").as[ApmStreaming.VoteOut].collect()
+      val got = spark.table(s"alerts_out$tag").as[ApmStreaming.VoteOut].collect()
         .map(o => (o.ts_ms, o.server, o.service, o.lag)).sorted.toList
       val exp = Alerts.alertsRef(
         rows.map(r => (r.server, r.service, r.lag, r.ts_ms, r.bad == 1, r.causes)), cfg)
@@ -124,13 +134,14 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("J2 enrich stream: park, late-acct flush, TTL-expiry '' emission") {
+  onBothProviders(
+      "J2 enrich stream: park, late-acct flush, TTL-expiry '' emission") { tag =>
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[ApmStreaming.EnrichIn]
     val out = ApmStreaming.enrichStream(in.toDS(), ttlMs = 5000L)
     val q = out.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("enrich_out").start()
+      .format("memory").queryName(s"enrich_out$tag").start()
     try {
       // log 1: tx parks, acct arrives later in a later batch -> flush
       // log 2: tx parks, no acct ever -> TTL expiry with ''
@@ -149,7 +160,7 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       in.addData(ApmStreaming.EnrichIn(98L, "acct", "", 200000L, 0.0, "9"))
       q.processAllAvailable()
-      val rows = spark.table("enrich_out").as[ApmStreaming.EnrichOut].collect()
+      val rows = spark.table(s"enrich_out$tag").as[ApmStreaming.EnrichOut].collect()
         .map(o => (o.log_id, o.service, o.acct, o.matched)).toSet
       assert(rows.contains((1L, "svcA", "555", true)), s"flush missing: $rows")
       assert(rows.contains((3L, "svcC", "777", true)), s"pre-acct missing: $rows")

@@ -94,7 +94,7 @@ object FileTopicChild {
         .getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       ApmGraph.runStage4Queued(spark, args(1), ApmGraph.GraphCfg(),
-        args(3), group = args(4), queueDir = Some(args(2)))
+        ApmGraph.Topic(args(3), Some(args(2))), group = args(4))
       val n = spark.read.option("recursiveFileLookup", "true")
         .parquet(args(1) + "/alerts").count()
       spark.stop()
