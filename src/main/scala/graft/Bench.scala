@@ -26,6 +26,28 @@ object Bench {
   def jnum(v: Double, digits: Int = 3): String =
     String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
 
+  /** A JSON string literal: backslash, quote and ALL control chars
+    * (< 0x20) escaped, so a tab in a path or in builder-authored SQL
+    * cannot break a machine-parsed line (Bench's stdout lines, Verify's
+    * `oracle_sql.json`).
+    */
+  def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The compact final stdout line: headline scalars only (see the
+    * clip note in [[main]]); `errJson` and `stream` are pre-rendered.
+    */
+  def compactLine(total: Double, nQueries: Int, errJson: String,
+      stream: String, calib: Double, sfDir: String): String =
+    s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n_queries":$nQueries,"errors":$errJson$stream,"calib":${jnum(calib)},"sf":${jstr(sfDir)},"detail":"bench_out.json"}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // The driver contract runs the bench at local[32] (32-thread, 128 GiB
@@ -265,7 +287,7 @@ object Bench {
         val workF = base.resolve("workf").toString
         val f0 = System.nanoTime()
         val firedTopic = graft.streaming.ApmGraph.Topic("bench_fired",
-          Some(base.resolve("qdir").toString))
+          base.resolve("qdir").toString)
         graft.streaming.ApmGraph.runStage3Queued(spark, workF, cfg,
           graft.streaming.ApmGraph.ParquetDir(s"$work/zscore"), firedTopic)
         graft.streaming.ApmGraph.runStage4Queued(spark, workF, cfg, firedTopic)
@@ -281,15 +303,15 @@ object Bench {
         // `stream` block above this prices the end-to-end transport
         // cost, not just the stage-3->4 handoff.
         val workG = base.resolve("workg").toString
-        val qdirG = Some(base.resolve("qdirg").toString)
+        val qdirG = base.resolve("qdirg").toString
         val g0 = System.nanoTime()
         Seq(1, 1, 2, 3, 4).foreach(s => graft.streaming.ApmGraph
-          .runStageQueued(spark, s, glob, workG, qdirG.get, cfg))
+          .runStageQueued(spark, s, glob, workG, qdirG, cfg))
         val graphSec = (System.nanoTime() - g0) / 1e9
         val alertsG = cnt(s"$workG/alerts")
         val statsG = {
           val t = new graft.streaming.FileTopic(
-            Paths.get(qdirG.get, "t_stats"))
+            Paths.get(qdirG, "t_stats"))
           t.endOffsets.values.sum
         }
         System.err.println(f"[bench] stream_file WHOLE graph sec=" +
@@ -314,7 +336,7 @@ object Bench {
     val passJson = results.map { case (k, _, _, ps) =>
       s""""$k":${ps.map(jnum(_)).mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
     val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val loadEnd = loadavg()
     val calibEnd = calibrate()
@@ -323,7 +345,7 @@ object Bench {
     // concurrent load; per-query pass lists expose which passes a stall
     // hit (median-only artifacts hid all of this in round 6)
     val ctxJson = s""","calib_sec":{"start":${jnum(calibStart)},"end":${jnum(calibEnd)}}""" +
-      s""","loadavg":{"start":"$loadStart","end":"$loadEnd"}""" +
+      s""","loadavg":{"start":${jstr(loadStart)},"end":${jstr(loadEnd)}}""" +
       s""","passes":$passJson"""
     // `shared`: queries timed as INCREMENTAL work over a family frame
     // whose build cost is attributed to the family's unshared trainer
@@ -339,7 +361,7 @@ object Bench {
     // round-over-round comparison knows the set shrank by design
     val oracleOnlyJson = oracleOnly.toSeq.sorted
       .map(n => s""""$n"""").mkString("[", ",", "]")
-    val full = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"cpu_sec":$cpu,"shared":$sharedJson,"oracle_only":$oracleOnlyJson,"gc_note":"per-query medians exclude inter-pass System.gc","errors":$errJson$streamJson$ctxJson,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"cpu_sec":$cpu,"shared":$sharedJson,"oracle_only":$oracleOnlyJson,"gc_note":"per-query medians exclude inter-pass System.gc","errors":$errJson$streamJson$ctxJson,"sf":${jstr(sfDir)}}"""
     // Full artifact (per-query wall + cpu maps, ~4 KB) goes to FILES — a
     // repo-visible copy plus /tmp — because a 4 KB stdout line overflows
     // the driver's log-tail buffer (rounds 1 and 2 both lost the parsed
@@ -367,7 +389,8 @@ object Bench {
     // line carries only the headline scalars — total wall, query count,
     // error map, stream block, sf — and points at bench_out.json for
     // the per-query detail. Must stay under 400 B.
-    val compact = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n_queries":${results.size},"errors":$errJson$streamJsonCompact,"calib":${jnum(calibEnd)},"sf":"$sfDir","detail":"bench_out.json"}"""
+    val compact = compactLine(total, results.size, errJson, streamJsonCompact,
+      calibEnd, sfDir)
     spark.stop()
     // Per-query wall map as its OWN stdout line, printed BEFORE the
     // compact total line (r14 verdict item 1: the driver's PERF
@@ -382,7 +405,7 @@ object Bench {
     val qsCenti = results.map { case (k, w, _, _) => s""""$k":${jnum(w, 2)}""" }
       .mkString("{", ",", "}")
     val cpusJson = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus
-      else "\"" + cpus.replace("\"", "") + "\""
+      else jstr(cpus)
     println(s"""{"metric":"queries","unit":"sec","cpus":$cpusJson,"queries":$qsCenti}""")
     // Bare, final stdout line (spark.stop() already happened so nothing
     // logs after it; run/outputStrategy passes it through un-prefixed).

@@ -32,10 +32,9 @@ import graft.sources.LogFileSource
   *    the upstream query's file sink is the producer (S3),
   *    `readStream.parquet` the consumer (S4);
   *  - a `graftqueue` topic ([[runStageQueued]] and the `...Queued`
-  *    entry points): key + JSON value over the in-JVM registry, a
-  *    file-backed topic directory shared across processes, or a TCP
-  *    broker. With a Kafka connector jar the same edge helpers would
-  *    become `format("kafka")`.
+  *    entry points): key + JSON value in a file-backed topic directory
+  *    shared across processes. With a Kafka connector jar the same edge
+  *    helpers would become `format("kafka")`.
   *
   * Checkpoints give each stage S7 resume-exactly-once;
   * `Trigger.AvailableNow` drains whatever is pending and stops, which is
@@ -118,14 +117,11 @@ object ApmGraph {
 
   /** A `format("graftqueue")` topic — the handoff the reference runs over
     * RabbitMQ (config/apm_config.json:87-178) and a cluster would run
-    * over Kafka. `queueDir` is the connector's `dir` option: `None` is
-    * the in-JVM registry; a directory is the file-backed transport,
-    * shared across PROCESSES, so each stage can run in its own JVM (the
-    * reference's deployment topology); a `broker://` URL dials a
-    * [[SocketBroker]].
+    * over Kafka. `dir` is the connector's `dir` option: the topic is the
+    * [[FileTopic]] at `dir/name`, shared across PROCESSES, so each stage
+    * can run in its own JVM (the reference's deployment topology).
     */
-  final case class Topic(name: String, queueDir: Option[String] = None)
-      extends Edge
+  final case class Topic(name: String, dir: String) extends Edge
 
   /** `in` as a streaming frame of `schema`'s columns: a schema'd parquet
     * read, or a topic read whose JSON `value` is parsed back. `group` is
@@ -139,10 +135,9 @@ object ApmGraph {
       val r = spark.readStream.schema(schema)
       limit.foreach(n => r.option("maxFilesPerTrigger", n))
       r.parquet(path)
-    case Topic(name, queueDir) =>
+    case Topic(name, dir) =>
       val r = spark.readStream.format("graftqueue")
-        .option("topic", name).option("group", group)
-      queueDir.foreach(d => r.option("dir", d))
+        .option("topic", name).option("dir", dir).option("group", group)
       limit.foreach(n => r.option("maxpoll", n))
       r.load().select(from_json(col("value"), schema).as("r"))
         .select(col("r.*"))
@@ -170,13 +165,12 @@ object ApmGraph {
       case ParquetDir(path) =>
         df.repartition(keys.map(col): _*)
           .writeStream.format("parquet").option("path", path)
-      case Topic(name, queueDir) =>
-        val w = df.select(concat_ws("|", keys.map(col): _*).as("key"),
+      case Topic(name, dir) =>
+        df.select(concat_ws("|", keys.map(col): _*).as("key"),
             to_json(struct(col("*"))).as("value"))
           .repartition(col("key"))
-          .writeStream.format("graftqueue").option("topic", name)
-        queueDir.foreach(d => w.option("dir", d))
-        w
+          .writeStream.format("graftqueue")
+          .option("topic", name).option("dir", dir)
     }
     w.option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
@@ -222,8 +216,8 @@ object ApmGraph {
           .start()
         val q = start
         await(tee); await(q)
-      case Topic(_, queueDir) =>
-        awaitWithDropMetrics(spark, start, "stage1", queueDir)
+      case Topic(_, dir) =>
+        awaitWithDropMetrics(spark, start, "stage1", dir)
     }
   }
 
@@ -339,7 +333,7 @@ object ApmGraph {
       maxPoll: Option[Int] = None): Unit =
     awaitWithDropMetrics(spark,
       stage4(spark, workDir, cfg, in, group, maxPoll, _ => ()),
-      "stage4", in.queueDir, includeLedger = true)
+      "stage4", in.dir, includeLedger = true)
 
   /** Stage 5 — the reference's DB-insert process
     * (stream_insert_db.js:277-353): a SECOND consumer group on the z
@@ -383,7 +377,7 @@ object ApmGraph {
     */
   def runStageQueued(spark: SparkSession, stage: Int, logsGlob: String,
       workDir: String, queueDir: String, cfg: GraphCfg): Unit = {
-    def topic(name: String) = Topic(name, Some(queueDir))
+    def topic(name: String) = Topic(name, queueDir)
     stage match {
       case 1 => stage1(spark, logsGlob, workDir, cfg, topic("t_stats"))
       case 2 => await(stage2(spark, workDir, cfg, topic("t_stats"),
@@ -474,7 +468,7 @@ object ApmGraph {
     */
   private def awaitWithDropMetrics(spark: SparkSession,
       start: => StreamingQuery,
-      stage: String, queueDir: Option[String],
+      stage: String, queueDir: String,
       includeLedger: Boolean = false): Unit = {
     val l = new DropListener
     spark.streams.addListener(l)
@@ -495,7 +489,7 @@ object ApmGraph {
   }
 
   def publishDropMetrics(wmDropped: Long,
-      stage: String, queueDir: Option[String],
+      stage: String, queueDir: String,
       includeLedger: Boolean = false): Unit = {
     val (dLed, dLedData) =
       if (!includeLedger) (0L, 0L)
@@ -508,7 +502,7 @@ object ApmGraph {
     if (wmDropped > 0 || dLed > 0) {
       val rec = s"""{"stage":"$stage","wm_dropped":$wmDropped,""" +
         s""""ledger_dropped":$dLed,"ledger_dropped_with_data":$dLedData}"""
-      QueueRegistry.topic("t_ops", 1, queueDir).produce(stage, rec)
+      QueueRegistry.topic("t_ops", queueDir, 1).produce(stage, rec)
       ()
     }
   }

@@ -7,13 +7,12 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 import java.util.concurrent.ConcurrentHashMap
 
-/** File-backed [[QueueTopic]] — the out-of-process transport behind the
-  * same broker contract [[InMemoryTopic]] pins. Two SEPARATE JVMs can
-  * produce to and consume from the same topic directory, which closes
-  * the distance between the JVM-local test double and the reference's
-  * actual process topology (six OS processes connected by a broker,
-  * config/apm_config.json:87-178) without needing a broker jar: the
-  * durable medium is the filesystem instead of a broker's log.
+/** File-backed [[QueueTopic]] — the `graftqueue` connector's transport.
+  * Two SEPARATE JVMs can produce to and consume from the same topic
+  * directory, which reproduces the reference's process topology (six OS
+  * processes connected by a broker, config/apm_config.json:87-178)
+  * without needing a broker jar: the durable medium is the filesystem
+  * instead of a broker's log.
   *
   * Layout under `dir/`:
   *  - `format`          — on-disk format version ("4": end-indexed,

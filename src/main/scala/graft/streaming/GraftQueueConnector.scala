@@ -18,24 +18,23 @@ import org.apache.spark.unsafe.types.UTF8String
 /** S3/S4 — the message-bus transport as a real Structured Streaming
   * connector: `readStream.format("graftqueue")` consumes and
   * `writeStream.format("graftqueue")` produces against a named
-  * [[InMemoryTopic]], with offsets, consumer groups, poll batching and
+  * [[FileTopic]], with offsets, consumer groups, poll batching and
   * commit semantics backed by the broker contract [[QueueContract]] pins
   * (the reference's RabbitMQ fabric, queue.js:206-305). With this, the
   * graph's stage handoffs run through `format(...)` exactly as they would
   * through the Kafka connector — only the format string changes.
   *
-  * Options: `topic` (required), `partitions` (topic width at first
-  * reference, default 4), `group` (consumer group for reads, default
-  * "default"), `maxpoll` (per-partition records per micro-batch — the
-  * `maxOffsetsPerTrigger` analogue and the contract's poll bound; 0 =
-  * unbounded), `dir` (optional base directory: when set, the topic is
-  * the file-backed [[FileTopic]] at `dir/topic` — shared across separate
-  * JVMs, the reference's actual process topology — instead of the
-  * JVM-local registry), `retain` (`committed` makes this reader run
-  * retention after each durable micro-batch commit — trimming records
-  * every group has consumed, amortized at the 0.5 fraction — so a
-  * long-running deployment's disk is bounded by consumer lag without an
-  * out-of-band `truncateToCommitted` admin call; default `off`).
+  * Options: `topic` (required), `dir` (required: the base directory; the
+  * topic lives at `dir/topic`, shared by every JVM that names the same
+  * directory — the reference's actual process topology), `partitions`
+  * (topic width at creation, default 4), `group` (consumer group for
+  * reads, default "default"), `maxpoll` (per-partition records per
+  * micro-batch — the `maxOffsetsPerTrigger` analogue and the contract's
+  * poll bound; 0 = unbounded), `retain` (`committed` makes this reader
+  * run retention after each durable micro-batch commit — trimming
+  * records every group has consumed, amortized at the 0.5 fraction — so
+  * a long-running deployment's disk is bounded by consumer lag without
+  * an out-of-band `truncateToCommitted` admin call; default `off`).
   *
   * Semantics mapped onto the Spark connector surface:
   *  - source offsets are the per-partition log offsets; `initialOffset`
@@ -56,71 +55,28 @@ import org.apache.spark.unsafe.types.UTF8String
   *    commit is pure metadata, so no data-proportional bytes ever cross
   *    the driver (exactly the property a Kafka producer has).
   *
-  * Scale notes: without `dir` the registry is JVM-local (local[n] = one
-  * JVM), standing in for broker addressing; with `dir` the topic, its
-  * group commits AND the idempotence fence are file-backed, so separate
-  * producer/consumer PROCESSES interoperate (FileTopicSpec forks a real
-  * second JVM against it). Against a real broker the task-side
-  * `produceAll` becomes a producer client and the fence becomes producer
-  * idempotence/transactions; reads are partition-parallel (one
-  * InputPartition per queue partition) and writes are fully task-parallel
-  * end to end, the driver seeing only counts.
+  * Scale notes: the topic, its group commits AND the idempotence fence
+  * are file-backed, so separate producer/consumer PROCESSES interoperate
+  * (FileTopicSpec forks a real second JVM against it). Against a real
+  * broker the task-side `produceAll` becomes a producer client and the
+  * fence becomes producer idempotence/transactions; reads are
+  * partition-parallel (one InputPartition per queue partition) and
+  * writes are fully task-parallel end to end, the driver seeing only
+  * counts.
   */
 object QueueRegistry {
-  private val topics = mutable.Map.empty[String, InMemoryTopic]
-  // (name, dir) -> file-backed topic instance cache (state lives on disk;
-  // the cache only avoids re-opening per call)
-  private val fileTopics = mutable.Map.empty[(String, String), FileTopic]
-  // (name, url) -> broker client cache (state lives in the broker; the
-  // cache keeps one connection per topic per JVM instead of per call)
-  private val brokerTopics = mutable.Map.empty[(String, String), BrokerTopic]
+  // (name, dir) -> topic instance cache: state lives on disk, the cache
+  // only avoids re-opening the topic per call
+  private val topics = mutable.Map.empty[(String, String), FileTopic]
 
-  /** Resolve a topic: `dir = None` is the JVM-local in-memory registry
-    * (standing in for broker addressing in local[n]); `dir = Some(base)`
-    * is the file-backed transport at `base/name`, shared across
-    * PROCESSES; `dir = Some("broker://host:port")` is a [[BrokerTopic]]
-    * client of the [[SocketBroker]] at that address — state lives in
-    * the broker daemon, shared across any number of client processes
-    * over TCP (the reference's actual fabric, queue.js:73-78). The
-    * idempotence fence and group commits live with the topic in every
-    * backend (QueueTopic.beginTaskEpoch keeps one high-water epoch per
-    * (query, write-partition), bounded for the query's life).
+  /** The topic `name` under the base directory `dir` (`dir/name`),
+    * created with `nPartitions` partitions if it does not exist yet.
     */
-  def topic(name: String, nPartitions: Int = 4,
-      dir: Option[String] = None): QueueTopic = synchronized {
-    dir match {
-      case Some(url) if url.startsWith("broker://") =>
-        brokerTopics.getOrElseUpdate((name, url), {
-          val hp = url.stripPrefix("broker://").split(":", 2)
-          new BrokerTopic(hp(0), hp(1).toInt, name, nPartitions)
-        })
-      case Some(base) => fileTopics.getOrElseUpdate((name, base),
-        new FileTopic(java.nio.file.Paths.get(base, name), nPartitions))
-      case None =>
-        topics.getOrElseUpdate(name, new InMemoryTopic(nPartitions))
+  def topic(name: String, dir: String, nPartitions: Int = 4): FileTopic =
+    synchronized {
+      topics.getOrElseUpdate((name, dir),
+        new FileTopic(java.nio.file.Paths.get(dir, name), nPartitions))
     }
-  }
-
-  def exists(name: String): Boolean = synchronized(topics.contains(name))
-
-  /** Test isolation: drop an in-memory topic (and its fences/commits,
-    * which live on the instance) and evict file-topic cache entries for
-    * the name (their on-disk state is the test's temp dir to clean).
-    */
-  def drop(name: String): Unit = {
-    // evict under the monitor, close OUTSIDE it: close() waits on the
-    // client's own mutex, which a thread blocked in a network read can
-    // hold indefinitely — holding the registry lock across that would
-    // stall every topic() lookup in the JVM behind one dead broker
-    val evicted = synchronized {
-      topics.remove(name)
-      fileTopics.filterInPlace { case ((n, _), _) => n != name }
-      val out = brokerTopics.collect { case ((n, _), t) if n == name => t }
-      brokerTopics.filterInPlace { case ((n, _), _) => n != name }
-      out.toSeq
-    }
-    evicted.foreach(_.close()) // don't leak the fd + broker handler thread
-  }
 }
 
 class GraftQueueProvider extends TableProvider with DataSourceRegister {
@@ -163,8 +119,12 @@ class GraftQueueTable(props: util.Map[String, String])
     g
   }
   private val maxPoll = opt("maxpoll", "0").toInt
-  // optional base directory: present -> file-backed multi-process topic
-  private val dirOpt = Option(props.get("dir")).filter(_.nonEmpty)
+  private val dir = {
+    val d = props.get("dir")
+    require(d != null && d.nonEmpty,
+      "graftqueue requires option 'dir' (the topic's base directory)")
+    d
+  }
   // retain=committed: this reader also runs retention after each durable
   // micro-batch commit, trimming records every group has consumed
   private val retain = opt("retain", "off") match {
@@ -185,8 +145,8 @@ class GraftQueueTable(props: util.Map[String, String])
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = GraftQueueTable.readSchema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new GraftQueueMicroBatchStream(topicName, nPartitions, group,
-            maxPoll, dirOpt, retain)
+          new GraftQueueMicroBatchStream(topicName, dir, nPartitions, group,
+            maxPoll, retain)
       }
     }
 
@@ -196,8 +156,8 @@ class GraftQueueTable(props: util.Map[String, String])
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toStreaming: StreamingWrite =
-          new GraftQueueStreamingWrite(topicName, nPartitions, schema,
-            queryId, dirOpt)
+          new GraftQueueStreamingWrite(topicName, dir, nPartitions, schema,
+            queryId)
       }
     }
   }
@@ -222,12 +182,11 @@ object QueueOffset {
       }.toMap)
 }
 
-class GraftQueueMicroBatchStream(topicName: String, nPartitions: Int,
-    group: String, maxPoll: Int, dirOpt: Option[String] = None,
-    retain: Boolean = false)
+class GraftQueueMicroBatchStream(topicName: String, dir: String,
+    nPartitions: Int, group: String, maxPoll: Int, retain: Boolean = false)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
-  private def topic = QueueRegistry.topic(topicName, nPartitions, dirOpt)
+  private def topic = QueueRegistry.topic(topicName, dir, nPartitions)
 
   // This group's DURABLE progress line, distinct from its planning-time
   // ack (S4 ack-before-process): the ack runs one in-flight batch ahead
@@ -293,7 +252,7 @@ class GraftQueueMicroBatchStream(topicName: String, nPartitions: Int,
     e.toSeq.sortBy(_._1).flatMap { case (p, to) =>
       val from = s.getOrElse(p, 0L)
       if (to > from)
-        Some(QueueInputPartition(topicName, p, from, to, dirOpt): InputPartition)
+        Some(QueueInputPartition(topicName, dir, p, from, to): InputPartition)
       else None
     }.toArray
   }
@@ -327,8 +286,8 @@ class GraftQueueMicroBatchStream(topicName: String, nPartitions: Int,
   override def stop(): Unit = ()
 }
 
-case class QueueInputPartition(topicName: String, partition: Int,
-    from: Long, to: Long, dir: Option[String] = None) extends InputPartition
+case class QueueInputPartition(topicName: String, dir: String,
+    partition: Int, from: Long, to: Long) extends InputPartition
 
 class QueuePartitionReaderFactory extends PartitionReaderFactory {
   /** Rows per poll call while walking a planned range. Bounds task
@@ -344,7 +303,7 @@ class QueuePartitionReaderFactory extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val qp = partition.asInstanceOf[QueueInputPartition]
-    val topic = QueueRegistry.topic(qp.topicName, dir = qp.dir)
+    val topic = QueueRegistry.topic(qp.topicName, qp.dir)
     new PartitionReader[InternalRow] {
       private var pos = qp.from
       private var chunk: Iterator[QueueRecord] = Iterator.empty
@@ -382,7 +341,7 @@ class QueuePartitionReaderFactory extends PartitionReaderFactory {
 
 /** Streaming sink, executor-side produce: each task buffers its rows and
   * appends them to the topic atomically AT TASK COMMIT under the
-  * registry's (queryId, epochId, partitionId) fence; the commit message
+  * topic's (queryId, epochId, partitionId) fence; the commit message
   * carries only a count, so the driver's epoch commit is pure metadata.
   *
   * Failure matrix (the idempotent-producer semantics, no transactions):
@@ -395,16 +354,16 @@ class QueuePartitionReaderFactory extends PartitionReaderFactory {
   *    (Kafka's non-transactional producer has the same window); the
   *    replay fences them, so no duplicates.
   */
-class GraftQueueStreamingWrite(topicName: String, nPartitions: Int,
-    schema: StructType, queryId: String, dirOpt: Option[String] = None)
+class GraftQueueStreamingWrite(topicName: String, dir: String,
+    nPartitions: Int, schema: StructType, queryId: String)
     extends StreamingWrite {
   private val keyIdx = schema.fieldNames.indexOf("key")
   private val valIdx = schema.fieldNames.indexOf("value")
   require(valIdx >= 0, "graftqueue sink requires a 'value' string column")
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new QueueWriterFactory(topicName, nPartitions, queryId, keyIdx, valIdx,
-      dirOpt)
+    new QueueWriterFactory(topicName, dir, nPartitions, queryId, keyIdx,
+      valIdx)
 
   // tasks already produced; the epoch commit is metadata-only
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
@@ -416,9 +375,8 @@ class GraftQueueStreamingWrite(topicName: String, nPartitions: Int,
 case class QueueTaskMeta(partitionId: Int, epochId: Long, rows: Long)
     extends WriterCommitMessage
 
-class QueueWriterFactory(topicName: String, nPartitions: Int,
-    queryId: String, keyIdx: Int, valIdx: Int,
-    dirOpt: Option[String] = None)
+class QueueWriterFactory(topicName: String, dir: String, nPartitions: Int,
+    queryId: String, keyIdx: Int, valIdx: Int)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
@@ -436,9 +394,9 @@ class QueueWriterFactory(topicName: String, nPartitions: Int,
         // in ONE topic-side critical section (data strictly before
         // fence — a crash between a taken fence and the append would
         // otherwise lose the buffer to a fenced retry). The fence lives
-        // WITH the topic (file-backed when the topic is), so epoch
-        // replay is idempotent across processes too.
-        QueueRegistry.topic(topicName, nPartitions, dirOpt)
+        // on disk WITH the topic, so epoch replay is idempotent across
+        // processes too.
+        QueueRegistry.topic(topicName, dir, nPartitions)
           .produceFenced(queryId, epochId, partitionId, buf.toSeq)
         QueueTaskMeta(partitionId, epochId, buf.size.toLong)
       }

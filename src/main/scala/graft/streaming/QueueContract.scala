@@ -2,19 +2,18 @@ package graft.streaming
 
 import scala.collection.mutable
 
-/** Queue-transport contract double (S3/S4).
+/** Queue-transport contract (S3/S4).
   *
   * The reference's inter-stage fabric is a message broker
   * (queue.js:206-305; topology config/apm_config.json:87-178). The
   * Spark-native equivalent is the Kafka connector —
   * `writeStream.format("kafka")` producing, `readStream.format("kafka")`
-  * consuming — but no connector jar ships in this container, so the
-  * running graph ([[ApmGraph]]) hands off through append-only parquet
-  * topic directories instead. What that substitution does NOT exercise
-  * is the broker contract the stage code would rely on under Kafka.
-  * This class models that contract exactly, so its semantics are pinned
-  * by tests (QueueContractSpec) and the stage code's assumptions are
-  * documented against it:
+  * consuming — but no connector jar ships with this build, so the graph
+  * ([[ApmGraph]]) hands off through parquet topic directories or through
+  * the `graftqueue` connector over [[FileTopic]]. This trait is the
+  * broker contract the stage code relies on, pinned by the
+  * `QueueTopicConformance` kit (QueueContractSpec) that a Kafka adapter
+  * would also run:
   *
   *  - an append-only PARTITIONED log; a record's partition is chosen by
   *    key hash (null keys round-robin), and ordering is guaranteed only
@@ -34,11 +33,9 @@ import scala.collection.mutable
   *  - `endOffsets` is the consumer-lag denominator (monitoring parity
   *    with the reference's queue-depth flow control, S2).
   *
-  * Two implementations share the contract (QueueContractSpec runs the
-  * same suite against both): [[InMemoryTopic]] (JVM-local, the unit-test
-  * double) and [[FileTopic]] (file-backed, multi-process — two separate
-  * JVMs can produce/consume the same topic, the process topology the
-  * reference's broker actually has).
+  * [[FileTopic]] is the one implementation: file-backed and
+  * multi-process, so separate JVMs produce to and consume from the same
+  * topic — the process topology the reference's broker has.
   */
 trait QueueTopic {
   def nPartitions: Int
@@ -167,104 +164,6 @@ object QueueTopic {
       if (g.endsWith(".durable")) offs
       else all.getOrElse(g + ".durable", offs)
     }
-}
-
-final class InMemoryTopic(val nPartitions: Int) extends QueueTopic {
-  require(nPartitions >= 1)
-  private val logs =
-    Array.fill(nPartitions)(mutable.ArrayBuffer.empty[(String, String)])
-  // records [0, base) are retention-trimmed; logs(p)(i) is offset base+i
-  private val base = Array.fill(nPartitions)(0L)
-  private var roundRobin = 0
-
-  /** Append; returns (partition, offset) like a producer ack. */
-  def produce(key: String, value: String): (Int, Long) = synchronized {
-    val p =
-      if (key == null) { roundRobin += 1; (roundRobin - 1) % nPartitions }
-      else math.floorMod(key.hashCode, nPartitions)
-    logs(p) += ((key, value))
-    (p, base(p) + logs(p).length - 1L)
-  }
-
-  /** Append a task's whole buffer in ONE synchronized section — the
-    * atomic unit of the sink's executor-side produce. Keys still choose
-    * partitions by hash (the contract); atomicity is per producing TASK,
-    * so a reader never observes a torn task batch.
-    */
-  def produceAll(rows: Seq[(String, String)]): Unit = synchronized {
-    rows.foreach { case (key, value) =>
-      val p =
-        if (key == null) { roundRobin += 1; (roundRobin - 1) % nPartitions }
-        else math.floorMod(key.hashCode, nPartitions)
-      logs(p) += ((key, value))
-    }
-  }
-
-  def endOffsets: Map[Int, Long] =
-    synchronized(
-      (0 until nPartitions).map(p => p -> (base(p) + logs(p).length)).toMap)
-
-  def beginningOffsets: Map[Int, Long] =
-    synchronized((0 until nPartitions).map(p => p -> base(p)).toMap)
-
-  def truncateToCommitted(minFraction: Double): Map[Int, Long] =
-    synchronized {
-      val lines = QueueTopic.retentionLines(
-        groupOffsets.view.mapValues(_.toMap).toMap)
-      if (lines.nonEmpty) (0 until nPartitions).foreach { p =>
-        val target = lines.iterator.map(_.getOrElse(p, 0L)).min
-        val cut = math.min(target, base(p) + logs(p).length)
-        if (cut > base(p) &&
-            (cut - base(p)).toDouble >= minFraction * logs(p).length) {
-          logs(p).dropInPlace((cut - base(p)).toInt)
-          base(p) = cut
-        }
-      }
-      beginningOffsets
-    }
-
-  private[streaming] def read(p: Int, from: Long, max: Int): Seq[QueueRecord] =
-    synchronized {
-      // below the beginning = earliest-reset: resume at the first
-      // retained record, offsets stay the record's own (never renumber)
-      val from0 = math.max(from, base(p))
-      logs(p).iterator.zipWithIndex.drop((from0 - base(p)).toInt).take(max)
-        .map { case ((k, v), i) => QueueRecord(p, base(p) + i, k, v) }.toSeq
-    }
-
-  /** Durable committed offsets per consumer group (survives a consumer
-    * "crash"; a real broker persists these in its offsets topic).
-    */
-  private val groupOffsets =
-    mutable.Map.empty[String, mutable.Map[Int, Long]]
-  protected def committedRaw(group: String): Map[Int, Long] =
-    synchronized(groupOffsets.getOrElse(group, mutable.Map.empty).toMap)
-  protected def commitRaw(group: String, offs: Map[Int, Long]): Unit =
-    synchronized {
-      val g = groupOffsets.getOrElseUpdate(group, mutable.Map.empty)
-      offs.foreach { case (p, o) => g(p) = math.max(o, g.getOrElse(p, 0L)) }
-    }
-
-  // (query, write-partition) -> high-water epoch produced
-  private val epochHighWater = mutable.Map.empty[(String, Int), Long]
-  private[streaming] def beginTaskEpoch(queryId: String, epochId: Long,
-      partitionId: Int): Boolean = synchronized {
-    val k = (queryId, partitionId)
-    val hw = epochHighWater.getOrElse(k, Long.MinValue)
-    if (epochId > hw) { epochHighWater(k) = epochId; true } else false
-  }
-
-  // data before fence, one monitor section (produceAll re-enters it)
-  private[streaming] def produceFenced(queryId: String, epochId: Long,
-      partitionId: Int, rows: Seq[(String, String)]): Boolean = synchronized {
-    val k = (queryId, partitionId)
-    val hw = epochHighWater.getOrElse(k, Long.MinValue)
-    if (epochId > hw) {
-      produceAll(rows)
-      epochHighWater(k) = epochId
-      true
-    } else false
-  }
 }
 
 final case class QueueRecord(partition: Int, offset: Long,

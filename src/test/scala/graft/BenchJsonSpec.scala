@@ -4,7 +4,7 @@ import java.util.Locale
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bench's JSON lines are parsed by machines; their numbers must not
-  * follow the JVM's default locale.
+  * follow the JVM's default locale, and their strings must be escaped.
   */
 class BenchJsonSpec extends AnyFunSuite {
   test("jnum keeps a '.' decimal point under a comma-decimal default locale") {
@@ -16,5 +16,15 @@ class BenchJsonSpec extends AnyFunSuite {
       assert(Bench.jnum(1234.567, 2) == "1234.57")
       assert(Bench.jnum(9600 / 4.0, 0) == "2400")
     } finally Locale.setDefault(saved)
+  }
+
+  test("the total line parses with a quote, a backslash and a tab in the sf path") {
+    val sf = "/data/a\"b\\c\td"
+    val line = Bench.compactLine(12.5, 3, """{"q1":"Boom"}""", "", 0.25, sf)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.get("sf").asText == sf)
+    assert(json.get("n_queries").asInt == 3)
+    assert(json.get("errors").get("q1").asText == "Boom")
+    assert(Bench.jstr("\u0001") == "\"\\u0001\"")
   }
 }

@@ -12,9 +12,8 @@ import graft.streaming.{ContractConsumer, FileTopic, FileTopicChild}
   * separate `java` child JVMs (FileTopicChild) that produce/consume/fence
   * against the same topic directory this JVM uses — the process topology
   * the reference's broker fabric actually has (six OS processes,
-  * config/apm_config.json:87-178), which the JVM-local registry could
-  * never exercise. Plus the `format("graftqueue")` connector running
-  * over the file backend via the `dir` option.
+  * config/apm_config.json:87-178). Plus the `format("graftqueue")`
+  * connector running over the file backend via the `dir` option.
   */
 class FileTopicSpec extends AnyFunSuite {
 
@@ -464,8 +463,9 @@ class FileTopicSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt())
       .trigger(Trigger.AvailableNow()).start()
     w.awaitTermination()
-    // the records are on disk, not in the JVM registry
-    assert(!graft.streaming.QueueRegistry.exists("tfile"))
+    // the records are on disk under dir/topic
+    assert(new FileTopic(java.nio.file.Paths.get(base, "tfile"))
+      .endOffsets.values.sum == 30L)
     def drain(group: String, sink: String): Seq[(String, String)] = {
       val q = spark.readStream.format("graftqueue")
         .option("topic", "tfile").option("dir", base).option("group", group)

@@ -171,8 +171,8 @@ class JdbcSinkSpec extends AnyFunSuite {
     // COUNT path: 2500 queued rows with maxpoll=1000 on a 1-partition
     // topic must arrive as exactly 1000/1000/500-row inserts.
     val topic = "t_flush"
-    QueueRegistry.drop(topic)
-    val t = QueueRegistry.topic(topic, nPartitions = 1)
+    val dir = java.nio.file.Files.createTempDirectory("graft_flush").toString
+    val t = QueueRegistry.topic(topic, dir, nPartitions = 1)
     (0 until 2500).foreach(i => t.produce(null, i.toString))
     val sizes = mutable.Buffer.empty[Long]
     val write: (DataFrame, Long) => Unit = (df, _) => {
@@ -181,10 +181,9 @@ class JdbcSinkSpec extends AnyFunSuite {
       JdbcSink.writeBatch(rows, url, "flushed")
       rows.unpersist(); ()
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_flush").toString
     val q = ApmStreaming.sinkWithRequeue(
       spark.readStream.format("graftqueue")
-        .option("topic", topic).option("group", "flush")
+        .option("topic", topic).option("dir", dir).option("group", "flush")
         .option("maxpoll", bound).load(),
       s"$dir/ckpt_cnt", s"$dir/park_cnt", write,
       availableNow = true)

@@ -102,15 +102,11 @@ class MultiProcessGraphSpec extends AnyFunSuite {
     * so it cannot overtake them across micro-batches.
     */
   private def sixProcessScenario(provider: String,
-      ordered: Boolean = false,
-      qdirOverride: Option[String] = None): Unit = {
+      ordered: Boolean = false): Unit = {
     val base = Files.createTempDirectory("graft_mp").toString
     val logs = s"$base/logs"
     val glob = s"$logs/net/*/*"
-    // qdirOverride carries a broker URL for the over-the-broker leg:
-    // the children's stage code and the parent's probes all resolve
-    // topics through QueueRegistry, so the transport is ONLY this string
-    val qdir = qdirOverride.getOrElse(s"$base/q")
+    val qdir = s"$base/q"
     val stop = s"$base/stop"
     val works = (1 to 6).map(s => s"$base/work$s")
     works.foreach(w => Files.createDirectories(Paths.get(w)))
@@ -120,16 +116,14 @@ class MultiProcessGraphSpec extends AnyFunSuite {
     // batch-side oracle recomputed after the injection
     val sentinelServers = TopologyOracle.sentinelServers
 
-    // parent-side topic probes, transport-agnostic: resolve through the
-    // registry exactly like the stage code does. File mode must NOT
-    // create a topic the children haven't made yet (existence is part of
-    // some spin conditions, and constructing a FileTopic creates its
-    // dir), so an absent file topic reads as None; the broker
-    // auto-creates empty topics, which reads as sum 0 — same predicate.
+    // parent-side topic probes, resolved through the registry exactly
+    // like the stage code does. A probe must NOT create a topic the
+    // children haven't made yet (existence is part of some spin
+    // conditions, and constructing a FileTopic creates its dir), so an
+    // absent topic reads as None.
     def topicOf(name: String): Option[QueueTopic] =
-      if (qdir.startsWith("broker://") ||
-          Files.exists(Paths.get(qdir, name)))
-        Some(QueueRegistry.topic(name, 4, Some(qdir)))
+      if (Files.exists(Paths.get(qdir, name)))
+        Some(QueueRegistry.topic(name, qdir))
       else None
     def topicSum(name: String): Long =
       topicOf(name).map(_.endOffsets.values.sum).getOrElse(0L)
@@ -466,22 +460,6 @@ class MultiProcessGraphSpec extends AnyFunSuite {
       "bit-exactly (RocksDB provider — transformWithState)") {
     sixProcessScenario(graft.streaming.ApmStateV2.RocksDbProvider,
       ordered = true)
-  }
-
-  test("same topology over the TCP broker daemon: six forked JVMs dial " +
-      "the parent-hosted SocketBroker for every stage boundary (the " +
-      "reference's processes-plus-broker-daemon shape), stage 2 " +
-      "SIGKILLed and re-forked mid-run; alerts, z records, DB and JMX " +
-      "samples all == their oracles") {
-    // the ONLY thing that changes vs the file-transport scenario is the
-    // qdir string — stage code, probes, kill/recovery discipline all
-    // identical. Topic state (offsets, group commits, fences) lives in
-    // the parent-hosted daemon, so the SIGKILLed stage-2 client loses
-    // nothing it hadn't committed — the exactly-once story the broker
-    // contract exists to carry.
-    val broker = new graft.streaming.SocketBroker()
-    try sixProcessScenario("", qdirOverride = Some(broker.url))
-    finally broker.close()
   }
 }
 

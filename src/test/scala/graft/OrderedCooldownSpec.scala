@@ -100,27 +100,28 @@ class OrderedCooldownSpec extends AnyFunSuite with RocksDbSupport {
   test("t_ops alarm channel: ledger deltas publish once, zero-delta " +
       "drains stay silent, wm drops publish without the ledger") {
     import graft.streaming.{ApmGraph, ContractConsumer, QueueRegistry}
-    val topic = QueueRegistry.topic("t_ops", 1, None) // in-memory registry
+    val qdir = java.nio.file.Files.createTempDirectory("graft_ops").toString
+    val topic = QueueRegistry.topic("t_ops", qdir, 1)
     val c = new ContractConsumer(topic, "spec_ops_unit")
     ApmStateV2.LateDrops.reset()
     // sync the delta baseline to the current counters (earlier suites/
     // tests in this JVM may have published)
-    ApmGraph.publishDropMetrics(0L, "sync", None, includeLedger = true)
+    ApmGraph.publishDropMetrics(0L, "sync", qdir, includeLedger = true)
     c.poll(1000) // discard anything pending
     // a drain that saw only LEDGER drops (boundary band) publishes them
     ApmStateV2.LateDrops.dropped.incrementAndGet()
     ApmStateV2.LateDrops.droppedWithData.incrementAndGet()
-    ApmGraph.publishDropMetrics(0L, "stage4", None, includeLedger = true)
+    ApmGraph.publishDropMetrics(0L, "stage4", qdir, includeLedger = true)
     val r1 = c.poll(1000)
     assert(r1.size == 1 && r1.head.value ==
       """{"stage":"stage4","wm_dropped":0,"ledger_dropped":1,""" +
         """"ledger_dropped_with_data":1}""", s"got $r1")
     // same counters, next drain: delta is zero -> SILENT (alarm, not
     // heartbeat)
-    ApmGraph.publishDropMetrics(0L, "stage4", None, includeLedger = true)
+    ApmGraph.publishDropMetrics(0L, "stage4", qdir, includeLedger = true)
     assert(c.poll(1000).isEmpty, "zero-delta drain published")
     // a wm-only drop publishes without touching the ledger fields
-    ApmGraph.publishDropMetrics(3L, "stage1", None)
+    ApmGraph.publishDropMetrics(3L, "stage1", qdir)
     val r3 = c.poll(1000)
     assert(r3.size == 1 && r3.head.value ==
       """{"stage":"stage1","wm_dropped":3,"ledger_dropped":0,""" +
@@ -155,7 +156,7 @@ class OrderedCooldownSpec extends AnyFunSuite with RocksDbSupport {
       (0 until 150).foreach(i => t.produce("k", fired(2000000L + i * 20000L)))
       val cfg = ApmGraph.GraphCfg(orderedCooldown = true)
       ApmGraph.runStage4Queued(spark, s"$base/work", cfg,
-        ApmGraph.Topic("t_fired", Some(qdir)), maxPoll = Some(1))
+        ApmGraph.Topic("t_fired", qdir), maxPoll = Some(1))
       val alarms = new ContractConsumer(
         new FileTopic(Paths.get(qdir, "t_ops")), "spec_dropx")
         .poll(1000).map(_.value)

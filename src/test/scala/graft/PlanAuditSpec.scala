@@ -13,17 +13,33 @@ import graft.tools.PlanAudit
   */
 class PlanAuditSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
+  private def shared: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the audit judges the STATIC plan: AQE can only ever improve on it
-    .config("spark.sql.adaptive.enabled", "false")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** The audit judges the STATIC plan (AQE can only ever improve on it),
+    * so it runs with AQE off — in its own session: every suite shares
+    * one test JVM, and `getOrCreate` applies a builder's SQL settings to
+    * the existing shared session.
+    */
+  lazy val spark: SparkSession = {
+    val s = shared.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s
+  }
+
+  test("the audit's AQE-off setting does not leak into the shared session") {
+    val before = shared
+    spark
+    assert(before.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "false")
+  }
 
   test("every registered query: zero cartesians, nested-loop joins " +
       "within their pinned bounded-broadcast counts") {

@@ -8,13 +8,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{ApmGraph, QueueRegistry, QueueTaskMeta, QueueWriterFactory}
+import graft.streaming.{ApmGraph, ContractConsumer, FileTopic, QueueRegistry, QueueTaskMeta, QueueWriterFactory}
 
 /** S3/S4 — the `format("graftqueue")` DataSource V2 connector over the
   * broker contract: streaming produce/consume with partitioned offsets,
   * consumer-group committed-offset resume, per-epoch exactly-once append,
   * and the graph's stage 3 -> 4 handoff running through the connector
-  * with results identical to the parquet-topic handoff.
+  * with results identical to the parquet-topic handoff. Every test owns
+  * a fresh topic base directory (the connector's required `dir`).
   */
 class QueueConnectorSpec extends AnyFunSuite {
 
@@ -30,8 +31,12 @@ class QueueConnectorSpec extends AnyFunSuite {
   private def ckpt(): String =
     Files.createTempDirectory("graft_qckpt").toString
 
-  /** Drain a memory-stream batch into a queue topic via the sink. */
-  private def produce(topic: String, rows: Seq[(String, String)],
+  /** A fresh topic base directory. */
+  private def qdir(): String =
+    Files.createTempDirectory("graft_qdir").toString
+
+  /** Drain a memory-stream batch into the topic under `dir` via the sink. */
+  private def produce(topic: String, dir: String, rows: Seq[(String, String)],
       checkpoint: String): Unit = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -41,20 +46,23 @@ class QueueConnectorSpec extends AnyFunSuite {
       .writeStream
       .format("graftqueue")
       .option("topic", topic)
+      .option("dir", dir)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
   }
 
-  /** Drain a queue topic into memory via the source; returns
+  /** Drain the topic under `dir` into memory via the source; returns
     * (partition, offset, key, value) rows.
     */
-  private def consume(topic: String, group: String, checkpoint: String,
-      sinkName: String, maxPoll: Int = 0): Seq[(Int, Long, String, String)] = {
+  private def consume(topic: String, dir: String, group: String,
+      checkpoint: String, sinkName: String,
+      maxPoll: Int = 0): Seq[(Int, Long, String, String)] = {
     val q = spark.readStream
       .format("graftqueue")
       .option("topic", topic)
+      .option("dir", dir)
       .option("group", group)
       .option("maxpoll", maxPoll)
       .load()
@@ -71,11 +79,10 @@ class QueueConnectorSpec extends AnyFunSuite {
   }
 
   test("produce/consume round-trip: keyed partitioning + offset order") {
-    val topic = "t_roundtrip"
-    QueueRegistry.drop(topic)
+    val (topic, dir) = ("t_roundtrip", qdir())
     val rows = (0 until 40).map(i => (s"k${i % 5}", s"v$i"))
-    produce(topic, rows, ckpt())
-    val got = consume(topic, "g1", ckpt(), "q_rt")
+    produce(topic, dir, rows, ckpt())
+    val got = consume(topic, dir, "g1", ckpt(), "q_rt")
     assert(got.size == 40)
     assert(got.map(r => (r._3, r._4)).toSet == rows.toSet)
     // same key -> same partition (hash partitioning contract)
@@ -93,29 +100,26 @@ class QueueConnectorSpec extends AnyFunSuite {
   }
 
   test("consumer group resumes from its commit, not from zero") {
-    val topic = "t_resume"
-    QueueRegistry.drop(topic)
-    produce(topic, (0 until 10).map(i => (s"k$i", s"a$i")), ckpt())
-    val first = consume(topic, "gr", ckpt(), "q_res1")
+    val (topic, dir) = ("t_resume", qdir())
+    produce(topic, dir, (0 until 10).map(i => (s"k$i", s"a$i")), ckpt())
+    val first = consume(topic, dir, "gr", ckpt(), "q_res1")
     assert(first.size == 10)
     // same group, FRESH checkpoint: the committed offsets gate redelivery
-    produce(topic, (0 until 6).map(i => (s"k$i", s"b$i")), ckpt())
-    val second = consume(topic, "gr", ckpt(), "q_res2")
+    produce(topic, dir, (0 until 6).map(i => (s"k$i", s"b$i")), ckpt())
+    val second = consume(topic, dir, "gr", ckpt(), "q_res2")
     assert(second.map(_._4).toSet == (0 until 6).map(i => s"b$i").toSet,
       s"acked records redelivered: $second")
     // a DIFFERENT group still reads from the beginning
-    val fresh = consume(topic, "gr2", ckpt(), "q_res3")
+    val fresh = consume(topic, dir, "gr2", ckpt(), "q_res3")
     assert(fresh.size == 16)
   }
 
   test("maxpoll bounds each micro-batch like the contract's poll") {
-    val topic = "t_poll"
-    QueueRegistry.drop(topic)
-    // single partition so batch admission is observable
-    produce(topic, (0 until 9).map(i => (null: String, s"v$i")), ckpt())
+    val (topic, dir) = ("t_poll", qdir())
+    produce(topic, dir, (0 until 9).map(i => (null: String, s"v$i")), ckpt())
     // one AvailableNow drain with maxpoll=2 must still deliver all rows
     // (the wrapper loops batches of <= 2 per partition until caught up)
-    val got = consume(topic, "gp", ckpt(), "q_poll", maxPoll = 2)
+    val got = consume(topic, dir, "gp", ckpt(), "q_poll", maxPoll = 2)
     assert(got.size == 9, s"got ${got.size}")
   }
 
@@ -124,11 +128,11 @@ class QueueConnectorSpec extends AnyFunSuite {
     // 150k rows into one unbounded (maxpoll=0) drain: the planned range
     // spans 3 refill chunks per partition — the path that used to
     // materialize everything in one read (and overflow past 2^31)
-    val topic = "t_bigrange"
-    val t = graft.streaming.QueueRegistry.topic(topic, 4)
+    val (topic, dir) = ("t_bigrange", qdir())
+    val t = QueueRegistry.topic(topic, dir, 4)
     val n = 150000
     t.produceAll((0 until n).map(i => (s"k${i % 16}", s"v$i")))
-    val got = consume(topic, "gbig", ckpt(), "q_bigrange")
+    val got = consume(topic, dir, "gbig", ckpt(), "q_bigrange")
     assert(got.size == n, s"delivered ${got.size} of $n")
     assert(got.map(_._4).toSet.size == n, "duplicates in the range walk")
     got.groupBy(_._1).foreach { case (p, rs) =>
@@ -139,15 +143,14 @@ class QueueConnectorSpec extends AnyFunSuite {
 
   test("the chunked reader over a retention-trimmed prefix: advances by " +
       "what the topic returns, never spins, never re-reads trimmed rows") {
-    import java.nio.file.Paths
-    // file-backed so the trim physically rewrites; group g consumes+
+    // the trim physically rewrites the topic files; group g consumes+
     // commits half, retention trims it, then a SECOND group's fresh
     // checkpoint plans from the beginning — its range starts below the
     // retained prefix and the reader must land exactly the survivors
-    val base = Files.createTempDirectory("graft_q_trim").toString
-    val t = graft.streaming.QueueRegistry.topic("t_trim", 2, Some(base))
+    val base = qdir()
+    val t = QueueRegistry.topic("t_trim", base, 2)
     (0 until 40).foreach(i => t.produce(s"k$i", s"v$i"))
-    val half = new graft.streaming.ContractConsumer(t, "ghalf")
+    val half = new ContractConsumer(t, "ghalf")
     val taken = half.poll(10) // 10 per partition = 20 rows
     half.commitSync()
     t.truncateToCommitted()
@@ -165,13 +168,11 @@ class QueueConnectorSpec extends AnyFunSuite {
     val expected = (0 until 40).map(i => s"v$i").toSet -- taken.map(_.value)
     assert(vals == expected,
       s"survivor mismatch: missing=${expected -- vals} extra=${vals -- expected}")
-    graft.streaming.QueueRegistry.drop("t_trim")
   }
 
   test("a replayed sink epoch appends exactly once, per partition") {
-    val topic = "t_epoch"
-    QueueRegistry.drop(topic)
-    val factory = new QueueWriterFactory(topic, 2, "query-1",
+    val (topic, dir) = ("t_epoch", qdir())
+    val factory = new QueueWriterFactory(topic, dir, 2, "query-1",
       keyIdx = 0, valIdx = 1)
     def row(k: String, v: String) =
       org.apache.spark.sql.catalyst.InternalRow(
@@ -186,7 +187,7 @@ class QueueConnectorSpec extends AnyFunSuite {
     // epoch 7: two write partitions produce at TASK commit
     val m0 = runTask(0, 7L, Seq("v1", "v2"))
     runTask(1, 7L, Seq("v3"))
-    assert(QueueRegistry.topic(topic).endOffsets.values.sum == 3L)
+    assert(QueueRegistry.topic(topic, dir).endOffsets.values.sum == 3L)
     // the commit message is metadata-only — no row payloads to the driver
     assert(m0 == QueueTaskMeta(partitionId = 0, epochId = 7L, rows = 2L))
     // epoch 7 replayed (sink retry): only partition 1's task reruns, then
@@ -194,11 +195,11 @@ class QueueConnectorSpec extends AnyFunSuite {
     runTask(1, 7L, Seq("v3"))
     runTask(0, 7L, Seq("v1", "v2"))
     runTask(1, 7L, Seq("v3"))
-    val end = QueueRegistry.topic(topic).endOffsets.values.sum
+    val end = QueueRegistry.topic(topic, dir).endOffsets.values.sum
     assert(end == 3L, s"replayed epoch duplicated records: $end")
     // a NEW epoch appends again
     runTask(0, 8L, Seq("v4"))
-    assert(QueueRegistry.topic(topic).endOffsets.values.sum == 4L)
+    assert(QueueRegistry.topic(topic, dir).endOffsets.values.sum == 4L)
   }
 
   test("graph stage3->4 handoff over the queue == parquet handoff") {
@@ -217,7 +218,6 @@ class QueueConnectorSpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graft_qgraph").toString
     val logs = s"$base/logs"
     val work = s"$base/work"
-    val workQ = s"$base/workq" // queued stage-4 output + checkpoints
     val cfg = ApmGraph.GraphCfg()
     Seq("hostA", "hostB").foreach { srv =>
       writeLog(logs, srv, (0 until 19).map(i =>
@@ -230,12 +230,18 @@ class QueueConnectorSpec extends AnyFunSuite {
     // parquet-topic handoff (the baseline)
     ApmGraph.runStage3(spark, work, cfg)
     ApmGraph.runStage4(spark, work, cfg)
-    // queue handoff over the same zscore input, writing alerts elsewhere
-    val topic = "t_graph_fired"
-    QueueRegistry.drop(topic)
-    ApmGraph.runStage3Queued(spark, work, cfg,
-      ApmGraph.ParquetDir(s"$work/zscore"), ApmGraph.Topic(topic))
-    ApmGraph.runStage4Queued(spark, workQ, cfg, ApmGraph.Topic(topic))
+    // queue handoff over the same zscore input through a file-backed
+    // topic (the multi-process transport): own work dir and checkpoints,
+    // topic + fences + commits living on disk
+    val workQ = s"$base/workq"
+    val qdir = s"$base/qdir"
+    val topic = ApmGraph.Topic("t_graph_fired", qdir)
+    ApmGraph.runStage3Queued(spark, workQ, cfg,
+      ApmGraph.ParquetDir(s"$work/zscore"), topic)
+    val fOffs = new FileTopic(Paths.get(qdir, topic.name)).endOffsets
+    assert(fOffs.values.sum > 0L,
+      s"stage 3 produced nothing to the file topic: $fOffs")
+    ApmGraph.runStage4Queued(spark, workQ, cfg, topic)
     def alerts(dir: String): Set[(Long, String, String, Int)] =
       spark.read.option("recursiveFileLookup", "true")
         .parquet(s"$dir/alerts")
@@ -249,25 +255,6 @@ class QueueConnectorSpec extends AnyFunSuite {
       s"queue handoff diverged: onlyQ=${(viaQueue -- viaParquet).take(3)} " +
         s"onlyP=${(viaParquet -- viaQueue).take(3)}")
 
-    // same handoff a third time over the FILE-BACKED transport (the
-    // multi-process topology): separate work dir whose zscore input is
-    // the same frames, topic + fences + commits living on disk
-    val workF = s"$base/workf" // own checkpoints; same zscore topic input
-    val qdir = s"$base/qdir"
-    ApmGraph.runStage3Queued(spark, workF, cfg,
-      ApmGraph.ParquetDir(s"$work/zscore"),
-      ApmGraph.Topic("t_graph_fired_f", Some(qdir)))
-    assert(!QueueRegistry.exists("t_graph_fired_f"),
-      "file-backed topic leaked into the JVM-local registry")
-    val fOffs = new graft.streaming.FileTopic(
-      Paths.get(qdir, "t_graph_fired_f")).endOffsets
-    assert(fOffs.values.sum > 0L,
-      s"stage 3 produced nothing to the file topic: $fOffs")
-    ApmGraph.runStage4Queued(spark, workF, cfg,
-      ApmGraph.Topic("t_graph_fired_f", Some(qdir)))
-    assert(alerts(workF) == viaParquet,
-      "file-backed queue handoff diverged from the parquet handoff")
-
     // and the same stage 4 in a SEPARATE Spark JVM (fresh consumer
     // group, own work dir), sharing nothing with this process but the
     // topic directory — the reference's actual process topology
@@ -277,7 +264,7 @@ class QueueConnectorSpec extends AnyFunSuite {
     val out = collection.mutable.Buffer.empty[String]
     val code = scala.sys.process.Process(Seq(java, "-Xmx4g", "-cp", cp,
       "graft.streaming.FileTopicChild", "stage4", workG, qdir,
-      "t_graph_fired_f", "stage4_jvm2"))
+      topic.name, "stage4_jvm2"))
       .!(scala.sys.process.ProcessLogger(out += _, _ => ()))
     assert(code == 0, s"child Spark JVM failed:\n${out.takeRight(30).mkString("\n")}")
     val reported = out.collectFirst { case s if s.startsWith("ALERTS=") =>
@@ -286,35 +273,23 @@ class QueueConnectorSpec extends AnyFunSuite {
       s"child JVM reported $reported alerts, expected ${viaParquet.size}")
     assert(alerts(workG) == viaParquet,
       "cross-JVM stage 4 diverged from the parquet handoff")
+  }
 
-    // and a FOURTH handoff over a real broker boundary (SocketBroker /
-    // BrokerTopic): stage 3 produces over TCP into the broker-owned
-    // topic, stage 4 runs in ANOTHER Spark JVM sharing nothing with
-    // this process — not even a directory — but the broker's address.
-    // The stage code is unchanged; only the `dir` option string differs
-    // (exactly how a Kafka deployment would differ). Fences, group
-    // commits and offsets all live broker-side, so the alerts must
-    // still be bit-identical to the parquet handoff.
-    val broker = new graft.streaming.SocketBroker()
-    try {
-      val workB = s"$base/workb"
-      ApmGraph.runStage3Queued(spark, workB, cfg,
-        ApmGraph.ParquetDir(s"$work/zscore"),
-        ApmGraph.Topic("t_graph_fired_b", Some(broker.url)))
-      val bOffs = QueueRegistry.topic("t_graph_fired_b",
-        dir = Some(broker.url)).endOffsets
-      assert(bOffs.values.sum > 0,
-        s"stage 3 produced nothing to the broker: $bOffs")
-      val workB4 = s"$base/workb4"
-      val outB = collection.mutable.Buffer.empty[String]
-      val codeB = scala.sys.process.Process(Seq(java, "-Xmx4g", "-cp", cp,
-        "graft.streaming.FileTopicChild", "stage4", workB4, broker.url,
-        "t_graph_fired_b", "stage4_broker_jvm"))
-        .!(scala.sys.process.ProcessLogger(outB += _, _ => ()))
-      assert(codeB == 0,
-        s"broker child JVM failed:\n${outB.takeRight(30).mkString("\n")}")
-      assert(alerts(workB4) == viaParquet,
-        "cross-JVM broker handoff diverged from the parquet handoff")
-    } finally broker.close()
+  test("a graftqueue read and a graftqueue write without 'dir' each fail, " +
+      "naming the option") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val expected = "graftqueue requires option 'dir'"
+    val r = intercept[IllegalArgumentException] {
+      spark.readStream.format("graftqueue").option("topic", "t_nodir").load()
+    }
+    assert(r.getMessage.contains(expected), r.getMessage)
+    val w = intercept[IllegalArgumentException] {
+      MemoryStream[(String, String)].toDF().toDF("key", "value")
+        .writeStream.format("graftqueue").option("topic", "t_nodir")
+        .option("checkpointLocation", ckpt())
+        .trigger(Trigger.AvailableNow()).start()
+    }
+    assert(w.getMessage.contains(expected), w.getMessage)
   }
 }

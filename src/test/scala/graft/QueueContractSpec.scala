@@ -1,9 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{BrokerTopic, ContractConsumer, FileTopic, FileTopicChild, InMemoryTopic, QueueTopic, SocketBroker}
+import graft.streaming.{ContractConsumer, FileTopic, FileTopicChild, QueueTopic}
 
 /** The [[graft.streaming.QueueTopic]] CONFORMANCE KIT: every contract
   * assertion the S3/S4 transport relies on — per-partition ordering,
@@ -14,7 +13,7 @@ import graft.streaming.{BrokerTopic, ContractConsumer, FileTopic, FileTopicChild
   *
   * ARCHITECTURE.md claims "Kafka swaps in with callers unchanged"; this
   * kit is what makes that claim structurally testable. To conform a
-  * third implementation (e.g. a Kafka-backed `QueueTopic` adapter):
+  * second implementation (e.g. a Kafka-backed `QueueTopic` adapter):
   *
   * {{{
   * class KafkaTopicConformance extends QueueTopicConformance(
@@ -241,10 +240,6 @@ abstract class QueueTopicConformance(backend: String,
   }
 }
 
-/** The JVM-local test double's conformance run. */
-class InMemoryTopicConformance
-  extends QueueTopicConformance("mem", n => new InMemoryTopic(n))
-
 /** The file-backed multi-process transport's conformance run, plus its
   * backend-only leg: state must be durable ACROSS instances (a second
   * instance over the same directory is a process restart).
@@ -379,125 +374,5 @@ class FileTopicConformance extends QueueTopicConformance("file",
     assert(FileTopicChild.committed(t, group) == Map(0 -> 6L))
     // retention now follows the live line
     assert(t.truncateToCommitted() == Map(0 -> 6L))
-  }
-}
-
-/** The BROKER-backed transport's conformance run — the third
-  * implementation the kit was designed for ("a broker impl subclasses in
-  * one line"): every piece of contract state (logs, group commits,
-  * fences) lives in a [[SocketBroker]] daemon on the other side of a TCP
-  * connection; the client under test is a stateless [[BrokerTopic]].
-  * One broker serves the whole suite; each `mkTopic` call opens a FRESH
-  * topic name on it (tests assume isolation). Backend-only legs below
-  * pin what the kit can't see from one client: state is shared between
-  * independent client instances (broker-side, not client-side), and a
-  * file-backed broker's state survives a broker restart.
-  */
-class BrokerTopicConformance extends QueueTopicConformance("broker",
-    BrokerTopicConformance.mkTopic) with BeforeAndAfterAll {
-
-  override def afterAll(): Unit = BrokerTopicConformance.broker.close()
-
-  test("broker topic: two independent CLIENTS of one broker share " +
-      "records, commits and fences (state lives broker-side)") {
-    val t1 = BrokerTopicConformance.mkTopic(3)
-    // pin the topic FIRST (clients connect lazily — the first frame to
-    // arrive opens the topic at its hint)
-    (0 until 12).foreach(i => t1.produce(s"k$i", s"v$i"))
-    // a second client: same broker + topic name, fresh connection
-    val t2 = new BrokerTopic("127.0.0.1", BrokerTopicConformance.broker.port,
-      BrokerTopicConformance.lastName, 99 /* ignored: broker pinned 3 */)
-    assert(t2.nPartitions == 3)
-    assert(t2.endOffsets == t1.endOffsets)
-    val c1 = new ContractConsumer(t1, "g")
-    assert(c1.poll(1000).size == 12)
-    c1.commitSync()
-    // the commit is visible through the OTHER client ("process restart":
-    // a fresh consumer of the same group resumes after it)
-    val c2 = new ContractConsumer(t2, "g")
-    assert(c2.poll(1000).isEmpty, "committed records redelivered")
-    // a fence taken through one client fences the other — the broker is
-    // the single source of truth for epoch high-water marks
-    assert(FileTopicChild.fence(t1, "q", 5L, 0))
-    assert(!FileTopicChild.fence(t2, "q", 5L, 0))
-    assert(!FileTopicChild.produceFenced(t2, "q", 4L, 0, Seq(("k", "v"))))
-    assert(t2.endOffsets == t1.endOffsets)
-  }
-
-  test("broker topic: hostile OPEN frames (garbage partition width, " +
-      "path-traversal topic name) are dropped at the parse phase and the " +
-      "daemon keeps serving good clients") {
-    import java.io.{DataInputStream, DataOutputStream}
-    import java.net.Socket
-    import java.nio.charset.StandardCharsets.UTF_8
-    // raw frame writer: byte op, str name, int width (the OPEN shape)
-    def rawOpen(name: String, width: Int): Unit = {
-      val s = new Socket("127.0.0.1", BrokerTopicConformance.broker.port)
-      try {
-        val o = new DataOutputStream(s.getOutputStream)
-        o.writeByte(1) // OpOpen
-        val b = name.getBytes(UTF_8)
-        o.writeInt(b.length); o.write(b)
-        o.writeInt(width)
-        o.flush()
-        // parse failure = dropped connection: the read sees EOF, never a
-        // status byte
-        val in = new DataInputStream(s.getInputStream)
-        s.setSoTimeout(5000)
-        intercept[java.io.IOException] {
-          val st = in.readByte()
-          fail(s"hostile OPEN answered with status $st instead of a drop")
-        }
-      } finally s.close()
-    }
-    rawOpen("t_evil_width", Int.MaxValue) // would size a 2^31-entry topic
-    rawOpen("t_evil_width", 0)
-    rawOpen("t_evil_width", -7)
-    rawOpen("../escape", 1)     // would resolve outside dataDir
-    rawOpen("a/b", 1)
-    rawOpen("..", 1)
-    rawOpen(".", 1)             // would resolve onto dataDir ITSELF
-    rawOpen("", 1)
-    // the daemon survived all of it: a fresh legitimate client round-trips
-    val t = BrokerTopicConformance.mkTopic(2)
-    t.produce("k", "v")
-    assert(new ContractConsumer(t, "g").poll(10).size == 1)
-  }
-
-  test("broker topic: a FILE-BACKED broker's topics survive a broker " +
-      "restart (the broker persists its own log segments; clients never " +
-      "touch the filesystem)") {
-    val dataDir = Files.createTempDirectory("graft_broker_data")
-    val b1 = new SocketBroker(0, dataDir = Some(dataDir))
-    val t1 = new BrokerTopic("127.0.0.1", b1.port, "t_durable", 2)
-    (0 until 10).foreach(i => t1.produce(s"k$i", s"v$i"))
-    val c1 = new ContractConsumer(t1, "g")
-    assert(c1.poll(1000).size == 10)
-    c1.commitSync()
-    assert(FileTopicChild.fence(t1, "q", 3L, 0))
-    b1.close()
-    // restart: a new broker daemon over the same data dir, new port
-    val b2 = new SocketBroker(0, dataDir = Some(dataDir))
-    try {
-      val t2 = new BrokerTopic("127.0.0.1", b2.port, "t_durable", 7)
-      assert(t2.nPartitions == 2, "restart lost the pinned width")
-      assert(t2.endOffsets.values.sum == 10L, "restart lost records")
-      assert(new ContractConsumer(t2, "g").poll(1000).isEmpty,
-        "restart lost the group commit")
-      assert(new ContractConsumer(t2, "g2").poll(1000).size == 10)
-      assert(!FileTopicChild.fence(t2, "q", 3L, 0),
-        "restart lost the producer fence: a replayed epoch would " +
-          "double-append")
-    } finally b2.close()
-  }
-}
-
-object BrokerTopicConformance {
-  val broker = new SocketBroker()
-  private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-  @volatile var lastName: String = ""
-  def mkTopic(n: Int): QueueTopic = {
-    lastName = s"conf_${counter.incrementAndGet()}"
-    new BrokerTopic("127.0.0.1", broker.port, lastName, n)
   }
 }

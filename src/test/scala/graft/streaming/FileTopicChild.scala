@@ -94,7 +94,7 @@ object FileTopicChild {
         .getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       ApmGraph.runStage4Queued(spark, args(1), ApmGraph.GraphCfg(),
-        ApmGraph.Topic(args(3), Some(args(2))), group = args(4))
+        ApmGraph.Topic(args(3), args(2)), group = args(4))
       val n = spark.read.option("recursiveFileLookup", "true")
         .parquet(args(1) + "/alerts").count()
       spark.stop()
@@ -151,7 +151,7 @@ object FileTopicChild {
           val Array(cliCmd, hostsCsv) = logsGlob.split(";", 2)
           JmxPoller.pollOnce(spark, hostsCsv.split(",").toSeq,
             JmxPoller.shellExec(cliCmd),
-            QueueRegistry.topic("t_jmx", 4, Some(queueDir)),
+            QueueRegistry.topic("t_jmx", queueDir),
             pollMs = drains.toLong * 60000L)
           ()
         } else {
