@@ -48,26 +48,21 @@ object Bench {
       stream: String, calib: Double, sfDir: String): String =
     s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n_queries":$nQueries,"errors":$errJson$stream,"calib":${jnum(calib)},"sf":${jstr(sfDir)},"detail":"bench_out.json"}"""
 
+  /** The files a run's full JSON goes to: always `/tmp/bench.json`. A
+    * full-suite run also writes the repo-visible `bench_out.json` and a
+    * per-core-count copy (the driver benches the same tree at two core
+    * counts back to back, and one file per count keeps both runs'
+    * detail). A `SPARK_GRAFT_ONLY` run writes only the `/tmp` copy, so
+    * its partial map never overwrites the committed full-suite files.
+    */
+  def outputPaths(filtered: Boolean, cpus: Int): Seq[String] =
+    "/tmp/bench.json" +:
+      (if (filtered) Nil else Seq("bench_out.json", s"bench_out_c$cpus.json"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // The driver contract runs the bench at local[32] (32-thread, 128 GiB
-    // box); SPARK_GRAFT_CPUS trims it for constrained local iteration.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Static conf, default 100: a 39-query suite of wide plans evicts
-      // generated classes between passes, so every pass re-runs Janino +
-      // JIT (r2_candidates benched 18.3/18.0/7.8 s across its passes with
-      // the default; isolated-and-warm the same plan is 2.3 s). Keeping
-      // classes cached makes the median measure the QUERY, not compilation.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession(cpus)
     val osBean = ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     // Run-attribution context (round 6: the driver's run of identical
@@ -130,49 +125,21 @@ object Bench {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    // Dev-only focus filter (comma-separated names); unset = all queries.
-    // The driver never sets it, so its runs are always the full suite.
+    // Focus filter (comma-separated names; unset = all queries): the way
+    // to time one query, e.g. `SPARK_GRAFT_ONLY=r3_alerts runMain
+    // graft.Bench`. The driver never sets it, so its runs are always the
+    // full suite.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // Alert-family pipeline sharing: the six consumers of `candidates`
-    // (r3/r5/r7/s6/s8x2) each rebuilt the whole stats->zscore->candidates
-    // chain from parquet when timed standalone (~25 s of the r3 suite
-    // total was chain recomputation). Build the checkpointed frame ONCE —
-    // its cost is what r2_candidates (still timed as the full chain)
-    // reports — and time each consumer's incremental work over it, the
-    // way a production tee would run. Built eagerly (localCheckpoint
-    // materializes at construction) so no pass absorbs the chain cost.
-    val alertFam = Set("r3_alerts", "r5_assembly", "r7_digest",
-      "s6_db_stats", "s8_email_rows", "s8_email_digest")
-    // ANN index sharing, same attribution scheme: training stays with
-    // the unshared trainer queries (e2_pq_codes, s7_ivfpq); the serving
-    // queries time only their own search/recall work.
-    val annFam = Set("s5_pq_adc", "s6_pq_recall", "s10_pq_refine",
-      "s8_ivfpq_recall", "s16_index_serve", "s19_index_delete",
-      "s20_append_drift", "s21_probe_sweep", "s22_retention")
-    // LSH pair graph shared by its three consumers (banding cost stays
-    // with the unshared d4_dedup_minhash_lsh).
-    val dedupFam = Set("c2_dup_clusters", "c18_pagerank", "c22_leak_split",
-      "c7_dedup_apply")
-    // BPE tokenizer trained once (cost stays with the unshared
-    // t15_bpe_merges trainer); the apply query times only its join.
-    val bpeFam = Set("t16_bpe_tokens")
-    // Fused ranking + truth legs built once (cost stays with the
-    // unshared s12_rrf_fusion); s17 times only the O(nQ*k) grading.
-    val hybridFam = Set("s17_rank_metrics")
-    // Families are built LAZILY at their first consumer (outside the
-    // timed passes) and their checkpointed frames unpersisted right
-    // after their LAST consumer — so no family's resident blocks leak
-    // heap pressure into unrelated queries later in the alphabet (the
-    // round-4 d7 in-suite scaling outlier was exactly that).
-    type FamBuild = (Map[String, () => org.apache.spark.sql.DataFrame],
-      Seq[org.apache.spark.sql.DataFrame])
-    val fams: Seq[(Set[String], () => FamBuild)] = Seq(
-      (alertFam,  () => SparkEntry.alertFamilyShared(spark, sfDir)),
-      (annFam,    () => SparkEntry.annFamilyShared(spark, sfDir)),
-      (dedupFam,  () => SparkEntry.dedupFamilyShared(spark, sfDir)),
-      (bpeFam,    () => SparkEntry.bpeFamilyShared(spark, sfDir)),
-      (hybridFam, () => SparkEntry.hybridFamilyShared(spark, sfDir)))
+    // Query families (SparkEntry.families) share one materialized build:
+    // each member times only its own incremental work over it, the way a
+    // production tee would run, and the build's cost stays with the
+    // family's unshared trainer query. A family is built at its first
+    // member (outside the timed passes) and its checkpointed frames are
+    // unpersisted right after its LAST member — so no family's resident
+    // blocks leak heap pressure into unrelated queries later in the
+    // alphabet (the round-4 d7 in-suite scaling outlier was exactly that).
+    val fams = SparkEntry.families(spark, sfDir)
     // Oracle-only queries: correctness-gated in Verify but NOT timed —
     // d6_embed_recall is the FULL all-pairs recall truth, the test-scale
     // twin of the sampled-truth measurement (d6_recall_sampled, which IS
@@ -187,26 +154,13 @@ object Bench {
           (!oracleOnly.contains(n) || only.exists(_.contains(n)))
       }
     val runNames = runList.map(_._1).toSet
-    // last in-run consumer per family index -> release point
-    val lastOf: Map[Int, String] = fams.zipWithIndex.flatMap {
-      case ((consumers, _), i) =>
-        val present = consumers.intersect(runNames)
-        if (present.isEmpty) None else Some(i -> present.toSeq.max)
-    }.toMap
-    val built = mutable.Map.empty[Int, FamBuild]
-    // names actually timed as incremental work over a built family frame
-    // in THIS run (family built AND the map served the query) — what the
-    // artifact's `shared` field reports, so a SPARK_GRAFT_ONLY run or a
-    // query that fell back to its standalone fn0 is never mislabeled
-    val sharedRan = mutable.Set.empty[String]
     val results = runList.map { case (name, fn0) =>
-      val famIdx = fams.indexWhere(_._1.contains(name))
+      val fam = fams.find(_.members.contains(name))
       val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-        if (famIdx >= 0) {
-          val m = built.getOrElseUpdate(famIdx, fams(famIdx)._2())._1
-          if (m.contains(name)) { sharedRan += name; (_, _) => m(name)() }
-          else fn0
-        } else fn0
+        fam.fold(fn0) { f =>
+          f.frames // build before the first timed pass
+          (_, _) => f.members(name)()
+        }
       val passes = mutable.Buffer.empty[(Double, Double)]
       passes += timeOnce(name, fn)
       passes += timeOnce(name, fn)
@@ -219,11 +173,10 @@ object Bench {
       // (per-pass GC inside timeOnce also serves the between-queries
       // role: broadcast/shuffle driver state the ContextCleaner only
       // reclaims on a driver GC never accumulates across the suite)
-      if (famIdx >= 0 && lastOf.get(famIdx).contains(name))
-        built.remove(famIdx).foreach { case (_, frames) =>
-          frames.foreach(_.unpersist(blocking = true))
-          System.gc() // let ContextCleaner reap the chain's broadcasts
-        }
+      fam.filter(_.members.keySet.intersect(runNames).max == name).foreach { f =>
+        f.frames.foreach(_.unpersist(blocking = true))
+        System.gc() // let ContextCleaner reap the chain's broadcasts
+      }
       (name, median(passes.map(_._1).toSeq), median(passes.map(_._2).toSeq),
         passes.map(_._1).toSeq)
     }
@@ -354,7 +307,7 @@ object Bench {
     // inter-pass GC (System.gc between passes keeps the previous pass's
     // collection work out of the next timed section), which stabilizes
     // medians but means allocation-heavy queries don't pay their GC here.
-    val sharedJson = sharedRan.toSeq.sorted
+    val sharedJson = runList.map(_._1).filter(n => fams.exists(_.members.contains(n)))
       .map(n => s""""$n"""").mkString("[", ",", "]")
     // `oracle_only`: registered queries deliberately absent from the
     // timed set (see `oracleOnly` above) — the artifact names them so a
@@ -362,26 +315,14 @@ object Bench {
     val oracleOnlyJson = oracleOnly.toSeq.sorted
       .map(n => s""""$n"""").mkString("[", ",", "]")
     val full = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"cpu_sec":$cpu,"shared":$sharedJson,"oracle_only":$oracleOnlyJson,"gc_note":"per-query medians exclude inter-pass System.gc","errors":$errJson$streamJson$ctxJson,"sf":${jstr(sfDir)}}"""
-    // Full artifact (per-query wall + cpu maps, ~4 KB) goes to FILES — a
-    // repo-visible copy plus /tmp — because a 4 KB stdout line overflows
-    // the driver's log-tail buffer (rounds 1 and 2 both lost the parsed
-    // bench signal that way).
-    Files.writeString(Paths.get("/tmp/bench.json"), full)
-    try Files.writeString(Paths.get("bench_out.json"), full)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_out.json write failed: ${e.getMessage}") }
-    // Per-core-count copy: the driver benches the SAME tree at two core
-    // counts back to back, and the second run's bench_out.json write
-    // clobbers the first's — which left round 14 with no committed
-    // 32-core per-query detail at all. One file per cpus value keeps
-    // both runs' detail on disk for the scaling comparison.
-    // cpus is a raw env string; the driver always passes an integer, but
-    // local[*]-style values must not produce a glob filename or break
-    // the queries line's JSON number below
-    val cpusTag = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "na"
-    try Files.writeString(Paths.get(s"bench_out_c$cpusTag.json"), full)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_out_c$cpusTag.json write failed: ${e.getMessage}") }
+    // Full artifact (per-query wall + cpu maps, ~4 KB) goes to FILES,
+    // because a 4 KB stdout line overflows the driver's log-tail buffer
+    // (rounds 1 and 2 both lost the parsed bench signal that way).
+    outputPaths(only.nonEmpty, cpus).foreach { path =>
+      try Files.writeString(Paths.get(path), full)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $path write failed: ${e.getMessage}") }
+    }
     // COMPACT final stdout line, NO per-query map: three straight rounds
     // proved the driver's log-tail buffer clips anything past a few
     // hundred bytes (r3's 2.8 KB wall-only map still arrived mid-key;
@@ -404,9 +345,7 @@ object Bench {
     // as nothing). Centisecond precision keeps it ~3.5 KB.
     val qsCenti = results.map { case (k, w, _, _) => s""""$k":${jnum(w, 2)}""" }
       .mkString("{", ",", "}")
-    val cpusJson = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus
-      else jstr(cpus)
-    println(s"""{"metric":"queries","unit":"sec","cpus":$cpusJson,"queries":$qsCenti}""")
+    println(s"""{"metric":"queries","unit":"sec","cpus":$cpus,"queries":$qsCenti}""")
     // Bare, final stdout line (spark.stop() already happened so nothing
     // logs after it; run/outputStrategy passes it through un-prefixed).
     println(compact)

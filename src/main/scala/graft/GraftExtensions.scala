@@ -13,7 +13,7 @@ import graft.plans.JaccardJoinRewrite
   * inverted-index equi-join).
   *
   * Usage:
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   GraftSession.builder().withExtensions(new GraftExtensions) ...
   * or spark.sql.extensions=graft.GraftExtensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

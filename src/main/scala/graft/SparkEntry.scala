@@ -268,26 +268,34 @@ object SparkEntry {
     "q25_cube"         -> ((s, dir) => Relational.qCube(s, dir)),
   )
 
-  /** The seven alert-family queries re-expressed over ONE materialized
-    * candidates frame — the Bench-side pipeline view. Each registered
-    * query stays independently derivable from parquet (Verify uses the
-    * map above); this shares the common stats->zscore->candidates chain
-    * the way a production pipeline would (compute candidates once, tee to
-    * alerts/digest/db/email), so the bench attributes the chain's cost
-    * once (to r2_candidates) and each consumer's incremental cost to
-    * itself. `localCheckpoint` is EAGER: the chain runs at construction.
-    *
-    * Each builder also returns the MATERIALIZED frames so the bench can
-    * `unpersist` them once the family's last consumer has been timed —
-    * without that, every family's checkpointed blocks stay resident for
-    * the whole suite and later families measure under alien heap
-    * pressure (the round-4 d7 in-suite scaling outlier).
+  /** A bench sharing family: `members` maps each registered query it
+    * serves to that query's incremental work over frames built once;
+    * `frames` builds them on first access and is what the bench
+    * unpersists after the family's last member. Each registered query
+    * stays independently derivable from parquet (Verify uses
+    * [[queries]]); a family shares the common chain the way a production
+    * pipeline would, so the bench attributes the chain's cost once, to
+    * the family's unshared trainer query, and each member's incremental
+    * cost to itself. Builds are eager: `localCheckpoint` runs its job
+    * when `frames` is forced.
     */
-  def alertFamilyShared(spark: SparkSession,
-      dir: String): (Map[String, () => DataFrame], Seq[DataFrame]) = {
-    val cand = Alerts.candidates(zWin(spark, dir), alertCfg).localCheckpoint()
-    (Map(
-      "r2_candidates"   -> (() => cand),
+  final class Family(val members: Map[String, () => DataFrame],
+      build: => Seq[DataFrame]) {
+    lazy val frames: Seq[DataFrame] = build
+  }
+
+  /** Every bench sharing family. Constructing them runs nothing. */
+  def families(spark: SparkSession, dir: String): Seq[Family] = Seq(
+    alertFamily(spark, dir), annFamily(spark, dir), dedupFamily(spark, dir),
+    bpeFamily(spark, dir), hybridFamily(spark, dir))
+
+  /** The alert-family consumers of ONE candidates frame (compute
+    * candidates once, tee to alerts/digest/db/email); the chain's cost
+    * stays with the unshared r2_candidates.
+    */
+  private def alertFamily(spark: SparkSession, dir: String): Family = {
+    lazy val cand = Alerts.candidates(zWin(spark, dir), alertCfg).localCheckpoint()
+    new Family(Map(
       "r3_alerts"       -> (() => Alerts.alerts(cand, alertCfg)),
       "r5_assembly"     -> (() => Alerts.assemblyRoundtrip(cand)),
       "r7_digest"       -> (() => Alerts.digest(cand)),
@@ -302,11 +310,8 @@ object SparkEntry {
     * searches serve from it; the IVF-PQ search result feeds its recall
     * consumer (cost attributed to the unshared s7_ivfpq).
     */
-  def annFamilyShared(spark: SparkSession,
-      dir: String): (Map[String, () => DataFrame], Seq[DataFrame]) = {
-    // eager, like alertFamilyShared: materialize outside the timed
-    // passes so no single pass absorbs the chain cost
-    val trained = Similarity.pqTrainedShared(spark, dir)
+  private def annFamily(spark: SparkSession, dir: String): Family = {
+    lazy val trained = Similarity.pqTrainedShared(spark, dir)
     // persisted-index serving (s16): train + WRITE the snapshot once in
     // the family build (the training cost is already represented by the
     // unshared s7_ivfpq; the write is one-time index-build work a
@@ -315,17 +320,20 @@ object SparkEntry {
     // matters at serving time
     // deterministic within a session (reruns overwrite); applicationId
     // keeps concurrent sessions from clobbering each other's snapshot
-    val annDir = s"${System.getProperty("java.io.tmpdir")}/graft_ann_bench_" +
-      Integer.toHexString(dir.hashCode) + "_" +
-      spark.sparkContext.applicationId
-    Similarity.persistIvfPqIndex(spark, dir, annDir, "bench")
+    lazy val annDir = {
+      val d = s"${System.getProperty("java.io.tmpdir")}/graft_ann_bench_" +
+        Integer.toHexString(dir.hashCode) + "_" +
+        spark.sparkContext.applicationId
+      Similarity.persistIvfPqIndex(spark, dir, d, "bench")
+      d
+    }
     // s8's recall input is served FROM that snapshot instead of training
     // a second IVF-PQ index: serve == train-and-serve exactly (the
     // AnnIndexSpec contract), so results are identical and the family
     // build trains once
-    val ivfpq = Similarity.ivfPqServe(spark, dir, annDir, "bench")
+    lazy val ivfpq = Similarity.ivfPqServe(spark, dir, annDir, "bench")
       .localCheckpoint()
-    (Map(
+    new Family(Map(
       "s5_pq_adc"       -> (() => Similarity.pqAdcFrom(spark, dir,
         trained._1, trained._2)),
       "s6_pq_recall"    -> (() => Similarity.pqRecallFrom(spark, dir,
@@ -365,12 +373,11 @@ object SparkEntry {
     * its CC rounds over the shared pairs; c22 times split+leak joins
     * over eagerly-built clusters.
     */
-  def dedupFamilyShared(spark: SparkSession,
-      dir: String): (Map[String, () => DataFrame], Seq[DataFrame]) = {
-    val pairs = Dedup.minhashLsh(spark, dir)
+  private def dedupFamily(spark: SparkSession, dir: String): Family = {
+    lazy val pairs = Dedup.minhashLsh(spark, dir)
       .select("id_a", "id_b").localCheckpoint()
-    val clusters = Dedup.dupClustersFrom(spark, dir, pairs).localCheckpoint()
-    (Map(
+    lazy val clusters = Dedup.dupClustersFrom(spark, dir, pairs).localCheckpoint()
+    new Family(Map(
       "c2_dup_clusters" -> (() => Dedup.dupClustersFrom(spark, dir, pairs)),
       "c18_pagerank"    -> (() => Dedup.pagerankFrom(pairs)),
       "c22_leak_split"  -> (() => Curation.leakSplitFrom(spark, dir, clusters)),
@@ -387,10 +394,9 @@ object SparkEntry {
     * vocab — the production shape (a tokenizer is trained once and
     * applied to every corpus shard).
     */
-  def bpeFamilyShared(spark: SparkSession,
-      dir: String): (Map[String, () => DataFrame], Seq[DataFrame]) = {
-    val vocab = TextAnalysis.bpeTrainedVocab(spark, dir).localCheckpoint()
-    (Map(
+  private def bpeFamily(spark: SparkSession, dir: String): Family = {
+    lazy val vocab = TextAnalysis.bpeTrainedVocab(spark, dir).localCheckpoint()
+    new Family(Map(
       "t16_bpe_tokens" -> (() => TextAnalysis.bpeTokensFrom(spark, dir, vocab))),
       Seq(vocab))
   }
@@ -399,12 +405,11 @@ object SparkEntry {
     * chain, built once (cost stays with the unshared s12_rrf_fusion
     * trainer query); s17 times only the O(nQ*k) grading over them.
     */
-  def hybridFamilyShared(spark: SparkSession,
-      dir: String): (Map[String, () => DataFrame], Seq[DataFrame]) = {
-    val (fused, truth) = Similarity.rankMetricsSharedParts(spark, dir)
-    (Map(
-      "s17_rank_metrics" -> (() => Similarity.rankMetricsFrom(fused, truth, 10))),
-      Seq(fused, truth))
+  private def hybridFamily(spark: SparkSession, dir: String): Family = {
+    lazy val parts = Similarity.rankMetricsSharedParts(spark, dir)
+    new Family(Map(
+      "s17_rank_metrics" -> (() => Similarity.rankMetricsFrom(parts._1, parts._2, 10))),
+      Seq(parts._1, parts._2))
   }
 
   /** Alert config used by registered queries: thresholds tuned so the test

@@ -2704,14 +2704,6 @@ object Similarity {
       .select("q_id", "doc_id", "dense_rank")
   }
 
-  // dev-only decomposition hooks for tools.HybridProfile
-  private[graft] def bm25LexRanksDev(spark: SparkSession, sfDir: String): DataFrame =
-    bm25LexRanks(spark, sfDir, 8, 30, 24, 1.2, 0.75)
-  private[graft] def denseExactRanksDev(spark: SparkSession, sfDir: String): DataFrame =
-    denseExactRanks(spark, sfDir, 8, 30)
-  private[graft] def denseHammingRanksDev(spark: SparkSession, sfDir: String): DataFrame =
-    denseHammingRanks(spark, sfDir, 8, 30, 60)
-
   /** Reciprocal-rank fusion of a lexical and a dense rank leg. */
   private def rrfFuse(lex: DataFrame, dense: DataFrame, k: Int,
       rrfK: Int): DataFrame = {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -37,14 +36,7 @@ object AnnScaleProbe {
     val src = args.headOption.getOrElse("/root/testdata/sf0.01")
     val factors =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 64, 128)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val emb = spark.read.parquet(s"$src/embeddings.parquet")
     val baseRows = emb.count()

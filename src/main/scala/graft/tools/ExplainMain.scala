@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan auditor: dumps `explain("formatted")` for each registered
   * query so scan pushdown (PushedFilters/ReadSchema), broadcast joins and
   * WholeStageCodegen spans can be reviewed.
@@ -11,14 +9,7 @@ object ExplainMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     graft.SparkEntry.queries
       .filter { case (n, _) => names.isEmpty || names(n) }
       .toSeq.sortBy(_._1)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Streaming-graph scaling probe (SCALING.md round-10 row): drains the
   * WHOLE four-stage graph — tail/parse/stats, z-score, vote, cooldown,
@@ -37,17 +36,7 @@ object StreamScaleProbe {
     require(axis == "time" || axis == "hosts", s"axis $axis")
     val factors = args.drop(1).headOption.getOrElse("1,1,10")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     factors.foreach { factor =>
       val (nHosts, nIntervals) =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
 
@@ -9,16 +8,7 @@ import graft.operators.Similarity
   * and its plan carries no training work — the production shape where an
   * index is trained once per corpus snapshot and queried many times.
   */
-class AnnIndexSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AnnIndexSpec extends AnyFunSuite with TestSession {
 
   private val sf = "/root/testdata/sf0.001"
 

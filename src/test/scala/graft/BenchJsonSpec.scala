@@ -27,4 +27,10 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(json.get("errors").get("q1").asText == "Boom")
     assert(Bench.jstr("\u0001") == "\"\\u0001\"")
   }
+
+  test("a SPARK_GRAFT_ONLY run writes only /tmp, never the committed full-suite files") {
+    assert(Bench.outputPaths(filtered = true, cpus = 8) == Seq("/tmp/bench.json"))
+    assert(Bench.outputPaths(filtered = false, cpus = 8) ==
+      Seq("/tmp/bench.json", "bench_out.json", "bench_out_c8.json"))
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Multimodal
 import graft.operators.Multimodal.MediaCodec
@@ -12,16 +11,7 @@ import graft.operators.Multimodal.MediaCodec
   * collision changes both sides identically, and a rule bug in the
   * Spark plan fails loudly against the planted expectations.
   */
-class CrossModalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CrossModalSpec extends AnyFunSuite with TestSession {
 
   private val sf = "/root/testdata/sf0.001"
 

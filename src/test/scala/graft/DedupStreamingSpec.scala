@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,16 +12,7 @@ import graft.streaming.DedupStreaming
   * pass — including dups whose canonical arrived in an EARLIER
   * micro-batch (the cross-batch state contract).
   */
-class DedupStreamingSpec extends AnyFunSuite with RocksDbSupport {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupStreamingSpec extends AnyFunSuite with TestSession with RocksDbSupport {
 
   private def mkDocs: Seq[(Long, String)] = {
     val bases = Seq(

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import scala.sys.process._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,16 +14,7 @@ import graft.streaming.{ContractConsumer, FileTopic, FileTopicChild}
   * config/apm_config.json:87-178). Plus the `format("graftqueue")`
   * connector running over the file backend via the `dir` option.
   */
-class FileTopicSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FileTopicSpec extends AnyFunSuite with TestSession {
 
   /** Fork a child JVM on FileTopicChild; returns its stdout lines. */
   private def fork(args: String*): Seq[String] = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,17 +11,7 @@ import graft.streaming.ForecastStreaming
   * providers, and from a SPARSE feed (interior zero buckets dropped)
   * thanks to the state-side dense-scaffold gap fill.
   */
-class ForecastStreamingSpec extends AnyFunSuite with RocksDbSupport {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ForecastStreamingSpec extends AnyFunSuite with TestSession with RocksDbSupport {
 
   private val sf = "/root/testdata/sf0.001"
   private val intervalMs = 3600000L

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 import java.util.concurrent.atomic.AtomicBoolean
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,16 +34,7 @@ import graft.streaming.{ApmGraph, ApmStateV2, ApmStreaming}
   * provider a production deployment would run — proving resume
   * semantics don't depend on the state store backend.
   */
-class GraphFaultSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphFaultSpec extends AnyFunSuite with TestSession {
 
   private val fmt = DateTimeFormatter
     .ofPattern("yyyy-MM-dd HH:mm:ss,SSS").withZone(ZoneOffset.UTC)

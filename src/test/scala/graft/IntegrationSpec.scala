@@ -11,18 +11,7 @@ import graft.streaming.ApmStreaming
 /** End-to-end pieces: driver flagship smoke, SQL-registered extensions,
   * and the streaming sink (S6/S7: foreachBatch + checkpoint).
   */
-class IntegrationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IntegrationSpec extends AnyFunSuite with TestSession {
 
   test("driver flagship entry() returns rows on sf0.001") {
     val df = SparkEntry.entry(spark)
@@ -38,8 +27,8 @@ class IntegrationSpec extends AnyFunSuite {
 
   test("extensions register SQL functions") {
     import spark.implicits._
-    // getOrCreate may return a pre-existing session (suite order), so use
-    // the explicit registration path.
+    // the shared session is built without extensions: the explicit
+    // registration path
     GraftExtensions.register(spark)
     Seq(("abc", Seq(1.0, 2.0, 3.0))).toDF("s", "v").createOrReplaceTempView("ext_t")
     val r = spark.sql(
@@ -54,6 +43,42 @@ class IntegrationSpec extends AnyFunSuite {
       .collect().head.getSeq[Long](0)
     assert(bg == Seq(ph("a") * (1L << 31) + ph("a b"),
       ph("b") * (1L << 31) + ph("b c")))
+  }
+
+  test("a session built withExtensions resolves the SQL functions and " +
+      "runs JaccardJoinRewrite, without GraftExtensions.register") {
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val ext = GraftSession.builder(4).withExtensions(new GraftExtensions)
+        .getOrCreate()
+      assert(ext ne shared)
+      assert(ext.sparkContext eq shared.sparkContext)
+      val r = ext.sql("""SELECT poly_hash('abc') AS h,
+        vec_dot(array(1.0d, 2.0d, 3.0d), array(1.0d, 2.0d, 3.0d)) AS d""")
+        .collect().head
+      assert(r.getLong(0) == "abc".foldLeft(0L)((h, c) => (h * 31 + c) % 1000000007L))
+      assert(r.getDouble(1) == 14.0)
+      assert(ext.sessionState.optimizer.batches.flatMap(_.rules)
+        .contains(graft.plans.JaccardJoinRewrite))
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+  }
+
+  test("bench families serve only registered queries, each from one " +
+      "family, and never a family's unshared trainer") {
+    val members = SparkEntry.families(spark, "unused").map(_.members.keySet)
+    val all = members.flatten
+    assert(all.toSet.subsetOf(SparkEntry.queries.keySet),
+      s"not registered: ${all.toSet -- SparkEntry.queries.keySet}")
+    assert(all.size == all.toSet.size,
+      s"in two families: ${all.diff(all.distinct)}")
+    val trainers = Set("r2_candidates", "e2_pq_codes", "s7_ivfpq",
+      "d4_dedup_minhash_lsh", "t15_bpe_merges", "s12_rrf_fusion")
+    assert(trainers.intersect(all.toSet).isEmpty)
   }
 
   test("full pipeline composes: streaming stats -> parquet -> batch z-score -> alert candidates") {

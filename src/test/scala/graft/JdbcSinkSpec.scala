@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,17 +14,7 @@ import graft.streaming.{ApmStreaming, JdbcSink}
   * retries — plus the jsonb stats column round-trip and the failed-batch
   * requeue driving an actual DB that goes down and recovers.
   */
-class JdbcSinkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JdbcSinkSpec extends AnyFunSuite with TestSession {
 
   // keep derby.log out of the repo working dir
   System.setProperty("derby.stream.error.file", "/tmp/graft_derby.log")

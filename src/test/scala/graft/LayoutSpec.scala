@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Layout
@@ -9,17 +8,7 @@ import graft.operators.Layout
   * input bytes, and range clustering that makes per-file key ranges
   * disjoint (the precondition for row-group/file pruning to pay off).
   */
-class LayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LayoutSpec extends AnyFunSuite with TestSession {
 
   test("compaction: file count from real bytes, rows preserved, " +
     "ranges disjoint") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
 
@@ -29,17 +28,7 @@ import graft.operators.Dedup
   * family-imperfection bias (measured: the >= 0.9 bucket sits ~4.6%
   * under ideal theory; the cliff buckets track within ~2%).
   */
-class LshRecallCliffSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LshRecallCliffSpec extends AnyFunSuite with TestSession {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,16 +11,7 @@ import graft.streaming.DedupStreaming
   * strips the boilerplate before dedup sees the text, and the wired
   * state bound's recall trade is pinned explicitly.
   */
-class MarkupStreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MarkupStreamingSpec extends AnyFunSuite with TestSession {
 
   /** Wrap a normalized text in the planted markup grammar: link-dense
     * nav/footer boilerplate around real h1 + paragraph content whose

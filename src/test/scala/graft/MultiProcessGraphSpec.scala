@@ -31,16 +31,7 @@ import graft.streaming.{ApmGraph, ApmStreaming, ContractConsumer, FileTopic, Que
   * idempotent producer fences and per-stage checkpoints survive a hard
   * process death with no loss and no duplication.
   */
-class MultiProcessGraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
 
   private val fmt = DateTimeFormatter
     .ofPattern("yyyy-MM-dd HH:mm:ss,SSS").withZone(ZoneOffset.UTC)

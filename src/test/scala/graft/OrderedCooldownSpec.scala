@@ -1,7 +1,6 @@
 package graft
 
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,16 +17,7 @@ import graft.streaming.{ApmStateV2, ApmStreaming}
   * depends on which upstream per-(server,service,lag) chain lands
   * first; reference folds bus order, stream_process_alerts.js:420-447).
   */
-class OrderedCooldownSpec extends AnyFunSuite with RocksDbSupport {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OrderedCooldownSpec extends AnyFunSuite with TestSession with RocksDbSupport {
 
   /** [[Alerts.firedRef]] mapped to the streaming row type — the exact
     * input the oracle's cooldown stage consumed.

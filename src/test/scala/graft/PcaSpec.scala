@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.FixedPointMoments.fixed_point_moments
@@ -11,16 +10,7 @@ import graft.operators.Pca
   * accumulation exists for), and the eigen/projection layer's algebraic
   * contracts on real data.
   */
-class PcaSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PcaSpec extends AnyFunSuite with TestSession {
 
   private val sf = "/root/testdata/sf0.001"
 

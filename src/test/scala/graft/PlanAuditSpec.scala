@@ -11,39 +11,27 @@ import graft.tools.PlanAudit
   * against the one regression class that is invisible at sf0.001 wall
   * time and fatal at 100 TB — an accidental all-pairs join.
   */
-class PlanAuditSpec extends AnyFunSuite {
-
-  private def shared: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanAuditSpec extends AnyFunSuite with TestSession {
 
   /** The audit judges the STATIC plan (AQE can only ever improve on it),
     * so it runs with AQE off — in its own session: every suite shares
-    * one test JVM, and `getOrCreate` applies a builder's SQL settings to
-    * the existing shared session.
+    * one test JVM and one session.
     */
-  lazy val spark: SparkSession = {
-    val s = shared.newSession()
+  lazy val audit: SparkSession = {
+    val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s
   }
 
   test("the audit's AQE-off setting does not leak into the shared session") {
-    val before = shared
-    spark
-    assert(before.conf.get("spark.sql.adaptive.enabled") == "true")
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "false")
+    audit
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(audit.conf.get("spark.sql.adaptive.enabled") == "false")
   }
 
   test("every registered query: zero cartesians, nested-loop joins " +
       "within their pinned bounded-broadcast counts") {
-    val audits = PlanAudit.auditAll(spark, "/root/testdata/sf0.001")
+    val audits = PlanAudit.auditAll(audit, "/root/testdata/sf0.001")
     assert(audits.size == SparkEntry.queries.size)
     val bad = audits.filter(_.flagged.nonEmpty)
     assert(bad.isEmpty, "plan regressions:\n" + bad.map(a =>

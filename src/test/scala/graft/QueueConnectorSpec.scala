@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -17,16 +16,7 @@ import graft.streaming.{ApmGraph, ContractConsumer, FileTopic, QueueRegistry, Qu
   * with results identical to the parquet-topic handoff. Every test owns
   * a fresh topic base directory (the connector's required `dir`).
   */
-class QueueConnectorSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QueueConnectorSpec extends AnyFunSuite with TestSession {
 
   private def ckpt(): String =
     Files.createTempDirectory("graft_qckpt").toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
@@ -11,16 +10,7 @@ import graft.operators.Similarity
   * first principles, including the zero-relevant and all-relevant
   * edges.
   */
-class RankMetricsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RankMetricsSpec extends AnyFunSuite with TestSession {
 
   private def run(fused: Seq[(Long, Long, Long)],
       truth: Seq[(Long, Long)], k: Int): Map[Long, (Long, Long, Double, Double, Double)] = {

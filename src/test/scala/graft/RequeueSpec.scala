@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.atomic.AtomicBoolean
@@ -10,16 +10,7 @@ import graft.streaming.ApmStreaming
   * written while the sink is down park durably and replay, in original
   * batch order, once the sink recovers (stream_insert_db.js:326-353).
   */
-class RequeueSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RequeueSpec extends AnyFunSuite with TestSession {
 
   test("sink-down batches park, replay in order on recovery, then drain") {
     import spark.implicits._

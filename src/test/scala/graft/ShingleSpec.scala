@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
@@ -14,16 +13,7 @@ import graft.functions.SimHashSig.sim_hash_sig
   * string, and non-BMP codepoints (the hash folds CODEPOINTS — emoji and
   * CJK-extension chars must hash like DuckDB's per-char ascii()).
   */
-class ShingleSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ShingleSpec extends AnyFunSuite with TestSession {
 
   private def polyRef(s: String): Long = {
     var h = 0L

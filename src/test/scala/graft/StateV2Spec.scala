@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,16 +10,7 @@ import graft.operators.ZScore
   * RocksDB state store must agree with their batch operators on the
   * same data, across micro-batch splits.
   */
-class StateV2Spec extends AnyFunSuite with RocksDbSupport {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StateV2Spec extends AnyFunSuite with TestSession with RocksDbSupport {
 
   test("volume z-score V2 == batch prefix z6 on the same dense series") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -16,16 +15,7 @@ import graft.functions.RefStats
   * ports on the same data. The keyed folds run once per state store
   * provider: the default and RocksDB.
   */
-class StreamingSpec extends AnyFunSuite with RocksDbSupport {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with TestSession with RocksDbSupport {
 
   private def ts(sec: Long): Timestamp = new Timestamp(sec * 1000)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,16 +9,7 @@ import graft.streaming.TopKStreaming
   * against exact counts, across micro-batch boundaries (state must
   * survive the batch seam), with a Zipf-ish word stream.
   */
-class TopKStreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TopKStreamingSpec extends AnyFunSuite with TestSession {
 
   test("space-saving invariants vs exact counts across batch seams") {
     import spark.implicits._

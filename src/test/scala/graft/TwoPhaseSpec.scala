@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,17 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * that don't divide the data evenly. The oracle gate already proves
   * equality on the corpus; these pin the ALGEBRA itself.
   */
-class TwoPhaseSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TwoPhaseSpec extends AnyFunSuite with TestSession {
 
   /** Skewed synthetic docs: group g0 holds 80% of rows; scores collide
     * heavily so tie-breaks matter; ids are shuffled (i*37 % n).

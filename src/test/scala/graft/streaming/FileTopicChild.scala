@@ -84,13 +84,9 @@ object FileTopicChild {
       val took = t.beginTaskEpoch(args(2), args(3).toLong, args(4).toInt)
       println(s"FENCE=$took")
     case "stage4" =>
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
+      val spark = graft.GraftSession.builder(2)
         .config("spark.sql.warehouse.dir",
           java.nio.file.Files.createTempDirectory("graft_wh_child").toString)
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       ApmGraph.runStage4Queued(spark, args(1), ApmGraph.GraphCfg(),
@@ -113,13 +109,9 @@ object FileTopicChild {
       val stage = args(1).toInt
       val (logsGlob, workDir, queueDir) = (args(2), args(3), args(4))
       val stop = Paths.get(args(5))
-      val builder = org.apache.spark.sql.SparkSession.builder()
-        .master("local[3]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
+      val builder = graft.GraftSession.builder(3)
         .config("spark.sql.warehouse.dir",
           java.nio.file.Files.createTempDirectory("graft_wh_child").toString)
-        .config("spark.ui.enabled", "false")
       // optional state-store provider (e.g. RocksDB + changelog), so the
       // forked-topology spec can prove resume semantics per provider
       if (args.length > 6 && args(6).nonEmpty) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.TopologyOracle
 import graft.operators.Alerts
 import graft.streaming.ApmGraph
@@ -17,13 +16,7 @@ import graft.streaming.ApmGraph
 object FiredProbe {
   def main(args: Array[String]): Unit = {
     val logs = args(0)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     val cfg = ApmGraph.GraphCfg()
     val candB = TopologyOracle.candidates(spark, s"$logs/net/*/*", cfg)
     println("== bad candidates ==")
