@@ -140,18 +140,10 @@ object Bench {
     // blocks leak heap pressure into unrelated queries later in the
     // alphabet (the round-4 d7 in-suite scaling outlier was exactly that).
     val fams = SparkEntry.families(spark, sfDir)
-    // Oracle-only queries: correctness-gated in Verify but NOT timed —
-    // d6_embed_recall is the FULL all-pairs recall truth, the test-scale
-    // twin of the sampled-truth measurement (d6_recall_sampled, which IS
-    // timed); a 100-TB deployment runs only the sampled variant, so
-    // timing the full one would report a number the scale path never
-    // pays. Still runnable under the dev SPARK_GRAFT_ONLY filter for
-    // focused probes.
-    val oracleOnly = Set("d6_embed_recall")
     val runList = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) =>
         only.forall(_.contains(n)) &&
-          (!oracleOnly.contains(n) || only.exists(_.contains(n)))
+          (!SparkEntry.oracleOnly.contains(n) || only.exists(_.contains(n)))
       }
     val runNames = runList.map(_._1).toSet
     val results = runList.map { case (name, fn0) =>
@@ -310,9 +302,9 @@ object Bench {
     val sharedJson = runList.map(_._1).filter(n => fams.exists(_.members.contains(n)))
       .map(n => s""""$n"""").mkString("[", ",", "]")
     // `oracle_only`: registered queries deliberately absent from the
-    // timed set (see `oracleOnly` above) — the artifact names them so a
+    // timed set (`SparkEntry.oracleOnly`) — the artifact names them so a
     // round-over-round comparison knows the set shrank by design
-    val oracleOnlyJson = oracleOnly.toSeq.sorted
+    val oracleOnlyJson = SparkEntry.oracleOnly.toSeq.sorted
       .map(n => s""""$n"""").mkString("[", ",", "]")
     val full = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"cpu_sec":$cpu,"shared":$sharedJson,"oracle_only":$oracleOnlyJson,"gc_note":"per-query medians exclude inter-pass System.gc","errors":$errJson$streamJson$ctxJson,"sf":${jstr(sfDir)}}"""
     // Full artifact (per-query wall + cpu maps, ~4 KB) goes to FILES,

@@ -268,6 +268,16 @@ object SparkEntry {
     "q25_cube"         -> ((s, dir) => Relational.qCube(s, dir)),
   )
 
+  /** Oracle-only queries: correctness-gated in Verify but NOT timed by
+    * Bench. d6_embed_recall is the FULL all-pairs recall truth, the
+    * test-scale twin of the sampled-truth measurement (d6_recall_sampled,
+    * which IS timed); a 100-TB deployment runs only the sampled variant,
+    * so timing the full one would report a number the scale path never
+    * pays. Still runnable under Bench's SPARK_GRAFT_ONLY filter for
+    * focused probes.
+    */
+  val oracleOnly: Set[String] = Set("d6_embed_recall")
+
   /** A bench sharing family: `members` maps each registered query it
     * serves to that query's incremental work over frames built once;
     * `frames` builds them on first access and is what the bench

@@ -722,8 +722,7 @@ object Curation {
   }
 
   /** The bucketed-prefix-sum core of [[mixApply]] over an arbitrary
-    * (source, doc_id, n_tok, h) frame — shared with the streaming quota
-    * twin's equivalence test ([[graft.streaming.QuotaStreaming]]).
+    * (source, doc_id, n_tok, h) frame.
     */
   def mixApplyFrom(d0: DataFrame, budget: Long, buckets: Int): DataFrame = {
     val bsz = 1000000007L / buckets + 1

@@ -219,10 +219,7 @@ object Dedup {
   private def aConst(i: Int): Long = 2 * i + 3
   private def bConst(i: Int): Long = 7 * i + 1
 
-  /** Column-level MinHash signature over an arbitrary text column —
-    * shared by the batch table queries and the streaming
-    * dedup-at-ingest pipeline ([[graft.streaming.DedupStreaming]]).
-    */
+  /** Column-level MinHash signature over an arbitrary text column. */
   def minhashSigCol(text: Column): Column =
     min_hash_sig(
       shingle_hashes(regexp_replace(lower(trim(text)), "\\s+", " "), 3),

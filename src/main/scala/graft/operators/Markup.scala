@@ -166,9 +166,7 @@ object Markup {
   /** The extractor over an arbitrary html column — the same pure per-row
     * expression chain the t22 queries grade (block scan, link-density
     * drop, verbatim `<pre>`, inline-link flattening). No state, no
-    * shuffle, no time semantics, so it is STREAMING-SAFE by construction
-    * and is what [[graft.streaming.DedupStreaming.markupIngestStream]]
-    * wires ahead of the dedup twins.
+    * shuffle, no time semantics, so it is STREAMING-SAFE by construction.
     */
   def extractedFromHtml(html: Column): Column =
     extractedCol(parsedCol(html))

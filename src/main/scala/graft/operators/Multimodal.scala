@@ -454,10 +454,8 @@ object Multimodal {
   case class ImagePHash(doc_id: Long, phash_lo: Long, phash_hi: Long)
 
   /** The (band_idx, band_val) split of the 64-bit hash into
-    * [[PHashBands]] 16-bit bands — SHARED by the batch join and the
-    * streaming ingest twin ([[graft.streaming.DedupStreaming
-    * .pHashDupStream]]), the same stream==batch-by-construction
-    * discipline as `Dedup.bandStructsCol`. Pigeonhole: any pair within
+    * [[PHashBands]] 16-bit bands, the same discipline as
+    * `Dedup.bandStructsCol`. Pigeonhole: any pair within
     * Hamming [[PHashBands]]-1 shares at least one exact band, so a
     * banded equi-join has exact recall at that cut — callers must keep
     * tau <= [[PHashBands]]-1 (enforced where tau enters).
@@ -1170,26 +1168,10 @@ object Multimodal {
         when(col("consistency") >= threshold, "keep").otherwise("drop"))
   }
 
-  /** Streaming twin of [[captionConsistency]] — the alignment filter at
-    * INGEST, where a multimodal pipeline actually runs it (drop
-    * misaligned pairs before they cost downstream work). Featurization
-    * is per-row stateless (a typed map replaying the batch folds: the
-    * polynomial token hash, slot/sign bit split, integer slot sums —
-    * all exact in doubles), so the stream needs no state, watermark or
-    * shuffle beyond the one stream-static id-equi-join against the
-    * embedding table; the cosine reuses the batch's index-order fold
-    * expressions, so stream == batch scores BIT-FOR-BIT across
-    * micro-batch boundaries (CrossModalStreamingSpec).
-    *
-    * docs: streaming (or batch) frame with (doc_id: long,
-    * text: string); emb: the STATIC embeddings relation
-    * (vec_id, embedding: array&lt;float&gt;).
-    */
   /** The x-family caption featurizer as a plain JVM function — the
     * exact replay of [[captionConsistency]]'s batch expressions
-    * (`lower`/`trim`/`split`/poly_hash/slot-sign split), shared by the
-    * streaming twin and the audio-alignment scorer so every path hashes
-    * captions identically. Spark `lower` is locale-insensitive
+    * (`lower`/`trim`/`split`/poly_hash/slot-sign split), used by the
+    * audio-alignment scorer so it hashes captions exactly as x2 does. Spark `lower` is locale-insensitive
     * (Locale.ROOT — a Turkish-locale JVM must not map I to dotless ı)
     * and Spark `trim` strips ONLY the space character, not Java trim's
     * whole <= U+0020 range. Slot sums are exact longs (the batch sums
@@ -1210,34 +1192,6 @@ object Multimodal {
         v((h % dim).toInt) += (if (((h >> shift) % 2) == 0L) 1L else -1L)
       }
     v
-  }
-
-  def captionConsistencyStream(docs: DataFrame, emb: DataFrame,
-      dim: Int = 64, threshold: Double = 0.0): DataFrame = {
-    import docs.sparkSession.implicits._
-    require(dim > 0 && (dim & (dim - 1)) == 0, "dim must be a power of two")
-    // null-text docs are dropped, matching the batch path exactly
-    // (there, explode(split(null)) yields no rows, so the doc never
-    // reaches the dense join)
-    val tv = docs.filter(col("doc_id") % 3 === 0 && col("text").isNotNull)
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        (id, captionSlotSums(text, dim).map(_.toDouble).toSeq)
-      }.toDF("doc_id", "tv")
-    val ev = emb.select(col("vec_id").as("doc_id"),
-      transform(col("embedding"), x => x.cast("double")).as("ev"))
-    tv.join(ev, Seq("doc_id"))
-      .select(col("doc_id"),
-        vec_dot(col("tv"), col("ev")).as("dot"),
-        vec_dot(col("tv"), col("tv")).as("nt"),
-        vec_dot(col("ev"), col("ev")).as("ne"))
-      .select(col("doc_id"),
-        when(col("nt") === 0.0 || col("ne") === 0.0, lit(0.0))
-          .otherwise(col("dot") / sqrt(col("nt") * col("ne")))
-          .as("consistency"))
-      .withColumn("decision",
-        when(col("consistency") >= threshold, "keep").otherwise("drop"))
   }
 
   def captionConsistencySql(dim: Int = 64, threshold: Double = 0.0): String = {

@@ -158,55 +158,6 @@ object Similarity {
     }.toDF("band", "weight", "pv")
   }
 
-  /** Per-vector SRP band keys as a plain JVM function — the streaming
-    * ingest twin ([[graft.streaming.DedupStreaming.embedDupStream]])
-    * computes signatures per row inside its typed pipeline (a stream
-    * cannot stage the batch side's crossJoin+groupBy signature build
-    * before its stateful operator). Identical arithmetic to the batch
-    * construction: per bit, a sequential dot against [[planeCoef]]'s
-    * closed-form plane (the same accumulation order as the native
-    * VecDot), weight 1<<(bit % bandBits) — the stream==batch
-    * equivalence spec pins bit-exactness.
-    */
-  private[graft] def srpBandKeys(v: IndexedSeq[Double]): Array[Long] = {
-    // the same loud dimension guard as the batch side's
-    // vecsDoubleChecked: a short vector would throw a bare
-    // IndexOutOfBounds inside the stateful operator, a long one would
-    // silently truncate the banding while the cosine uses full length
-    require(v.length == SrpDim,
-      s"SRP-LSH requires embedding dim $SrpDim, got ${v.length}")
-    val out = new Array[Long](LshBands)
-    var f = 0
-    while (f < LshBands) {
-      var key = 0L
-      var b = 0
-      while (b < LshBandBits) {
-        val bit = f * LshBandBits + b
-        var proj = 0.0
-        var d = 0
-        while (d < SrpDim) { proj += v(d) * planeCoef(bit, d); d += 1 }
-        if (proj >= 0) key |= (1L << b)
-        b += 1
-      }
-      out(f) = key
-      f += 1
-    }
-    out
-  }
-
-  /** Sequential cosine, same accumulation order as VecDot + sqrt. */
-  private[graft] def cosineSeq(a: IndexedSeq[Double],
-      b: IndexedSeq[Double]): Double = {
-    var dotAb = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < a.length) {
-      dotAb += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-    }
-    dotAb / (math.sqrt(na) * math.sqrt(nb))
-  }
-
   def embedNearDup(spark: SparkSession, sfDir: String,
       threshold: Double = 0.3): DataFrame = {
     val vecs = vecsDoubleChecked(spark, sfDir)

@@ -41,7 +41,7 @@ import graft.sources.LogFileSource
   * also the deterministic test harness mode. The broker contract the
   * Kafka transport would add (partitioned offsets, poll batching,
   * committed-offset resume, at-least-once redelivery) is modeled and
-  * test-pinned by [[QueueContract]].
+  * test-pinned on [[FileTopic]].
   *
   * (3 and 4 are separate queries because a flatMapGroupsWithState must be
   * the last stateful operator of its query — exactly the reason the

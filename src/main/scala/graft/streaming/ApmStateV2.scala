@@ -9,17 +9,17 @@ import ApmStreaming._
 /** The keyed streaming folds that need the `transformWithState` API
   * (Spark 4's StatefulProcessor) rather than `flatMapGroupsWithState`:
   *
-  *  - the DETERMINISTIC R4 cooldown ([[OrderedCooldownProcessor]]):
-  *    per-service ListState buffers plus first-class event-time timers,
-  *    which the single GroupStateTimeout slot cannot express;
-  *  - the ingest-time twins of batch operators with no V1 form: volume
-  *    z-score (Z6), histogram sliding quantile (A10), LOCF gap-fill (A11)
-  *    and seasonal decomposition (A12), each with typed composite state
-  *    and the observable bucket discipline of [[LateDrops]].
+  *  - the DETERMINISTIC R4 cooldown ([[OrderedCooldownProcessor]]),
+  *    which `ApmGraph` stage 4 runs under `orderedCooldown`: per-service
+  *    ListState buffers plus first-class event-time timers, which the
+  *    single GroupStateTimeout slot cannot express;
+  *  - the bounded-state histogram sliding quantile (A10,
+  *    [[HistQuantileProcessor]]), a ring of bucket histograms per key.
   *
-  * The arrival-order folds of the core chain (z-score, votes, cooldown,
-  * J2 enrich) exist once, in [[ApmStreaming]]; they run on either state
-  * store provider (StreamingSpec pins both).
+  * Both record the rows they drop in the [[LateDrops]] ledger. The
+  * arrival-order folds of the core chain (z-score, votes, cooldown) exist
+  * once, in [[ApmStreaming]]; they run on either state store provider
+  * (StreamingSpec pins both).
   *
   * transformWithState requires the RocksDB state store; the cluster
   * config this targets (set in the session that runs these folds):
@@ -34,17 +34,16 @@ object ApmStateV2 {
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Observability for the bucket-discipline DROPS in [[VolumeZProcessor]]
-    * / [[HistQuantileProcessor]]: a bucket at or below the last folded one
-    * is discarded by design (its window position was already consumed),
-    * but a DATA-carrying late bucket being dropped means the stream result
-    * has diverged from what a batch run over the full input would say —
-    * which used to be invisible at runtime. Every drop now bumps a counter
+  /** Observability for the rows the folds here drop by design: a row at
+    * or below [[OrderedCooldownProcessor]]'s flushed watermark, or a
+    * bucket at or below [[HistQuantileProcessor]]'s last folded one. A
+    * DATA-carrying drop means the stream result has diverged from what a
+    * batch run over the full input would say. Every drop bumps a counter
     * and a data-carrying drop logs a WARN naming key/bucket/payload, so an
     * operator can see the divergence (per-executor on a cluster: the
-    * counters are JVM-local, the log lines land in executor logs — on a
-    * real deployment these feed the metrics sink; here they make the
-    * behavior testable, StateV2Spec pins it).
+    * counters are JVM-local, the log lines land in executor logs).
+    * `ApmGraph` stage 4 publishes the counters' deltas on `t_ops`;
+    * OrderedCooldownSpec pins them.
     */
   object LateDrops {
     import java.util.concurrent.atomic.AtomicLong
@@ -206,99 +205,6 @@ object ApmStateV2 {
         TimeMode.EventTime(), OutputMode.Append())
   }
 
-  // ------------------------------------------- Z6 volume z-score at ingest
-
-  case class VolIn(server: String, service: String, bucket: Long, cnt: Long)
-  /** NaN marks "undefined" (warmup / σ==0), mirroring the batch NULLs. */
-  case class VolOut(server: String, service: String, bucket: Long, n: Long,
-      vol_avg: Double, vol_lb: Double, vol_ub: Double, vol_signal: Int)
-  /** `last` = highest bucket already folded (Long.MinValue = none yet) —
-    * the cross-batch ordering guard.
-    */
-  case class VolState(counts: List[Long], sum: Long, sumsq: Long, last: Long)
-
-  /** Streaming twin of [[graft.operators.ZScore.volumeZScorePrefix]] —
-    * per-key state is the bounded count window plus its two running
-    * integer moments (O(lag) longs; the moments make each step O(1)).
-    * The arithmetic is the batch prefix-difference expression verbatim,
-    * so stream == batch bit-for-bit on the same dense count series
-    * (pinned in StateV2Spec). Expects the dense per-bucket counts the
-    * stats stage already emits every interval (tpm=0 rows included).
-    *
-    * Bucket discipline ACROSS micro-batches (the dense contract can break
-    * at a restart seam or an upstream reshuffle, and a blind append would
-    * silently corrupt the running moments):
-    *  - a bucket at or below the last folded one (duplicate / late
-    *    arrival) is DROPPED — its window position was already consumed;
-    *    the drop is observable ([[LateDrops]]: counter + WARN when the
-    *    dropped bucket carried data), never silent;
-    *  - a gap is FILLED with zero-count steps (what the batch dense
-    *    scaffold would contain), each emitting its row, so stream ==
-    *    batch holds even when the upstream elides empty buckets.
-    * `step` is the bucket increment of the dense series (1 for
-    * pre-divided bucket indexes, intervalMs for epoch-ms buckets).
-    */
-  class VolumeZProcessor(lag: Int, threshold: Double, step: Long = 1L)
-      extends StatefulProcessor[(String, String), VolIn, VolOut] {
-    @transient private var st: ValueState[VolState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[VolState]("vol",
-        Encoders.product[VolState], TTLConfig.NONE)
-    override def handleInputRows(key: (String, String), rows: Iterator[VolIn],
-        tv: TimerValues): Iterator[VolOut] = {
-      var s = if (st.exists()) st.get()
-        else VolState(Nil, 0L, 0L, Long.MinValue)
-      // fold ONE in-order bucket: emit its stats row, push it into the
-      // bounded window + moments
-      def fold(bucket: Long, cnt: Long): VolOut = {
-        var (avg, lb, ub, sig) = (Double.NaN, Double.NaN, Double.NaN, 0)
-        if (s.counts.length >= lag) {
-          val mean = s.sum.toDouble / lag.toDouble
-          val msq = (s.sumsq.toDouble -
-            s.sum.toDouble * s.sum.toDouble / lag.toDouble) / lag.toDouble
-          avg = mean
-          if (msq > 0.0) {
-            val sd = math.sqrt(msq)
-            lb = mean - threshold * sd
-            ub = mean + threshold * sd
-            if (math.abs(cnt.toDouble - mean) > threshold * sd)
-              sig = if (cnt.toDouble > mean) 1 else -1
-          }
-        }
-        val pushed = VolState(s.counts :+ cnt,
-          s.sum + cnt, s.sumsq + cnt * cnt, bucket)
-        s = if (pushed.counts.length > lag)
-          VolState(pushed.counts.tail,
-            pushed.sum - pushed.counts.head,
-            pushed.sumsq - pushed.counts.head * pushed.counts.head, bucket)
-        else pushed
-        VolOut(key._1, key._2, bucket, cnt, avg, lb, ub, sig)
-      }
-      val out = rows.toArray.sortBy(_.bucket).flatMap { r =>
-        if (s.last != Long.MinValue && r.bucket <= s.last) { // dup/late
-          LateDrops.record("VolumeZProcessor", key, r.bucket, s.last,
-            s"cnt=${r.cnt}", hasData = r.cnt != 0L)
-          Nil
-        } else {
-          val gapFill =
-            if (s.last == Long.MinValue) Nil
-            else (s.last + step) until r.bucket by step
-          gapFill.map(fold(_, 0L)) :+ fold(r.bucket, r.cnt)
-        }
-      }
-      st.update(s)
-      out.iterator
-    }
-  }
-
-  def volumeZStreamV2(in: Dataset[VolIn], lag: Int,
-      threshold: Double, step: Long = 1L): Dataset[VolOut] = {
-    import in.sparkSession.implicits._
-    in.groupByKey(r => (r.server, r.service))
-      .transformWithState(new VolumeZProcessor(lag, threshold, step),
-        TimeMode.None(), OutputMode.Append())
-  }
-
   // --------------------------- A10 histogram sliding quantile at ingest
 
   /** One (bucket, bin) histogram cell of a key — the stats stage's
@@ -322,9 +228,11 @@ object ApmStateV2 {
     * count reaches p·n — float-for-float the batch expression, so
     * stream == batch exactly (StateV2Spec pins it).
     *
-    * Bucket discipline matches [[VolumeZProcessor]]: duplicates/late
-    * buckets dropped, gaps filled with empty histograms (an all-empty
-    * window emits nothing, exactly the batch fan-out's absence).
+    * Bucket discipline across micro-batches: a bucket at or below the
+    * last folded one (duplicate / late arrival) is DROPPED, observably
+    * ([[LateDrops]]: counter + WARN when it carried data); gaps are
+    * filled with empty histograms (an all-empty window emits nothing,
+    * exactly the batch fan-out's absence).
     * Batch-only divergence at the SEAM: the batch scaffold fans trailing
     * windows out to the GLOBAL max bucket, so a key silent at corpus end
     * gets trailing rows there that the stream only emits once that key's
@@ -393,186 +301,6 @@ object ApmStateV2 {
     import in.sparkSession.implicits._
     in.groupByKey(r => (r.server, r.service))
       .transformWithState(new HistQuantileProcessor(windowN, binW, step),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  // --------------------------- A11 LOCF gap-fill at ingest
-
-  /** One bucket's observations for a key — `vals` is the bucket's
-    * elapsed values; empty = a dense-scaffold quiet bucket (the stream
-    * may also simply ELIDE quiet buckets: the twin zero-fills gaps).
-    */
-  case class LocfIn(server: String, service: String, bucket: Long,
-      vals: Seq[Double])
-  /** NaN marks the batch frame's NULLs (obs_avg of a quiet bucket;
-    * filled_avg/fill_age before a key's first observation).
-    */
-  case class LocfOut(server: String, service: String, bucket: Long,
-      cnt: Long, obs_avg: Double, filled_avg: Double, is_filled: Int,
-      fill_age: Double)
-  /** lastAvg/lastObs = the key's most recent OBSERVED mean and its
-    * bucket (lastAvg NaN = never observed); last = highest folded
-    * bucket (the cross-batch ordering guard).
-    */
-  case class LocfState(lastAvg: Double, lastObs: Long, last: Long)
-
-  /** Streaming twin of [[graft.operators.ApmStats.locfFill]] (a11) —
-    * last-observation-carried-forward gap-fill AT INGEST. The batch
-    * operator's two `last(_, ignoreNulls)` windows collapse to the
-    * smallest state in the family: ONE (last-mean, last-bucket) pair
-    * per key. The per-bucket mean is the same ordered fold as the batch
-    * [[graft.functions.RefStats.arrayMean]] (left-to-right sum over the
-    * ASCENDING-sorted values, one divide), so stream == batch
-    * bit-for-bit (StateV2Spec pins it).
-    *
-    * Bucket discipline matches [[VolumeZProcessor]]: duplicate/late
-    * buckets are dropped observably ([[LateDrops]]); gaps are filled
-    * with empty buckets, each emitting its carried-forward row — the
-    * batch dense scaffold's rows. Batch-only seam divergence as in
-    * [[HistQuantileProcessor]]: the batch scaffold spans the GLOBAL
-    * bucket range, so keys quiet at corpus start/end get scaffold rows
-    * there that the stream only emits once bounded by that key's own
-    * observations.
-    */
-  class LocfProcessor(step: Long = 1L)
-      extends StatefulProcessor[(String, String), LocfIn, LocfOut] {
-    @transient private var st: ValueState[LocfState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[LocfState]("locf",
-        Encoders.product[LocfState], TTLConfig.NONE)
-    override def handleInputRows(key: (String, String), rows: Iterator[LocfIn],
-        tv: TimerValues): Iterator[LocfOut] = {
-      var s = if (st.exists()) st.get()
-        else LocfState(Double.NaN, 0L, Long.MinValue)
-      def fold(bucket: Long, vals: Seq[Double]): LocfOut = {
-        val cnt = vals.size.toLong
-        val obs =
-          if (cnt == 0L) Double.NaN
-          else vals.sorted.foldLeft(0.0)(_ + _) / cnt.toDouble
-        if (cnt > 0L) s = LocfState(obs, bucket, bucket)
-        else s = s.copy(last = bucket)
-        val never = s.lastAvg.isNaN
-        LocfOut(key._1, key._2, bucket, cnt, obs,
-          s.lastAvg,
-          if (cnt == 0L && !never) 1 else 0,
-          if (never) Double.NaN else (bucket - s.lastObs).toDouble)
-      }
-      val out = rows.toArray.sortBy(_.bucket).flatMap { r =>
-        if (s.last != Long.MinValue && r.bucket <= s.last) { // dup/late
-          LateDrops.record("LocfProcessor", key, r.bucket, s.last,
-            s"n=${r.vals.size}", hasData = r.vals.nonEmpty)
-          Nil
-        } else {
-          val gapFill =
-            if (s.last == Long.MinValue) Nil
-            else (s.last + step) until r.bucket by step
-          gapFill.map(fold(_, Nil)) :+ fold(r.bucket, r.vals)
-        }
-      }
-      st.update(s)
-      out.iterator
-    }
-  }
-
-  def locfStreamV2(in: Dataset[LocfIn], step: Long = 1L): Dataset[LocfOut] = {
-    import in.sparkSession.implicits._
-    in.groupByKey(r => (r.server, r.service))
-      .transformWithState(new LocfProcessor(step),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  // --------------------------- A12 seasonal decomposition at ingest
-
-  case class SeasOut(server: String, service: String, bucket: Long,
-      cnt: Long, trend: Double, seasonal: Double, resid: Double)
-  /** ring: trailing up-to-`period` counts (current included once folded),
-    * trendSum their integer sum; rn rows folded; phases the per-phase
-    * running (phase, detrended-sum, row-count) triples (<= period
-    * entries — the state is O(period) regardless of series length, and
-    * a List because the V2 state encoder takes product/array types, not
-    * maps); last = highest folded bucket.
-    */
-  case class SeasState(ring: List[Long], trendSum: Long, rn: Long,
-      phases: List[(Long, Long, Long)], last: Long)
-
-  /** Streaming twin of [[graft.operators.ApmStats.seasonalDecompose]]
-    * (a12) — trend + daily-seasonal + residual AT INGEST. The batch
-    * operator's two window passes map onto bounded per-key state:
-    *  - the trailing `period`-bucket trend sum is a ring of counts with
-    *    its running integer sum (pass 1);
-    *  - the per-(key, phase) seasonal mean becomes a RUNNING integer
-    *    sum per phase (pass 2's unbounded frame, prefix form): the
-    *    stream's seasonal at row i is the batch mean over phase rows
-    *    seen so far, and at each phase's LAST row it equals the batch
-    *    a12 value exactly (the full-series mean) — the same
-    *    running-vs-complete relationship z6 has to z2. All sums stay
-    *    integer until the final division (the a12 parity recipe), so
-    *    stream == prefix-batch bit-for-bit (StateV2Spec).
-    *
-    * Same bucket discipline as [[VolumeZProcessor]]: dup/late buckets
-    * are dropped observably ([[LateDrops]]), gaps are zero-filled like
-    * the batch dense scaffold; warm-up rows (rn < period) fold into
-    * state but are not emitted, mirroring the batch `rn >= period`
-    * filter.
-    */
-  class SeasonalProcessor(period: Int, step: Long = 1L)
-      extends StatefulProcessor[(String, String), VolIn, SeasOut] {
-    @transient private var st: ValueState[SeasState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SeasState]("seas",
-        Encoders.product[SeasState], TTLConfig.NONE)
-    override def handleInputRows(key: (String, String), rows: Iterator[VolIn],
-        tv: TimerValues): Iterator[SeasOut] = {
-      var s = if (st.exists()) st.get()
-        else SeasState(Nil, 0L, 0L, Nil, Long.MinValue)
-      def fold(bucket: Long, cnt: Long): Option[SeasOut] = {
-        val pushedRing = s.ring :+ cnt
-        val (ring, trendSum) =
-          if (pushedRing.length > period)
-            (pushedRing.tail, s.trendSum + cnt - pushedRing.head)
-          else (pushedRing, s.trendSum + cnt)
-        val rn = s.rn + 1
-        if (rn < period) {
-          s = SeasState(ring, trendSum, rn, s.phases, bucket)
-          None
-        } else {
-          // phase is of the bucket INDEX (bucket/step), matching the
-          // batch `pmod(bucket, period)` over pre-divided indexes
-          val phase = math.floorMod(bucket / step, period.toLong)
-          val det = period.toLong * cnt - trendSum
-          val (pNum, pCnt) = s.phases.find(_._1 == phase)
-            .map(t => (t._2 + det, t._3 + 1L)).getOrElse((det, 1L))
-          s = SeasState(ring, trendSum, rn,
-            (phase, pNum, pCnt) :: s.phases.filterNot(_._1 == phase),
-            bucket)
-          val trend = trendSum.toDouble / period.toDouble
-          val seasonal = pNum.toDouble / (period.toDouble * pCnt)
-          Some(SeasOut(key._1, key._2, bucket, cnt, trend, seasonal,
-            (cnt.toDouble - trend) - seasonal))
-        }
-      }
-      val out = rows.toArray.sortBy(_.bucket).flatMap { r =>
-        if (s.last != Long.MinValue && r.bucket <= s.last) { // dup/late
-          LateDrops.record("SeasonalProcessor", key, r.bucket, s.last,
-            s"cnt=${r.cnt}", hasData = r.cnt != 0L)
-          Nil
-        } else {
-          val gapFill =
-            if (s.last == Long.MinValue) Nil
-            else (s.last + step) until r.bucket by step
-          gapFill.flatMap(fold(_, 0L)) ++ fold(r.bucket, r.cnt)
-        }
-      }
-      st.update(s)
-      out.iterator
-    }
-  }
-
-  def seasonalStreamV2(in: Dataset[VolIn], period: Int,
-      step: Long = 1L): Dataset[SeasOut] = {
-    import in.sparkSession.implicits._
-    in.groupByKey(r => (r.server, r.service))
-      .transformWithState(new SeasonalProcessor(period, step),
         TimeMode.None(), OutputMode.Append())
   }
 }

@@ -18,8 +18,6 @@ import graft.operators.{Alerts, ZScore}
   *  - A1-A5 window stats -> watermarked sliding `window()` aggregation;
   *    the 6-bucket lateness buffer (stream_calc_stats.js:103-113) is the
   *    watermark delay; exact percentiles via sort_array(collect_list).
-  *  - J1 pairing -> stream-stream left-outer join with event-time range
-  *    (the 120 s TTL cache, stream_parse_transactions.js:211-224).
   *  - Z2 z-score -> flatMapGroupsWithState keyed on (server, service,
   *    lag), bounded per-key list state — the faithful influence-feedback
   *    recurrence (stream_calc_z_score.js:232-307).
@@ -64,27 +62,6 @@ object ApmStreaming {
         RefStats.arrayMean(col("sorted")).as("average"),
         RefStats.refPercentile(col("sorted"), 0.75).as("per75"),
         RefStats.refPercentile(col("sorted"), 0.95).as("per95"))
-  }
-
-  /** J1/J2: entry<->exit pairing as a watermarked stream-stream left-outer
-    * join; unmatched exits emit with null entry after the watermark closes
-    * the join window (the salvage path), unmatched entries simply expire.
-    */
-  def pairingStream(entries: DataFrame, exits: DataFrame,
-      ttl: String = "120 seconds"): DataFrame = {
-    val e = entries.select(col("log_id").as("e_log_id"),
-      col("service").as("e_service"), col("entry_ts"))
-      .withWatermark("entry_ts", "30 seconds")
-    val x = exits.withWatermark("exit_ts", "30 seconds")
-    x.join(e,
-      col("log_id") === col("e_log_id") &&
-        col("service") === col("e_service") &&
-        col("exit_ts") >= col("entry_ts") &&
-        col("exit_ts") <= col("entry_ts") + expr(s"INTERVAL $ttl"),
-      "leftOuter")
-      .select(col("log_id"), col("service"), col("entry_ts"),
-        col("exit_ts"), col("elapsed"),
-        when(col("entry_ts").isNull, "N").otherwise("Y").as("complete"))
   }
 
   // ------------------------------------------------------------- z-score
@@ -159,69 +136,6 @@ object ApmStreaming {
         coalesce(col("per75"), lit(Double.NaN)).as("per75"),
         coalesce(col("per95"), lit(Double.NaN)).as("per95"))
       .as[ZIn]
-  }
-
-  // -------------------------------------------------- J2 park-and-expire
-
-  case class EnrichIn(log_id: Long, kind: String, // "tx" | "acct"
-      service: String, ts_ms: Long, elapsed: Double, acct: String)
-  case class EnrichOut(log_id: Long, service: String, ts_ms: Long,
-      elapsed: Double, acct: String, matched: Boolean)
-  case class EnrichState(txs: Seq[(String, Long, Double)], acct: String,
-      deadlineMs: Long)
-
-  /** J2 — acctNum enrichment with the reference's park/flush/expire
-    * semantics (stream_parse_transactions.js:218,226-239,294-327): a tx
-    * lacking its account number parks in keyed state; a late acct
-    * arrival flushes every parked tx enriched; after the TTL the state
-    * times out and parked txs emit with acct='' (left-outer-with-
-    * deadline, realized as EventTimeTimeout keyed state).
-    */
-  def enrichStream(in: Dataset[EnrichIn], ttlMs: Long = 30000L): Dataset[EnrichOut] = {
-    import in.sparkSession.implicits._
-    in.withColumn("event_ts", timestamp_millis(col("ts_ms")))
-      .withWatermark("event_ts", "10 seconds")
-      .as[(Long, String, String, Long, Double, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[EnrichState, EnrichOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (logId: Long,
-         rows: Iterator[(Long, String, String, Long, Double, String, java.sql.Timestamp)],
-         state: GroupState[EnrichState]) =>
-          if (state.hasTimedOut) {
-            // TTL expiry: emit parked txs with empty acct (:226-239)
-            val st = state.get
-            state.remove()
-            st.txs.iterator.map { case (svc, ts, el) =>
-              EnrichOut(logId, svc, ts, el, "", matched = false)
-            }
-          } else {
-            var st = state.getOption.getOrElse(EnrichState(Nil, "", 0L))
-            val out = scala.collection.mutable.Buffer.empty[EnrichOut]
-            val batch = rows.toArray.sortBy(_._4)
-            batch.foreach {
-              case (_, "acct", _, _, _, acct, _) =>
-                // late acct arrival flushes parked rows (:316-325)
-                st.txs.foreach { case (svc, ts, el) =>
-                  out += EnrichOut(logId, svc, ts, el, acct, matched = true)
-                }
-                st = EnrichState(Nil, acct, st.deadlineMs)
-              case (_, _, svc, ts, el, _, _) =>
-                if (st.acct.nonEmpty)
-                  out += EnrichOut(logId, svc, ts, el, st.acct, matched = true)
-                else {
-                  st = st.copy(txs = st.txs :+ ((svc, ts, el)),
-                    deadlineMs = math.max(st.deadlineMs, ts + ttlMs))
-                }
-            }
-            if (st.txs.nonEmpty || st.acct.nonEmpty) {
-              val maxTs = batch.map(_._4).max
-              state.update(st)
-              state.setTimeoutTimestamp(math.max(st.deadlineMs, maxTs + ttlMs))
-            }
-            out.iterator
-          }
-      }
   }
 
   // ------------------------------------------------------------- alerts

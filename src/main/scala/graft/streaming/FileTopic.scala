@@ -7,12 +7,35 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 import java.util.concurrent.ConcurrentHashMap
 
-/** File-backed [[QueueTopic]] — the `graftqueue` connector's transport.
-  * Two SEPARATE JVMs can produce to and consume from the same topic
-  * directory, which reproduces the reference's process topology (six OS
-  * processes connected by a broker, config/apm_config.json:87-178)
-  * without needing a broker jar: the durable medium is the filesystem
-  * instead of a broker's log.
+/** File-backed partitioned queue topic — the `graftqueue` connector's
+  * transport (S3/S4). Two SEPARATE JVMs can produce to and consume from
+  * the same topic directory, which reproduces the reference's process
+  * topology (six OS processes connected by a broker,
+  * config/apm_config.json:87-178; queue.js:206-305) without needing a
+  * broker jar: the durable medium is the filesystem instead of a
+  * broker's log. The graph ([[ApmGraph]]) hands off through parquet
+  * topic directories or through this transport.
+  *
+  * The broker contract the stage code relies on (pinned by
+  * `FileTopicConformance`, QueueContractSpec):
+  *
+  *  - an append-only PARTITIONED log; a record's partition is chosen by
+  *    key hash (null keys round-robin), and ordering is guaranteed only
+  *    WITHIN a partition — exactly Kafka's guarantee, and why every
+  *    keyed stage must tolerate cross-key reordering;
+  *  - monotonic per-partition OFFSETS, assigned at append;
+  *  - consumers poll BATCHES from their current position (maxPoll maps
+  *    to `maxOffsetsPerTrigger`: the batch bound a micro-batch trigger
+  *    would read);
+  *  - a consumer GROUP holds durable committed offsets; a restarted
+  *    consumer of the same group resumes from the last COMMIT, not the
+  *    last poll — so anything polled but not committed is redelivered:
+  *    AT-LEAST-ONCE, which is why the stages' sinks are idempotent
+  *    (parquet overwrite per batch id / stateful dedup), mirroring how
+  *    Structured Streaming turns Kafka's at-least-once into effective
+  *    exactly-once via checkpointed offsets + idempotent sinks (S7);
+  *  - `endOffsets` is the consumer-lag denominator (monitoring parity
+  *    with the reference's queue-depth flow control, S2).
   *
   * Layout under `dir/`:
   *  - `format`          — on-disk format version ("4": end-indexed,
@@ -75,11 +98,10 @@ import java.util.concurrent.ConcurrentHashMap
   * critical section to one locked append per task, so the contract's
   * performance shape (batched produce, O(poll) reads, metadata-only
   * commits) survives; retention keeps a long-running deployment's disk
-  * bounded by consumer lag instead of stream lifetime; swapping in
-  * Kafka keeps every caller unchanged.
+  * bounded by consumer lag instead of stream lifetime.
   */
 final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
-    fsync: Boolean = false) extends QueueTopic {
+    fsync: Boolean = false) {
   require(requestedPartitions >= 1)
   Files.createDirectories(dir)
   private val lockPath = dir.resolve("lock")
@@ -471,6 +493,10 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
     (p, appendBatch(p, Seq(key -> value)))
   }
 
+  /** Append a task's whole buffer as ONE atomic unit — the executor-side
+    * produce of the sink. Keys still choose partitions by hash; atomicity
+    * is per producing TASK, so a reader never observes a torn task batch.
+    */
   def produceAll(rows: Seq[(String, String)]): Unit = withLock {
     appendAll(rows)
   }
@@ -524,6 +550,11 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
     }.toMap
   }
 
+  /** Earliest RETAINED offset per partition — 0 until retention trims
+    * (Kafka's `beginningOffsets`). A read below it resumes at it, the
+    * `auto.offset.reset=earliest` behavior a consumer of a retention-
+    * trimmed topic sees.
+    */
   def beginningOffsets: Map[Int, Long] =
     (0 until nPartitions).map(p => p -> genAndBase(p)._2).toMap
 
@@ -599,10 +630,55 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
         pp.toInt -> oo.toLong
       }.toMap
 
-  protected def committedRaw(group: String): Map[Int, Long] =
+  /** Durable committed offsets per consumer group. */
+  private[streaming] def committed(group: String): Map[Int, Long] =
     parseCommits(lookupName("commits_", group))
 
-  def truncateToCommitted(minFraction: Double): Map[Int, Long] = withLock {
+  /** Commit a USER-chosen group's offsets. The reserved `.durable`
+    * suffix is rejected HERE, so no path into the commit namespace (a
+    * [[ContractConsumer]], a test harness, a future caller) can alias
+    * another group's durable-progress line and skew retention
+    * decisions; the only way to write under the suffix is
+    * [[commitDurable]].
+    */
+  private[streaming] def commit(group: String, offs: Map[Int, Long]): Unit = {
+    FileTopic.requireUnreserved(group)
+    commitRaw(group, offs)
+  }
+
+  /** Advance `group`'s durable-progress line (`<group>.durable`) — the
+    * connector's post-batch-commit write that retention trims to
+    * instead of the planning-time ack ([[FileTopic.retentionLines]]).
+    */
+  private[streaming] def commitDurable(group: String,
+      offs: Map[Int, Long]): Unit = {
+    FileTopic.requireUnreserved(group)
+    commitRaw(group + ".durable", offs)
+  }
+
+  private[streaming] def committedDurable(group: String): Map[Int, Long] =
+    committed(group + ".durable")
+
+  /** Retention: drop every record ALL consumer groups have committed
+    * past — the `AdminClient.deleteRecords` analog with its target
+    * derived from group progress, the safe default for a transport
+    * whose consumers checkpoint their own offsets (nothing a group
+    * still needs can be dropped). A topic with no commit groups keeps
+    * everything: zero groups proves nothing consumed, not everything.
+    * Offsets are NOT renumbered — the beginning moves up, ends stay —
+    * so committed offsets, fences and in-flight batch ranges all stay
+    * valid. Returns the new per-partition beginning offsets.
+    *
+    * `minFraction` amortizes REPEATED trims (a per-epoch retention
+    * policy): a partition only trims when its committed prefix is at
+    * least that fraction of its retained records. A trim rewrites the
+    * kept tail, so trimming on every commit would cost O(tail) per
+    * epoch; at 0.5 each trim rewrites no more records than it frees,
+    * keeping total compaction work linear in records ever produced. 0
+    * (the default) trims whatever is trimmable — the exact one-shot
+    * `deleteRecords` call.
+    */
+  def truncateToCommitted(minFraction: Double = 0.0): Map[Int, Long] = withLock {
     // keyed by the ENCODED group name so `<group>.durable` pairs with
     // its base group (encName passes '.' through, so enc(g + ".durable")
     // == enc(g) + ".durable"; the contract rejects user groups ending
@@ -619,7 +695,7 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
         b.result()
       } finally s.close()
     }
-    val lines = QueueTopic.retentionLines(groups)
+    val lines = FileTopic.retentionLines(groups)
     if (lines.nonEmpty) (0 until nPartitions).foreach { p =>
       val (gen, base) = genAndBase(p)
       val ip = idxPath(p, gen)
@@ -688,9 +764,9 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
     ()
   }
 
-  protected def commitRaw(group: String, offs: Map[Int, Long]): Unit =
+  private def commitRaw(group: String, offs: Map[Int, Long]): Unit =
     withLock {
-      val merged = (committedRaw(group).toSeq ++ offs.toSeq)
+      val merged = (committed(group).toSeq ++ offs.toSeq)
         .groupMapReduce(_._1)(_._2)(math.max)
       val body = merged.toSeq.sorted.map { case (p, o) => s"$p:$o" }
         .mkString("", "\n", "\n")
@@ -699,7 +775,7 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
       // literally named tmp_<N> could have its offsets clobbered
       writeAtomic(fileName("commits_", group), body.getBytes(UTF_8))
       // the merge above already folded any legacy-named file in (via
-      // committedRaw's lookup fallback); retire it so a stale pre-trim
+      // committed's lookup fallback); retire it so a stale pre-trim
       // commit can't keep bounding retention below the live line forever
       encNameLegacy(group).foreach(l =>
         Files.deleteIfExists(dir.resolve("commits_" + l)))
@@ -726,6 +802,18 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
     encNameLegacy(queryId).foreach(l =>
       Files.deleteIfExists(dir.resolve("fence_" + l + "_" + partitionId)))
 
+  /** Idempotent-producer fence primitive: returns true iff this
+    * (query, epoch, write-partition) is ABOVE the partition's
+    * high-water mark, and advances the mark. Epochs of a streaming
+    * query are strictly increasing per partition (micro-batch N
+    * completes before N+1 starts), so a replayed epoch is exactly
+    * "epochId <= high-water": state is one long per (query,
+    * partition), bounded for the life of the query, instead of one
+    * fence entry per epoch forever. The production sink does NOT call
+    * this followed by [[produceAll]] — that ordering has a crash hole
+    * — it calls [[produceFenced]], which is the two fused atomically;
+    * this primitive remains for fence-semantics tests.
+    */
   private[streaming] def beginTaskEpoch(queryId: String, epochId: Long,
       partitionId: Int): Boolean = withLock {
     val hw = readLongFile(fenceLookup(queryId, partitionId), Long.MinValue)
@@ -736,14 +824,18 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
     } else false
   }
 
-  /** Fence check, data append, fence advance — one lock section, in
-    * that order (the append is inlined: [[withLock]] does not re-enter
-    * across a second `FileChannel.lock` from the same thread). A
-    * process crash mid-append leaves some records visible with the
-    * fence NOT advanced, so the task retry re-appends the buffer —
-    * at-least-once across a hard crash, exactly-once for Spark-level
-    * retries/replays; advancing the fence first would instead lose the
-    * buffer silently.
+  /** The sink's executor-side produce, fenced and ATOMIC: iff `epochId`
+    * is above the (query, write-partition) high-water mark, append the
+    * whole buffer and only then advance the mark — fence check, data
+    * append, fence advance in ONE lock section (the append is inlined:
+    * [[withLock]] does not re-enter across a second `FileChannel.lock`
+    * from the same thread). The ordering is the crash contract:
+    * fence-first would turn a crash between fence and append into
+    * silent data loss (the task retry finds itself fenced and the
+    * buffer is gone — at-most-once); data-first makes a crash
+    * mid-produce at-least-once (the retry re-appends the buffer), while
+    * Spark-level task retries and epoch replays remain exactly-once.
+    * Returns whether the buffer was appended.
     */
   private[streaming] def produceFenced(queryId: String, epochId: Long,
       partitionId: Int, rows: Seq[(String, String)]): Boolean = withLock {
@@ -772,6 +864,38 @@ object FileTopic {
     * when every decoration applies.
     */
   val MaxEncodedName = 180
+
+  /** Every commit-namespace write validates here (see
+    * [[FileTopic.commit]]): `<group>.durable` is the connector
+    * reader's durable-progress line, and a user group literally named
+    * that way would alias another group's line.
+    */
+  private[streaming] def requireUnreserved(group: String): Unit =
+    require(!group.endsWith(".durable"),
+      s"queue group '$group': the '.durable' suffix is reserved for the " +
+        "reader's durable-progress line (written via commitDurable)")
+
+  /** The per-group lines retention may trim to, with `<group>.durable`
+    * overrides applied. A connector reader ACKs at planning (the S4
+    * ack-before-process contract), so its plain group commit can run
+    * one IN-FLIGHT batch ahead of durable processing; it records the
+    * durably-completed line under `<group>.durable` (seeded at query
+    * start, advanced at each delivered micro-batch commit). Retention
+    * must trim to the durable line when one exists: trimming to the
+    * ack could delete records a crash-replayed batch still needs, and
+    * earliest-reset would then turn the replay into a silently EMPTY
+    * batch — reintroducing exactly the ack-before-process loss window
+    * the checkpoint upgrade closes. A durable line with no base group
+    * (seeded, nothing planned yet) bounds the trim by itself; a plain
+    * group with no durable line (a [[ContractConsumer]], which
+    * commits after processing) is its own durable line.
+    */
+  private[streaming] def retentionLines(
+      all: Map[String, Map[Int, Long]]): Iterable[Map[Int, Long]] =
+    all.map { case (g, offs) =>
+      if (g.endsWith(".durable")) offs
+      else all.getOrElse(g + ".durable", offs)
+    }
 
   // one JVM-level mutex per topic directory: FileChannel.lock throws
   // OverlappingFileLockException on a second acquisition from the SAME

@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * connector: `readStream.format("graftqueue")` consumes and
   * `writeStream.format("graftqueue")` produces against a named
   * [[FileTopic]], with offsets, consumer groups, poll batching and
-  * commit semantics backed by the broker contract [[QueueContract]] pins
+  * commit semantics backed by the broker contract [[FileTopic]] documents
   * (the reference's RabbitMQ fabric, queue.js:206-305). With this, the
   * graph's stage handoffs run through `format(...)` exactly as they would
   * through the Kafka connector — only the format string changes.
@@ -110,7 +110,7 @@ class GraftQueueTable(props: util.Map[String, String])
   private val group = {
     val g = opt("group", "default")
     // `<group>.durable` is the reader's own durable-progress line in the
-    // topic's commit namespace (QueueTopic.retentionLines); a user group
+    // topic's commit namespace (FileTopic.retentionLines); a user group
     // literally named that way would alias another group's durable line
     // and corrupt retention decisions
     require(!g.endsWith(".durable"),
@@ -269,11 +269,11 @@ class GraftQueueMicroBatchStream(topicName: String, dir: String,
     * deployment without an out-of-band admin needs, keeping disk
     * bounded by consumer lag instead of stream lifetime. Retention
     * trims to the min over every group's DURABLE line
-    * ([[QueueTopic.retentionLines]]), so neither this query's own
+    * ([[FileTopic.retentionLines]]), so neither this query's own
     * in-flight batch (ack ahead of `end`) nor another crashed reader's
     * replayed batch can lose records to the trim. The 0.5 fraction
     * amortizes the file backend's tail rewrite (see
-    * [[QueueTopic.truncateToCommitted]]).
+    * [[FileTopic.truncateToCommitted]]).
     */
   override def commit(end: Offset): Unit = {
     val offs = end.asInstanceOf[QueueOffset].offs

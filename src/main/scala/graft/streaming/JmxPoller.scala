@@ -50,7 +50,7 @@ object JmxPoller {
     * published.
     */
   def pollOnce(spark: SparkSession, hosts: Seq[String],
-      exec: String => String, topic: QueueTopic, pollMs: Long): Int = {
+      exec: String => String, topic: FileTopic, pollMs: Long): Int = {
     import spark.implicits._
     val raws = hosts.map(h => (h, exec(h)))
     val rows = raws.toDF("host", "raw")

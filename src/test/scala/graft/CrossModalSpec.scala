@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Multimodal
 import graft.operators.Multimodal.MediaCodec
@@ -146,5 +147,33 @@ class CrossModalSpec extends AnyFunSuite with TestSession {
       assert(margin > 0.3,
         s"$dir: separation margin collapsed to $margin")
     }
+  }
+
+  test("x3 streaming audio alignment == batch, bit-for-bit, across batches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val want = Multimodal.audioAlign(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+        r.getString(3))).toSet
+    val rows = docs.select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+    val in = MemoryStream[(Long, String)]
+    // the SAME operator body runs at ingest: stateless narrow map, no
+    // join, no watermark — append mode straight through
+    val q = Multimodal.audioAlign(in.toDF.toDF("doc_id", "text"))
+      .writeStream.format("memory").queryName("x3_ingest")
+      .outputMode("append").start()
+    val got = try {
+      val (b1, b2) = rows.splitAt(rows.length / 2)
+      in.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
+      in.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
+      spark.table("x3_ingest").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+          r.getString(3))).toSet
+    } finally q.stop()
+    assert(got == want, s"stream/batch divergence: " +
+      s"${(got -- want).take(3)} vs ${(want -- got).take(3)}")
+    assert(want.exists(_._4 == "aligned") && want.exists(_._4 == "unaligned"))
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Alerts, Parsing, ZScore}
 import graft.sources.LogFileSource
-import graft.streaming.{ApmGraph, ApmStreaming, ContractConsumer, FileTopic, QueueRegistry, QueueTopic}
+import graft.streaming.{ApmGraph, ApmStreaming, ContractConsumer, FileTopic, QueueRegistry}
 
 /** The reference's COMPLETE process topology, reproduced: all four graph
   * stages plus the S6 DB-insert consumer as five concurrently-running,
@@ -112,7 +112,7 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
     // children haven't made yet (existence is part of some spin
     // conditions, and constructing a FileTopic creates its dir), so an
     // absent topic reads as None.
-    def topicOf(name: String): Option[QueueTopic] =
+    def topicOf(name: String): Option[FileTopic] =
       if (Files.exists(Paths.get(qdir, name)))
         Some(QueueRegistry.topic(name, qdir))
       else None

@@ -2,39 +2,26 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{ContractConsumer, FileTopic, FileTopicChild, QueueTopic}
+import graft.streaming.{ContractConsumer, FileTopic, FileTopicChild}
 
-/** The [[graft.streaming.QueueTopic]] CONFORMANCE KIT: every contract
+/** The [[graft.streaming.FileTopic]] CONFORMANCE SUITE: every contract
   * assertion the S3/S4 transport relies on — per-partition ordering,
   * key-partition affinity, poll batching, committed-offset resume,
   * at-least-once redelivery, slowest-group retention with durable-line
   * overrides, the reserved commit namespace, and the idempotent-producer
-  * fence — as ONE parameterized suite any implementation runs.
-  *
-  * ARCHITECTURE.md claims "Kafka swaps in with callers unchanged"; this
-  * kit is what makes that claim structurally testable. To conform a
-  * second implementation (e.g. a Kafka-backed `QueueTopic` adapter):
-  *
-  * {{{
-  * class KafkaTopicConformance extends QueueTopicConformance(
-  *   "kafka", n => new KafkaQueueTopic(bootstrap, freshTopicName(), n))
-  * }}}
-  *
-  * — one subclass, zero test bodies. `mkTopic(n)` must return a FRESH
-  * empty topic with `n` partitions each call (tests assume isolation).
-  * An adapter whose broker owns a behavior natively (e.g. Kafka's own
-  * retention) implements the corresponding method in terms of the
-  * broker's admin API (`truncateToCommitted` → `deleteRecords` at the
-  * group-derived target) so the kit still observes the contract through
-  * the same surface. Subclasses may add backend-only tests (see
-  * [[FileTopicConformance]]'s cross-instance durability leg;
+  * fence (the `[file]` tests) — plus the file backend's own legs: state
+  * durable ACROSS instances (a second instance over the same directory
+  * is a process restart) and the capped/legacy state-file names.
   * FileTopicSpec adds the genuinely cross-JVM legs: forked
-  * producer/consumer processes and the cross-process fence).
+  * producer/consumer processes and the cross-process fence.
   */
-abstract class QueueTopicConformance(backend: String,
-    mkTopic: Int => QueueTopic) extends AnyFunSuite {
+class FileTopicConformance extends AnyFunSuite {
 
-  test(s"[$backend] per-partition order and key affinity") {
+  /** A FRESH empty topic with `n` partitions (tests assume isolation). */
+  private def mkTopic(n: Int): FileTopic =
+    new FileTopic(Files.createTempDirectory("graft_ft"), n)
+
+  test("[file] per-partition order and key affinity") {
     val t = mkTopic(4)
     val acks = (0 until 100).map(i => t.produce(s"k${i % 7}", s"v$i"))
     // same key -> same partition, offsets strictly increasing per partition
@@ -52,7 +39,7 @@ abstract class QueueTopicConformance(backend: String,
     assert(all.size == 100 && c.lag == 0)
   }
 
-  test(s"[$backend] poll batching bounds a micro-batch like " +
+  test("[file] poll batching bounds a micro-batch like " +
       "maxOffsetsPerTrigger") {
     val t = mkTopic(2)
     (0 until 50).foreach(i => t.produce(null, s"v$i"))
@@ -64,7 +51,7 @@ abstract class QueueTopicConformance(backend: String,
     assert(b1.size + rest.map(_.size).sum == 50)
   }
 
-  test(s"[$backend] crash without commit redelivers everything " +
+  test("[file] crash without commit redelivers everything " +
       "(at-least-once)") {
     val t = mkTopic(2)
     (0 until 20).foreach(i => t.produce(s"k$i", s"v$i"))
@@ -79,7 +66,7 @@ abstract class QueueTopicConformance(backend: String,
       seen1.map(r => (r.partition, r.offset)).sorted)
   }
 
-  test(s"[$backend] committed offsets survive a crash; only the tail " +
+  test("[file] committed offsets survive a crash; only the tail " +
       "redelivers") {
     val t = mkTopic(1)
     (0 until 10).foreach(i => t.produce("k", s"v$i"))
@@ -94,7 +81,7 @@ abstract class QueueTopicConformance(backend: String,
     assert(redelivered.map(_.offset) == Seq(6L, 7L, 8L, 9L))
   }
 
-  test(s"[$backend] independent groups consume independently") {
+  test("[file] independent groups consume independently") {
     val t = mkTopic(2)
     (0 until 8).foreach(i => t.produce(s"k$i", s"v$i"))
     val a = new ContractConsumer(t, "ga")
@@ -104,7 +91,7 @@ abstract class QueueTopicConformance(backend: String,
     assert(b.poll(100).size == 8) // ga's commit is invisible to gb
   }
 
-  test(s"[$backend] retention trims to the SLOWEST group's commit; " +
+  test("[file] retention trims to the SLOWEST group's commit; " +
       "offsets never renumber; new groups earliest-reset") {
     val t = mkTopic(1)
     (0 until 10).foreach(i => t.produce("k", s"v$i"))
@@ -145,7 +132,7 @@ abstract class QueueTopicConformance(backend: String,
       .map(r => (r.offset, r.value)) == Seq((11L, "v11")))
   }
 
-  test(s"[$backend] amortized retention: minFraction defers the trim " +
+  test("[file] amortized retention: minFraction defers the trim " +
       "until the committed prefix is worth the rewrite, then trims " +
       "everything committed") {
     val t = mkTopic(1)
@@ -162,7 +149,7 @@ abstract class QueueTopicConformance(backend: String,
       (6 until 10).map(i => s"v$i"))
   }
 
-  test(s"[$backend] retention respects a reader's DURABLE line: the " +
+  test("[file] retention respects a reader's DURABLE line: the " +
       "planning-time ack may run a batch ahead, the trim may not") {
     // the connector acks at planning (S4 ack-before-process), so its
     // plain group commit overstates durable progress by the in-flight
@@ -191,7 +178,7 @@ abstract class QueueTopicConformance(backend: String,
       "a seeded reader with no completed batch must block the trim")
   }
 
-  test(s"[$backend] the '.durable' commit namespace is reserved at the " +
+  test("[file] the '.durable' commit namespace is reserved at the " +
       "CONTRACT: every user commit path rejects it; commitDurable is " +
       "the only writer") {
     val t = mkTopic(1)
@@ -217,7 +204,7 @@ abstract class QueueTopicConformance(backend: String,
     }
   }
 
-  test(s"[$backend] produceFenced: replayed/older epochs append " +
+  test("[file] produceFenced: replayed/older epochs append " +
       "nothing; data lands before the fence advances") {
     import graft.streaming.FileTopicChild.{fence, produceFenced}
     val t = mkTopic(2)
@@ -238,14 +225,6 @@ abstract class QueueTopicConformance(backend: String,
     assert(!fence(t, "q1", 4L, 0), "primitive saw a stale mark")
     assert(t.endOffsets.values.sum == 14L)
   }
-}
-
-/** The file-backed multi-process transport's conformance run, plus its
-  * backend-only leg: state must be durable ACROSS instances (a second
-  * instance over the same directory is a process restart).
-  */
-class FileTopicConformance extends QueueTopicConformance("file",
-    n => new FileTopic(Files.createTempDirectory("graft_ft"), n)) {
 
   test("file topic: a second instance over the same directory sees the " +
       "first's records, commits and fences (durable state)") {

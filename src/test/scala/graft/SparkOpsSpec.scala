@@ -912,6 +912,41 @@ class SparkOpsSpec extends AnyFunSuite with TestSession {
     }
   }
 
+  test("batch extraction over the wrapped corpus strips all boilerplate") {
+    import spark.implicits._
+    // wrap a normalized text in the planted markup grammar: link-dense
+    // nav/footer boilerplate around real h1 + paragraph content whose
+    // extraction yields back exactly the input text
+    def wrap(text: String): String = {
+      val ws = text.split(" ")
+      val h1 = ws.take(4).mkString(" ")
+      val rest = ws.drop(4).mkString(" ")
+      "<nav><a href=\"/h\">home</a> <a href=\"/a\">about</a> " +
+        "<a href=\"/c\">contact</a></nav>" +
+        s"<h1>$h1</h1><p>$rest</p>" +
+        "<footer><a href=\"/p\">privacy</a> <a href=\"/t\">terms</a> " +
+        "sitemap <a href=\"/m\">map</a></footer>"
+    }
+    val bases = Seq(
+      "the quick brown fox jumps over the lazy dog near the river bank",
+      "machine learning systems require careful data curation and cleaning",
+      "a completely different sentence about cooking pasta with tomato sauce",
+      "streaming engines process unbounded data with bounded state budgets")
+    val docs = bases.zipWithIndex.flatMap { case (b, i) =>
+      Seq(b, b, b.replaceFirst("the", "that"),
+        s"unique filler number $i with nothing shared at all $i $i")
+    }.zipWithIndex.map { case (t, id) => (id.toLong, t) }
+    val got = docs.map { case (id, t) => (id, wrap(t)) }
+      .toDF("doc_id", "html")
+      .select(col("doc_id"), Markup.extractedFromHtml(col("html")).as("x"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    docs.foreach { case (id, t) =>
+      assert(got(id) == t, s"doc $id: extraction must invert the wrap")
+      assert(!got(id).contains("home") && !got(id).contains("privacy"),
+        s"doc $id: boilerplate leaked into the extract")
+    }
+  }
+
   test("spanScrub == brute interval union of the doc_b-side run intervals") {
     val runs = Dedup.suffixRuns(spark, sf).collect()
       .map(r => (r.getLong(1), r.getLong(3), r.getLong(3) + r.getLong(4)))

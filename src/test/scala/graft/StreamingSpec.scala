@@ -124,66 +124,6 @@ class StreamingSpec extends AnyFunSuite with TestSession with RocksDbSupport {
     } finally q.stop()
   }
 
-  onBothProviders(
-      "J2 enrich stream: park, late-acct flush, TTL-expiry '' emission") { tag =>
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[ApmStreaming.EnrichIn]
-    val out = ApmStreaming.enrichStream(in.toDS(), ttlMs = 5000L)
-    val q = out.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(s"enrich_out$tag").start()
-    try {
-      // log 1: tx parks, acct arrives later in a later batch -> flush
-      // log 2: tx parks, no acct ever -> TTL expiry with ''
-      // log 3: acct first, tx after -> immediate enrich
-      in.addData(
-        ApmStreaming.EnrichIn(1L, "tx", "svcA", 1000L, 10.0, ""),
-        ApmStreaming.EnrichIn(2L, "tx", "svcB", 1000L, 20.0, ""),
-        ApmStreaming.EnrichIn(3L, "acct", "", 500L, 0.0, "777"))
-      q.processAllAvailable()
-      in.addData(
-        ApmStreaming.EnrichIn(1L, "acct", "", 2000L, 0.0, "555"),
-        ApmStreaming.EnrichIn(3L, "tx", "svcC", 2500L, 30.0, ""))
-      q.processAllAvailable()
-      // advance watermark far past log 2's deadline (1000+5000)
-      in.addData(ApmStreaming.EnrichIn(99L, "acct", "", 100000L, 0.0, "9"))
-      q.processAllAvailable()
-      in.addData(ApmStreaming.EnrichIn(98L, "acct", "", 200000L, 0.0, "9"))
-      q.processAllAvailable()
-      val rows = spark.table(s"enrich_out$tag").as[ApmStreaming.EnrichOut].collect()
-        .map(o => (o.log_id, o.service, o.acct, o.matched)).toSet
-      assert(rows.contains((1L, "svcA", "555", true)), s"flush missing: $rows")
-      assert(rows.contains((3L, "svcC", "777", true)), s"pre-acct missing: $rows")
-      assert(rows.contains((2L, "svcB", "", false)), s"expiry missing: $rows")
-    } finally q.stop()
-  }
-
-  test("pairing stream: match + salvage semantics") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val entries = MemoryStream[(Long, String, Timestamp)]
-    val exits = MemoryStream[(Long, String, Timestamp, Double)]
-    val paired = ApmStreaming.pairingStream(
-      entries.toDF.toDF("log_id", "service", "entry_ts"),
-      exits.toDF.toDF("log_id", "service", "exit_ts", "elapsed"))
-    val q = paired.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("pair_out").start()
-    try {
-      entries.addData((1L, "a", ts(10)))
-      exits.addData((1L, "a", ts(12), 2000.0), (2L, "a", ts(13), 1.0))
-      q.processAllAvailable()
-      // push watermarks forward so the unmatched exit (log 2) is emitted
-      entries.addData((99L, "zz", ts(500)))
-      exits.addData((99L, "zz", ts(500), 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("pair_out")
-        .select("log_id", "complete").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(rows.contains((1L, "Y")), s"matched pair missing: $rows")
-      assert(rows.contains((2L, "N")), s"salvage row missing: $rows")
-    } finally q.stop()
-  }
-
   test("A5 alignment: floor-bucket batch == epoch-aligned window() shifted one interval") {
     // The documented batch/streaming labeling difference is exactly one
     // relabel: the batch window ending at bucket b covers

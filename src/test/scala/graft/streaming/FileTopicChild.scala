@@ -25,26 +25,26 @@ object FileTopicChild {
   /** In-process accessor for the `private[streaming]` fence so specs in
     * package `graft` can exercise it against the child JVM's takes.
     */
-  def fence(t: QueueTopic, query: String, epoch: Long, part: Int): Boolean =
+  def fence(t: FileTopic, query: String, epoch: Long, part: Int): Boolean =
     t.beginTaskEpoch(query, epoch, part)
 
   /** Same, for the atomic fence+append the production sink uses. */
-  def produceFenced(t: QueueTopic, query: String, epoch: Long, part: Int,
+  def produceFenced(t: FileTopic, query: String, epoch: Long, part: Int,
       rows: Seq[(String, String)]): Boolean =
     t.produceFenced(query, epoch, part, rows)
 
   /** Same, for the group-commit pair (offset-hygiene assertions). */
-  def commit(t: QueueTopic, group: String, offs: Map[Int, Long]): Unit =
+  def commit(t: FileTopic, group: String, offs: Map[Int, Long]): Unit =
     t.commit(group, offs)
-  def committed(t: QueueTopic, group: String): Map[Int, Long] =
+  def committed(t: FileTopic, group: String): Map[Int, Long] =
     t.committed(group)
 
   /** Same, for the connector's durable-progress line (the only write
     * path into the reserved `.durable` namespace).
     */
-  def commitDurable(t: QueueTopic, group: String, offs: Map[Int, Long]): Unit =
+  def commitDurable(t: FileTopic, group: String, offs: Map[Int, Long]): Unit =
     t.commitDurable(group, offs)
-  def committedDurable(t: QueueTopic, group: String): Map[Int, Long] =
+  def committedDurable(t: FileTopic, group: String): Map[Int, Long] =
     t.committedDurable(group)
 
   def main(args: Array[String]): Unit = args(0) match {
