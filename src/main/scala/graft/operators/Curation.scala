@@ -713,24 +713,16 @@ object Curation {
       budget: Long = 800, buckets: Int = 16): DataFrame = {
     val h = poly_hash(concat(col("doc_id").cast("string"), lit(":"),
       col("source")))
-    mixApplyFrom(
-      Tables.load(spark, sfDir, "documents").select(
-        col("source"), col("doc_id"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"),
-        h.as("h")),
-      budget, buckets)
-  }
-
-  /** The bucketed-prefix-sum core of [[mixApply]] over an arbitrary
-    * (source, doc_id, n_tok, h) frame.
-    */
-  def mixApplyFrom(d0: DataFrame, budget: Long, buckets: Int): DataFrame = {
     val bsz = 1000000007L / buckets + 1
     // `div` (integer division), not `/`: float-divide-then-truncate is
     // only monotone in h for non-negative hashes — `div` keeps bucket
     // boundaries aligned with the oracle's ORDER BY h prefix sum even
     // if the hash expression ever admits negatives.
-    val d = d0.withColumn("bkt", expr(s"h div $bsz").cast("int"))
+    val d = Tables.load(spark, sfDir, "documents").select(
+        col("source"), col("doc_id"),
+        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"),
+        h.as("h"))
+      .withColumn("bkt", expr(s"h div $bsz").cast("int"))
     val local = Window.partitionBy("source", "bkt")
       .orderBy(col("h"), col("doc_id"))
     val withLocal = d.withColumn("lcum", sum("n_tok").over(local))

@@ -163,12 +163,11 @@ object Markup {
         .as("extract_exact"))
   }
 
-  /** The extractor over an arbitrary html column — the same pure per-row
-    * expression chain the t22 queries grade (block scan, link-density
-    * drop, verbatim `<pre>`, inline-link flattening). No state, no
-    * shuffle, no time semantics, so it is STREAMING-SAFE by construction.
+  /** Test hook: the extractor over an arbitrary html column — the same
+    * pure per-row expression chain the t22 queries grade (block scan,
+    * link-density drop, verbatim `<pre>`, inline-link flattening).
     */
-  def extractedFromHtml(html: Column): Column =
+  private[graft] def extractedFromHtml(html: Column): Column =
     extractedCol(parsedCol(html))
 
   /** Test hook: the extracted and expected strings themselves (the

@@ -36,7 +36,8 @@ import graft.sources.LogFileSource
   *    shared across processes. With a Kafka connector jar the same edge
   *    helpers would become `format("kafka")`.
   *
-  * Checkpoints give each stage S7 resume-exactly-once;
+  * Checkpoints give each stage S7 resume-exactly-once; their local files
+  * are written through [[LocalCheckpointFileManager]].
   * `Trigger.AvailableNow` drains whatever is pending and stops, which is
   * also the deterministic test harness mode. The broker contract the
   * Kafka transport would add (partitioned offsets, poll batching,
@@ -177,6 +178,15 @@ object ApmGraph {
       .start()
   }
 
+  /** Route the stage's checkpoint files through
+    * [[LocalCheckpointFileManager]], unless the session already names a
+    * checkpoint manager.
+    */
+  private def useLocalCheckpoints(spark: SparkSession): Unit =
+    if (spark.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
+      spark.conf.set(LocalCheckpointFileManager.ClassKey,
+        classOf[LocalCheckpointFileManager].getName)
+
   /** A stage's checkpoint under `workDir`, named for the edge it drains
     * to (stage 4: from): a queue edge's is suffixed `_q`, so one work dir
     * can hold both handoffs' progress.
@@ -197,6 +207,7 @@ object ApmGraph {
     */
   private def stage1(spark: SparkSession, logsGlob: String, workDir: String,
       cfg: GraphCfg, out: Edge): Unit = {
+    useLocalCheckpoints(spark)
     val lines = LogFileSource.stream(spark, logsGlob, cfg.stage1MaxFiles)
     val parsed = Parsing.extractStdExit(
         lines.filter(col("log_type") === "server_log"))
@@ -224,6 +235,7 @@ object ApmGraph {
   /** Stage 2: stats -> lag fan-out (Z5) -> keyed z-score state (Z1/Z2). */
   private def stage2(spark: SparkSession, workDir: String, cfg: GraphCfg,
       in: Edge, out: Edge, limit: Option[Int]): StreamingQuery = {
+    useLocalCheckpoints(spark)
     val stats = read(spark, in, statsSchema, "stage2", limit)
     write(ApmStreaming.zScoreStream(
         ApmStreaming.fanOutLags(stats, Seq(cfg.lag))).toDF(),
@@ -236,6 +248,7 @@ object ApmGraph {
     */
   private def stage3(spark: SparkSession, workDir: String, cfg: GraphCfg,
       in: Edge, out: Edge): StreamingQuery = {
+    useLocalCheckpoints(spark)
     import spark.implicits._
     val cand = Alerts.candidates(read(spark, in, zOutSchema, "stage3"), cfg.alert)
       .select(col("server"), col("service"), col("lag"), col("ts_ms"),
@@ -253,6 +266,7 @@ object ApmGraph {
   private def stage4(spark: SparkSession, workDir: String, cfg: GraphCfg,
       in: Edge, group: String, limit: Option[Int],
       afterBatch: Long => Unit): StreamingQuery = {
+    useLocalCheckpoints(spark)
     import spark.implicits._
     val fired = read(spark, in, voteOutSchema, group, limit)
       .as[ApmStreaming.VoteOut]
@@ -348,6 +362,7 @@ object ApmGraph {
     */
   def runStage5DbQueued(spark: SparkSession, workDir: String,
       in: Topic): Unit = {
+    useLocalCheckpoints(spark)
     val z0 = read(spark, in, zOutSchema, "s6db")
     // The in-flight ZOut encodes the reference's `undefined` as NaN
     // (a case-class Double has no null); the DB payload's convention is
