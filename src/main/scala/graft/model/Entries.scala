@@ -21,7 +21,6 @@ object Codec {
   def optS(o: Option[_]): String = o.map(_.toString).getOrElse("")
   def optL(s: String): Option[Long] = if (s.isEmpty) None else Some(s.toLong)
   def optD(s: String): Option[Double] = if (s.isEmpty) None else Some(s.toDouble)
-  def optI(s: String): Option[Int] = if (s.isEmpty) None else Some(s.toInt)
   /** tpm formatting: toFixed(2) (entries.js:65-69). */
   def nf2(d: Double): String = f"$d%.2f"
 }

@@ -23,8 +23,7 @@ import org.apache.spark.sql.functions._
   *
   * The rewrite is one range-shuffle of the data (the sampling pass of
   * `repartitionByRange` is metadata-cheap), embarrassingly parallel at
-  * any scale; for recurring joins use [[Bucketing]] instead — bucketed
-  * layout trades the range clustering for shuffle-free equi-joins.
+  * any scale.
   */
 object Layout {
 

@@ -427,47 +427,6 @@ object Similarity {
         FROM (SELECT cell, list(v ORDER BY vec_id) AS mv
               FROM ($assignedRel) GROUP BY cell)"""
 
-  /** K-means to convergence — driver-side loop over distributed steps:
-    * assign + refine until the largest per-coordinate centroid movement
-    * hits zero (an exact fixpoint: identical centroids ⇒ identical next
-    * assignment) or `maxIters`. Per iteration the driver touches only a
-    * 1-row movement scalar and the `localCheckpoint` truncates lineage so
-    * plan depth stays O(1) across iterations (each step re-reads the
-    * corpus once — the standard distributed k-means cost). The registered
-    * oracle query keeps a fixed iteration count (the oracle SQL is
-    * generated statically and cannot loop data-dependently); this is the
-    * production path, exercised by a fixpoint test.
-    *
-    * Returns (centroids, iterations run, final max movement).
-    */
-  def kmeansConverged(vecs: DataFrame, nCells: Int = IvfCells,
-      maxIters: Int = 25, eps: Double = 0.0): (DataFrame, Int, Double) = {
-    var cents = vecs.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-      .localCheckpoint()
-    var iters = 0
-    var moved = Double.MaxValue
-    while (iters < maxIters && moved > eps) {
-      val next = refineCents(assignCells(vecs, cents)).localCheckpoint()
-      // FULL OUTER movement join: refineCents drops a centroid whose cell
-      // empties, and an inner join would silently exclude it from the
-      // movement max — declaring convergence on the very iteration the
-      // centroid set shrank, which is not an assignment fixpoint. A
-      // vanished (or new) centroid counts as infinite movement instead.
-      moved = next.alias("n")
-        .join(cents.alias("o"), col("n.cent_id") === col("o.cent_id"),
-          "full_outer")
-        .agg(max(when(col("n.cent_id").isNull || col("o.cent_id").isNull,
-          lit(Double.MaxValue)).otherwise(aggregate(
-          zip_with(col("n.cv"), col("o.cv"), (a, b) => abs(a - b)),
-          lit(0.0), (acc, x) => greatest(acc, x)))))
-        .head().getDouble(0)
-      cents = next
-      iters += 1
-    }
-    (cents, iters, moved)
-  }
-
   def knnIvf(spark: SparkSession, sfDir: String,
       k: Int = 5, nQueries: Int = 20, nprobe: Int = 2,
       kmeansIters: Int = 2): DataFrame = {
@@ -487,8 +446,8 @@ object Similarity {
       .select("q_id", "n_id", "cell", "cos", "rank")
   }
 
-  /** Fixed-iteration k-means centroids from the corpus seeds (the
-    * statically-unrollable twin of [[kmeansConverged]]).
+  /** Fixed-iteration k-means centroids from the corpus seeds (a fixed
+    * count, so the oracle SQL unrolls the same loop statically).
     */
   def ivfCentroids(vecs: DataFrame, kmeansIters: Int = 2): DataFrame = {
     var cents = vecs.filter(col("vec_id") < IvfCells)
@@ -1171,9 +1130,8 @@ object Similarity {
     * against the frozen centroids, residual against the home cell, PQ
     * codes against the frozen codebook. ZERO training: this is the
     * index-refresh write path ([[indexAppendServe]]), and it is
-    * stateless per vector (broadcast centroids + codebook), which is
-    * why the same computation streams (a new vector's codes depend on
-    * nothing but the snapshot).
+    * stateless per vector (broadcast centroids + codebook): a new
+    * vector's codes depend on nothing but the snapshot.
     */
   private[graft] def encodeWithIndex(vecs: DataFrame, idx: IvfPqIndex): DataFrame = {
     val cellCv = idx.cents.select(col("cent_id").as("cell"), col("cv"))
@@ -1186,193 +1144,6 @@ object Similarity {
     pqAssign(pqSubsFrom(r.select("vec_id", "cell", "v"), carry = Seq("cell")),
         idx.codebook, carry = Seq("cell"))
       .select(col("vec_id").as("n_id"), col("sub"), col("code"), col("cell"))
-  }
-
-  /** Streaming twin of the refresh WRITE path ([[encodeWithIndex]]):
-    * the snapshot's centroids and codebook are BOUNDED constants
-    * (cells x dim + subspaces x K x subDim doubles), collected once to
-    * driver-side literals (the bloom plan-literal discipline), so each
-    * arriving vector's (cell, residual PQ codes) is a pure per-row
-    * computation — no state, no watermark, no shuffle: index ingest
-    * keeps up with arrival rate by construction. The arithmetic replays
-    * the batch path's exact shapes — VecDot's index-order accumulation,
-    * the struct-max tie-breaks (highest cosine then lowest cell;
-    * lowest distance then lowest code) — so stream == batch codes
-    * bit-for-bit (AnnIndexSpec pins it).
-    *
-    * vecs: streaming (or batch) frame with (vec_id: long,
-    * v: array<double>).
-    */
-  def encodeStreamWithIndex(vecs: DataFrame, idx: IvfPqIndex): DataFrame = {
-    import vecs.sparkSession.implicits._
-    val subDim = SrpDim / PqSubspaces
-    val cents: Array[(Long, Array[Double])] = idx.cents.collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    val cb: Array[(Int, Int, Array[Double])] = idx.codebook.collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .sortBy(t => (t._1, t._2))
-    def dotIdx(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var acc = 0.0
-      var i = 0
-      while (i < n) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
-    vecs.select(col("vec_id").cast("long").as("vec_id"), col("v"))
-      .as[(Long, Seq[Double])]
-      .flatMap { case (id, vSeq) =>
-        val v = vSeq.toArray
-        // assignCells' struct-max: highest cosine, ties -> lowest cell
-        var bestCell = -1L
-        var bestSim = Double.NegativeInfinity
-        var cellCv: Array[Double] = null
-        cents.foreach { case (cid, cv) =>
-          val sim = dotIdx(v, cv) /
-            (math.sqrt(dotIdx(v, v)) * math.sqrt(dotIdx(cv, cv)))
-          if (sim > bestSim) { bestSim = sim; bestCell = cid; cellCv = cv }
-        }
-        val r = new Array[Double](v.length)
-        var i = 0
-        while (i < v.length) { r(i) = v(i) - cellCv(i); i += 1 }
-        (0 until PqSubspaces).map { s =>
-          val sv = java.util.Arrays.copyOfRange(r, s * subDim, (s + 1) * subDim)
-          // pqAssign's struct-max: lowest d2, ties -> lowest code
-          var bestCode = -1
-          var bestD2 = Double.PositiveInfinity
-          cb.foreach { case (cs, code, ccv) =>
-            if (cs == s) {
-              var d2 = 0.0
-              var j = 0
-              while (j < subDim) {
-                val d = sv(j) - ccv(j); d2 += d * d; j += 1
-              }
-              if (d2 < bestD2) { bestD2 = d2; bestCode = code }
-            }
-          }
-          (id, s, bestCode, bestCell)
-        }
-      }.toDF("n_id", "sub", "code", "cell")
-  }
-
-  /** Streaming twin of [[ivfPqServeFrom]] — top-k ANN serving at QUERY
-    * time inside a structured-streaming job, closing the serving story
-    * the way [[encodeStreamWithIndex]] closed refresh: queries arrive
-    * as a stream, the bounded index artifacts (centroids, codebook) are
-    * collected once to plan literals, and the only data-scaled relation
-    * — the stored codes — joins stream-static. Stream == batch top-k
-    * BIT-FOR-BIT (AnnIndexSpec), because every stage replays the batch
-    * arithmetic exactly:
-    *
-    *  1. Per query (stateless map): probe-cell ranking replicates
-    *     [[probeCells]]' (csim desc, cent_id asc) order with
-    *     `Double.compare` semantics, and the FULL ADC lookup table
-    *     (PqSubspaces x PqK squared-distance entries per probed cell)
-    *     is computed with the batch fold's operand order.
-    *  2. One stream-static equi-join on `cell` against the codes
-    *     relation PIVOTED to one row per (cell, n_id): the ADC score is
-    *     then four `element_at` LUT lookups summed in sub order —
-    *     identical doubles to the batch's join + max-when aggregate,
-    *     with NO aggregation on the joined stream (the pivot is static
-    *     prep a production index would store directly).
-    *  3. Per-query top-k via `flatMapGroupsWithState` with BOUNDED
-    *     selection state (a k-entry sorted buffer, the serving heap) —
-    *     a query's candidates all live in its own micro-batch, so no
-    *     cross-batch state is kept (NoTimeout, nothing stored).
-    *
-    * Scale: per query the work is nprobe/cells of the codes relation —
-    * the IVF contract — shuffled once by q_id for the top-k fold;
-    * nothing global, nothing all-pairs, state bounded at k per live
-    * query. Reference: the APM pipeline has no ANN tier; this is the
-    * training-data-pipeline extension serving path.
-    */
-  def serveStreamWithIndex(queries: DataFrame, idx: IvfPqIndex,
-      k: Int = 5, nprobe: Int = 2): DataFrame = {
-    import queries.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val subDim = SrpDim / PqSubspaces
-    val cents: Array[(Long, Array[Double])] = idx.cents.collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    val cb: Array[(Int, Int, Array[Double])] = idx.codebook.collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .sortBy(t => (t._1, t._2))
-    val nProbeEff = nprobe
-    val luts = queries
-      .select(col("vec_id").cast("long").as("q_id"), col("v"))
-      .as[(Long, Seq[Double])]
-      .flatMap { case (id, vSeq) =>
-        val v = vSeq.toArray
-        def dotIdx(a: Array[Double], b: Array[Double]): Double = {
-          val n = math.min(a.length, b.length)
-          var acc = 0.0
-          var i = 0
-          while (i < n) { acc += a(i) * b(i); i += 1 }
-          acc
-        }
-        // probeCells' exact ranking: csim desc then cent_id asc, with
-        // Spark's total double order (Double.compare)
-        val ranked = cents.map { case (cid, cv) =>
-          (cid, dotIdx(v, cv) /
-            (math.sqrt(dotIdx(v, v)) * math.sqrt(dotIdx(cv, cv))), cv)
-        }.sortWith { (a, b) =>
-          val c = java.lang.Double.compare(b._2, a._2)
-          if (c != 0) c < 0 else a._1 < b._1
-        }.take(nProbeEff)
-        ranked.map { case (cell, _, cv) =>
-          val rv = new Array[Double](v.length)
-          var i = 0
-          while (i < v.length) { rv(i) = v(i) - cv(i); i += 1 }
-          // full LUT, flat [sub * PqK + code], each entry the batch
-          // fold: left-to-right sum of squared residual differences
-          val lut = new Array[Double](PqSubspaces * PqK)
-          cb.foreach { case (s, code, ccv) =>
-            var d2 = 0.0
-            var j = 0
-            while (j < subDim) {
-              val d = rv(s * subDim + j) - ccv(j); d2 += d * d; j += 1
-            }
-            lut(s * PqK + code) = d2
-          }
-          (id, cell, lut.toSeq)
-        }
-      }.toDF("q_id", "cell", "lut")
-    // static prep: codes as one row per (cell, n_id) with its
-    // PqSubspaces code columns — the layout an ADC scan wants
-    val codeCols = (0 until PqSubspaces).map(s =>
-      max(when(col("sub") === s, col("code"))).as(s"c$s"))
-    val pcodes = idx.codes.groupBy("cell", "n_id")
-      .agg(codeCols.head, codeCols.tail: _*)
-    val adc = (0 until PqSubspaces).map(s =>
-      element_at(col("lut"),
-        (lit(s * PqK) + col(s"c$s") + lit(1)).cast("int")))
-      .reduce(_ + _)
-    val scored = luts.join(pcodes, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"), adc.as("adc_d2"))
-    // (adc asc, n_id asc) with Spark's total order — the batch
-    // row_number comparator
-    def lt(d1: Double, n1: Long, d2: Double, n2: Long): Boolean = {
-      val c = java.lang.Double.compare(d1, d2)
-      if (c != 0) c < 0 else n1 < n2
-    }
-    scored.as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (q: Long, it: Iterator[(Long, Long, Double)],
-         _: GroupState[Int]) =>
-          // bounded top-k selection — the k-entry serving heap
-          val best = new scala.collection.mutable.ArrayBuffer[(Double, Long)](k + 1)
-          it.foreach { case (_, n, d) =>
-            if (best.length < k || lt(d, n, best.last._1, best.last._2)) {
-              var i = 0
-              while (i < best.length && lt(best(i)._1, best(i)._2, d, n)) i += 1
-              best.insert(i, (d, n))
-              if (best.length > k) best.remove(k)
-            }
-          }
-          best.iterator.zipWithIndex.map { case ((d, n), i) =>
-            (q, n, d, (i + 1).toLong)
-          }
-      }.toDF("q_id", "n_id", "adc_d2", "rank")
   }
 
   /** s18 — INCREMENTAL index append, the production refresh path that

@@ -261,58 +261,8 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
     md.digest(s.getBytes(UTF_8)).take(8)
       .map(b => f"${b & 0xff}%02x").mkString
   }
-  /** The PRE-TRIM capped encoding of `s` (blind `take()` at the cap,
-    * which could end mid-%XX-escape), when it differs from the current
-    * one — i.e. only for overlong names whose cap boundary lands inside
-    * an escape. The escape-boundary trim changed those capped names
-    * without a [[FileTopic.Format]] bump, so commit/fence files a
-    * pre-trim build wrote would otherwise silently read as absent after
-    * an upgrade (committed group offsets lost, fences reset). Lookups
-    * fall back to this name when the current one is missing
-    * ([[lookupName]]); writes always target the current name, which
-    * then shadows the legacy file for every later lookup.
-    */
-  private def encNameLegacy(s: String): Option[String] =
-    if (s.endsWith(".durable"))
-      encNameLegacy(s.dropRight(".durable".length)).map(_ + ".durable")
-    else {
-      val cur = encName(s)
-      val rawLen = s.getBytes(UTF_8).map { b =>
-        val c = b.toChar
-        if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-            (c >= '0' && c <= '9') || c == '-' || c == '.') 1 else 3
-      }.sum
-      if (rawLen <= FileTopic.MaxEncodedName) None
-      else {
-        // rebuild the blind take without re-walking: cur is
-        // "<trimmed>~<hash>"; the blind take is the same raw prefix at
-        // full cap length, so re-derive it from the escape loop only
-        // when the trim actually shortened the prefix
-        val sb = new StringBuilder
-        s.getBytes(UTF_8).iterator.takeWhile(_ =>
-            sb.length < FileTopic.MaxEncodedName).foreach { b =>
-          val c = b.toChar
-          if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-              (c >= '0' && c <= '9') || c == '-' || c == '.') sb.append(c)
-          else sb.append(f"%%${b & 0xff}%02X")
-        }
-        val legacy = sb.toString.take(FileTopic.MaxEncodedName) +
-          "~" + capHash(s)
-        if (legacy == cur) None else Some(legacy)
-      }
-    }
   private def fileName(prefix: String, s: String) =
     dir.resolve(prefix + encName(s))
-  /** Resolve `prefix + enc(s)` for a READ, falling back to the pre-trim
-    * capped name when the current name is absent but the legacy file
-    * exists (state written by an older build; see [[encNameLegacy]]).
-    */
-  private def lookupName(prefix: String, s: String): Path = {
-    val p = fileName(prefix, s)
-    if (Files.exists(p)) p
-    else encNameLegacy(s).map(l => dir.resolve(prefix + l))
-      .filter(Files.exists(_)).getOrElse(p)
-  }
 
   /** Replace-style writes (fence, rr, meta, commits) go through a
     * dot-prefixed temp file + ATOMIC_MOVE: a plain `Files.write`
@@ -632,7 +582,7 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
 
   /** Durable committed offsets per consumer group. */
   private[streaming] def committed(group: String): Map[Int, Long] =
-    parseCommits(lookupName("commits_", group))
+    parseCommits(fileName("commits_", group))
 
   /** Commit a USER-chosen group's offsets. The reserved `.durable`
     * suffix is rejected HERE, so no path into the commit namespace (a
@@ -774,11 +724,6 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
       // name lived in the real commit-file namespace, so a group
       // literally named tmp_<N> could have its offsets clobbered
       writeAtomic(fileName("commits_", group), body.getBytes(UTF_8))
-      // the merge above already folded any legacy-named file in (via
-      // committed's lookup fallback); retire it so a stale pre-trim
-      // commit can't keep bounding retention below the live line forever
-      encNameLegacy(group).foreach(l =>
-        Files.deleteIfExists(dir.resolve("commits_" + l)))
     }
 
   // queryId is encoded, the `_<partition>` separator stays literal —
@@ -786,47 +731,14 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
   // query id that happens to contain one
   private def fencePath(queryId: String, partitionId: Int): Path =
     dir.resolve("fence_" + encName(queryId) + "_" + partitionId)
-  // fence READS go through the legacy fallback too (see lookupName): a
-  // pre-trim build's fence for a long multi-byte query id must keep
-  // fencing replayed epochs after the upgrade, or a replay would
-  // double-append
-  private def fenceLookup(queryId: String, partitionId: Int): Path = {
-    val p = fencePath(queryId, partitionId)
-    if (Files.exists(p)) p
-    else encNameLegacy(queryId)
-      .map(l => dir.resolve("fence_" + l + "_" + partitionId))
-      .filter(Files.exists(_)).getOrElse(p)
-  }
-
-  private def retireLegacyFence(queryId: String, partitionId: Int): Unit =
-    encNameLegacy(queryId).foreach(l =>
-      Files.deleteIfExists(dir.resolve("fence_" + l + "_" + partitionId)))
-
-  /** Idempotent-producer fence primitive: returns true iff this
-    * (query, epoch, write-partition) is ABOVE the partition's
-    * high-water mark, and advances the mark. Epochs of a streaming
-    * query are strictly increasing per partition (micro-batch N
-    * completes before N+1 starts), so a replayed epoch is exactly
-    * "epochId <= high-water": state is one long per (query,
-    * partition), bounded for the life of the query, instead of one
-    * fence entry per epoch forever. The production sink does NOT call
-    * this followed by [[produceAll]] — that ordering has a crash hole
-    * — it calls [[produceFenced]], which is the two fused atomically;
-    * this primitive remains for fence-semantics tests.
-    */
-  private[streaming] def beginTaskEpoch(queryId: String, epochId: Long,
-      partitionId: Int): Boolean = withLock {
-    val hw = readLongFile(fenceLookup(queryId, partitionId), Long.MinValue)
-    if (epochId > hw) {
-      writeLongFile(fencePath(queryId, partitionId), epochId)
-      retireLegacyFence(queryId, partitionId)
-      true
-    } else false
-  }
 
   /** The sink's executor-side produce, fenced and ATOMIC: iff `epochId`
     * is above the (query, write-partition) high-water mark, append the
-    * whole buffer and only then advance the mark — fence check, data
+    * whole buffer and only then advance the mark. Epochs of a streaming
+    * query are strictly increasing per partition (micro-batch N
+    * completes before N+1 starts), so a replayed epoch is exactly
+    * "epochId <= high-water": state is one long per (query,
+    * partition), bounded for the life of the query. Fence check, data
     * append, fence advance in ONE lock section (the append is inlined:
     * [[withLock]] does not re-enter across a second `FileChannel.lock`
     * from the same thread). The ordering is the crash contract:
@@ -839,11 +751,10 @@ final class FileTopic(val dir: Path, requestedPartitions: Int = 4,
     */
   private[streaming] def produceFenced(queryId: String, epochId: Long,
       partitionId: Int, rows: Seq[(String, String)]): Boolean = withLock {
-    val hw = readLongFile(fenceLookup(queryId, partitionId), Long.MinValue)
+    val hw = readLongFile(fencePath(queryId, partitionId), Long.MinValue)
     if (epochId > hw) {
       appendAll(rows)
       writeLongFile(fencePath(queryId, partitionId), epochId)
-      retireLegacyFence(queryId, partitionId)
       true
     } else false
   }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** S6 — the REAL buffered batch DB sink (stream_insert_db.js:277-353),
   * exercised end-to-end against an embedded Apache Derby database (the
@@ -88,15 +88,6 @@ object JdbcSink {
       columns.map { case (n, t, _) => s"$n $t" }
         .mkString(s"CREATE TABLE IF NOT EXISTS $table (", ", ", ")")
 
-    /** The cast placeholders a STATS-shaped upsert needs under Postgres
-      * (currently just `stats_json -> ?::jsonb`), for
-      * [[JdbcSink.upsertBatch]]'s per-call `placeholders` — scoped to
-      * callers that actually write this shape instead of inferred from
-      * bare column names.
-      */
-    val placeholderMap: Map[String, String] =
-      columns.collect { case (n, _, p) if p != "?" => n -> p }.toMap
-
     def insertSql(table: String): String =
       s"INSERT INTO $table (${columns.map(_._1).mkString(", ")}) " +
         s"VALUES (${columns.map(_._3).mkString(", ")})"
@@ -116,9 +107,7 @@ object JdbcSink {
       * connection closes. Exactly-once belongs to the layer above: the
       * streaming requeue wrapper replays whole micro-batches, and the
       * reference accepts the same duplicate window
-      * (stream_insert_db.js:295-327 has no dedup key either). Sinks
-      * fronting a non-replayable consumer use [[JdbcSink.upsertBatch]]
-      * instead — keyed idempotence closes the window.
+      * (stream_insert_db.js:295-327 has no dedup key either).
       */
     def writeBatch(df: DataFrame, url: String, table: String): Unit = {
       require(df.columns.toSeq == columns.map(_._1),
@@ -167,142 +156,6 @@ object JdbcSink {
     }
   }
 
-  /** Keyed IDEMPOTENT upsert — the exactly-once variant of
-    * [[writeBatch]] for sinks fronting non-replayable consumers. Each
-    * partition runs delete-then-insert on its key set inside ONE
-    * transaction (the portable upsert: no MERGE/ON CONFLICT dialect
-    * divergence between Derby, the live test engine, and Postgres), so
-    * any replay — a task retried after its commit, or a whole
-    * micro-batch replayed by the requeue wrapper after a partial
-    * failure — converges to exactly one row per key instead of
-    * appending duplicates.
-    *
-    * Contract: the target table exists (the append path's auto-create
-    * belongs to Spark's writer; an upsert's key columns are schema
-    * design, not inference), and keys are unique WITHIN a batch (true
-    * for every keyed frame here, e.g. stats rows on (ts_ms, server,
-    * service, lag)). Because the deletes all run before the inserts, an
-    * in-batch duplicate key would silently survive as two inserted rows
-    * — the exact corruption this writer exists to prevent — so the
-    * contract is ENFORCED batch-wide: rows are hash-partitioned on the
-    * key columns (which also co-locates each key's delete+insert in one
-    * transaction — two partitions never race on the same key), and each
-    * partition tracks its key tuples and throws on a repeat before
-    * anything commits.
-    *
-    * Key columns must be NON-NULL: the keyed delete uses `k = ?`, and
-    * SQL three-valued logic makes `k = NULL` match nothing — a null key
-    * would silently reopen the duplicate window on replay, so the
-    * writer rejects it loudly instead. The target should carry an
-    * index (normally the primary key) on the key columns: the keyed
-    * delete is then a point lock, whereas on an unindexed heap each
-    * partition's delete full-scans and concurrent partition
-    * transactions can deadlock on row locks (observed under Derby).
-    *
-    * `placeholders` maps column name -> insert placeholder for columns
-    * that need a typed cast against the target dialect (e.g. the stats
-    * table's `?::jsonb` payload under Postgres — see
-    * [[PgStats.placeholderMap]]). Scoped PER CALL rather than inferred
-    * from the URL + bare column names, so a different table that merely
-    * shares a column name never inherits the cast.
-    *
-    * `onPartitionCommit` is a post-commit hook (partitionId => Unit)
-    * used by the fault-injection spec to stage the committed-then-failed
-    * replay window; production callers leave the default no-op.
-    */
-  /** The keyed-delete statement [[upsertBatch]] prepares — factored so
-    * the dialect-sensitive statement TEXT is pinnable in a spec even
-    * where the dialect's engine isn't installable (the Postgres
-    * `?::jsonb` branch has no live engine in this environment).
-    */
-  private[streaming] def upsertDeleteSql(table: String,
-      keyCols: Seq[String]): String =
-    s"DELETE FROM $table WHERE " +
-      keyCols.map(k => s"$k = ?").mkString(" AND ")
-
-  /** The insert statement [[upsertBatch]] prepares, with per-column
-    * placeholder overrides applied (e.g. `?::jsonb`).
-    */
-  private[streaming] def upsertInsertSql(table: String, cols: Seq[String],
-      placeholders: Map[String, String]): String =
-    s"INSERT INTO $table (${cols.mkString(", ")}) " +
-      s"VALUES (${cols.map(c => placeholders.getOrElse(c, "?")).mkString(", ")})"
-
-  def upsertBatch(df: DataFrame, url: String, table: String,
-      keyCols: Seq[String], numPartitions: Int = 8,
-      placeholders: Map[String, String] = Map.empty,
-      onPartitionCommit: Int => Unit = _ => ()): Unit = {
-    val cols = df.columns.toSeq
-    require(keyCols.nonEmpty && keyCols.forall(cols.contains),
-      s"key columns $keyCols must be a subset of ${cols}")
-    // Key-hash repartition (not coalesce): bounds the connection fan-in
-    // AND makes the duplicate-key guard batch-complete — a key split
-    // across partitions would bypass a partition-local seen-set, and
-    // under READ COMMITTED two concurrent delete+insert transactions on
-    // the same key can BOTH insert (neither delete sees the other's
-    // uncommitted row), so co-locating each key is a correctness move,
-    // not a tuning one.
-    val capped = df.repartition(numPartitions,
-      keyCols.map(org.apache.spark.sql.functions.col): _*)
-    val delSql = upsertDeleteSql(table, keyCols)
-    val insSql = upsertInsertSql(table, cols, placeholders)
-    val keyIdx = keyCols.map(cols.indexOf)
-    val n = cols.size
-    capped.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val c = java.sql.DriverManager.getConnection(url)
-        try {
-          c.setAutoCommit(false)
-          val del = c.prepareStatement(delSql)
-          val ins = c.prepareStatement(insSql)
-          // In-batch key uniqueness is enforced, not just documented:
-          // all deletes run before all inserts, so a repeated key would
-          // silently insert twice. The key-hash repartition above makes
-          // this per-partition set batch-complete (every occurrence of
-          // a key lands in one partition).
-          val seen = new java.util.HashSet[Seq[Any]]()
-          try {
-            rows.foreach { r =>
-              var i = 0
-              while (i < keyIdx.size) {
-                if (r.isNullAt(keyIdx(i)))
-                  throw new IllegalArgumentException(
-                    s"upsert key column ${cols(keyIdx(i))} is null — " +
-                      "a null key cannot be matched by the keyed delete " +
-                      "and would duplicate on replay")
-                del.setObject(i + 1, r.get(keyIdx(i))); i += 1
-              }
-              val keyTuple = keyIdx.map(r.get)
-              if (!seen.add(keyTuple))
-                throw new IllegalArgumentException(
-                  s"duplicate upsert key ${keyCols.zip(keyTuple)} within " +
-                    "one batch — deletes run before inserts, so the " +
-                    "repeat would silently persist as two rows")
-              del.addBatch()
-              i = 0
-              while (i < n) {
-                if (r.isNullAt(i)) ins.setObject(i + 1, null)
-                else ins.setObject(i + 1, r.get(i))
-                i += 1
-              }
-              ins.addBatch()
-            }
-            del.executeBatch()
-            ins.executeBatch()
-            c.commit()
-          } catch {
-            case e: Throwable =>
-              try c.rollback() catch {
-                case scala.util.control.NonFatal(r) => e.addSuppressed(r)
-              }
-              throw e
-          } finally { del.close(); ins.close() }
-        } finally c.close()
-        onPartitionCommit(org.apache.spark.TaskContext.getPartitionId())
-      }
-    }
-  }
-
   /** The `stats`-table row shape (stream_insert_db.js:149-160): flat
     * identity/measure columns + the 15 z-score fields as ONE json
     * string column, exactly the reference's jsonb payload.
@@ -325,27 +178,5 @@ object JdbcSink {
       : StreamingQuery =
     ApmStreaming.sinkWithRequeue(df, checkpoint, parkDir,
       (batch, _) => writeBatch(batch, url, table),
-      availableNow = availableNow, trigger = trigger)
-
-  /** [[sinkToJdbc]] with the idempotent [[upsertBatch]] writer: the
-    * requeue wrapper's whole-batch replays (and Spark's own task
-    * retries) converge instead of duplicating — exactly-once by keyed
-    * idempotence.
-    *
-    * Migration note for pre-round-13 callers: in-batch duplicate keys
-    * now THROW instead of silently inserting twice (the contract
-    * [[upsertBatch]] documents), and dialect-typed insert casts are no
-    * longer inferred from the URL — a Postgres stats-shaped sink must
-    * pass `placeholders = PgStats.placeholderMap` explicitly to keep
-    * its `?::jsonb` payload cast.
-    */
-  def sinkToJdbcUpsert(df: DataFrame, url: String, table: String,
-      keyCols: Seq[String], checkpoint: String, parkDir: String,
-      availableNow: Boolean = true, trigger: String = "5 seconds",
-      placeholders: Map[String, String] = Map.empty)
-      : StreamingQuery =
-    ApmStreaming.sinkWithRequeue(df, checkpoint, parkDir,
-      (batch, _) => upsertBatch(batch, url, table, keyCols,
-        placeholders = placeholders),
       availableNow = availableNow, trigger = trigger)
 }

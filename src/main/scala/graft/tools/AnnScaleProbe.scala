@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import graft.Bench.{jnum, jstr}
 import graft.operators.Similarity
 
 /** Measures whether the LSH/ANN candidate volume stays LINEAR in corpus
@@ -80,10 +81,10 @@ object AnnScaleProbe {
       val sec = (System.nanoTime() - t0) / 1e9
       val nRows = baseRows * f
       val perPair = candidates.toDouble / (nRows * (nRows - 1) / 2)
-      f"""{"leg": "$name", "factor": $f, "rows": $nRows, """ +
-        f""""candidates": $candidates, "cand_per_pair": $perPair%.5f, """ +
-        f""""confirmed": $conf, "cross_replica": $cross, """ +
-        f""""exact_cross_replica": $exactCross, "sec": $sec%.2f}"""
+      s"""{"leg": ${jstr(name)}, "factor": $f, "rows": $nRows, """ +
+        s""""candidates": $candidates, "cand_per_pair": ${jnum(perPair, 5)}, """ +
+        s""""confirmed": $conf, "cross_replica": $cross, """ +
+        s""""exact_cross_replica": $exactCross, "sec": ${jnum(sec, 2)}}"""
     }
 
     val lines = factors.map(f =>

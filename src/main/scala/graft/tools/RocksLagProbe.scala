@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
+import graft.Bench.{jnum, jstr}
 import graft.streaming.{ApmStateV2, ApmStreaming}
 
 /** Dev harness: measured evidence for the day-lag z-score state claim.
@@ -73,15 +74,15 @@ object RocksLagProbe {
               k.toLowerCase.contains("memory") ||
               k.toLowerCase.contains("bytes")) &&
               v.asInstanceOf[Number].longValue > 0L =>
-              s""""$k":${v.asInstanceOf[Number].longValue}"""
+              s"""${jstr(k)}:${v.asInstanceOf[Number].longValue}"""
           }.toSeq.sorted.mkString("{", ",", "}")
         }.getOrElse("{}")
         val stateRows = so.map(_.numRowsTotal).getOrElse(-1L)
         val commitMs = so.map(_.allUpdatesTimeMs).getOrElse(-1L)
-        f"""{"tag":"$tag","lag":$lagN,"keys":$nKeys,"rows":$nRows,""" +
-          f""""sec":$sec%.1f,"rows_per_sec":${nRows / sec}%.0f,""" +
-          f""""state_rows":$stateRows,"store_size_metrics":$sizes,""" +
-          f""""last_batch_update_ms":$commitMs}"""
+        s"""{"tag":${jstr(tag)},"lag":$lagN,"keys":$nKeys,"rows":$nRows,""" +
+          s""""sec":${jnum(sec, 1)},"rows_per_sec":${jnum(nRows / sec, 0)},""" +
+          s""""state_rows":$stateRows,"store_size_metrics":$sizes,""" +
+          s""""last_batch_update_ms":$commitMs}"""
       } finally q.stop()
     }
 

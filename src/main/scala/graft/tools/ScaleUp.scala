@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Bench
 
 /** Scaling-probe data generator: replicates an sf directory `factor`x with
   * key remapping, producing a larger corpus with the SAME workload shape
@@ -63,6 +64,10 @@ object ScaleUp {
       .withColumn("vec_id", col("vec_id") + col("rep").cast("long") * KeyOffset)
       .select("vec_id", "embedding", "label")
   }
+
+  /** The one JSON line printed when the scaled copy is written. */
+  def doneLine(out: String, factor: Int): String =
+    s"""{"scaled": ${Bench.jstr(out)}, "factor": $factor}"""
 
   def main(args: Array[String]): Unit = {
     val (src, out, factor) = (args(0), args(1), args(2).toInt)
@@ -130,7 +135,7 @@ object ScaleUp {
     // rotation + >64-replica sign flip, shared with AnnScaleProbe
     write("embeddings")(scaleEmbeddings(spark, t("embeddings"), factor))
 
-    println(s"""{"scaled": "$out", "factor": $factor}""")
+    println(doneLine(out, factor))
     spark.stop()
   }
 

@@ -69,73 +69,6 @@ class AnnIndexSpec extends AnyFunSuite with TestSession {
     }
   }
 
-  test("streaming encode == batch encode, bit-for-bit, across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val cut = 374L
-    val all = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-    val idx = Similarity.ivfPqTrain(all.filter(col("vec_id") < cut))
-    val newVecs = all.filter(col("vec_id") >= cut)
-    val want = Similarity.encodeWithIndex(newVecs, idx).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3)))
-      .toSet
-    val rows = newVecs.collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
-    val in = MemoryStream[(Long, Seq[Double])]
-    val q = Similarity.encodeStreamWithIndex(
-        in.toDF.toDF("vec_id", "v"), idx)
-      .writeStream.format("memory").queryName("enc_stream")
-      .outputMode("append").start()
-    val got = try {
-      val (b1, b2) = rows.splitAt(rows.length / 2)
-      in.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
-      spark.table("enc_stream").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3)))
-        .toSet
-    } finally q.stop()
-    assert(got == want,
-      s"stream/batch code divergence: ${(got -- want).take(3)} vs ${(want -- got).take(3)}")
-    assert(want.nonEmpty)
-  }
-
-  test("streaming top-k serve == batch serve, bit-for-bit, across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val all = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-    val idx = Similarity.ivfPqTrain(all)
-    val queries = all.filter(col("vec_id") < 20)
-    val want = Similarity.ivfPqServeFrom(queries, idx, 5, 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      .toSet
-    val rows = queries.collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
-    val in = MemoryStream[(Long, Seq[Double])]
-    val q = Similarity.serveStreamWithIndex(
-        in.toDF.toDF("vec_id", "v"), idx, 5, 2)
-      .writeStream.format("memory").queryName("serve_stream")
-      .outputMode("append").start()
-    val got = try {
-      val (b1, b2) = rows.splitAt(rows.length / 2)
-      in.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
-      spark.table("serve_stream").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-        .toSet
-    } finally q.stop()
-    assert(got == want,
-      s"stream/batch serve divergence: ${(got -- want).take(3)} vs ${(want -- got).take(3)}")
-    assert(want.nonEmpty)
-  }
-
   test("delete excludes tombstoned ids, promotes survivors, never rescores") {
     import org.apache.spark.sql.functions._
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()

@@ -28,6 +28,18 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(Bench.jstr("\u0001") == "\"\\u0001\"")
   }
 
+  test("ScaleUp's line parses under a comma-decimal locale with a quote and a backslash in the path") {
+    val saved = Locale.getDefault
+    Locale.setDefault(Locale.GERMANY)
+    try {
+      val out = "/data/sf\"x\\y"
+      val line = graft.tools.ScaleUp.doneLine(out, 4)
+      val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+      assert(json.get("scaled").asText == out)
+      assert(json.get("factor").asInt == 4)
+    } finally Locale.setDefault(saved)
+  }
+
   test("a SPARK_GRAFT_ONLY run writes only /tmp, never the committed full-suite files") {
     assert(Bench.outputPaths(filtered = true, cpus = 8) == Seq("/tmp/bench.json"))
     assert(Bench.outputPaths(filtered = false, cpus = 8) ==

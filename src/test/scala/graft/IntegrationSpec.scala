@@ -122,24 +122,6 @@ class IntegrationSpec extends AnyFunSuite with TestSession {
     assert(rows.exists(_.getAs[Int]("bad") == 1))
   }
 
-  test("bucketed pairing join runs shuffle-free and matches the plain join") {
-    import graft.operators.{Bucketing, Correlation}
-    Bucketing.writePairingTables(spark, "/root/testdata/sf0.001")
-    val joined = Bucketing.pairingBucketed(spark)
-    // force SMJ (no broadcast) to make the shuffle question observable
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join should not shuffle:\n$plan")
-      val got = joined.collect()
-        .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)), r.getString(5))).toSet
-      val exp = Correlation.pairing(spark, "/root/testdata/sf0.001").collect()
-        .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)), r.getString(5))).toSet
-      assert(got == exp)
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
   test("streaming sink: micro-batches land in parquet with checkpoint") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -112,40 +112,6 @@ class JdbcSinkSpec extends AnyFunSuite with TestSession {
     cand.unpersist(); shaped.unpersist(); ()
   }
 
-  test("postgres dialect: upsertBatch prepares the keyed delete and the " +
-      "?::jsonb-cast insert at the wire (recording driver double; no " +
-      "live Postgres exists in this container — documented skip of the " +
-      "live leg)") {
-    // Environmental receipt: no Postgres server OR driver jar is
-    // installable here (offline resolver, Derby only), so the live leg
-    // of the dialect is out of reach; what IS pinned is the exact JDBC
-    // wire surface the pgjdbc driver would receive from upsertBatch —
-    // statement texts, batched parameter rows, transaction commit.
-    import scala.jdk.CollectionConverters._
-    PgDriverDouble.ensureRegistered()
-    PgDriverDouble.reset()
-    val url = "jdbc:postgresql://dbhost:5432/apm"
-    val cand = SparkEntry.entry(spark).limit(20).cache()
-    val shaped = JdbcSink.statsTableRows(cand).cache()
-    JdbcSink.upsertBatch(shaped, url, "stats",
-      keyCols = Seq("ts_ms", "server", "service", "lag"),
-      placeholders = JdbcSink.PgStats.placeholderMap)
-    val sqls = PgDriverDouble.insertSqls.asScala.toSet
-    assert(sqls == Set(
-      "DELETE FROM stats WHERE ts_ms = ? AND server = ? AND " +
-        "service = ? AND lag = ?",
-      "INSERT INTO stats (ts_ms, server, service, lag, tpm, stats_json) " +
-        "VALUES (?, ?, ?, ?, ?, ?::jsonb)"),
-      s"wire statements diverge: $sqls")
-    // every row produced one 4-param delete and one 6-param insert
-    val nRows = shaped.count()
-    val recorded = PgDriverDouble.rows.asScala.map(_.toList)
-    assert(recorded.count(_.size == 4) == nRows, "keyed deletes batched")
-    assert(recorded.count(_.size == 6) == nRows, "inserts batched")
-    assert(PgDriverDouble.commits.get() >= 1, "upsert committed")
-    cand.unpersist(); shaped.unpersist(); ()
-  }
-
   test("flush policy: count-bound batches and time-bound trickle flushes") {
     // The reference flushes its insert buffer at 1000 rows OR 5 s idle
     // (config/apm_config.json:230-231). Spark-side the micro-batch IS
@@ -223,102 +189,6 @@ class JdbcSinkSpec extends AnyFunSuite with TestSession {
       assert(w.parkedBatches().isEmpty, "park dir must drain")
     } finally q.stop()
   }
-
-  test("keyed upsert converges across a committed-then-failed replay " +
-      "(exactly-once); append duplicates under the same replay") {
-    val url = derbyUrl()
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      try {
-        st.executeUpdate(
-          "CREATE TABLE ups (k BIGINT NOT NULL PRIMARY KEY, " +
-            "server VARCHAR(16), v DOUBLE)")
-        ()
-      } finally st.close()
-    } finally conn.close()
-    val df = spark.range(0, 100)
-      .select(col("id").as("k"),
-        concat(lit("s"), (col("id") % 4).cast("string")).as("server"),
-        (col("id") * lit(0.5)).as("v"))
-      .repartition(4).cache()
-    df.count()
-    // Stage the at-least-once window the requeue wrapper actually
-    // produces: one partition COMMITS, then its task fails -> the batch
-    // as a whole errors with part of it already durable, and the wrapper
-    // replays the WHOLE batch.
-    JdbcUpsertFailOnce.reset()
-    intercept[Exception] {
-      JdbcSink.upsertBatch(df, url, "ups", Seq("k"),
-        onPartitionCommit = JdbcUpsertFailOnce.hook)
-    }
-    val partial = readTable(url, "ups").count()
-    assert(partial > 0, "the failed run must leave committed rows behind")
-    // full replay via the same upsert: converges to exactly one row/key
-    JdbcSink.upsertBatch(df, url, "ups", Seq("k"))
-    val back = readTable(url, "ups")
-    assert(back.count() == 100)
-    val got = back.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    val want = df.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    assert(got == want, "cell-exact convergence")
-    // a third replay is a no-op too (idempotence, not luck)
-    JdbcSink.upsertBatch(df, url, "ups", Seq("k"))
-    assert(readTable(url, "ups").count() == 100)
-    // contrast: the append writer duplicates under the same whole-batch
-    // replay — the at-least-once window the upsert closes
-    JdbcSink.writeBatch(df, url, "app")
-    JdbcSink.writeBatch(df, url, "app")
-    assert(readTable(url, "app").count() == 200)
-    df.unpersist(); ()
-  }
-
-  test("upsert rejects an in-batch duplicate key loudly and rolls back") {
-    val url = derbyUrl()
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      try {
-        // PRIMARY KEY matters beyond semantics: an upsert target needs
-        // an index on the key columns so the keyed DELETE takes point
-        // locks — on an unindexed heap Derby's delete full-scans and
-        // concurrent partition transactions deadlock on row locks
-        // (observed: a 3-cycle across partitions in the follow-up
-        // upsert below before this index existed)
-        st.executeUpdate(
-          "CREATE TABLE dupk (k BIGINT NOT NULL PRIMARY KEY, v DOUBLE)")
-        ()
-      } finally st.close()
-    } finally conn.close()
-    // ids 0..9 under id % 9 collide at k=0 (ids 0 and 9) — deletes run
-    // before inserts, so without the guard the repeat would silently
-    // persist as two rows. Spread across many input partitions on
-    // purpose: the writer's key-hash repartition must bring the two
-    // k=0 rows back together for the seen-set to be batch-complete.
-    val df = spark.range(0, 10)
-      .select((col("id") % 9).as("k"), (col("id") * lit(0.5)).as("v"))
-      .repartition(8)
-    val e = intercept[org.apache.spark.SparkException] {
-      JdbcSink.upsertBatch(df, url, "dupk", Seq("k"))
-    }
-    def causes(t: Throwable): Iterator[Throwable] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-    assert(causes(e).exists(c =>
-      c.isInstanceOf[IllegalArgumentException] &&
-        c.getMessage.contains("duplicate upsert key")), s"got: $e")
-    // the duplicate's partition rolled back before its commit: no k=0
-    // row is durable (other partitions may have committed theirs —
-    // partition transactions are independent by contract)
-    assert(readTable(url, "dupk").filter(col("k") === 0).count() == 0)
-    // unique keys on the same table still go through
-    JdbcSink.upsertBatch(
-      spark.range(0, 9).select(col("id").as("k"),
-        (col("id") * lit(0.5)).as("v")),
-      url, "dupk", Seq("k"))
-    assert(readTable(url, "dupk").count() == 9)
-  }
-
 }
 
 /** A recording JDBC driver double registered under `jdbc:postgresql:`
@@ -405,16 +275,4 @@ object PgDriverDouble {
   }
 
   def ensureRegistered(): Unit = registered
-}
-
-/** Post-commit fault injection for the upsert spec: a static singleton so
-  * the executor-side closure shares the flag in local mode (a captured
-  * AtomicBoolean would be serialized per task and mutate a copy).
-  */
-object JdbcUpsertFailOnce {
-  private val done = new AtomicBoolean(false)
-  def reset(): Unit = done.set(false)
-  def hook(pid: Int): Unit =
-    if (pid == 0 && !done.getAndSet(true))
-      throw new RuntimeException("injected post-commit failure")
 }

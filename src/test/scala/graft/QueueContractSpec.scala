@@ -11,7 +11,7 @@ import graft.streaming.{ContractConsumer, FileTopic, FileTopicChild}
   * overrides, the reserved commit namespace, and the idempotent-producer
   * fence (the `[file]` tests) — plus the file backend's own legs: state
   * durable ACROSS instances (a second instance over the same directory
-  * is a process restart) and the capped/legacy state-file names.
+  * is a process restart) and the capped state-file names.
   * FileTopicSpec adds the genuinely cross-JVM legs: forked
   * producer/consumer processes and the cross-process fence.
   */
@@ -300,58 +300,5 @@ class FileTopicConformance extends AnyFunSuite {
         pre(pre.length - 2) == '%'),
         s"capped prefix ends mid-escape: ...${pre.takeRight(6)}~")
     }
-  }
-
-  test("file topic: commit/fence state written under the PRE-TRIM capped " +
-      "name (an older build's blind take() ending mid-escape) still " +
-      "resolves after the upgrade, and is retired on the next write") {
-    // reproduce the round-9 build's capped encoding: escape loop, blind
-    // take at the cap, '~' + 8-byte sha-256 prefix — for a key whose cap
-    // boundary lands INSIDE a %XX escape, so the trimmed name differs
-    val legacyEnc: String => String = { s =>
-      val sb = new StringBuilder
-      s.getBytes("UTF-8").foreach { b =>
-        val c = b.toChar
-        if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-            (c >= '0' && c <= '9') || c == '-' || c == '.') sb.append(c)
-        else sb.append(f"%%${b & 0xff}%02X")
-      }
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      val h = md.digest(s.getBytes("UTF-8")).take(8)
-        .map(b => f"${b & 0xff}%02x").mkString
-      sb.toString.take(180) + "~" + h
-    }
-    val dir = Files.createTempDirectory("graft_ft_legacy")
-    val t = new FileTopic(dir, 1)
-    (0 until 6).foreach(i => t.produce("k", s"v$i"))
-    val group = "a" + "é" * 150 // cap cuts mid-%XX: legacy != current name
-    val legacy = legacyEnc(group)
-    assert(legacy.substring(0, legacy.indexOf('~')).endsWith("%C3") ||
-      legacy.substring(0, legacy.indexOf('~')).takeRight(2).startsWith("%"),
-      s"fixture key no longer lands mid-escape: ...${legacy.take(182).takeRight(6)}")
-    // "upgrade": a pre-trim build committed offsets + took a fence under
-    // the legacy names
-    Files.writeString(dir.resolve("commits_" + legacy), "0:4\n")
-    Files.write(dir.resolve("fence_" + legacy + "_0"),
-      java.nio.ByteBuffer.allocate(8).putLong(7L).array())
-    // the committed line resolves through the fallback
-    assert(FileTopicChild.committed(t, group) == Map(0 -> 4L),
-      "pre-trim committed offsets read as absent after upgrade")
-    // a replayed epoch at/below the legacy high-water stays fenced
-    assert(!FileTopicChild.fence(t, group, 7L, 0),
-      "pre-trim fence ignored: replayed epoch would double-append")
-    assert(FileTopicChild.fence(t, group, 8L, 0))
-    // the advance wrote the CURRENT name and retired the legacy file
-    assert(!Files.exists(dir.resolve("fence_" + legacy + "_0")),
-      "legacy fence not retired on advance")
-    assert(!FileTopicChild.fence(t, group, 8L, 0))
-    // a fresh commit merges the legacy offsets, writes the current name,
-    // and deletes the legacy file so it can't bound retention forever
-    FileTopicChild.commit(t, group, Map(0 -> 6L))
-    assert(!Files.exists(dir.resolve("commits_" + legacy)),
-      "legacy commits file not retired on commit")
-    assert(FileTopicChild.committed(t, group) == Map(0 -> 6L))
-    // retention now follows the live line
-    assert(t.truncateToCommitted() == Map(0 -> 6L))
   }
 }

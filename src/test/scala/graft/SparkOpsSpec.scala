@@ -597,22 +597,6 @@ class SparkOpsSpec extends AnyFunSuite with TestSession {
     assert(got == expected, got.toSeq.sorted.mkString(", "))
   }
 
-  test("k-means reaches an exact fixpoint on the test embeddings") {
-    val vecs = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-    val (cents, iters, moved) = Similarity.kmeansConverged(vecs, maxIters = 25)
-    assert(moved == 0.0, s"no fixpoint: moved=$moved after $iters iters")
-    assert(iters < 25, s"hit maxIters: $iters")
-    val nCells = cents.count()
-    assert(nCells >= 2 && nCells <= Similarity.IvfCells, s"cells=$nCells")
-    // a fixpoint must survive one more assign+refine round untouched
-    val (cents2, iters2, moved2) =
-      Similarity.kmeansConverged(vecs, maxIters = 25)
-    assert(iters2 == iters && moved2 == 0.0)
-  }
-
   test("kmv_sketch aggregate == relational distinct k-min, with duplicates") {
     import org.apache.spark.sql.functions._
     import graft.functions.KmvSketch.kmv_sketch

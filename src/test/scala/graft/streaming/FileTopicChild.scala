@@ -23,10 +23,11 @@ import java.nio.file.Paths
   */
 object FileTopicChild {
   /** In-process accessor for the `private[streaming]` fence so specs in
-    * package `graft` can exercise it against the child JVM's takes.
+    * package `graft` can exercise it against the child JVM's takes: an
+    * empty fenced produce appends nothing and advances the fence.
     */
   def fence(t: FileTopic, query: String, epoch: Long, part: Int): Boolean =
-    t.beginTaskEpoch(query, epoch, part)
+    t.produceFenced(query, epoch, part, Nil)
 
   /** Same, for the atomic fence+append the production sink uses. */
   def produceFenced(t: FileTopic, query: String, epoch: Long, part: Int,
@@ -81,7 +82,7 @@ object FileTopicChild {
       println(s"CONSUMED=$n")
     case "fence" =>
       val t = new FileTopic(Paths.get(args(1)))
-      val took = t.beginTaskEpoch(args(2), args(3).toLong, args(4).toInt)
+      val took = t.produceFenced(args(2), args(3).toLong, args(4).toInt, Nil)
       println(s"FENCE=$took")
     case "stage4" =>
       val spark = graft.GraftSession.builder(2)
