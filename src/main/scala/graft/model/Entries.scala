@@ -21,8 +21,11 @@ object Codec {
   def optS(o: Option[_]): String = o.map(_.toString).getOrElse("")
   def optL(s: String): Option[Long] = if (s.isEmpty) None else Some(s.toLong)
   def optD(s: String): Option[Double] = if (s.isEmpty) None else Some(s.toDouble)
-  /** tpm formatting: toFixed(2) (entries.js:65-69). */
-  def nf2(d: Double): String = f"$d%.2f"
+  /** tpm formatting: toFixed(2) (entries.js:65-69), with a '.' decimal
+    * point whatever the JVM's default locale.
+    */
+  def nf2(d: Double): String =
+    String.format(java.util.Locale.ROOT, "%.2f", Double.box(d))
 }
 import Codec._
 

@@ -255,18 +255,8 @@ object ApmStats {
     */
   def slidingHistQuantile(spark: SparkSession, sfDir: String,
       intervalMs: Long = 600000L, windowN: Int = 30,
-      binW: Double = 4.0): DataFrame =
-    slidingHistQuantileFrom(Tables.txBase(spark, sfDir),
-      intervalMs, windowN, binW)
-
-  /** [[slidingHistQuantile]] over an arbitrary (server, service, end_ms,
-    * elapsed) frame — the shared core its streaming twin
-    * ([[graft.streaming.ApmStateV2.histQuantileStreamV2]]) is pinned
-    * against.
-    */
-  def slidingHistQuantileFrom(tx: DataFrame,
-      intervalMs: Long = 600000L, windowN: Int = 30,
       binW: Double = 4.0): DataFrame = {
+    val tx = Tables.txBase(spark, sfDir)
     val binned = tx
       .withColumn("bucket", expr(s"end_ms div $intervalMs"))
       .withColumn("bin", floor(col("elapsed") / lit(binW)).cast("long"))

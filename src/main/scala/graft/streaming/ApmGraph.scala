@@ -21,9 +21,8 @@ import graft.sources.LogFileSource
   *     `zscore`.
   *  3. `zscore` -> candidate predicates (R1/R2, stream-static broadcast
   *     config join) -> leaky-bucket vote fold (R3) -> `fired`.
-  *  4. `fired` -> per-service cooldown (R4; arrival order, or event-time
-  *     order under `GraphCfg.orderedCooldown`) -> ordered sink (A7) ->
-  *     `alerts/`.
+  *  4. `fired` -> per-service cooldown (R4, in arrival order like the
+  *     reference) -> ordered sink (A7) -> `alerts/`.
   *
   * Each stage boundary is an [[ApmGraph.Edge]], and the same stage code
   * runs over either transport:
@@ -50,15 +49,7 @@ import graft.sources.LogFileSource
   */
 object ApmGraph {
 
-  /** `orderedCooldown` opts stage 4 (over either handoff) into the
-    * DETERMINISTIC cooldown
-    * ([[ApmStateV2.cooldownStreamOrdered]]): fired candidates fold in
-    * event-time order across servers (the batch oracle's semantics)
-    * instead of the reference-faithful arrival order, at the price of a
-    * watermark delay (`orderedDelay` — the cross-chain skew budget) and
-    * the RocksDB state store (transformWithState requires it).
-    *
-    * `stage1MaxFiles` is stage 1's per-micro-batch file admission bound
+  /** `stage1MaxFiles` is stage 1's per-micro-batch file admission bound
     * (the `graftlogs` source's `maxFilesPerTrigger`; files are admitted
     * oldest modification time first, and listing them runs no Spark
     * job however many there are). It interacts with the stats window's
@@ -72,8 +63,7 @@ object ApmGraph {
     * drop), and so is live tailing; a backfill of whole host logs must
     * either admit them in one batch (raise this above the backlog's
     * file count; StreamScaleProbe's hosts axis measures that shape) or
-    * size `lateness` to the backlog's event-time span, the same
-    * recovery-skew discipline the ordered cooldown documents.
+    * size `lateness` to the backlog's event-time span.
     */
   case class GraphCfg(
       windowLen: String = "60 seconds",
@@ -83,8 +73,6 @@ object ApmGraph {
       alert: Alerts.AlertCfg = Alerts.AlertCfg(
         hardMaxMs = 150.0, hardMinMs = 0.0, hardMinTpm = 0.0,
         windowSz = 5, voteThreshold = 2, cooldownMs = 30000L),
-      orderedCooldown: Boolean = false,
-      orderedDelay: String = "10 seconds",
       stage1MaxFiles: Int = 10)
 
   val statsSchema: StructType = Encoders.product[StatsRow].schema
@@ -257,24 +245,17 @@ object ApmGraph {
       out, checkpoint(workDir, "fired", out))
   }
 
-  /** Stage 4: per-service cooldown (R4) -> ordered alert sink (A7)
-    * `alerts/`. The cooldown is the arrival-order fold, or the
-    * event-time one when `cfg.orderedCooldown` is set (see [[GraphCfg]]).
-    * `afterBatch` is [[ApmStreaming.sinkToParquet]]'s fault-injection
-    * point.
+  /** Stage 4: per-service cooldown (R4, arrival order) -> ordered alert
+    * sink (A7) `alerts/`. `afterBatch` is [[ApmStreaming.sinkToParquet]]'s
+    * fault-injection point.
     */
   private def stage4(spark: SparkSession, workDir: String, cfg: GraphCfg,
-      in: Edge, group: String, limit: Option[Int],
-      afterBatch: Long => Unit): StreamingQuery = {
+      in: Edge, group: String, afterBatch: Long => Unit): StreamingQuery = {
     useLocalCheckpoints(spark)
     import spark.implicits._
-    val fired = read(spark, in, voteOutSchema, group, limit)
-      .as[ApmStreaming.VoteOut]
-    val alerts =
-      if (cfg.orderedCooldown)
-        ApmStateV2.cooldownStreamOrdered(fired, cfg.alert, cfg.orderedDelay)
-      else ApmStreaming.cooldownStream(fired, cfg.alert)
-    ApmStreaming.sinkToParquet(alerts.toDF(), s"$workDir/alerts",
+    val fired = read(spark, in, voteOutSchema, group).as[ApmStreaming.VoteOut]
+    ApmStreaming.sinkToParquet(
+      ApmStreaming.cooldownStream(fired, cfg.alert).toDF(), s"$workDir/alerts",
       checkpoint(workDir, "alerts", in), orderCol = Some("ts_ms"),
       availableNow = true, afterBatch = afterBatch)
   }
@@ -313,7 +294,7 @@ object ApmGraph {
   def startStage4(spark: SparkSession, workDir: String, cfg: GraphCfg,
       afterBatch: Long => Unit = _ => ()): StreamingQuery =
     stage4(spark, workDir, cfg, ParquetDir(s"$workDir/fired"), "stage4",
-      None, afterBatch)
+      afterBatch)
 
   def runStage4(spark: SparkSession, workDir: String, cfg: GraphCfg): Unit =
     await(startStage4(spark, workDir, cfg))
@@ -337,17 +318,12 @@ object ApmGraph {
     await(stage3(spark, workDir, cfg, in, out))
 
   /** Stage 4 consuming fired rows from the topic `in` under consumer
-    * `group`. `maxPoll` bounds records per micro-batch (the connector's
-    * admission option) — production leaves it unbounded; the drop-
-    * exactness spec uses it to force a >100-batch drain. Watermark and
-    * ledger drops are published on `t_ops`.
+    * `group`. The arrival-order cooldown has no watermark, so it drops
+    * nothing and publishes nothing on `t_ops`.
     */
   def runStage4Queued(spark: SparkSession, workDir: String, cfg: GraphCfg,
-      in: Topic, group: String = "stage4",
-      maxPoll: Option[Int] = None): Unit =
-    awaitWithDropMetrics(spark,
-      stage4(spark, workDir, cfg, in, group, maxPoll, _ => ()),
-      "stage4", in.dir, includeLedger = true)
+      in: Topic, group: String = "stage4"): Unit =
+    await(stage4(spark, workDir, cfg, in, group, _ => ()))
 
   /** Stage 5 — the reference's DB-insert process
     * (stream_insert_db.js:277-353): a SECOND consumer group on the z
@@ -405,27 +381,6 @@ object ApmGraph {
     }
   }
 
-  /** Drop observability ACROSS processes: watermark-gated stages drop
-    * too-late rows by design (the stats window's lateness bound at
-    * stage 1, the ordered cooldown's determinism contract at stage 4),
-    * but the drop records are process-local — Spark's
-    * `numRowsDroppedByWatermark` lives in this JVM's
-    * StreamingQueryProgress and the residual-band
-    * [[ApmStateV2.LateDrops]] ledger is an in-JVM counter, both
-    * invisible to an operator (or a topology spec) watching a forked
-    * stage from outside. After each drain, any NONZERO drop delta is
-    * published as one JSON record on the `t_ops` queue topic — the
-    * queue-alarm shape the reference uses for operational signals
-    * (config/apm_config.json:41-42) — keyed by stage so one partition
-    * carries each stage's alarm stream in order. Zero-drop drains
-    * publish nothing (an alarm channel, not a heartbeat).
-    * `includeLedger` is set only by the stage that OWNS the in-JVM
-    * ledger (stage 4's ordered cooldown) so an in-process multi-stage
-    * run cannot double-report the same ledger delta.
-    */
-  private val ledgerPublished = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val ledgerDataPublished = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** EXACT per-query watermark-drop accumulator. `recentProgress` is a
     * ring buffer capped at `numRecentProgressUpdates` (default 100), so
     * summing it after a long recovery drain (>100 micro-batches) would
@@ -475,16 +430,14 @@ object ApmGraph {
   }
 
   /** Run `start` to completion with an exact drop accumulator attached,
-    * then publish any nonzero drop delta (see [[publishDropMetrics]]).
+    * then publish a nonzero drop count (see [[publishDropMetrics]]).
     * The listener is registered BEFORE start and bound to the query's
     * run id right after (buffering any events delivered in between), so
     * batch 0's progress event can never be missed; the post-termination
     * drain below then waits until the last batch's event has arrived.
     */
   private def awaitWithDropMetrics(spark: SparkSession,
-      start: => StreamingQuery,
-      stage: String, queueDir: String,
-      includeLedger: Boolean = false): Unit = {
+      start: => StreamingQuery, stage: String, queueDir: String): Unit = {
     val l = new DropListener
     spark.streams.addListener(l)
     val q = try start catch {
@@ -500,25 +453,26 @@ object ApmGraph {
       while (l.maxBatchId.get() < lastBatch && System.nanoTime() < deadline)
         Thread.sleep(20)
     } finally spark.streams.removeListener(l)
-    publishDropMetrics(l.wmDropped.get(), stage, queueDir, includeLedger)
+    publishDropMetrics(l.wmDropped.get(), stage, queueDir)
   }
 
-  def publishDropMetrics(wmDropped: Long,
-      stage: String, queueDir: String,
-      includeLedger: Boolean = false): Unit = {
-    val (dLed, dLedData) =
-      if (!includeLedger) (0L, 0L)
-      else {
-        val led = ApmStateV2.LateDrops.dropped.get()
-        val ledData = ApmStateV2.LateDrops.droppedWithData.get()
-        (led - ledgerPublished.getAndSet(led),
-          ledData - ledgerDataPublished.getAndSet(ledData))
-      }
-    if (wmDropped > 0 || dLed > 0) {
-      val rec = s"""{"stage":"$stage","wm_dropped":$wmDropped,""" +
-        s""""ledger_dropped":$dLed,"ledger_dropped_with_data":$dLedData}"""
-      QueueRegistry.topic("t_ops", queueDir, 1).produce(stage, rec)
+  /** Drop observability ACROSS processes: the stats window at stage 1
+    * drops too-late rows by design (its lateness bound, A4), but the
+    * drop record is process-local — Spark's `numRowsDroppedByWatermark`
+    * lives in this JVM's StreamingQueryProgress, invisible to an
+    * operator (or a topology spec) watching a forked stage from
+    * outside. After each drain, a NONZERO drop count is published as
+    * one JSON record on the `t_ops` queue topic — the queue-alarm shape
+    * the reference uses for operational signals
+    * (config/apm_config.json:41-42) — keyed by stage so one partition
+    * carries each stage's alarm stream in order. Zero-drop drains
+    * publish nothing (an alarm channel, not a heartbeat).
+    */
+  def publishDropMetrics(wmDropped: Long, stage: String,
+      queueDir: String): Unit =
+    if (wmDropped > 0) {
+      QueueRegistry.topic("t_ops", queueDir, 1)
+        .produce(stage, s"""{"stage":"$stage","wm_dropped":$wmDropped}""")
       ()
     }
-  }
 }

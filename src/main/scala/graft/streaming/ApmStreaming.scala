@@ -38,6 +38,14 @@ object ApmStreaming {
   private[streaming] val log =
     org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** The RocksDB state store provider. The keyed folds here run on it
+    * or on Spark's default HDFS-backed store; a session selects it with
+    * `spark.sql.streaming.stateStore.providerClass` (plus
+    * `...rocksdb.changelogCheckpointing.enabled=true`).
+    */
+  val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** A1-A5: sliding 5-min/10-s window stats over a streaming tx frame
     * with event-time column `end_ts` (TimestampType) — emits per closed
     * window once the 1-minute watermark passes (A4 lateness buffer).
@@ -174,14 +182,14 @@ object ApmStreaming {
     * servers fire the same service near-simultaneously, which one wins
     * the cooldown window depends on micro-batch arrival order — exactly
     * as in the reference, whose cooldown folds bus ARRIVAL order
-    * (stream_process_alerts.js:420-447). Rows are sorted by
+    * (stream_process_alerts.js:436-467). Rows are sorted by
     * (ts_ms, server, lag) WITHIN a batch, so same-batch ties are
     * deterministic; cross-batch merge order across different upstream
     * keys is not a guarantee any per-key ordering contract can give
     * (ApmGraph's per-key epoch atomicity covers each key chain, not
     * their interleave). A batch formulation imposes global ts order —
-    * strictly stronger; MultiProcessGraphSpec documents and sidesteps
-    * the difference.
+    * strictly stronger; MultiProcessGraphSpec checks that each emitted
+    * server is one the batch fired set admits at that window.
     */
   def cooldownStream(fired: Dataset[VoteOut], cfg: Alerts.AlertCfg): Dataset[VoteOut] = {
     import fired.sparkSession.implicits._

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import graft.Bench.{jnum, jstr}
-import graft.streaming.{ApmStateV2, ApmStreaming}
+import graft.streaming.ApmStreaming
 
 /** Dev harness: measured evidence for the day-lag z-score state claim.
   *
@@ -34,7 +34,7 @@ object RocksLagProbe {
       if (args.length > 2) (lag * args(2).toDouble).toInt else (lag * 1.25).toInt
     val spark = graft.GraftSession()
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      ApmStateV2.RocksDbProvider)
+      ApmStreaming.RocksDbProvider)
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
       "true")

@@ -1,5 +1,6 @@
 package graft
 
+import java.util.Locale
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 import graft.model._
@@ -52,6 +53,22 @@ class CodecSpec extends AnyFunSuite {
       assert(p(4) == e.lag.toString && p(5) == Codec.nf2(e.tpm))
       assert(Entry.fromCsv(csv) == e)
     }
+  }
+
+  test("st and fs round-trip under a comma-decimal default locale") {
+    val saved = Locale.getDefault
+    Locale.setDefault(Locale.GERMANY)
+    try {
+      assert(f"${1.5}%.2f" == "1,50", "the default locale is not comma-decimal")
+      val st = StatEntry(1578391200000L, "srv1", "S:x", 1.5,
+        Some(2.25), None, Some(3.5))
+      assert(st.toCsv.split("\\|", -1)(4) == "1.50")
+      assert(Entry.fromCsv(st.toCsv) == st)
+      val z = ZBlock(Some(0.5), Some(0.25), None, Some(1.75), 1)
+      val fs = FullStatEntry(1578391200000L, "srv1", "S:x", 1.5, 360, z, z, z)
+      assert(fs.toCsv.split("\\|", -1)(5) == "1.50")
+      assert(Entry.fromCsv(fs.toCsv) == fs)
+    } finally Locale.setDefault(saved)
   }
 
   test("al round-trip with & escaping") {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Alerts, Parsing, ZScore}
 import graft.sources.LogFileSource
-import graft.streaming.{ApmGraph, ApmStateV2, ApmStreaming}
+import graft.streaming.{ApmGraph, ApmStreaming}
 
 /** Kill-and-resume fault injection over the full four-stage streaming
   * graph (ApmGraph) — the end-to-end proof of the exactly-once claim
@@ -176,7 +176,7 @@ class GraphFaultSpec extends AnyFunSuite with TestSession {
     val changelog =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, ApmStateV2.RocksDbProvider)
+    spark.conf.set(key, ApmStreaming.RocksDbProvider)
     spark.conf.set(changelog, "true")
     try killResumeScenario("rocks")
     finally {

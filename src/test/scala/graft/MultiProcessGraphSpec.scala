@@ -50,20 +50,15 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
   }
 
   /** Fork one graph stage as a separate JVM; stdout/stderr tee to a file
-    * for post-mortem, handle returned for the kill. `ordered` passes the
-    * child's 8th arg, opting stage 4 into the deterministic event-time
-    * cooldown (a GraphCfg flag — harmless on the other stages).
+    * for post-mortem, handle returned for the kill.
     */
   private def forkStage(stage: Int, logsGlob: String, work: String,
-      qdir: String, stop: String, base: String, provider: String,
-      ordered: Boolean = false): Process = {
+      qdir: String, stop: String, base: String, provider: String): Process = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
-    val args = Seq(javaBin, "-Xmx3g", "-cp", cp,
+    val pb = new ProcessBuilder(javaBin, "-Xmx3g", "-cp", cp,
       "graft.streaming.FileTopicChild", "graphstage", stage.toString,
-      logsGlob, work, qdir, stop, provider) ++
-      (if (ordered) Seq("ordered") else Nil)
-    val pb = new ProcessBuilder(args: _*)
+      logsGlob, work, qdir, stop, provider)
     pb.redirectErrorStream(true)
     pb.redirectOutput(Paths.get(base, s"stage$stage.out").toFile)
     pb.start()
@@ -79,21 +74,9 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
   }
 
   /** The full scenario, parameterized by the children's state-store
-    * provider ("" = Spark's default HDFS-backed store) and the stage-4
-    * cooldown mode. `ordered = true` is the leg the arrival-order mode
-    * CANNOT run deterministically: BOTH servers turn slow in wave 2, so
-    * both fire the same service at identical window-end timestamps, and
-    * the per-service cooldown winner is decided by the event-time order
-    * (ts, server, lag) — the batch oracle's — rather than by whichever
-    * upstream chain reaches the consumer first. A far-future sentinel
-    * must then itself FIRE (slow zzf wave, closed by a later quiet zz2
-    * event) so stage 4's watermark passes every real alert and the
-    * ordered cooldown's tail holdback releases; it is STAGED after all
-    * real fired rows are appended (see the staging comment in the body)
-    * so it cannot overtake them across micro-batches.
+    * provider ("" = Spark's default HDFS-backed store).
     */
-  private def sixProcessScenario(provider: String,
-      ordered: Boolean = false): Unit = {
+  private def sixProcessScenario(provider: String): Unit = {
     val base = Files.createTempDirectory("graft_mp").toString
     val logs = s"$base/logs"
     val glob = s"$logs/net/*/*"
@@ -101,8 +84,8 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
     val stop = s"$base/stop"
     val works = (1 to 6).map(s => s"$base/work$s")
     works.foreach(w => Files.createDirectories(Paths.get(w)))
-    val cfg = ApmGraph.GraphCfg(orderedCooldown = ordered)
-    // zzl is the stage-1 late-probe server (ordered leg): its one line is
+    val cfg = ApmGraph.GraphCfg()
+    // zzl is the stage-1 late-probe server: its one line is
     // watermark-dropped INSIDE stage 1, so it must be invisible to every
     // batch-side oracle recomputed after the injection
     val sentinelServers = TopologyOracle.sentinelServers
@@ -151,7 +134,7 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
     val procs = scala.collection.mutable.Map(
       (1 to 6).map(s => s -> forkStage(s,
         if (s == 6) jmxArg else glob,
-        works(s - 1), qdir, stop, base, provider, ordered)): _*)
+        works(s - 1), qdir, stop, base, provider)): _*)
     try {
       // stage 2 must have CONSUMED live wave-1 records (produced its own
       // output) before the corpus is complete — and before we kill it
@@ -169,32 +152,27 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
 
       // wave 2 while stage 2 is DEAD: hostA turns slow (elapsed ~300,
       // varying — trips the thresholds); plus the far-future sentinel
-      // that closes every real window. In ARRIVAL-order mode only ONE
-      // server fires deliberately: the per-SERVICE cooldown's input
-      // comes from per-(server,service) upstream chains, so when two
-      // servers fire the same service near-simultaneously the winner is
+      // that closes every real window. Only ONE server fires
+      // deliberately: the per-SERVICE cooldown's input comes from
+      // per-(server,service) upstream chains, so when two servers fire
+      // the same service near-simultaneously the winner is
       // ARRIVAL-dependent — in the reference exactly as here (its
       // cooldown folds bus arrival order, stream_process_alerts.js:
-      // 420-447) — while the batch oracle imposes global ts order. The
+      // 436-467) — while the batch oracle imposes global ts order. The
       // ordering contract guarantees per-key order, not cross-key
       // merge order; a single firing server keeps the alert leg
       // deterministic while BOTH servers still flow through the z topic
       // and DB comparisons (which are per-server-keyed and bit-exact).
-      // In ORDERED mode hostB turns slow TOO — every firing window is a
-      // cross-server tie, and the deterministic cooldown must still
-      // reproduce the batch oracle bit-exactly.
       // (Rotated-log name so the P1 router still classifies it.)
       writeLog(logs, "hostA", "server.log.1", (10 until 19).map(i =>
         exitLine(i, t0 + i * 10000L, "S:checkout", 300L + (i % 7) * 3)))
       writeLog(logs, "hostB", "server.log.1", (10 until 19).map(i =>
-        exitLine(i, t0 + i * 10000L, "S:checkout",
-          if (ordered) 300L + (i % 5) * 7 else 100L + i % 5)))
+        exitLine(i, t0 + i * 10000L, "S:checkout", 100L + i % 5)))
       writeLog(logs, "zz", "server.log",
         Seq(exitLine(999, t0 + 100000000L, "S:checkout", 1L)))
 
       // re-fork stage 2 over the same checkpoint + topics
-      procs(2) = forkStage(2, glob, works(1), qdir, stop, base, provider,
-        ordered)
+      procs(2) = forkStage(2, glob, works(1), qdir, stop, base, provider)
 
       // ---- batch oracle over the same lines (sentinel filtered)
       val zBatchDf = TopologyOracle.zFold(spark, glob, cfg)
@@ -202,48 +180,8 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
       val expAlerts = Alerts.alertsRef(candB.toIndexedSeq, cfg.alert)
         .map(a => (a._1, a._2, a._3, a._4)).sorted.toList
       assert(expAlerts.nonEmpty, "oracle produced no alerts — inert corpus")
-      if (ordered) {
-        // the contested case must actually exist: every bad window of
-        // hostA is also a bad window of hostB (identical window-end ts),
-        // so each firing is a cross-server tie the event-time order
-        // (ts, server, lag) — not arrival — must resolve
-        val badTs = candB.filter(_._5).groupBy(_._1)
-          .view.mapValues(_.map(_._4).toSet).toMap
-        assert(badTs.getOrElse("hostA", Set.empty).nonEmpty &&
-          badTs.getOrElse("hostA", Set.empty) == badTs.getOrElse("hostB", Set.empty),
-          s"wave 2 did not produce cross-server ties: " +
-            s"${badTs.view.mapValues(_.size).toMap}")
-      }
-
-      if (ordered) {
-        // DETERMINISTIC SENTINEL STAGING. The ordered cooldown's
-        // watermark rides fired-row event times, so a far-future firing
-        // row reaching stage 4 in an EARLIER batch than a real fired row
-        // would late-drop the real one. All fired rows share one t_fired
-        // partition (service key), so append order is consumption order:
-        // write the firing sentinel only after every real fired row is
-        // already appended, and no interleaving can invert them. (The
-        // real wave's own cross-server skew is covered by the child's
-        // 600 s recovery-sized delay budget — see FileTopicChild.)
-        val expFired = Alerts.firedRef(candB.toIndexedSeq, cfg.alert)
-        assert(expFired.nonEmpty, "oracle fired set empty — inert corpus")
-        spinUntil(240, s"t_fired to hold all ${expFired.size} real fired " +
-          "rows before the firing sentinel is written") {
-          topicSum("t_fired") >= expFired.size
-        }
-        // the firing sentinel wave (event times past the quiet closer's
-        // watermark), itself closed by the even-later quiet zz2 event —
-        // its fired rows advance stage 4's watermark past every real
-        // alert, releasing the ordered tail holdback
-        writeLog(logs, "zzf", "server.log", (0 until 9).map(i =>
-          exitLine(900 + i, t0 + 200000000L + i * 10000L, "S:checkout", 300L)))
-        writeLog(logs, "zz2", "server.log",
-          Seq(exitLine(999, t0 + 300000000L, "S:checkout", 1L)))
-      }
 
       // ---- convergence: the forked chain drains to the oracle's count
-      // (the firing sentinel's own alerts are filtered — they exist only
-      // to advance the stage-4 watermark in ordered mode)
       def gotAlerts(): List[(Long, String, String, Int)] =
         try spark.read.option("recursiveFileLookup", "true")
           .parquet(s"${works(3)}/alerts")
@@ -257,51 +195,32 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
         gotAlerts().size >= expAlerts.size
       }
 
-      if (ordered) {
-        // drop visibility END-TO-END: inject a fired row from the
-        // flushed past directly into t_fired (stage 4's watermark is
-        // ~t0+1e8 after the firing sentinel, so this row is genuinely
-        // late). The forked stage-4 JVM must drop it — never fold it —
-        // and PUBLISH the drop on the t_ops alarm topic, where this
-        // parent process (standing in for production monitoring) can
-        // see it; the final bit-equality assert below proves the row
-        // never leaked into the fold.
-        topicOf("t_fired").get.produce("late-probe",
-          s"""{"server":"hostA","service":"S:checkout","lag":3,""" +
-            s""""ts_ms":${t0 + 300000L},"causes":"late-probe"}""")
-        // the spin's predicate IS the assertion: poll inside it and
-        // accumulate across polls, so another stage's alarm landing
-        // first (or the stage-4 record arriving between an
-        // existence-check and a single poll) can't fail the leg
-        // spuriously
-        val alarms = scala.collection.mutable.Buffer.empty[String]
-        var opsConsumer: ContractConsumer = null
-        spinUntil(120, "the forked stage 4 to publish the late-drop " +
-          s"alarm on t_ops (saw so far: $alarms)") {
-          if (opsConsumer == null)
-            topicOf("t_ops").foreach(t =>
-              opsConsumer = new ContractConsumer(t, "spec_ops"))
-          if (opsConsumer != null) alarms ++= opsConsumer.poll(1000).map(_.value)
-          alarms.exists(v => v.contains("\"stage\":\"stage4\"") &&
-            (v.contains("\"wm_dropped\":") && !v.contains("\"wm_dropped\":0")))
-        }
-
-        // stage 1's OWN silent drop point, end-to-end (the stats
-        // window's lateness bound, A4 — stream_calc_stats.js:103-113):
-        // a tx line far older than the advanced watermark (zz2 pushed it
-        // to ~t0+3e8) lands in a fresh rotated log; the forked stage-1
-        // JVM must window-drop it and publish the {"stage":"stage1"}
-        // record on the same cross-process t_ops channel the stage-4
-        // probe above used. Same discipline: accumulate across polls,
-        // the predicate is the assertion.
-        writeLog(logs, "zzl", "server.log",
-          Seq(exitLine(555, t0 + 5000L, "S:checkout", 100L)))
-        spinUntil(120, "the forked stage 1 to publish its watermark-drop " +
-          s"alarm on t_ops (saw so far: $alarms)") {
-          alarms ++= opsConsumer.poll(1000).map(_.value)
-          alarms.exists(v => v.contains("\"stage\":\"stage1\"") &&
-            (v.contains("\"wm_dropped\":") && !v.contains("\"wm_dropped\":0")))
-        }
+      // stage 1's silent drop point, end-to-end (the stats window's
+      // lateness bound, A4 — stream_calc_stats.js:103-113): a tx line far
+      // older than the advanced watermark (zz pushed it to ~t0+1e8) lands
+      // in a fresh log; the forked stage-1 JVM must window-drop it and
+      // publish a {"stage":"stage1"} record on the cross-process t_ops
+      // channel, where this parent process (standing in for production
+      // monitoring) can see it. Alarms already on t_ops are drained
+      // first, so only one published after the probe counts; the spin's
+      // predicate is the assertion and accumulates across polls.
+      val alarms = scala.collection.mutable.Buffer.empty[String]
+      var opsConsumer: ContractConsumer = null
+      def pollOps(): Unit = {
+        if (opsConsumer == null)
+          topicOf("t_ops").foreach(t =>
+            opsConsumer = new ContractConsumer(t, "spec_ops"))
+        if (opsConsumer != null) alarms ++= opsConsumer.poll(1000).map(_.value)
+      }
+      pollOps()
+      alarms.clear()
+      writeLog(logs, "zzl", "server.log",
+        Seq(exitLine(555, t0 + 5000L, "S:checkout", 100L)))
+      spinUntil(120, "the forked stage 1 to publish its watermark-drop " +
+        s"alarm on t_ops (saw so far: $alarms)") {
+        pollOps()
+        alarms.exists(v => v.contains("\"stage\":\"stage1\"") &&
+          v.contains("\"wm_dropped\":") && !v.contains("\"wm_dropped\":0"))
       }
       Files.createFile(Paths.get(stop))
       procs.foreach { case (s, p) =>
@@ -317,45 +236,37 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
         s"a downstream stage never drained pre-kill: $drainedDownstream")
 
       // end-to-end: the forked topology's alerts == the batch oracle.
-      // In ORDERED mode this is bit-exact — that determinism is the
-      // mode's contract. In DEFAULT (arrival-order) mode the alert
-      // TIMES are deterministic (the per-SERVICE cooldown suppresses
-      // the same windows whichever server's row wins) but the SERVER
-      // attribution of a cross-server tie follows bus arrival, exactly
-      // as in the reference (stream_process_alerts.js folds arrival
-      // order) — wave 2's warm-up windows DO produce real ties (the
-      // quiet server's UB is sigma-tight after the uniform wave 1;
-      // batch firedRef fires both servers at those window ends), so
-      // the contract assertion is: same (ts, service, lag) sequence,
-      // and each emitted server is one the batch fired set admits at
-      // that window — exact where the window is uncontested. The
-      // round-9 "unexplained 1-of-N failure" was this over-assertion;
-      // adjudicated from the captured run-4 log + surviving topics
-      // (test-logs/README.md round-11 note).
+      // The alert TIMES are deterministic (the per-SERVICE cooldown
+      // suppresses the same windows whichever server's row wins) but the
+      // SERVER attribution of a cross-server tie follows bus arrival,
+      // exactly as in the reference (stream_process_alerts.js folds
+      // arrival order) — wave 2's warm-up windows DO produce real ties
+      // (the quiet server's UB is sigma-tight after the uniform wave 1;
+      // batch firedRef fires both servers at those window ends), so the
+      // contract assertion is: same (ts, service, lag) sequence, and
+      // each emitted server is one the batch fired set admits at that
+      // window — exact where the window is uncontested
+      // (test-logs/README.md records how an exact-server assertion here
+      // once failed 1 run in N).
       val gotA = gotAlerts()
-      if (ordered) {
-        assert(gotA == expAlerts,
-          s"alerts diverge: got=$gotA exp=$expAlerts")
-      } else {
-        // sort/zip by (ts, service, lag) — NOT the full tuple: at a
-        // contested window a server flip must not re-pair alerts of
-        // different services that share a ts
-        val gKey = gotA.sortBy(a => (a._1, a._3, a._4))
-        val eKey = expAlerts.sortBy(a => (a._1, a._3, a._4))
-        assert(gKey.map(a => (a._1, a._3, a._4)) ==
-          eKey.map(a => (a._1, a._3, a._4)),
-          s"alert times diverge: got=$gotA exp=$expAlerts")
-        val firedAt = Alerts.firedRef(candB.toIndexedSeq, cfg.alert)
-          .groupBy(f => (f._1, f._3, f._4))
-          .view.mapValues(_.map(_._2).toSet).toMap
-        gKey.zip(eKey).foreach { case (g, e) =>
-          val admissible = firedAt.getOrElse((g._1, g._3, g._4), Set.empty)
-          assert(admissible.contains(g._2),
-            s"alert $g names a server the batch fired set " +
-              s"$admissible does not admit")
-          if (admissible.size == 1)
-            assert(g == e, s"uncontested window diverged: got=$g exp=$e")
-        }
+      // sort/zip by (ts, service, lag) — NOT the full tuple: at a
+      // contested window a server flip must not re-pair alerts of
+      // different services that share a ts
+      val gKey = gotA.sortBy(a => (a._1, a._3, a._4))
+      val eKey = expAlerts.sortBy(a => (a._1, a._3, a._4))
+      assert(gKey.map(a => (a._1, a._3, a._4)) ==
+        eKey.map(a => (a._1, a._3, a._4)),
+        s"alert times diverge: got=$gotA exp=$expAlerts")
+      val firedAt = Alerts.firedRef(candB.toIndexedSeq, cfg.alert)
+        .groupBy(f => (f._1, f._3, f._4))
+        .view.mapValues(_.map(_._2).toSet).toMap
+      gKey.zip(eKey).foreach { case (g, e) =>
+        val admissible = firedAt.getOrElse((g._1, g._3, g._4), Set.empty)
+        assert(admissible.contains(g._2),
+          s"alert $g names a server the batch fired set " +
+            s"$admissible does not admit")
+        if (admissible.size == 1)
+          assert(g == e, s"uncontested window diverged: got=$g exp=$e")
       }
 
       // mid-chain: the z topic's records (all partitions, full history —
@@ -442,15 +353,7 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
 
   test("same six-process kill/re-fork scenario with the children on " +
       "the RocksDB state store (changelog checkpointing)") {
-    sixProcessScenario(graft.streaming.ApmStateV2.RocksDbProvider)
-  }
-
-  test("ordered-cooldown leg: BOTH servers fire the same service at " +
-      "identical window ends across forked processes, and stage 4's " +
-      "deterministic event-time cooldown still == the batch oracle " +
-      "bit-exactly (RocksDB provider — transformWithState)") {
-    sixProcessScenario(graft.streaming.ApmStateV2.RocksDbProvider,
-      ordered = true)
+    sixProcessScenario(ApmStreaming.RocksDbProvider)
   }
 }
 
@@ -459,7 +362,7 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
   * never drift from the oracle the spec asserts against.
   */
 object TopologyOracle {
-  val sentinelServers: Seq[String] = Seq("zz", "zzf", "zz2", "zzl")
+  val sentinelServers: Seq[String] = Seq("zz", "zzl")
 
   /** The batch z-score frame over a topology log glob — parse, windowed
     * stats (sentinels filtered), fold.

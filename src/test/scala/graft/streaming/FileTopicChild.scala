@@ -123,18 +123,7 @@ object FileTopicChild {
       }
       val spark = builder.getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
-      // optional 8th arg: "ordered" opts stage 4 into the deterministic
-      // event-time cooldown (requires the RocksDB provider in arg 7).
-      // The watermark delay is the cross-chain SKEW budget, and after a
-      // kill/re-fork a recovery drain delivers the whole backlog at
-      // once — event-time skew up to the full backlog span — so the
-      // delay must cover the corpus span (10 min here), not just live
-      // jitter; an undersized budget late-drops real rows observably
-      // (see ApmStateV2.cooldownStreamOrdered scaladoc).
-      val ordered = args.length > 7 && args(7) == "ordered"
-      val cfg = ApmGraph.GraphCfg(
-        orderedCooldown = ordered,
-        orderedDelay = if (ordered) "600 seconds" else "10 seconds")
+      val cfg = ApmGraph.GraphCfg()
       var drains = 0
       while (!java.nio.file.Files.exists(stop)) {
         if (stage == 6) {

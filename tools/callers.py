@@ -18,9 +18,18 @@ without naming them (`apply`, `unapply`, `unapplySeq`, `update`). A name
 counts as named wherever it occurs, so a local of the same name
 elsewhere hides an unnamed member; treat the list as a lower bound.
 
+It then lists each field of a src/main case class whose name ends in
+`Cfg` that no scanned code sets, so every run takes the field's
+default. A field is set by a named argument or a positional argument of
+a `<Name>Cfg(...)` call, or by a named argument of any `copy(...)` call
+(a copy's receiver type is not resolved, so it sets the field of every
+`Cfg` class with that name). Tests do not count here either.
+
 Usage: python3 tools/callers.py [repo_root]
 Prints one `<path>:<line> <kind> <name>` line per member, then
-`<n> members with no caller`.
+`<n> members with no caller`; then one `<path>:<line> field
+<Class>.<field>` line per unset field, then `<n> config fields never
+set`.
 """
 import collections
 import pathlib
@@ -34,6 +43,8 @@ SYNTAX_CALLED = {"apply", "unapply", "unapplySeq", "update"}
 IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 CHAR_LIT = re.compile(r"'(?:\\u[0-9a-fA-F]{4}|\\.|[^\\'\n])'")
 DECL = re.compile(r"\b(" + "|".join(KINDS) + r")\s+(" + IDENT + ")")
+CFG_DECL = re.compile(r"\bcase\s+class\s+(" + IDENT + r"Cfg)\s*\(")
+NAMED_ARG = re.compile(r"\s*(" + IDENT + r")\s*=(?![=>])")
 
 
 def strip(text):
@@ -130,6 +141,64 @@ def members(blank):
                 yield m.start(), tok, d.group(2), mods
 
 
+def args_at(blank, open_paren):
+    """Split the argument list whose `(` is at `open_paren` at its
+    top-level commas; return [(offset, text)]."""
+    depth, start, out = 0, open_paren + 1, []
+    for i in range(open_paren, len(blank)):
+        c = blank[i]
+        if c in "([{":
+            depth += 1
+        elif c in ")]}":
+            depth -= 1
+            if depth == 0:
+                out.append((start, blank[start:i]))
+                return out
+        elif c == "," and depth == 1:
+            out.append((start, blank[start:i]))
+            start = i + 1
+    return out
+
+
+def unset_cfg_fields(base, sources):
+    """Yield `<path>:<line> field <Class>.<field>` for each field of a
+    src/main `*Cfg` case class that no scanned code sets."""
+    fields = {}         # class -> [(field, path, line)]
+    for f, (_, blank) in sources.items():
+        if not f.is_relative_to(base / MAIN):
+            continue
+        for d in CFG_DECL.finditer(blank):
+            fields[d.group(1)] = []
+            for off, a in args_at(blank, d.end() - 1):
+                m = re.match(r"\s*(?:val\s+)?(" + IDENT + r")\s*:", a)
+                if m:
+                    line = blank.count("\n", 0, off + m.start(1)) + 1
+                    fields[d.group(1)].append(
+                        (m.group(1), f.relative_to(base), line))
+    if not fields:
+        return
+    call = re.compile(
+        r"\b(" + "|".join(map(re.escape, fields)) + r"|copy)\s*\(")
+    set_ = set()
+    for _, blank in sources.values():
+        decls = {d.end() - 1 for d in CFG_DECL.finditer(blank)}
+        for m in call.finditer(blank):
+            if m.end() - 1 in decls:
+                continue
+            cls = m.group(1)
+            for pos, (_, a) in enumerate(args_at(blank, m.end() - 1)):
+                named = NAMED_ARG.match(a)
+                if named:
+                    for c in (fields if cls == "copy" else [cls]):
+                        set_.add((c, named.group(1)))
+                elif cls != "copy" and a.strip() and pos < len(fields[cls]):
+                    set_.add((cls, fields[cls][pos][0]))
+    for cls, fs in fields.items():
+        for name, path, line in fs:
+            if (cls, name) not in set_:
+                yield f"{path}:{line} field {cls}.{name}"
+
+
 def main(root):
     base = pathlib.Path(root)
     sources = {}
@@ -158,6 +227,10 @@ def main(root):
     for row in found:
         print(row)
     print(f"{len(found)} members with no caller")
+    unset = list(unset_cfg_fields(base, sources))
+    for row in unset:
+        print(row)
+    print(f"{len(unset)} config fields never set")
 
 
 if __name__ == "__main__":
