@@ -166,14 +166,29 @@ object ApmGraph {
       .start()
   }
 
-  /** Route the stage's checkpoint files through
-    * [[LocalCheckpointFileManager]], unless the session already names a
-    * checkpoint manager.
+  /** Set `spark` up for starting streaming queries; every stage calls it
+    * before `start()`.
+    *
+    * Its checkpoint files go through [[LocalCheckpointFileManager]],
+    * unless the session already names a checkpoint manager.
+    *
+    * Artifact isolation is turned off. `start()` runs each query on a
+    * clone of the session, and with isolation on (Spark's default) every
+    * clone gets its own executor class loader. Spark keys its cache of
+    * compiled generated classes by class loader and source, so each
+    * stage call would recompile every class its plan generates (about 60
+    * Janino compiles per live graph cycle), and its tasks would queue
+    * behind each compile. No main code adds a jar, file or class artifact
+    * to any session, so there is nothing to isolate: the clones share the
+    * executor's default class loader, and a warm stage call hits the
+    * cache. GraphSpec pins the compile count of a warm drain.
     */
-  private def useLocalCheckpoints(spark: SparkSession): Unit =
+  private[graft] def prepareStreams(spark: SparkSession): Unit = {
     if (spark.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
       spark.conf.set(LocalCheckpointFileManager.ClassKey,
         classOf[LocalCheckpointFileManager].getName)
+    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
+  }
 
   /** A stage's checkpoint under `workDir`, named for the edge it drains
     * to (stage 4: from): a queue edge's is suffixed `_q`, so one work dir
@@ -195,7 +210,7 @@ object ApmGraph {
     */
   private def stage1(spark: SparkSession, logsGlob: String, workDir: String,
       cfg: GraphCfg, out: Edge): Unit = {
-    useLocalCheckpoints(spark)
+    prepareStreams(spark)
     val lines = LogFileSource.stream(spark, logsGlob, cfg.stage1MaxFiles)
     val parsed = Parsing.extractStdExit(
         lines.filter(col("log_type") === "server_log"))
@@ -223,7 +238,7 @@ object ApmGraph {
   /** Stage 2: stats -> lag fan-out (Z5) -> keyed z-score state (Z1/Z2). */
   private def stage2(spark: SparkSession, workDir: String, cfg: GraphCfg,
       in: Edge, out: Edge, limit: Option[Int]): StreamingQuery = {
-    useLocalCheckpoints(spark)
+    prepareStreams(spark)
     val stats = read(spark, in, statsSchema, "stage2", limit)
     write(ApmStreaming.zScoreStream(
         ApmStreaming.fanOutLags(stats, Seq(cfg.lag))).toDF(),
@@ -236,7 +251,7 @@ object ApmGraph {
     */
   private def stage3(spark: SparkSession, workDir: String, cfg: GraphCfg,
       in: Edge, out: Edge): StreamingQuery = {
-    useLocalCheckpoints(spark)
+    prepareStreams(spark)
     import spark.implicits._
     val cand = Alerts.candidates(read(spark, in, zOutSchema, "stage3"), cfg.alert)
       .select(col("server"), col("service"), col("lag"), col("ts_ms"),
@@ -251,7 +266,7 @@ object ApmGraph {
     */
   private def stage4(spark: SparkSession, workDir: String, cfg: GraphCfg,
       in: Edge, group: String, afterBatch: Long => Unit): StreamingQuery = {
-    useLocalCheckpoints(spark)
+    prepareStreams(spark)
     import spark.implicits._
     val fired = read(spark, in, voteOutSchema, group).as[ApmStreaming.VoteOut]
     ApmStreaming.sinkToParquet(
@@ -338,7 +353,7 @@ object ApmGraph {
     */
   def runStage5DbQueued(spark: SparkSession, workDir: String,
       in: Topic): Unit = {
-    useLocalCheckpoints(spark)
+    prepareStreams(spark)
     val z0 = read(spark, in, zOutSchema, "s6db")
     // The in-flight ZOut encodes the reference's `undefined` as NaN
     // (a case-class Double has no null); the DB payload's convention is

@@ -74,15 +74,23 @@ object ApmStreaming {
 
   // ------------------------------------------------------------- z-score
 
-  /** Bounded per-key z-score state: the three influenced-value lists
-    * (NaN encodes the reference's `undefined` entries).
-    */
   case class ZKey(server: String, service: String, lag: Int,
       threshold: Double, influence: Double)
   case class ZIn(server: String, service: String, lag: Int,
       threshold: Double, influence: Double, ts_ms: Long, tpm: Double,
       average: Double, per75: Double, per95: Double) // NaN = undefined
-  case class ZState(avgL: Seq[Double], p75L: Seq[Double], p95L: Seq[Double])
+  /** Bounded per-key z-score state: the three influenced-value lists
+    * (NaN encodes the reference's `undefined` entries).
+    *
+    * The lists are primitive arrays, not `Seq`s. A `Seq`'s encoder
+    * converts it element by element in a `MapObjects` loop whose
+    * generated variable names carry a JVM-wide counter, so each query's
+    * state projection would have new source and miss the codegen cache.
+    * The stored schema (`array<double>` without nulls) is the same either
+    * way, so checkpoints written with `Seq` lists resume.
+    */
+  case class ZState(avgL: Array[Double], p75L: Array[Double],
+      p95L: Array[Double])
   case class ZOut(server: String, service: String, ts_ms: Long, lag: Int,
       tpm: Double, average: Double, per75: Double, per95: Double,
       average_avg: Double, average_lb: Double, average_ub: Double, average_signal: Int,
@@ -112,7 +120,8 @@ object ApmStreaming {
         zs(2)._1, zs(2)._2, zs(2)._3, zs(2)._4)
     }
     (out.iterator,
-      ZState(lists(0).toSeq.map(dd), lists(1).toSeq.map(dd), lists(2).toSeq.map(dd)))
+      ZState(lists(0).toArray.map(dd), lists(1).toArray.map(dd),
+        lists(2).toArray.map(dd)))
   }
 
   /** Z1-Z5 as a stateful streaming transform. Input: a streaming stats
@@ -124,7 +133,8 @@ object ApmStreaming {
       .flatMapGroupsWithState[ZState, ZOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: ZKey, rows: Iterator[ZIn], state: GroupState[ZState]) =>
-          val st = state.getOption.getOrElse(ZState(Nil, Nil, Nil))
+          val st = state.getOption.getOrElse(
+            ZState(Array.empty, Array.empty, Array.empty))
           val (out, st2) = zScoreStep(rows, st, key)
           state.update(st2)
           out

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.util.NativeCodeLoader
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Alerts, Parsing, ZScore}
@@ -20,7 +21,8 @@ import graft.streaming.{ApmGraph, ApmStreaming, LocalCheckpointFileManager}
   * LogFileSource.route (S1), the R6 tee / A7 ordering assertions, and
   * the guards that the graph's checkpoint manager
   * ([[LocalCheckpointFileManager]]) writes what Spark's default writes
-  * and forks no process doing it.
+  * and forks no process doing it, and that a warm drain reuses the
+  * generated code that an earlier drain compiled.
   */
 class GraphSpec extends AnyFunSuite with TestSession {
 
@@ -255,5 +257,24 @@ class GraphSpec extends AnyFunSuite with TestSession {
     assert(starts.nonEmpty || NativeCodeLoader.isNativeCodeLoaded,
       "the recording captured no process start at all")
     assert(viaManager.isEmpty, viaManager.take(1).map(_.getStackTrace))
+  }
+
+  // ------------------------------------------------ the codegen cache
+
+  test("a warm drain reuses the generated code: at most 5 compiles") {
+    val base = Files.createTempDirectory("graft_codegen").toString
+    def drain(tag: String): Unit = {
+      writeCorpus(s"$base/$tag/logs", "server.log", 0 until 19)
+      drainWithSentinel(s"$base/$tag/logs", s"$base/$tag/work",
+        ApmGraph.GraphCfg())
+    }
+    drain("cold")
+    // counts Janino compiles, that is misses of the codegen cache
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    drain("warm")
+    val n = compiles.getCount - before
+    info(s"$n classes compiled in the warm drain")
+    assert(n <= 5, s"the warm drain compiled $n classes")
   }
 }
