@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -35,8 +36,9 @@ import graft.sources.LogFileSource
   *    shared across processes. With a Kafka connector jar the same edge
   *    helpers would become `format("kafka")`.
   *
-  * Checkpoints give each stage S7 resume-exactly-once; their local files
-  * are written through [[LocalCheckpointFileManager]].
+  * Checkpoints give each stage S7 resume-exactly-once. A stage's
+  * checkpoint, sink and committer files all go through one `file:` file
+  * system, [[NioLocalFileSystem]], which forks no process per file.
   * `Trigger.AvailableNow` drains whatever is pending and stops, which is
   * also the deterministic test harness mode. The broker contract the
   * Kafka transport would add (partitioned offsets, poll batching,
@@ -58,22 +60,34 @@ object ApmGraph {
     * the watermark past the still-unadmitted files' whole span and
     * silently window-drop them (alarmed on `t_ops`, but dropped).
     * Rotated chunk files written in time order are safe under any bound
-    * as long as one chunk's event-time span fits in `lateness`
+    * as long as one chunk's event-time span fits in [[Lateness]]
     * (LogFileStreamSpec drains 104 such files 10 at a time with no
     * drop), and so is live tailing; a backfill of whole host logs must
-    * either admit them in one batch (raise this above the backlog's
-    * file count; StreamScaleProbe's hosts axis measures that shape) or
-    * size `lateness` to the backlog's event-time span.
+    * admit them in one batch (raise this above the backlog's file count;
+    * StreamScaleProbe's hosts axis measures that shape).
+    *
+    * The window, z-score and alert settings are the graph's constants;
+    * the members below read them from a cfg, as apmbench does.
     */
-  case class GraphCfg(
-      windowLen: String = "60 seconds",
-      slide: String = "10 seconds",
-      lateness: String = "10 seconds",
-      lag: ZScore.LagCfg = ZScore.LagCfg(3, 1.0, 0.5),
-      alert: Alerts.AlertCfg = Alerts.AlertCfg(
-        hardMaxMs = 150.0, hardMinMs = 0.0, hardMinTpm = 0.0,
-        windowSz = 5, voteThreshold = 2, cooldownMs = 30000L),
-      stage1MaxFiles: Int = 10)
+  case class GraphCfg(stage1MaxFiles: Int = 10) {
+    def windowLen: String = WindowLen
+    def slide: String = Slide
+    def lateness: String = Lateness
+    def lag: ZScore.LagCfg = Lag
+    def alert: Alerts.AlertCfg = Alert
+  }
+
+  /** The stats window's length and slide (A1-A7). */
+  val WindowLen = "60 seconds"
+  val Slide = "10 seconds"
+  /** How late an event may arrive behind the stats window's watermark. */
+  val Lateness = "10 seconds"
+  /** The z-score's lag, threshold and influence (Z1/Z2). */
+  val Lag: ZScore.LagCfg = ZScore.LagCfg(3, 1.0, 0.5)
+  /** The candidate bounds, vote window and cooldown (R1-R4). */
+  val Alert: Alerts.AlertCfg = Alerts.AlertCfg(
+    hardMaxMs = 150.0, hardMinMs = 0.0, hardMinTpm = 0.0,
+    windowSz = 5, voteThreshold = 2, cooldownMs = 30000L)
 
   val statsSchema: StructType = Encoders.product[StatsRow].schema
   case class StatsRow(server: String, service: String, ts_ms: Long,
@@ -167,10 +181,22 @@ object ApmGraph {
   }
 
   /** Set `spark` up for starting streaming queries; every stage calls it
-    * before `start()`.
+    * before `start()`. Spark copies the session's conf into each query's
+    * Hadoop conf, so what it sets reaches every file a stage writes.
     *
-    * Its checkpoint files go through [[LocalCheckpointFileManager]],
-    * unless the session already names a checkpoint manager.
+    * `file:` paths go through [[NioLocalFileSystem]], unless the session
+    * names an `fs.file.impl` of its own. Hadoop's default local file
+    * system forks `chmod` for every file and directory it creates, that
+    * is for every checkpoint, sink and committer file of a micro-batch.
+    * Hadoop caches one file system per scheme for the whole process, and
+    * that cache already holds the default, so it is turned off for
+    * `file:`.
+    *
+    * Checkpoint files go through Spark's
+    * `FileSystemBasedCheckpointFileManager` (temp file, then
+    * `FileSystem.rename`), unless the session names a checkpoint manager.
+    * Spark's default manager writes through Hadoop's `FileContext`, which
+    * never reads `fs.file.impl` and forks `readlink` for every rename.
     *
     * Artifact isolation is turned off. `start()` runs each query on a
     * clone of the session, and with isolation on (Spark's default) every
@@ -184,9 +210,14 @@ object ApmGraph {
     * cache. GraphSpec pins the compile count of a warm drain.
     */
   private[graft] def prepareStreams(spark: SparkSession): Unit = {
-    if (spark.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
-      spark.conf.set(LocalCheckpointFileManager.ClassKey,
-        classOf[LocalCheckpointFileManager].getName)
+    if (spark.conf.getOption("fs.file.impl").isEmpty) {
+      spark.conf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      spark.conf.set("fs.file.impl.disable.cache", "true")
+    }
+    val manager = "spark.sql.streaming.checkpointFileManagerClass"
+    if (spark.conf.getOption(manager).isEmpty)
+      spark.conf.set(manager,
+        classOf[FileSystemBasedCheckpointFileManager].getName)
     spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
   }
 
@@ -217,7 +248,7 @@ object ApmGraph {
       .select(col("server"), col("service"),
         timestamp_millis(col("end_ms")).as("end_ts"), col("elapsed"))
     val stats = ApmStreaming.slidingStatsStream(
-      parsed, cfg.windowLen, cfg.slide, cfg.lateness)
+      parsed, WindowLen, Slide, Lateness)
     def start = write(stats, Seq("server", "service"), out,
       checkpoint(workDir, "stats", out))
     out match {
@@ -236,12 +267,12 @@ object ApmGraph {
   }
 
   /** Stage 2: stats -> lag fan-out (Z5) -> keyed z-score state (Z1/Z2). */
-  private def stage2(spark: SparkSession, workDir: String, cfg: GraphCfg,
-      in: Edge, out: Edge, limit: Option[Int]): StreamingQuery = {
+  private def stage2(spark: SparkSession, workDir: String, in: Edge,
+      out: Edge, limit: Option[Int]): StreamingQuery = {
     prepareStreams(spark)
     val stats = read(spark, in, statsSchema, "stage2", limit)
     write(ApmStreaming.zScoreStream(
-        ApmStreaming.fanOutLags(stats, Seq(cfg.lag))).toDF(),
+        ApmStreaming.fanOutLags(stats, Seq(Lag))).toDF(),
       Seq("server", "service"), out, checkpoint(workDir, "z", out))
   }
 
@@ -249,14 +280,14 @@ object ApmGraph {
     * broadcast config join) -> leaky-bucket vote fold (R3). Fired rows
     * are keyed by SERVICE, the key the stage-4 cooldown groups on.
     */
-  private def stage3(spark: SparkSession, workDir: String, cfg: GraphCfg,
-      in: Edge, out: Edge): StreamingQuery = {
+  private def stage3(spark: SparkSession, workDir: String, in: Edge,
+      out: Edge): StreamingQuery = {
     prepareStreams(spark)
     import spark.implicits._
-    val cand = Alerts.candidates(read(spark, in, zOutSchema, "stage3"), cfg.alert)
+    val cand = Alerts.candidates(read(spark, in, zOutSchema, "stage3"), Alert)
       .select(col("server"), col("service"), col("lag"), col("ts_ms"),
         col("bad"), col("causes")).as[ApmStreaming.VoteIn]
-    write(ApmStreaming.voteStream(cand, cfg.alert).toDF(), Seq("service"),
+    write(ApmStreaming.voteStream(cand, Alert).toDF(), Seq("service"),
       out, checkpoint(workDir, "fired", out))
   }
 
@@ -264,13 +295,13 @@ object ApmGraph {
     * sink (A7) `alerts/`. `afterBatch` is [[ApmStreaming.sinkToParquet]]'s
     * fault-injection point.
     */
-  private def stage4(spark: SparkSession, workDir: String, cfg: GraphCfg,
-      in: Edge, group: String, afterBatch: Long => Unit): StreamingQuery = {
+  private def stage4(spark: SparkSession, workDir: String, in: Edge,
+      group: String, afterBatch: Long => Unit): StreamingQuery = {
     prepareStreams(spark)
     import spark.implicits._
     val fired = read(spark, in, voteOutSchema, group).as[ApmStreaming.VoteOut]
     ApmStreaming.sinkToParquet(
-      ApmStreaming.cooldownStream(fired, cfg.alert).toDF(), s"$workDir/alerts",
+      ApmStreaming.cooldownStream(fired, Alert).toDF(), s"$workDir/alerts",
       checkpoint(workDir, "alerts", in), orderCol = Some("ts_ms"),
       availableNow = true, afterBatch = afterBatch)
   }
@@ -281,7 +312,8 @@ object ApmGraph {
   // and 4 also have a `startStageN` returning the running query (a real
   // deployment starts all four concurrently on processing-time
   // triggers; GraphFaultSpec uses the handles to kill queries
-  // mid-drain).
+  // mid-drain). Every stage takes the same `GraphCfg`; only stage 1
+  // reads it.
 
   def runStage1(spark: SparkSession, logsGlob: String, workDir: String,
       cfg: GraphCfg): Unit =
@@ -293,14 +325,14 @@ object ApmGraph {
     */
   def startStage2(spark: SparkSession, workDir: String, cfg: GraphCfg,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
-    stage2(spark, workDir, cfg, ParquetDir(s"$workDir/stats"),
+    stage2(spark, workDir, ParquetDir(s"$workDir/stats"),
       ParquetDir(s"$workDir/zscore"), maxFilesPerTrigger)
 
   def runStage2(spark: SparkSession, workDir: String, cfg: GraphCfg): Unit =
     await(startStage2(spark, workDir, cfg))
 
   def runStage3(spark: SparkSession, workDir: String, cfg: GraphCfg): Unit =
-    await(stage3(spark, workDir, cfg, ParquetDir(s"$workDir/zscore"),
+    await(stage3(spark, workDir, ParquetDir(s"$workDir/zscore"),
       ParquetDir(s"$workDir/fired")))
 
   /** `afterBatch` runs in the window between the alert sink's data write
@@ -308,7 +340,7 @@ object ApmGraph {
     */
   def startStage4(spark: SparkSession, workDir: String, cfg: GraphCfg,
       afterBatch: Long => Unit = _ => ()): StreamingQuery =
-    stage4(spark, workDir, cfg, ParquetDir(s"$workDir/fired"), "stage4",
+    stage4(spark, workDir, ParquetDir(s"$workDir/fired"), "stage4",
       afterBatch)
 
   def runStage4(spark: SparkSession, workDir: String, cfg: GraphCfg): Unit =
@@ -330,7 +362,7 @@ object ApmGraph {
     */
   def runStage3Queued(spark: SparkSession, workDir: String, cfg: GraphCfg,
       in: Edge, out: Topic): Unit =
-    await(stage3(spark, workDir, cfg, in, out))
+    await(stage3(spark, workDir, in, out))
 
   /** Stage 4 consuming fired rows from the topic `in` under consumer
     * `group`. The arrival-order cooldown has no watermark, so it drops
@@ -338,7 +370,7 @@ object ApmGraph {
     */
   def runStage4Queued(spark: SparkSession, workDir: String, cfg: GraphCfg,
       in: Topic, group: String = "stage4"): Unit =
-    await(stage4(spark, workDir, cfg, in, group, _ => ()))
+    await(stage4(spark, workDir, in, group, _ => ()))
 
   /** Stage 5 — the reference's DB-insert process
     * (stream_insert_db.js:277-353): a SECOND consumer group on the z
@@ -386,7 +418,7 @@ object ApmGraph {
     def topic(name: String) = Topic(name, queueDir)
     stage match {
       case 1 => stage1(spark, logsGlob, workDir, cfg, topic("t_stats"))
-      case 2 => await(stage2(spark, workDir, cfg, topic("t_stats"),
+      case 2 => await(stage2(spark, workDir, topic("t_stats"),
         topic("t_z"), None))
       case 3 => runStage3Queued(spark, workDir, cfg, topic("t_z"),
         topic("t_fired"))

@@ -88,6 +88,9 @@ object RocksLagProbe {
       } finally q.stop()
     }
 
+    // a discarded pass, so that the control does not pay alone for the
+    // one-off Janino compiles, JIT warm-up and state-store start-up
+    run("warmup", 60)
     val ctl = run("control", 60)
     val day = run("daylag", lag)
     println(s"""{"probe":"rocks_lag","control":$ctl,"daylag":$day}""")

@@ -1,35 +1,41 @@
 package graft
 
-import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, Path => JPath}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.nio.file.{Files, Path => JPath}
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileAlreadyExistsException, Path, RawLocalFileSystem}
-import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.spark.sql.execution.streaming.checkpointing.{
+  CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.LocalCheckpointFileManager
+import graft.streaming.{ApmGraph, NioLocalFileSystem}
 
-/** [[LocalCheckpointFileManager]] against Spark's default checkpoint
-  * manager: each operation is run through both, on sibling directories
-  * or the same one, and must leave the same files, modes and errors.
+/** The graph's checkpoint manager, Spark's
+  * `FileSystemBasedCheckpointFileManager` over [[NioLocalFileSystem]],
+  * against Spark's default checkpoint manager: each operation is run
+  * through both, on sibling directories or the same one, and must leave
+  * the same files, modes and errors.
   */
-class LocalCheckpointFileManagerSpec extends AnyFunSuite {
+class GraphCheckpointManagerSpec extends AnyFunSuite with TestSession {
 
-  private val conf = new Configuration()
+  /** A query's Hadoop conf on a session that [[ApmGraph.prepareStreams]]
+    * set up. A new session, so the shared one keeps its conf.
+    */
+  private lazy val graphConf: Configuration = {
+    val s = spark.newSession()
+    ApmGraph.prepareStreams(s)
+    s.sessionState.newHadoopConf()
+  }
 
-  private def local(dir: JPath): CheckpointFileManager =
-    new LocalCheckpointFileManager(new Path(dir.toUri), conf)
+  /** The manager Spark builds for a graph stage's checkpoint. */
+  private def graph(dir: JPath): CheckpointFileManager =
+    CheckpointFileManager.create(new Path(dir.toUri), graphConf)
 
   /** Spark's default: what `CheckpointFileManager.create` picks when no
-    * manager class is configured.
+    * manager class and no file system are configured.
     */
-  private def default(dir: JPath): CheckpointFileManager = {
-    val c = new Configuration(conf)
-    c.unset(LocalCheckpointFileManager.ClassKey)
-    CheckpointFileManager.create(new Path(dir.toUri), c)
-  }
+  private def default(dir: JPath): CheckpointFileManager =
+    CheckpointFileManager.create(new Path(dir.toUri), new Configuration())
 
   private def write(fm: CheckpointFileManager, file: JPath, text: String,
       overwrite: Boolean = false): Unit = {
@@ -48,7 +54,11 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   test("createAtomic + close publishes the bytes with a .crc sidecar, " +
       "in the default manager's mode") {
     val dir = Files.createTempDirectory("ckpt_fm_publish")
-    write(local(dir), dir.resolve("0"), "v1\n{}")
+    val fm = graph(dir)
+    assert(fm.isInstanceOf[FileSystemBasedCheckpointFileManager])
+    assert(new Path(dir.toUri).getFileSystem(graphConf)
+      .isInstanceOf[NioLocalFileSystem])
+    write(fm, dir.resolve("0"), "v1\n{}")
     write(default(dir), dir.resolve("1"), "v1\n{}")
     assert(Files.readString(dir.resolve("0")) == "v1\n{}")
     assert(names(dir) == Set("0", ".0.crc", "1", ".1.crc"),
@@ -59,7 +69,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
 
   test("cancel leaves neither the file nor a temp file behind") {
     val dir = Files.createTempDirectory("ckpt_fm_cancel")
-    val out = local(dir).createAtomic(new Path(dir.resolve("0").toUri), false)
+    val out = graph(dir).createAtomic(new Path(dir.resolve("0").toUri), false)
     out.write("partial".getBytes(UTF_8))
     out.cancel()
     assert(names(dir).isEmpty, s"left behind: ${names(dir)}")
@@ -68,7 +78,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   test("createAtomic(overwrite = false) over an existing file fails as " +
       "the default manager does, and keeps the old bytes") {
     val dir = Files.createTempDirectory("ckpt_fm_overwrite")
-    Seq("local" -> local(dir), "default" -> default(dir)).foreach {
+    Seq("graph" -> graph(dir), "default" -> default(dir)).foreach {
       case (name, fm) =>
         val f = dir.resolve(name)
         write(fm, f, "first")
@@ -98,46 +108,11 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
       Seq(listed, filtered, before, after, fm.exists(p("a")), fm.isLocal,
         dirMode)
     }
-    val l = Files.createTempDirectory("ckpt_fm_ops_local")
+    val g = Files.createTempDirectory("ckpt_fm_ops_graph")
     val d = Files.createTempDirectory("ckpt_fm_ops_default")
-    val got = script(local(l), l)
+    val got = script(graph(g), g)
     assert(got == script(default(d), d))
     assert(got.take(4) == Seq(Seq("1", "2"), Seq("2"), Seq(true, false),
       Seq(false, Set("2", ".2.crc"))))
   }
-
-  test("a path on another scheme goes to Spark's default manager") {
-    val dir = Files.createTempDirectory("ckpt_fm_scheme")
-    val c = new Configuration(conf)
-    c.set("fs.ckpttest.impl", classOf[RecordingFileSystem].getName)
-    c.setBoolean("fs.ckpttest.impl.disable.cache", true)
-    RecordingFileSystem.renamed.clear()
-    val target = new Path(s"ckpttest://${dir.resolve("0").toUri.getPath}")
-    val out = new LocalCheckpointFileManager(target, c).createAtomic(target, false)
-    out.write("x".getBytes(UTF_8))
-    out.close()
-    // Spark's default falls back to FileSystem calls on a scheme without
-    // a FileContext binding; they reach the scheme's own file system,
-    // which keeps no .crc sidecar.
-    assert(RecordingFileSystem.renamed.asScala.toSeq.map(_.getName) == Seq("0"))
-    assert(names(dir) == Set("0"))
-  }
-}
-
-/** A raw local file system mounted on the `ckpttest:` scheme that
-  * records the destination of every rename.
-  */
-class RecordingFileSystem extends RawLocalFileSystem {
-  override def getUri: URI = URI.create("ckpttest:///")
-  override def getScheme: String = "ckpttest"
-  override def pathToFile(p: Path): java.io.File =
-    Paths.get(p.toUri.getPath).toFile
-  override def rename(src: Path, dst: Path): Boolean = {
-    RecordingFileSystem.renamed.add(dst)
-    super.rename(src, dst)
-  }
-}
-
-object RecordingFileSystem {
-  val renamed = new ConcurrentLinkedQueue[Path]()
 }

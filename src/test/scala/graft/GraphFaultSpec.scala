@@ -126,7 +126,7 @@ class GraphFaultSpec extends AnyFunSuite with TestSession {
       .select(col("server"), col("service"),
         timestamp_millis(col("end_ms")).as("end_ts"), col("elapsed"))
     val statsB = ApmStreaming.slidingStatsStream(
-        parsedB, cfg.windowLen, cfg.slide, cfg.lateness)
+        parsedB, ApmGraph.WindowLen, ApmGraph.Slide, ApmGraph.Lateness)
       .filter(col("server") =!= "zz")
 
     // stage-2 no-loss/no-dup: full sorted row lists (keys + signals)
@@ -139,7 +139,7 @@ class GraphFaultSpec extends AnyFunSuite with TestSession {
     val zBatch = zList(ZScore.zScoreFold(
       statsB.select("server", "service", "ts_ms", "tpm",
         "average", "per75", "per95"),
-      Seq(cfg.lag)))
+      Seq(ApmGraph.Lag)))
     assert(zRowsAtKill < zBatch.size,
       s"kill was not mid-drain: $zRowsAtKill rows already committed " +
         s"of ${zBatch.size} — the resume leg had nothing to prove")
@@ -149,12 +149,12 @@ class GraphFaultSpec extends AnyFunSuite with TestSession {
     // end-to-end alerts == reference fold over batch candidates
     val candB = Alerts.candidates(ZScore.zScoreFold(
         statsB.select("server", "service", "ts_ms", "tpm",
-          "average", "per75", "per95"), Seq(cfg.lag)), cfg.alert)
+          "average", "per75", "per95"), Seq(ApmGraph.Lag)), ApmGraph.Alert)
       .select("server", "service", "lag", "ts_ms", "bad", "causes")
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3),
         r.getInt(4) == 1, r.getString(5)))
-    val expAlerts = Alerts.alertsRef(candB.toIndexedSeq, cfg.alert)
+    val expAlerts = Alerts.alertsRef(candB.toIndexedSeq, ApmGraph.Alert)
       .map(a => (a._1, a._2, a._3, a._4)).sorted.toList
     val gotAlerts = spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$work/alerts")

@@ -6,23 +6,22 @@ import java.time.{Instant, ZoneOffset}
 import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
-import org.apache.hadoop.util.NativeCodeLoader
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Alerts, Parsing, ZScore}
 import graft.sources.LogFileSource
-import graft.streaming.{ApmGraph, ApmStreaming, LocalCheckpointFileManager}
+import graft.streaming.{ApmGraph, ApmStreaming, NioLocalFileSystem}
 
 /** End-to-end streaming graph test: raw log FILES -> route -> parse ->
   * sliding stats -> z-score state -> vote/cooldown folds -> ordered sink,
   * as four chained streaming queries (ApmGraph), asserted equal to the
   * batch chain over the same lines. Also the unit test for
   * LogFileSource.route (S1), the R6 tee / A7 ordering assertions, and
-  * the guards that the graph's checkpoint manager
-  * ([[LocalCheckpointFileManager]]) writes what Spark's default writes
-  * and forks no process doing it, and that a warm drain reuses the
-  * generated code that an earlier drain compiled.
+  * the guards that the graph's file system ([[NioLocalFileSystem]]) and
+  * checkpoint manager write what Hadoop's and Spark's defaults write and
+  * fork no `chmod` or `readlink` doing it, and that a warm drain reuses
+  * the generated code that an earlier drain compiled.
   */
 class GraphSpec extends AnyFunSuite with TestSession {
 
@@ -59,19 +58,21 @@ class GraphSpec extends AnyFunSuite with TestSession {
   /** Drain round 1 (data), then the far-future sentinel advances the
     * watermark so every real window closes, then drain twice more (the
     * second run re-emits nothing; the third flushes no-data batches),
-    * then stages 2-4.
+    * then stages 2-4. `conf` is the stream conf the session names (see
+    * [[withStreamConf]]).
     */
   private def drainWithSentinel(logs: String, work: String,
-      cfg: ApmGraph.GraphCfg): Unit = {
-    ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
-    writeLog(logs, "zz", "server.log",
-      Seq(exitLine(999, t0 + 100000000L, "S:checkout", 1L)))
-    ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
-    ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
-    ApmGraph.runStage2(spark, work, cfg)
-    ApmGraph.runStage3(spark, work, cfg)
-    ApmGraph.runStage4(spark, work, cfg)
-  }
+      cfg: ApmGraph.GraphCfg, conf: Map[String, String] = Map.empty): Unit =
+    withStreamConf(conf) {
+      ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
+      writeLog(logs, "zz", "server.log",
+        Seq(exitLine(999, t0 + 100000000L, "S:checkout", 1L)))
+      ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
+      ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
+      ApmGraph.runStage2(spark, work, cfg)
+      ApmGraph.runStage3(spark, work, cfg)
+      ApmGraph.runStage4(spark, work, cfg)
+    }
 
   test("LogFileSource.route: server + log-type classification") {
     val dir = Files.createTempDirectory("graft_route").toString
@@ -102,7 +103,7 @@ class GraphSpec extends AnyFunSuite with TestSession {
       .select(col("server"), col("service"),
         timestamp_millis(col("end_ms")).as("end_ts"), col("elapsed"))
     val statsB = ApmStreaming.slidingStatsStream(
-        parsedB, cfg.windowLen, cfg.slide, cfg.lateness)
+        parsedB, ApmGraph.WindowLen, ApmGraph.Slide, ApmGraph.Lateness)
       .filter(col("server") =!= "zz")
 
     // R6 tee carries exactly the parsed rows
@@ -122,13 +123,13 @@ class GraphSpec extends AnyFunSuite with TestSession {
     val zB = ZScore.zScoreFold(
       statsB.select("server", "service", "ts_ms", "tpm",
         "average", "per75", "per95"),
-      Seq(cfg.lag))
-    val candB = Alerts.candidates(zB, cfg.alert)
+      Seq(ApmGraph.Lag))
+    val candB = Alerts.candidates(zB, ApmGraph.Alert)
       .select("server", "service", "lag", "ts_ms", "bad", "causes")
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3),
         r.getInt(4) == 1, r.getString(5)))
-    val expAlerts = Alerts.alertsRef(candB.toIndexedSeq, cfg.alert)
+    val expAlerts = Alerts.alertsRef(candB.toIndexedSeq, ApmGraph.Alert)
       .map(a => (a._1, a._2, a._3, a._4)).sorted.toList
 
     val gotAlerts = spark.read.option("recursiveFileLookup", "true")
@@ -151,33 +152,47 @@ class GraphSpec extends AnyFunSuite with TestSession {
     }
   }
 
-  // ------------------------------------------- the checkpoint manager
+  // ----------------------------------- the file system and checkpoints
 
-  private val sparkDefaultManager = "org.apache.spark.sql.execution." +
-    "streaming.checkpointing.FileContextBasedCheckpointFileManager"
+  private val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
-  /** Run `body` with the session's checkpoint manager class set to `cls`
-    * (None: unset, so the graph installs its own), then restore it.
+  /** Hadoop's and Spark's defaults, named so that
+    * [[ApmGraph.prepareStreams]] keeps them.
     */
-  private def withCheckpointManager[T](cls: Option[String])(body: => T): T = {
-    val key = LocalCheckpointFileManager.ClassKey
-    def set(v: Option[String]): Unit =
-      v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    val prev = spark.conf.getOption(key)
-    set(cls)
-    try body finally set(prev)
+  private val defaults = Map(
+    "fs.file.impl" -> "org.apache.hadoop.fs.LocalFileSystem",
+    managerKey -> ("org.apache.spark.sql.execution.streaming." +
+      "checkpointing.FileContextBasedCheckpointFileManager"))
+
+  /** Run `body` with the session keys that [[ApmGraph.prepareStreams]]
+    * sets unset, except for those in `conf`, then restore every one of
+    * them, so the shared session leaks no setting into later suites.
+    */
+  private def withStreamConf[T](conf: Map[String, String])(body: => T): T = {
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache", managerKey,
+      "spark.sql.artifact.isolation.enabled")
+    def set(k: String, v: Option[String]): Unit =
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(k => set(k, conf.get(k)))
+    try body finally prev.foreach { case (k, v) => set(k, v) }
   }
 
-  /** Relative path -> mode of every file and directory of the work
-    * dir's checkpoints and of each file sink's `_spark_metadata` log.
+  private val uuid =
+    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+
+  /** `path mode` -> how many there are, over every file and directory of
+    * the work dir: the checkpoints, each file sink's `_spark_metadata`
+    * log, and the sinks' part files and `.crc` sidecars, with the
+    * part-file UUIDs masked.
     */
-  private def checkpointTree(work: String): Map[String, String] = {
+  private def workTree(work: String): Map[String, Int] = {
     val root = Paths.get(work)
-    Files.walk(root).iterator().asScala.map(root.relativize(_).toString)
-      .filter(r => r.startsWith("ckpt_") || r.contains("_spark_metadata"))
-      .map(r => r -> java.nio.file.attribute.PosixFilePermissions.toString(
-        Files.getPosixFilePermissions(root.resolve(r))))
-      .toMap
+    Files.walk(root).iterator().asScala.drop(1).map { p =>
+      uuid.replaceAllIn(root.relativize(p).toString, "*") + " " +
+        java.nio.file.attribute.PosixFilePermissions.toString(
+          Files.getPosixFilePermissions(p))
+    }.toSeq.groupBy(identity).view.mapValues(_.size).toMap
   }
 
   /** The stats and alert sinks' rows, sorted. */
@@ -193,45 +208,65 @@ class GraphSpec extends AnyFunSuite with TestSession {
       "tree: same file names, modes and rows") {
     val base = Files.createTempDirectory("graft_ckpt_tree").toString
     val cfg = ApmGraph.GraphCfg()
-    def drain(tag: String, cls: Option[String]): String = {
+    def drain(tag: String, conf: Map[String, String]): String = {
       writeCorpus(s"$base/$tag/logs", "server.log", 0 until 19)
-      withCheckpointManager(cls)(drainWithSentinel(s"$base/$tag/logs",
-        s"$base/$tag/work", cfg))
+      drainWithSentinel(s"$base/$tag/logs", s"$base/$tag/work", cfg, conf)
       s"$base/$tag/work"
     }
-    val default = drain("default", Some(sparkDefaultManager))
-    val local = drain("local", None)
-    val (dTree, lTree) = (checkpointTree(default), checkpointTree(local))
-    assert(dTree.keySet.exists(_.endsWith(".delta.crc")),
-      "no state-file checksum written")
-    assert(dTree.keySet.exists(_.endsWith(".crc")) &&
-      dTree.keySet.exists(r => r.contains("/commits/") && r.endsWith(".crc")),
-      "no Hadoop .crc sidecar written")
-    assert(lTree == dTree,
-      s"only default: ${(dTree.toSet -- lTree.toSet).take(5)} " +
-        s"only local: ${(lTree.toSet -- dTree.toSet).take(5)}")
-    val (dRows, lRows) = (sinkRows(default), sinkRows(local))
+    val default = drain("default", defaults)
+    val graph = drain("graph", Map.empty)
+    val (dTree, gTree) = (workTree(default), workTree(graph))
+    def has(what: String)(p: String => Boolean): Unit =
+      assert(dTree.keySet.exists(k => p(k.split(' ').head)), s"no $what")
+    has("state-file checksum")(_.endsWith(".delta.crc"))
+    has("commit-log .crc sidecar")(r =>
+      r.contains("/commits/") && r.endsWith(".crc"))
+    Seq("stats", "tee", "alerts/batch_0").foreach(d =>
+      has(s"part-file .crc sidecar in $d")(r =>
+        r.startsWith(s"$d/.part-") && r.endsWith(".parquet.crc")))
+    assert(gTree == dTree,
+      s"only default: ${(dTree.toSet -- gTree.toSet).take(5)} " +
+        s"only graph: ${(gTree.toSet -- dTree.toSet).take(5)}")
+    val (dRows, gRows) = (sinkRows(default), sinkRows(graph))
     assert(dRows._2.nonEmpty, "graph produced no alerts")
-    assert(lRows == dRows)
+    assert(gRows == dRows)
   }
 
   test("a checkpoint drained with Spark's default manager resumes under " +
       "the graph's, bit-exact") {
     val base = Files.createTempDirectory("graft_ckpt_resume").toString
     val cfg = ApmGraph.GraphCfg()
-    def drain(tag: String, resumeWith: Option[String]): String = {
+    def drain(tag: String, resumeWith: Map[String, String]): String = {
       val (logs, work) = (s"$base/$tag/logs", s"$base/$tag/work")
       writeCorpus(logs, "server.log", 0 until 10)
-      withCheckpointManager(Some(sparkDefaultManager)) {
+      withStreamConf(defaults) {
         ApmGraph.runAll(spark, s"$logs/net/*/*", work, cfg)
       }
       writeCorpus(logs, "server.log.1", 10 until 19)
-      withCheckpointManager(resumeWith)(drainWithSentinel(logs, work, cfg))
+      drainWithSentinel(logs, work, cfg, resumeWith)
       work
     }
-    val reference = sinkRows(drain("default", Some(sparkDefaultManager)))
+    val reference = sinkRows(drain("default", defaults))
     assert(reference._2.nonEmpty, "graph produced no alerts")
-    assert(sinkRows(drain("resumed", None)) == reference)
+    assert(sinkRows(drain("resumed", Map.empty)) == reference)
+  }
+
+  test("prepareStreams keeps a file system or checkpoint manager that " +
+      "the session names") {
+    val ours = Map("fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+      managerKey -> ("org.apache.spark.sql.execution.streaming." +
+        "checkpointing.FileSystemBasedCheckpointFileManager"))
+    defaults.foreach { own =>
+      withStreamConf(Map(own)) {
+        ApmGraph.prepareStreams(spark)
+        val expected = ours + own
+        expected.foreach { case (k, v) =>
+          assert(spark.conf.getOption(k).contains(v), s"$k with $own")
+        }
+        assert(spark.conf.getOption("fs.file.impl.disable.cache") ==
+          Option.when(own._1 != "fs.file.impl")("true"), own)
+      }
+    }
   }
 
   test("a drain forks no process from a checkpoint manager") {
@@ -240,23 +275,35 @@ class GraphSpec extends AnyFunSuite with TestSession {
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
     rec.start()
-    try withCheckpointManager(None) {
+    try {
+      // a known process start, so an empty recording cannot pass
+      new ProcessBuilder("/bin/true").start().waitFor()
       drainWithSentinel(s"$base/logs", s"$base/work", ApmGraph.GraphCfg())
     } finally rec.stop()
     val jfr = Paths.get(s"$base/drain.jfr")
     rec.dump(jfr)
     rec.close()
     val starts = RecordingFile.readAllEvents(jfr).asScala.toList
+    def command(e: jdk.jfr.consumer.RecordedEvent): String =
+      Paths.get(e.getString("command").split(' ').head).getFileName.toString
+    /** The first event's command and calling frames outside the JDK. */
+    def first(es: List[jdk.jfr.consumer.RecordedEvent]): String =
+      es.take(1).map(e => e.getString("command") + " at " +
+        Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+          .map(f => f.getMethod.getType.getName + "." + f.getMethod.getName)
+          .filterNot(_.startsWith("java.")).take(8).mkString(" < ")).mkString
     val viaManager = starts.filter(e => Option(e.getStackTrace).exists(
       _.getFrames.asScala.exists(
         _.getMethod.getType.getName.contains("CheckpointFileManager"))))
-    info(s"${starts.size} process starts in the drain, " +
-      s"${viaManager.size} under a checkpoint manager")
-    // Without libhadoop, Hadoop forks chmod for every parquet data file,
-    // so an empty recording means the recording itself saw nothing.
-    assert(starts.nonEmpty || NativeCodeLoader.isNativeCodeLoaded,
-      "the recording captured no process start at all")
-    assert(viaManager.isEmpty, viaManager.take(1).map(_.getStackTrace))
+    val hadoopForks = starts.filter(e =>
+      Set("chmod", "readlink").contains(command(e)))
+    info(s"${starts.size} process starts in the drain: " +
+      starts.groupBy(command).view.mapValues(_.size).toMap.mkString(", "))
+    assert(starts.exists(command(_) == "true"),
+      "the recording did not capture the control process")
+    val (nHadoop, nManager) = (hadoopForks.size, viaManager.size)
+    assert(nHadoop == 0, first(hadoopForks))
+    assert(nManager == 0, first(viaManager))
   }
 
   // ------------------------------------------------ the codegen cache

@@ -84,7 +84,6 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
     val stop = s"$base/stop"
     val works = (1 to 6).map(s => s"$base/work$s")
     works.foreach(w => Files.createDirectories(Paths.get(w)))
-    val cfg = ApmGraph.GraphCfg()
     // zzl is the stage-1 late-probe server: its one line is
     // watermark-dropped INSIDE stage 1, so it must be invisible to every
     // batch-side oracle recomputed after the injection
@@ -175,9 +174,9 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
       procs(2) = forkStage(2, glob, works(1), qdir, stop, base, provider)
 
       // ---- batch oracle over the same lines (sentinel filtered)
-      val zBatchDf = TopologyOracle.zFold(spark, glob, cfg)
-      val candB = TopologyOracle.candidatesOf(zBatchDf, cfg)
-      val expAlerts = Alerts.alertsRef(candB.toIndexedSeq, cfg.alert)
+      val zBatchDf = TopologyOracle.zFold(spark, glob)
+      val candB = TopologyOracle.candidatesOf(zBatchDf)
+      val expAlerts = Alerts.alertsRef(candB.toIndexedSeq, ApmGraph.Alert)
         .map(a => (a._1, a._2, a._3, a._4)).sorted.toList
       assert(expAlerts.nonEmpty, "oracle produced no alerts — inert corpus")
 
@@ -257,7 +256,7 @@ class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
       assert(gKey.map(a => (a._1, a._3, a._4)) ==
         eKey.map(a => (a._1, a._3, a._4)),
         s"alert times diverge: got=$gotA exp=$expAlerts")
-      val firedAt = Alerts.firedRef(candB.toIndexedSeq, cfg.alert)
+      val firedAt = Alerts.firedRef(candB.toIndexedSeq, ApmGraph.Alert)
         .groupBy(f => (f._1, f._3, f._4))
         .view.mapValues(_.map(_._2).toSet).toMap
       gKey.zip(eKey).foreach { case (g, e) =>
@@ -367,34 +366,34 @@ object TopologyOracle {
   /** The batch z-score frame over a topology log glob — parse, windowed
     * stats (sentinels filtered), fold.
     */
-  def zFold(spark: SparkSession, glob: String,
-      cfg: ApmGraph.GraphCfg): org.apache.spark.sql.DataFrame = {
+  def zFold(spark: SparkSession,
+      glob: String): org.apache.spark.sql.DataFrame = {
     val parsedB = Parsing.extractStdExit(
         LogFileSource.batch(spark, glob)
           .filter(col("log_type") === "server_log"))
       .select(col("server"), col("service"),
         timestamp_millis(col("end_ms")).as("end_ts"), col("elapsed"))
     val statsB = ApmStreaming.slidingStatsStream(
-        parsedB, cfg.windowLen, cfg.slide, cfg.lateness)
+        parsedB, ApmGraph.WindowLen, ApmGraph.Slide, ApmGraph.Lateness)
       .filter(!col("server").isin(sentinelServers: _*))
     ZScore.zScoreFold(
       statsB.select("server", "service", "ts_ms", "tpm",
-        "average", "per75", "per95"), Seq(cfg.lag))
+        "average", "per75", "per95"), Seq(ApmGraph.Lag))
   }
 
   /** (server, service, lag, ts_ms, bad, causes) alert candidates from a
     * [[zFold]] frame — the in-process batch chain the forked topology
     * must reproduce.
     */
-  def candidatesOf(zBatchDf: org.apache.spark.sql.DataFrame,
-      cfg: ApmGraph.GraphCfg): Array[(String, String, Int, Long, Boolean, String)] =
-    Alerts.candidates(zBatchDf, cfg.alert)
+  def candidatesOf(zBatchDf: org.apache.spark.sql.DataFrame)
+      : Array[(String, String, Int, Long, Boolean, String)] =
+    Alerts.candidates(zBatchDf, ApmGraph.Alert)
       .select("server", "service", "lag", "ts_ms", "bad", "causes")
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3),
         r.getInt(4) == 1, r.getString(5)))
 
-  def candidates(spark: SparkSession, glob: String,
-      cfg: ApmGraph.GraphCfg): Array[(String, String, Int, Long, Boolean, String)] =
-    candidatesOf(zFold(spark, glob, cfg), cfg)
+  def candidates(spark: SparkSession, glob: String)
+      : Array[(String, String, Int, Long, Boolean, String)] =
+    candidatesOf(zFold(spark, glob))
 }

@@ -17,16 +17,15 @@ object FiredProbe {
   def main(args: Array[String]): Unit = {
     val logs = args(0)
     val spark = graft.GraftSession()
-    val cfg = ApmGraph.GraphCfg()
-    val candB = TopologyOracle.candidates(spark, s"$logs/net/*/*", cfg)
+    val candB = TopologyOracle.candidates(spark, s"$logs/net/*/*")
     println("== bad candidates ==")
     candB.filter(_._5).sortBy(c => (c._4, c._1)).foreach(c =>
       println(s"  ${c._4} ${c._1} ${c._2} lag=${c._3} causes=${c._6}"))
     println("== firedRef ==")
-    Alerts.firedRef(candB.toIndexedSeq, cfg.alert).foreach(f =>
+    Alerts.firedRef(candB.toIndexedSeq, ApmGraph.Alert).foreach(f =>
       println(s"  $f"))
     println("== alertsRef ==")
-    Alerts.alertsRef(candB.toIndexedSeq, cfg.alert).foreach(a =>
+    Alerts.alertsRef(candB.toIndexedSeq, ApmGraph.Alert).foreach(a =>
       println(s"  $a"))
     spark.stop()
   }
