@@ -65,8 +65,8 @@ object SparkEntry {
     // Integer-exact additive seasonal decomposition of the volume series.
     "a12_seasonal"     -> ((s, dir) => ApmStats.seasonalDecompose(s, dir)),
     "r2_candidates"    -> ((s, dir) => Alerts.candidates(zWin(s, dir), alertCfg)),
-    // R3+R4 fired set (alert_ts_ms..causes). The full `al` byte assembly
-    // (alertsFull) is pinned by ScalaTest + the r5 round-trip oracle;
+    // R3+R4 fired set (alert_ts_ms..causes). The `al` byte assembly
+    // (alCsvCol) is pinned by ScalaTest + the r5 round-trip oracle;
     // registering the fired SET keeps this row free of cross-engine
     // double->string rendering (Java 17's Double.toString predates the
     // JDK-19 shortest-repr fix and disagrees with DuckDB on some values).

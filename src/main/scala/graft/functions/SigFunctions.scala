@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *  - [[MinHashSig]]: k universal-hash minima `min_i (h*a_i + b_i) mod p`
   *    — was `transform` + `array_min` per family (k passes, every lambda
   *    call interpreted); now one pass with k running minima.
-  *  - [[SimHashSig]]: the SimHash bit-vote — for each of `bits` bit
-  *    positions, sign of `sum_h (+-1 by bit)` — was an `aggregate` fold
-  *    per bit (bits passes); now one pass with `bits` vote counters.
+  *  - [[SimHashBands]]: the banded SimHash bit-vote — for each packed
+  *    bit, sign of `sum_h (+-1 by bit)` over its band's remixed hash —
+  *    one pass with one vote counter per packed bit.
   *
   * Both are order-insensitive (min / integer sums), so they commute with
   * [[ShingleHashes]]'s first-occurrence ordering, and both mirror the
@@ -69,21 +69,6 @@ object MinHashSig {
     // emits >= 1 element), but stay total: empty array -> Long.MaxValue.
     new GenericArrayData(mins)
   }
-}
-
-case class SimHashSig(child: Expression, bits: Int) extends UnaryExpression {
-  require(bits >= 1 && bits <= 63, s"bits must be in [1,63], got $bits")
-  override def dataType: DataType = LongType
-  override protected def withNewChildInternal(newChild: Expression): SimHashSig =
-    copy(child = newChild)
-
-  override protected def nullSafeEval(input: Any): Any =
-    java.lang.Long.valueOf(
-      SimHashSig.compute(input.asInstanceOf[ArrayData], bits))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHashSig.compute($c, $bits);")
 }
 
 /** Banded SimHash: packs one `bitsPerBand`-bit SimHash sub-signature per
@@ -174,32 +159,5 @@ object SimHashBands {
       }
     }
     s"CAST(${terms.mkString(" + ")} AS BIGINT)"
-  }
-}
-
-object SimHashSig {
-  def sim_hash_sig(c: Column, bits: Int): Column =
-    ColumnBridge.column(SimHashSig(ColumnBridge.expression(c), bits))
-
-  def compute(hs: ArrayData, bits: Int): Long = {
-    val votes = new Array[Int](bits)
-    val n = hs.numElements()
-    var i = 0
-    while (i < n) {
-      val h = hs.getLong(i)
-      var b = 0
-      while (b < bits) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < bits) {
-      if (votes(b) > 0) sig |= (1L << b)
-      b += 1
-    }
-    sig
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -10,8 +10,9 @@ import scala.collection.mutable
   * - R1 suppression + R2 threshold predicates are pure column expressions
   *   (DuckDB-verified). Cause strings and check order match
   *   stream_process_alerts.js:398-424: hard-max on average, hard-max on
-  *   per75, then the signal-based checks (gated on hardMin ms + min tpm),
-  *   with `alertOnBothOnly` collapsing the two signal causes into one.
+  *   per75, then the signal-based checks (gated on hardMin ms + min tpm).
+  *   The reference's switch that collapses the two signal causes into
+  *   one (SURVEY.md R2) is fixed off here: each signal is its own cause.
   * - J4 config-override lookup: per-service `hardMaxMs` override applied
   *   via a broadcast join against a small config DataFrame
   *   (stream_process_alerts.js:335-346,398).
@@ -35,7 +36,6 @@ object Alerts {
       hardMaxMs: Double = 400.0,
       hardMinMs: Double = 50.0,
       hardMinTpm: Double = 0.005,
-      alertOnBothOnly: Boolean = false,
       suppressedLags: Seq[Int] = Seq.empty,
       suppressedServices: Seq[String] = Seq.empty,
       windowSz: Int = 60,
@@ -65,18 +65,11 @@ object Alerts {
       col("average") > cfg.hardMinMs && col("tpm") > cfg.hardMinTpm
     val sigP75 = !suppressed && col("per75_signal") > 0 &&
       col("per75") > cfg.hardMinMs && col("tpm") > cfg.hardMinTpm
-    val causes =
-      if (cfg.alertOnBothOnly)
-        concat_ws(",",
-          when(cAvgHard, "average exceeded hard ms threshold"),
-          when(cP75Hard, "per75 exceeded hard ms threshold"),
-          when(sigAvg && sigP75, "average and per75 UB exceeded"))
-      else
-        concat_ws(",",
-          when(cAvgHard, "average exceeded hard ms threshold"),
-          when(cP75Hard, "per75 exceeded hard ms threshold"),
-          when(sigAvg, "average UB exceeded"),
-          when(sigP75, "per75 UB exceeded"))
+    val causes = concat_ws(",",
+      when(cAvgHard, "average exceeded hard ms threshold"),
+      when(cP75Hard, "per75 exceeded hard ms threshold"),
+      when(sigAvg, "average UB exceeded"),
+      when(sigP75, "per75 UB exceeded"))
     withCfg
       .withColumn("causes", causes)
       .withColumn("bad", (col("causes") =!= "").cast("int"))
@@ -99,17 +92,11 @@ object Alerts {
     val sigAvg = s"(NOT $sup AND average_signal > 0 AND average > ${cfg.hardMinMs} AND tpm > ${cfg.hardMinTpm})"
     val sigP75 = s"(NOT $sup AND per75_signal > 0 AND per75 > ${cfg.hardMinMs} AND tpm > ${cfg.hardMinTpm})"
     val causes =
-      if (cfg.alertOnBothOnly)
-        s"""concat_ws(',',
-           CASE WHEN $cAvgHard THEN 'average exceeded hard ms threshold' END,
-           CASE WHEN $cP75Hard THEN 'per75 exceeded hard ms threshold' END,
-           CASE WHEN $sigAvg AND $sigP75 THEN 'average and per75 UB exceeded' END)"""
-      else
-        s"""concat_ws(',',
-           CASE WHEN $cAvgHard THEN 'average exceeded hard ms threshold' END,
-           CASE WHEN $cP75Hard THEN 'per75 exceeded hard ms threshold' END,
-           CASE WHEN $sigAvg THEN 'average UB exceeded' END,
-           CASE WHEN $sigP75 THEN 'per75 UB exceeded' END)"""
+      s"""concat_ws(',',
+         CASE WHEN $cAvgHard THEN 'average exceeded hard ms threshold' END,
+         CASE WHEN $cP75Hard THEN 'per75 exceeded hard ms threshold' END,
+         CASE WHEN $sigAvg THEN 'average UB exceeded' END,
+         CASE WHEN $sigP75 THEN 'per75 UB exceeded' END)"""
     s"""SELECT * EXCLUDE (hard_max),
           CASE WHEN causes <> '' THEN 1 ELSE 0 END AS bad
         FROM (
@@ -118,9 +105,10 @@ object Alerts {
           FROM ($fsSql) fs LEFT JOIN ($ovr) o ON fs.service = o.service)"""
   }
 
-  /** R3 + R4 + R5 — the stateful tail of the alert pipeline: leaky-bucket
+  /** R3 + R4 — the stateful tail of the alert pipeline: leaky-bucket
     * vote counter per (server, service, lag), then per-service cooldown
-    * dedup, then alert-record assembly. Input: [[candidates]] output.
+    * dedup. Input: [[candidates]] output. [[alCsvCol]] assembles an
+    * alert's R5 record.
     * Batch determinism: rows are processed in ts_ms order (ties: server,
     * lag) — the streaming variant processes in arrival order.
     */
@@ -261,25 +249,6 @@ object Alerts {
     concat_ws("|", lit("al"), col("alert_ts_ms").cast("string"),
       col("ts_ms").cast("string"), col("server"), col("service"),
       col("causes"), translate(fsCsvCol, "|", "&"))
-
-  /** [[alerts]] + R5 assembly: joins the emitted alerts back to their
-    * triggering fs rows (broadcast — the alert side is tiny by
-    * construction) and appends the serialized `entry` column.
-    */
-  def alertsFull(cand: DataFrame, cfg: AlertCfg = default): DataFrame = {
-    val fired = alerts(cand, cfg)
-    val keys = Seq("server", "service", "lag", "ts_ms")
-    val joined = cand.join(
-      broadcast(fired.withColumnRenamed("causes", "fired_causes")),
-      fired("alert_ts_ms") === cand("ts_ms") &&
-        fired("server") === cand("server") &&
-        fired("service") === cand("service") &&
-        fired("lag") === cand("lag"),
-      "inner")
-      .select(cand("*"), fired("alert_ts_ms"))
-    joined.select(col("alert_ts_ms"), col("server"), col("service"),
-      col("lag"), col("causes"), alCsvCol.as("entry"))
-  }
 
   /** R5 oracle query (stateless slice): assemble the `al` record for every
     * bad interval, then parse it all back out through the `&`-escape —

@@ -859,7 +859,6 @@ object Curation {
   }
 
   def leakSplitSql(valPermille: Int = 100): String = {
-    val h = polySql("CAST(doc_id AS VARCHAR) || '#split'")
     val hc = polySql("CAST(s.cluster_id AS VARCHAR) || '#split'")
     s"""WITH clusters AS (
           SELECT doc_id, cluster_id

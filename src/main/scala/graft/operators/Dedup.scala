@@ -1000,7 +1000,6 @@ object Dedup {
     * integer `//`/`%` band extraction is exact and nothing approaches
     * BIGINT overflow on either engine.
     */
-  val SimhashBands = 4
   val SimhashBandBits = 16
   // independent affine families (LCG-style odd multipliers, < 2^31;
   // h < 2^30 keeps h*a + b well inside BIGINT on both engines)

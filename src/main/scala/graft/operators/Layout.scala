@@ -3,77 +3,31 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Output-layout maintenance — the two file-level concerns that dominate
+/** Output-layout queries — the two file-level concerns that dominate
   * large-table operations and that no query-time optimizer can fix after
-  * the fact:
+  * the fact, each planned or measured from metadata-sized relations:
   *
   *  1. SMALL FILES: a streaming sink or over-parallel batch write leaves
   *     thousands of KB-size parquet files per partition; every later
   *     scan then pays one task + one footer read per file, and the
-  *     NameNode/list cost grows unbounded. [[compactDir]] rewrites a
-  *     directory to `ceil(bytes / targetBytes)` files, sizing from the
-  *     ACTUAL input byte count (known exactly from the file statuses —
-  *     no row-size guessing).
+  *     NameNode/list cost grows unbounded. q32 ([[compactionPlan]])
+  *     groups time-adjacent small files into target-size bins from
+  *     per-file byte counts — the work list of an OPTIMIZE rewrite.
   *
   *  2. CLUSTERING: parquet row-group pruning only helps if each file
-  *     covers a narrow range of the filter key. Compaction therefore
-  *     range-partitions on the caller's sort key before writing, so
-  *     file key-ranges are pairwise disjoint and a point/range filter
-  *     touches O(1) of the files instead of all of them.
-  *
-  * The rewrite is one range-shuffle of the data (the sampling pass of
-  * `repartitionByRange` is metadata-cheap), embarrassingly parallel at
-  * any scale.
+  *     covers a narrow range of the filter key. q30 ([[zorderLayout]])
+  *     models the range-partitioned file assignment of a linear and a
+  *     Z-order layout and counts the files a box filter touches under
+  *     each; q31 ([[bloomSkip]]) counts the files per-file bloom
+  *     filters let a point probe skip, clustered and in insertion order.
   */
 object Layout {
-
-  /** Total bytes of the parquet files under `dir` (exact, from the
-    * filesystem — this is the one number the engine can know without
-    * reading data).
-    */
-  def dirBytes(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    var total = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) total += f.getLen
-    }
-    total
-  }
-
-  /** Rewrite `inDir` to `outDir` as `ceil(inputBytes / targetBytes)`
-    * range-clustered files sorted by `sortCols` within each file.
-    * Returns the file count written.
-    */
-  def compactDir(spark: SparkSession, inDir: String, outDir: String,
-      targetBytes: Long, sortCols: Seq[Column]): Int = {
-    val bytes = dirBytes(spark, inDir)
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inDir)
-      .repartitionByRange(nFiles, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .write.mode("overwrite").parquet(outDir)
-    nFiles
-  }
-
-  /** Per-file (min, max) of a column across the files of a parquet dir —
-    * the data-skipping quality check: disjoint ranges mean a range
-    * filter prunes to O(1) files.
-    */
-  def fileRanges(spark: SparkSession, dir: String,
-      column: String): DataFrame =
-    spark.read.parquet(dir)
-      .select(col(column), input_file_name().as("f"))
-      .groupBy("f")
-      .agg(min(column).as("lo"), max(column).as("hi"))
 
   /** q32 — compaction PLANNING over file metadata: given the per-file
     * (key range, byte count) statistics a table format already
     * maintains, assign time-adjacent small files to target-size
     * compaction groups — the planning half of OPTIMIZE, whose output is
-    * the work list [[compactDir]]-style rewrites execute. Files here
+    * the work list of a range-clustered rewrite. Files here
     * are modeled as the per-hour outputs of a streaming sink (the
     * classic small-file producer), with a deterministic byte estimate
     * (48 bytes/row + the type string) so both engines compute identical
@@ -86,8 +40,8 @@ object Layout {
     * relation — ~800k rows for 100 TB of 128 MB files — so the
     * single-task running-sum window is honest at any corpus size (the
     * metadata is smaller than one data partition); the expensive part,
-    * the rewrite itself, is the embarrassingly-parallel
-    * [[compactDir]] executed per emitted bin.
+    * the rewrite itself, is one embarrassingly-parallel range shuffle
+    * per emitted bin, which this query plans and does not run.
     */
   def compactionPlan(spark: SparkSession, sfDir: String,
       nBins: Int = 32): DataFrame = {
@@ -148,8 +102,8 @@ object Layout {
     * index from the corpus start, zkey = bit-interleave(x, y), rows
     * assigned to `files` RANGE buckets by equal-depth boundaries
     * computed from the key's cumulative histogram — the deterministic
-    * model of `repartitionByRange(zkey)` (which is how [[compactDir]]
-    * applies the layout at scale; the sampled range shuffle picks
+    * model of `repartitionByRange(zkey)` (which is how a rewrite would
+    * apply the layout at scale; the sampled range shuffle picks
     * boundaries so files carry ~equal row counts, and so does this:
     * a key whose first row is the r-th smallest lands in file
     * floor(r * files / N), equal keys colocating exactly as a range

@@ -1351,7 +1351,6 @@ object Similarity {
     */
   def indexRetention(spark: SparkSession, sfDir: String,
       keepLast: Int = 2): DataFrame = {
-    import spark.implicits._
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_ann_retn_" +
       Integer.toHexString(sfDir.hashCode) + "_" +
       spark.sparkContext.applicationId

@@ -346,15 +346,6 @@ object ApmGraph {
   def runStage4(spark: SparkSession, workDir: String, cfg: GraphCfg): Unit =
     await(startStage4(spark, workDir, cfg))
 
-  /** Drain the whole graph once, in topological order. */
-  def runAll(spark: SparkSession, logsGlob: String, workDir: String,
-      cfg: GraphCfg): Unit = {
-    runStage1(spark, logsGlob, workDir, cfg)
-    runStage2(spark, workDir, cfg)
-    runStage3(spark, workDir, cfg)
-    runStage4(spark, workDir, cfg)
-  }
-
   // -------------------------------------------------- queue-handoff graph
 
   /** Stage 3 from `in` — a zscore directory or a z topic — to the fired

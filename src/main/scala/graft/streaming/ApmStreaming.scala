@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import scala.collection.mutable
@@ -46,13 +46,14 @@ object ApmStreaming {
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** A1-A5: sliding 5-min/10-s window stats over a streaming tx frame
-    * with event-time column `end_ts` (TimestampType) — emits per closed
-    * window once the 1-minute watermark passes (A4 lateness buffer).
+  /** A1-A5: sliding `windowLen`/`slide` window stats over a streaming tx
+    * frame with event-time column `end_ts` (TimestampType) — emits per
+    * closed window once the `lateness` watermark passes (A4 lateness
+    * buffer). The graph runs [[ApmGraph.WindowLen]], [[ApmGraph.Slide]]
+    * and [[ApmGraph.Lateness]] (60 s / 10 s / 10 s).
     */
-  def slidingStatsStream(tx: DataFrame,
-      windowLen: String = "300 seconds", slide: String = "10 seconds",
-      lateness: String = "60 seconds"): DataFrame = {
+  def slidingStatsStream(tx: DataFrame, windowLen: String, slide: String,
+      lateness: String): DataFrame = {
     // tpm denominator = the actual window length in minutes (the
     // reference's fixed-denominator semantics, stream_calc_stats.js:186)
     val winSec = windowLen.trim.split("\\s+")(0).toDouble *

@@ -112,10 +112,8 @@ object ScaleUp {
         case org.apache.spark.sql.types.LongType => col("ts")
         case _ => unix_micros(col("ts").cast("timestamp")) * 1000L
       })
-    val Row(tsMin: Long, tsMax: Long) = {
-      import org.apache.spark.sql.Row
+    val Row(tsMin: Long, tsMax: Long) =
       evNanos.agg(min("ts_n"), max("ts_n")).head()
-    }
     val span = tsMax - tsMin + 600L * 1000000000L // range + one interval
     write("events")(reps(evNanos)
       .withColumn("event_id", offset("event_id"))

@@ -70,7 +70,6 @@ class AnnIndexSpec extends AnyFunSuite with TestSession {
   }
 
   test("delete excludes tombstoned ids, promotes survivors, never rescores") {
-    import org.apache.spark.sql.functions._
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     val full = rows(Similarity.ivfPq(spark, sf))

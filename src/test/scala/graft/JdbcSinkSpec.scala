@@ -46,7 +46,6 @@ class JdbcSinkSpec extends AnyFunSuite with TestSession {
 
   test("stats jsonb column survives the DB round-trip via from_json") {
     val url = derbyUrl()
-    val sf = "/root/testdata/sf0.001"
     val cand = SparkEntry.entry(spark).limit(200).cache()
     val rows = JdbcSink.statsTableRows(cand)
     JdbcSink.writeBatch(rows, url, "stats")

@@ -1,54 +1,13 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Layout
 
-/** Output-layout maintenance: small-file compaction sized from actual
-  * input bytes, and range clustering that makes per-file key ranges
-  * disjoint (the precondition for row-group/file pruning to pay off).
+/** Output-layout queries: compaction planning, bloom-filter skipping and
+  * Z-order clustering (the preconditions for row-group/file pruning to
+  * pay off).
   */
 class LayoutSpec extends AnyFunSuite with TestSession {
-
-  test("compaction: file count from real bytes, rows preserved, " +
-    "ranges disjoint") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_layout")
-    val inDir = s"$base/in"
-    val outDir = s"$base/out"
-    // the pathological input: 64 tiny files from an over-parallel write
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .repartition(64).write.parquet(inDir)
-    val nIn = new java.io.File(inDir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(nIn == 64, s"precondition: $nIn small files")
-
-    val target = Layout.dirBytes(spark, inDir) / 4 + 1
-    val nFiles = Layout.compactDir(spark, inDir, outDir, target,
-      Seq(col("event_id")))
-    assert(nFiles == 4, s"expected 4 target files, got $nFiles")
-    val written = new java.io.File(outDir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    // range partitions can be uneven but the count must be the target
-    assert(written == nFiles, s"wrote $written files")
-
-    // nothing lost, nothing duplicated
-    val inIds = spark.read.parquet(inDir).select("event_id")
-      .as[Long].collect().sorted
-    val outIds = spark.read.parquet(outDir).select("event_id")
-      .as[Long].collect().sorted
-    assert(outIds.toSeq == inIds.toSeq)
-
-    // clustering: per-file [min, max] of the sort key must be pairwise
-    // disjoint — a range filter then touches O(1) files
-    val ranges = Layout.fileRanges(spark, outDir, "event_id")
-      .select("lo", "hi").as[(Long, Long)].collect().sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) =>
-        assert(hi1 < lo2, s"overlapping file ranges: $hi1 >= $lo2")
-      case _ =>
-    }
-  }
 
   test("bloomSkip: no false negatives, clustering concentrates probes") {
     val rows = graft.operators.Layout.bloomSkip(spark, "/root/testdata/sf0.001").collect()

@@ -261,10 +261,8 @@ class PlanSpec extends AnyFunSuite with TestSession {
 
   test("d5 simhash pairs: 16-bit bands (65536-value keyspace, not 256)") {
     import org.apache.spark.sql.functions._
-    // construction pin: 4 bands x 16 bits = 64-bit signature
+    // construction pin: 16-bit bands
     assert(graft.operators.Dedup.SimhashBandBits == 16)
-    assert(graft.operators.Dedup.SimhashBands *
-      graft.operators.Dedup.SimhashBandBits == 64)
     val sig = graft.operators.Dedup.simhash(spark, sf)
     val mx = sig.agg(max("sig_lo"), max("sig_hi")).head
     assert(mx.getLong(0) < (1L << 32) && mx.getLong(1) < (1L << 32))

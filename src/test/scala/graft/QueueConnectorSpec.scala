@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{ApmGraph, ContractConsumer, FileTopic, QueueRegistry, QueueTaskMeta, QueueWriterFactory}

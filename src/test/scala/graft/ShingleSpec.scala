@@ -5,7 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 import graft.functions.MinHashSig.min_hash_sig
 import graft.functions.ShingleHashes.shingle_hashes
-import graft.functions.SimHashSig.sim_hash_sig
 
 /** The fused ShingleHashes expression vs an independent re-derivation of
   * its contract (split -> k-gram join -> PolyHash fold -> hash-distinct),
@@ -110,23 +109,6 @@ class ShingleSpec extends AnyFunSuite with TestSession {
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     rows.foreach { case (id, hs) =>
       val want = as.zip(bs).map { case (a, b) => hs.map(h => (h * a + b) % p).min }
-      assert(got(id) == want, s"id=$id")
-    }
-  }
-
-  test("sim_hash_sig == per-bit vote sign") {
-    import spark.implicits._
-    val rnd = new Random(13)
-    val rows = (1 to 100).map(i =>
-      (i.toLong, Vector.fill(1 + rnd.nextInt(40))(rnd.nextLong(1000000007L))))
-    val got = rows.toDF("id", "hs")
-      .select(col("id"), sim_hash_sig(col("hs"), 32).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    rows.foreach { case (id, hs) =>
-      val want = (0 until 32).map { bit =>
-        val vote = hs.map(h => if (((h >> bit) & 1L) == 1L) 1 else -1).sum
-        if (vote > 0) 1L << bit else 0L
-      }.sum
       assert(got(id) == want, s"id=$id")
     }
   }

@@ -244,11 +244,11 @@ class SparkOpsSpec extends AnyFunSuite with TestSession {
     assert(got.toSeq == exp)
   }
 
-  test("alertsFull == fired set + byte-assembled al entry per alert") {
+  test("R5 al entry: byte layout, and assemblyRoundtrip parses it back") {
     import spark.implicits._
-    // candidates-shaped frame: two services, 30 intervals, a consecutive
-    // bad run so the vote counter fires; per95 None exercises the ""
-    // null rendering inside the nested fs block
+    // candidates-shaped frame: two services, 30 intervals, the first 10
+    // of each bad; per95 None exercises the "" null rendering inside the
+    // nested fs block
     val rows = for {
       svc <- Seq("svcA", "svcB"); i <- 0 until 30
     } yield ("srv0", svc, 6, i * 10000L, 1.0 + i,
@@ -263,15 +263,13 @@ class SparkOpsSpec extends AnyFunSuite with TestSession {
     val cand = base
       .withColumn("causes", when(col("ts_ms") < 100000L, lit("cause")).otherwise(lit("")))
       .withColumn("bad", (col("causes") =!= "").cast("int"))
-    val cfg = Alerts.AlertCfg(windowSz = 5, voteThreshold = 3, cooldownMs = 25000L)
-    val fired = Alerts.alerts(cand, cfg).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3), r.getString(4)))
-      .toSet
-    assert(fired.nonEmpty, "fixture produced no alerts")
-    val full = Alerts.alertsFull(cand, cfg).collect()
-    assert(full.map(r => (r.getLong(0), r.getString(1), r.getString(2),
-      r.getInt(3), r.getString(4))).toSet == fired)
-    full.foreach { r =>
+    val entries = cand.filter(col("bad") === 1)
+      .withColumn("alert_ts_ms", col("ts_ms"))
+      .select(col("ts_ms"), col("server"), col("service"), col("lag"),
+        col("causes"), Alerts.alCsvCol.as("entry"))
+      .collect()
+    assert(entries.length == 20, "one entry per bad interval")
+    entries.foreach { r =>
       val entry = r.getString(5)
       val p = entry.split("\\|", -1)
       assert(p(0) == "al" && p(1).toLong == r.getLong(0) &&
@@ -284,6 +282,19 @@ class SparkOpsSpec extends AnyFunSuite with TestSession {
       val p95block = nested(8).split(":", -1)
       val i = (r.getLong(0) / 10000L).toInt
       assert((p95block(0) == "") == (i % 3 == 0), entry)
+    }
+    // the parsed-back fields are the fixture's, per95 None -> null
+    val back = Alerts.assemblyRoundtrip(cand)
+      .select("alert_ts", "service", "nested_tag", "lag", "tpm2",
+        "average_v", "per95_v")
+      .collect()
+    assert(back.length == entries.length)
+    back.foreach { r =>
+      val i = (r.getLong(0) / 10000L).toInt
+      assert(r.getString(2) == "fs" && r.getInt(3) == 6, r)
+      assert(r.getDouble(4) == 1.0 + i && r.getDouble(5) == 100.0 + i, r)
+      assert(r.isNullAt(6) == (i % 3 == 0), r)
+      if (!r.isNullAt(6)) assert(r.getDouble(6) == 120.0 + i, r)
     }
   }
 

@@ -7,7 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 import graft.streaming.ApmStreaming
 import graft.operators.{Alerts, ApmStats, Sessionize, ZScore}
-import graft.functions.RefStats
 
 /** Structured Streaming semantics tests with MemoryStream: watermarked
   * sliding-window stats (A4/A5), stateful z-score (Z2), alert folds
@@ -149,13 +148,15 @@ class StreamingSpec extends AnyFunSuite with TestSession with RocksDbSupport {
     val streamExpr = ApmStreaming.slidingStatsStream(
         tx.select(col("server"), col("service"),
           timestamp_millis(col("end_ms")).as("end_ts"), col("elapsed")),
-        windowLen = s"${winN * 10} seconds", slide = "10 seconds")
+        windowLen = s"${winN * 10} seconds", slide = "10 seconds",
+        lateness = "60 seconds")
       .filter(col("ts_ms") <= (mx + 1) * I)
-    val b = batch.collect().map(_.toSeq).toSet
+    // rows as multisets (row -> count): a window emitted twice fails
+    val b = batch.collect().map(_.toSeq).groupMapReduce(identity)(_ => 1)(_ + _)
     val s = streamExpr.select(batch.columns.map(col): _*)
-      .collect().map(_.toSeq).toSet
-    assert(s == b,
-      s"onlyStream=${(s -- b).take(3)} onlyBatch=${(b -- s).take(3)}")
+      .collect().map(_.toSeq).groupMapReduce(identity)(_ => 1)(_ + _)
+    assert(s == b, s"onlyStream=${(s.toSet -- b.toSet).take(3)} " +
+      s"onlyBatch=${(b.toSet -- s.toSet).take(3)}")
   }
 
   test("sessionize: streaming session_window == batch on same events") {

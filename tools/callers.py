@@ -12,6 +12,13 @@ it is declared, no other code names it, and the member is printed.
 Tests do not count as callers: a member that only a spec reaches is
 listed.
 
+Two kinds of member are reached from outside the code and are listed
+apart from the rest: a `def main` together with the object that encloses
+it (the JVM calls them), and each class that a file under
+src/main/resources/META-INF/services names (Java's ServiceLoader
+instantiates it). So the "no caller" list holds only what needs a
+reason to stay.
+
 Skipped: `private` members (only their own file can name them),
 `override` and `implicit` members, and the names that Scala syntax calls
 without naming them (`apply`, `unapply`, `unapplySeq`, `update`). A name
@@ -26,10 +33,11 @@ a `<Name>Cfg(...)` call, or by a named argument of any `copy(...)` call
 `Cfg` class with that name). Tests do not count here either.
 
 Usage: python3 tools/callers.py [repo_root]
-Prints one `<path>:<line> <kind> <name>` line per member, then
-`<n> members with no caller`; then one `<path>:<line> field
-<Class>.<field>` line per unset field, then `<n> config fields never
-set`.
+Prints three sections of `<path>:<line> <kind> <name>` lines, each under
+a `# <heading>` line and closed by a count line: `<n> mains and their
+objects`, `<n> service providers` and `<n> members with no caller`.
+Then one `<path>:<line> field <Class>.<field>` line per unset field,
+then `<n> config fields never set`.
 """
 import collections
 import pathlib
@@ -37,6 +45,7 @@ import re
 import sys
 
 MAIN = "src/main"
+SERVICES = "src/main/resources/META-INF/services"
 ROOTS = (MAIN, "apmbench/src")
 KINDS = ("def", "val", "var", "object", "class", "trait")
 SYNTAX_CALLED = {"apply", "unapply", "unapplySeq", "update"}
@@ -105,19 +114,21 @@ def strip(text):
 
 
 def members(blank):
-    """Yield (offset, kind, name, modifiers) for each member-level
-    declaration in a blanked source."""
-    stack = []          # one entry per open brace: True = template body
+    """Yield (offset, kind, name, modifiers, owner) for each member-level
+    declaration in a blanked source. `owner` is the name of the enclosing
+    object, class or trait, or None at the top of the file."""
+    stack = []          # one entry per open brace: its template's name,
+                        # or None for a block
     parens = 0
-    pending = False     # an object/class/trait header awaits its body
+    pending = None      # the object/class/trait whose body comes next
     last = 0            # start of the current statement's modifiers
     for m in re.finditer(r"[{}();\n]|\b(?:" + "|".join(KINDS) + r")\b",
                          blank):
         tok = m.group()
         if tok == "{":
-            stack.append(pending and parens == 0)
+            stack.append(pending if parens == 0 else None)
             if parens == 0:
-                pending = False
+                pending = None
             last = m.end()
         elif tok == "}":
             if stack:
@@ -134,11 +145,13 @@ def members(blank):
             d = DECL.match(blank, m.start())
             if d is None or parens:
                 continue
-            pending = tok in ("object", "class", "trait")
+            pending = (d.group(2) if tok in ("object", "class", "trait")
+                       else None)
             if all(stack):
                 line_start = blank.rfind("\n", 0, m.start()) + 1
                 mods = blank[max(last, line_start):m.start()]
-                yield m.start(), tok, d.group(2), mods
+                yield (m.start(), tok, d.group(2), mods,
+                       stack[-1] if stack else None)
 
 
 def args_at(blank, open_paren):
@@ -212,21 +225,45 @@ def main(root):
     decls = collections.Counter()
     for _, blank in sources.values():
         decls.update(d.group(2) for d in DECL.finditer(blank))
-    found = []
+    providers = set()
+    for f in sorted((base / SERVICES).glob("*")):
+        for line in f.read_text(encoding="utf-8").splitlines():
+            line = line.split("#", 1)[0].strip()
+            if line:
+                providers.add(line)
+    mains, loaded, found = [], [], []
     for f, (_, blank) in sources.items():
         if not f.is_relative_to(base / MAIN):
             continue
-        for off, kind, name, mods in members(blank):
+        pkg = re.search(r"^\s*package\s+([\w.]+)", blank, re.M)
+        pkg = pkg.group(1) + "." if pkg else ""
+        decl = list(members(blank))
+        # objects whose `def main` the JVM calls
+        entry = {o for _, k, n, _, o in decl if k == "def" and n == "main"}
+        for off, kind, name, mods, owner in decl:
             if (re.search(r"\bprivate\b(?!\s*\[)", mods)
                     or re.search(r"\b(override|implicit)\b", mods)
-                    or name in SYNTAX_CALLED):
+                    or name in SYNTAX_CALLED or uses[name] > decls[name]):
                 continue
-            if uses[name] <= decls[name]:
-                line = blank.count("\n", 0, off) + 1
-                found.append(f"{f.relative_to(base)}:{line} {kind} {name}")
-    for row in found:
-        print(row)
-    print(f"{len(found)} members with no caller")
+            line = blank.count("\n", 0, off) + 1
+            row = f"{f.relative_to(base)}:{line} {kind} {name}"
+            if ((kind == "def" and name == "main")
+                    or (kind == "object" and owner is None
+                        and name in entry)):
+                mains.append(row)
+            elif kind == "class" and owner is None and pkg + name in providers:
+                loaded.append(row)
+            else:
+                found.append(row)
+    for heading, rows, tail in (
+            ("mains: the JVM calls them", mains, "mains and their objects"),
+            ("service providers: META-INF/services names them", loaded,
+             "service providers"),
+            ("no caller", found, "members with no caller")):
+        print(f"# {heading}")
+        for row in rows:
+            print(row)
+        print(f"{len(rows)} {tail}")
     unset = list(unset_cfg_fields(base, sources))
     for row in unset:
         print(row)
