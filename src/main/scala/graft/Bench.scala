@@ -204,6 +204,8 @@ object Bench {
         graft.streaming.ApmGraph.runStage1(spark, glob, work, cfg)
         StreamCorpus.writeSentinel(logs, offsetMs = 100000000L)
         graft.streaming.ApmGraph.runStage1(spark, glob, work, cfg)
+        // the stats query runs between stage-1 calls; no more follow
+        graft.streaming.ApmGraph.stop(spark, work)
         graft.streaming.ApmGraph.runStage2(spark, work, cfg)
         // stages 3+4 timed separately: the same boundary also runs over
         // the FILE-BACKED queue transport below, and s34_sec is the

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 
 /** The synthesized log corpus shared by the bench's streaming leg
   * (Bench.scala stream block) and the scaling probe
@@ -44,10 +45,7 @@ object StreamCorpus {
           }
         }
       }
-      val p = Paths.get(logsDir, "net", s"host$s", "server.log")
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, sb.toString)
-      ()
+      publish(Paths.get(logsDir, "net", s"host$s", "server.log"), sb.toString)
     }
     nLines
   }
@@ -57,12 +55,26 @@ object StreamCorpus {
     * event-time span (the bench's 1200-interval corpus uses 1e8 ms; a
     * time-scaled probe corpus needs more).
     */
-  def writeSentinel(logsDir: String, offsetMs: Long): Unit = {
-    val p = Paths.get(logsDir, "net", "zz", "server.log")
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, s"[999999] ${fmt.format(
-      java.time.Instant.ofEpochMilli(t0 + offsetMs))} " +
+  def writeSentinel(logsDir: String, offsetMs: Long): Unit =
+    publish(Paths.get(logsDir, "net", "zz", "server.log"), s"[999999] ${
+      fmt.format(java.time.Instant.ofEpochMilli(t0 + offsetMs))} " +
       "[a:b:42] INFO CommonTiming::Stop S:checkout handled in time 1\n")
+
+  /** Writes `content` to the log file `target` so that a tailing reader
+    * sees all of it or none: it goes to the hidden `.<name>` beside
+    * `target` (the `graftlogs` source skips hidden names), gets `mtimeMs`
+    * as its modification time if one is given, and is renamed in. The
+    * source reads a file once, at the length it first lists, so a log
+    * written in place could be admitted short (the source's contract,
+    * LogFileStream.scala).
+    */
+  def publish(target: Path, content: String,
+      mtimeMs: Option[Long] = None): Unit = {
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(s".${target.getFileName}")
+    Files.writeString(tmp, content)
+    mtimeMs.foreach(ms => Files.setLastModifiedTime(tmp, FileTime.fromMillis(ms)))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
     ()
   }
 }

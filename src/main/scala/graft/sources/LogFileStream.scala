@@ -40,7 +40,10 @@ import org.apache.spark.util.SerializableConfiguration
   *  - admission order is oldest modification time first, then path;
   *    `maxFilesPerTrigger` is the per-batch bound (`ReadLimit.maxFiles`);
   *  - under `Trigger.AvailableNow` the listing is taken once at query
-  *    start and drained in bounded batches;
+  *    start and drained in bounded batches; under any other trigger
+  *    (stage 1's stats query runs on `ProcessingTime(0)`) every trigger
+  *    lists, and an idle one costs that listing, not a pass over every
+  *    file ever admitted;
   *  - hidden names (`_*`, `.*`) are skipped, as Spark's file index does.
   *
   * The offset is the JSON list of every admitted file with its length
@@ -130,23 +133,17 @@ object LogFileOffset {
   }
 }
 
-class LogFileMicroBatchStream(glob: String, maxFiles: Int, parallelism: Int,
-    conf: Configuration)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow {
-  private case class Listed(file: LogFile, mtime: Long)
-
-  // AvailableNow drains the listing taken at query start, as Spark's
-  // file source does; without it every batch would re-list
-  @volatile private var drainListing: Option[Seq[Listed]] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    drainListing = Some(list())
+/** The files a `graftlogs` glob names, by the source's own rule. Stage 1
+  * lists them the same way to know which files a call must see consumed.
+  */
+object LogFileMicroBatchStream {
+  /** A file the glob names now, with its modification time. */
+  case class Listed(file: LogFile, mtime: Long)
 
   /** One driver-side glob over files; directories it matches are not
     * descended into, and hidden names are skipped.
     */
-  private def list(): Seq[Listed] = {
+  def list(glob: String, conf: Configuration): Seq[Listed] = {
     val pattern = new Path(glob)
     val fs = pattern.getFileSystem(conf)
     def visible(st: FileStatus): Boolean = {
@@ -162,6 +159,30 @@ class LogFileMicroBatchStream(glob: String, maxFiles: Int, parallelism: Int,
     Option(fs.globStatus(pattern)).toSeq.flatten.filter(visible).map(st =>
       Listed(LogFile(uri(st.getPath), st.getLen), st.getModificationTime))
   }
+}
+
+class LogFileMicroBatchStream(glob: String, maxFiles: Int, parallelism: Int,
+    conf: Configuration)
+    extends MicroBatchStream with SupportsAdmissionControl
+    with SupportsTriggerAvailableNow {
+  import LogFileMicroBatchStream.Listed
+
+  // AvailableNow drains the listing taken at query start, as Spark's
+  // file source does; without it every batch would re-list
+  @volatile private var drainListing: Option[Seq[Listed]] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    drainListing = Some(list())
+
+  private def list(): Seq[Listed] = LogFileMicroBatchStream.list(glob, conf)
+
+  // The paths of `last`, the offset latestOffset last returned. A running
+  // query polls with that offset as its start, so an idle poll costs
+  // the listing and not a set rebuilt from every file ever admitted; a
+  // start that is not `last` (a query resumed from its checkpoint)
+  // rebuilds it.
+  private var last: LogFileOffset = LogFileOffset(Vector.empty)
+  private var seen: Set[String] = Set.empty
 
   override def initialOffset(): Offset = LogFileOffset(Vector.empty)
 
@@ -169,7 +190,7 @@ class LogFileMicroBatchStream(glob: String, maxFiles: Int, parallelism: Int,
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[LogFileOffset]
-    val seen = s.files.iterator.map(_.path).toSet
+    if (s != last) { last = s; seen = s.files.iterator.map(_.path).toSet }
     val fresh = drainListing.getOrElse(list())
       .filterNot(l => seen(l.file.path))
       .sortBy(l => (l.mtime, l.file.path))
@@ -177,7 +198,11 @@ class LogFileMicroBatchStream(glob: String, maxFiles: Int, parallelism: Int,
       case m: ReadMaxFiles => fresh.take(m.maxFiles())
       case _ => fresh
     }
-    if (admitted.isEmpty) s else LogFileOffset(s.files ++ admitted.map(_.file))
+    if (admitted.nonEmpty) {
+      last = LogFileOffset(s.files ++ admitted.map(_.file))
+      seen ++= admitted.iterator.map(_.file.path)
+    }
+    last
   }
 
   override def latestOffset(): Offset =

@@ -1,12 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import java.time.Instant
+import java.util.UUID
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.catalyst.util.IntervalUtils
+import org.apache.spark.sql.execution.streaming.checkpointing.{CommitLog, FileSystemBasedCheckpointFileManager, OffsetSeqLog}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryListener, StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.operators.{Alerts, Parsing, ZScore}
-import graft.sources.LogFileSource
+import graft.sources.{LogFileMicroBatchStream, LogFileOffset, LogFileSource}
 
 /** The reference's six-process dataflow as ONE running streaming graph
   * (SURVEY.md §2.8; the reference topology is
@@ -39,8 +43,13 @@ import graft.sources.LogFileSource
   * Checkpoints give each stage S7 resume-exactly-once. A stage's
   * checkpoint, sink and committer files all go through one `file:` file
   * system, [[NioLocalFileSystem]], which forks no process per file.
-  * `Trigger.AvailableNow` drains whatever is pending and stops, which is
-  * also the deterministic test harness mode. The broker contract the
+  * Over the parquet handoff, stage 1's stats query runs between calls,
+  * like the reference's long-lived stats process: a [[runStage1]] call
+  * waits until it has committed the rows the logs visible at the call's
+  * start close, and [[stop]] ends it. The tee, stages 2-4 and every
+  * queue-handoff stage drain on each call under `Trigger.AvailableNow`,
+  * which runs whatever is pending and stops; it is also the
+  * deterministic test harness mode. The broker contract the
   * Kafka transport would add (partitioned offsets, poll batching,
   * committed-offset resume, at-least-once redelivery) is modeled and
   * test-pinned on [[FileTopic]].
@@ -163,7 +172,12 @@ object ApmGraph {
     * order — the only order a broker guarantees — is per-key order.
     */
   private def write(df: DataFrame, keys: Seq[String], out: Edge,
-      checkpoint: String): StreamingQuery = {
+      checkpoint: String): StreamingQuery =
+    writer(df, keys, out, checkpoint).trigger(Trigger.AvailableNow()).start()
+
+  /** [[write]]'s query, not yet started: the caller sets the trigger. */
+  private def writer(df: DataFrame, keys: Seq[String], out: Edge,
+      checkpoint: String): DataStreamWriter[Row] = {
     val w = out match {
       case ParquetDir(path) =>
         df.repartition(keys.map(col): _*)
@@ -176,8 +190,6 @@ object ApmGraph {
           .option("topic", name).option("dir", dir)
     }
     w.option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
   }
 
   /** Set `spark` up for starting streaming queries; every stage calls it
@@ -233,11 +245,12 @@ object ApmGraph {
 
   // ---------------------------------------------------------- the stages
 
-  /** Stage 1: tail logs -> route -> parse exits -> window stats -> `out`,
-    * run to completion. Over a parquet handoff the parsed tx stream is
-    * also teed raw to `tee/` (R6: same stream, second sink, own
-    * checkpoint). Over a queue the stats window's watermark drops are
-    * published on `t_ops` ([[awaitWithDropMetrics]]).
+  /** Stage 1: tail logs -> route -> parse exits -> window stats -> `out`.
+    * Over a parquet handoff the stats query keeps running between calls
+    * ([[awaitStats]]) and the parsed tx stream is also teed raw to `tee/`
+    * (R6: same stream, second sink, own checkpoint), drained per call.
+    * Over a queue the stats query drains per call and its window's
+    * watermark drops are published on `t_ops` ([[awaitWithDropMetrics]]).
     */
   private def stage1(spark: SparkSession, logsGlob: String, workDir: String,
       cfg: GraphCfg, out: Edge): Unit = {
@@ -249,20 +262,26 @@ object ApmGraph {
         timestamp_millis(col("end_ms")).as("end_ts"), col("elapsed"))
     val stats = ApmStreaming.slidingStatsStream(
       parsed, WindowLen, Slide, Lateness)
-    def start = write(stats, Seq("server", "service"), out,
-      checkpoint(workDir, "stats", out))
+    val ckpt = checkpoint(workDir, "stats", out)
+    val w = writer(stats, Seq("server", "service"), out, ckpt)
     out match {
       case _: ParquetDir =>
+        val visible = LogFileMicroBatchStream.list(logsGlob,
+          spark.sparkContext.hadoopConfiguration).map(_.file.path).toSet
+        val watch = statsWatch(spark, workDir, ckpt,
+          w.queryName(queryName("stats", workDir))
+            .trigger(Trigger.ProcessingTime(0L)).start())
         val tee = parsed.writeStream
           .format("parquet")
+          .queryName(queryName("tee", workDir))
           .option("path", s"$workDir/tee")
           .option("checkpointLocation", s"$workDir/ckpt_tee")
           .trigger(Trigger.AvailableNow())
           .start()
-        val q = start
-        await(tee); await(q)
+        try awaitStats(spark, watch, visible) finally await(tee)
       case Topic(_, dir) =>
-        awaitWithDropMetrics(spark, start, "stage1", dir)
+        awaitWithDropMetrics(spark,
+          w.trigger(Trigger.AvailableNow()).start(), "stage1", dir)
     }
   }
 
@@ -307,17 +326,42 @@ object ApmGraph {
   }
 
   // ------------------------------------------------ parquet-handoff graph
-  // Each stage has a `runStageN` that drains it to completion
-  // (AvailableNow), which is also the deterministic test mode; stages 2
-  // and 4 also have a `startStageN` returning the running query (a real
-  // deployment starts all four concurrently on processing-time
-  // triggers; GraphFaultSpec uses the handles to kill queries
-  // mid-drain). Every stage takes the same `GraphCfg`; only stage 1
-  // reads it.
+  // Each stage has a `runStageN` that returns once the stage has
+  // consumed its pending input. Stage 1's stats query keeps running
+  // between calls (`stop` ends it); the tee and stages 2-4 drain to
+  // completion (AvailableNow) on each call, which is also the
+  // deterministic test mode. Stages 2 and 4 also have a `startStageN`
+  // returning the running query (GraphFaultSpec uses the handles to
+  // kill queries mid-drain). Every stage takes the same `GraphCfg`;
+  // only stage 1 reads it.
 
+  /** Stage 1 over the parquet handoff. Returns once the stats query has
+    * committed every row that the logs visible at the call's start close
+    * (see [[awaitStats]]) and the tee has drained them. The stats query
+    * is started on the first call for `workDir` and left running; a
+    * first call for another work dir stops it. Calls for one work dir
+    * are serial, and a file listed at a call's start must stay until it
+    * is admitted (the source's contract: writers publish whole files and
+    * rotate out only files that were read).
+    */
   def runStage1(spark: SparkSession, logsGlob: String, workDir: String,
       cfg: GraphCfg): Unit =
     stage1(spark, logsGlob, workDir, cfg, ParquetDir(s"$workDir/stats"))
+
+  /** Stops the queries of the graph under `workDir` that outlive a call
+    * (stage 1's stats query) and drops their listener. A caller that
+    * finishes with a graph calls it; a later [[runStage1]] restarts the
+    * query from its checkpoint.
+    */
+  def stop(spark: SparkSession, workDir: String): Unit = {
+    spark.streams.listListeners().foreach {
+      case w: StatsWatch if w.workDir == workDir =>
+        spark.streams.removeListener(w)
+      case _ =>
+    }
+    val names = Set("stats", "tee").map(queryName(_, workDir))
+    spark.streams.active.filter(q => names(q.name)).foreach(_.stop())
+  }
 
   /** `maxFilesPerTrigger` caps how many stats files one micro-batch
     * admits (GraphFaultSpec uses it to split a drain into epochs it can
@@ -419,52 +463,167 @@ object ApmGraph {
     }
   }
 
-  /** EXACT per-query watermark-drop accumulator. `recentProgress` is a
-    * ring buffer capped at `numRecentProgressUpdates` (default 100), so
-    * summing it after a long recovery drain (>100 micro-batches) would
-    * silently lose the early batches' drops — the exact blindness this
-    * channel exists to remove. A listener sees every progress event.
-    *
-    * Registered BEFORE the query starts: the run id does not exist yet,
-    * so events that arrive before [[bind]] are buffered and replayed
-    * (runId-filtered) once the id is known — a listener registered
-    * after `start()` could miss batch 0's event outright, undercounting
-    * drops AND leaving `maxBatchId` forever short so the bounded
-    * post-termination drain always spins its full deadline.
+  // ------------------------------------------------ stage 1 between calls
+
+  /** The name of stage `stage`'s query of the graph under `workDir`, so
+    * that `spark.streams.active` finds a graph's queries.
     */
-  private class DropListener
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    val wmDropped = new java.util.concurrent.atomic.AtomicLong(0L)
-    val maxBatchId = new java.util.concurrent.atomic.AtomicLong(-1L)
-    private var runId: java.util.UUID = null
-    private val early = scala.collection.mutable.Buffer
-      .empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
-    private def record(
-        p: org.apache.spark.sql.streaming.StreamingQueryProgress): Unit = {
-      wmDropped.addAndGet(p.stateOperators.map(_.numRowsDroppedByWatermark).sum)
-      maxBatchId.updateAndGet(m => math.max(m, p.batchId))
-      ()
-    }
+  private def queryName(stage: String, workDir: String): String =
+    s"$stage@$workDir"
+
+  private val latenessMs =
+    EventTimeWatermark.getDelayMs(IntervalUtils.fromIntervalString(Lateness))
+
+  /** A listener that sees the progress events of ONE query run, exactly:
+    * `recentProgress` is a ring buffer capped at
+    * `numRecentProgressUpdates` (default 100), so a long recovery drain
+    * or a query that runs between calls outgrows it.
+    *
+    * Registered BEFORE the query starts ([[listened]]): the run id does
+    * not exist yet, so events that arrive before [[bind]] are buffered
+    * and replayed (runId-filtered) once the id is known. A listener
+    * registered after `start()` could miss batch 0's event outright.
+    */
+  private abstract class RunListener extends StreamingQueryListener {
+    private var runId: UUID = null
+    private val early = scala.collection.mutable.Buffer.empty[StreamingQueryProgress]
+    /** Called under the listener's lock, once per batch of the run. */
+    protected def record(p: StreamingQueryProgress): Unit
     /** Attach the started query's run id and replay buffered events for
       * it. Synchronized against [[onQueryProgress]] so a concurrent
       * event can neither be double-counted nor slip between the buffer
       * drain and the runId publish.
       */
-    def bind(id: java.util.UUID): Unit = synchronized {
+    def bind(id: UUID): Unit = synchronized {
       runId = id
       early.foreach(p => if (p.runId == id) record(p))
       early.clear()
     }
-    override def onQueryStarted(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryProgress(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
       synchronized {
         if (runId == null) { early += e.progress; () }
         else if (e.progress.runId == runId) record(e.progress)
       }
-    override def onQueryTerminated(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      synchronized(notifyAll())
+  }
+
+  /** Starts `start` with `l` registered before and bound right after. */
+  private def listened(spark: SparkSession, l: RunListener)(
+      start: => StreamingQuery): StreamingQuery = {
+    spark.streams.addListener(l)
+    val q = try start catch {
+      case t: Throwable => spark.streams.removeListener(l); throw t
+    }
+    l.bind(q.runId)
+    q
+  }
+
+  /** A committed stats batch: the log files admitted up to it, and
+    * whether its rows advanced the watermark it ran with. A batch that
+    * did is followed by one that runs with the new watermark, which
+    * emits the windows the advance closed (Spark's no-data batch, when
+    * no new file has come).
+    */
+  private case class Committed(paths: Set[String], advanced: Boolean)
+
+  /** Stage 1's running stats query under `workDir` and the last two
+    * batches it has committed.
+    */
+  private class StatsWatch(val workDir: String, seed: Option[Committed])
+      extends RunListener {
+    @volatile var query: StreamingQuery = null
+    var last: Option[Committed] = seed
+    var prev: Option[Committed] = None
+    override protected def record(p: StreamingQueryProgress): Unit =
+      // a trigger that runs no batch can still report progress
+      // (`spark.sql.streaming.noDataProgressEventInterval`)
+      if (p.durationMs.containsKey("addBatch")) {
+        val paths = Option(p.sources.head.endOffset)
+          .map(LogFileOffset.fromJson(_).files.iterator.map(_.path).toSet)
+          .orElse(last.map(_.paths)).getOrElse(Set.empty)
+        val t = p.eventTime
+        val advanced = t.containsKey("max") &&
+          Instant.parse(t.get("max")).toEpochMilli - latenessMs >
+            Instant.parse(t.get("watermark")).toEpochMilli
+        prev = last
+        last = Some(Committed(paths, advanced))
+        notifyAll()
+      }
+  }
+
+  /** The stats query of `workDir`, running: the one a previous call left
+    * (it keeps the glob and file bound it started with), or else one
+    * `start` starts from the checkpoint `ckpt`. A first call for
+    * `workDir` stops any other work dir's stats query. A query that died
+    * since the last call is dropped and its error thrown; the call after
+    * restarts it.
+    */
+  private def statsWatch(spark: SparkSession, workDir: String, ckpt: String,
+      start: => StreamingQuery): StatsWatch = {
+    val watches = spark.streams.listListeners().toSeq.collect {
+      case w: StatsWatch => w
+    }
+    watches.filter(_.workDir != workDir).foreach(w => stop(spark, w.workDir))
+    watches.find(_.workDir == workDir) match {
+      case Some(w) if w.query.isActive => w
+      case dead =>
+        dead.foreach { w =>
+          spark.streams.removeListener(w)
+          w.query.exception.foreach(e => throw e)
+        }
+        val w = new StatsWatch(workDir, committed(spark, ckpt))
+        w.query = listened(spark, w)(start)
+        w
+    }
+  }
+
+  /** The latest batch committed in the stats checkpoint `ckpt`, if any.
+    * A resumed query runs no no-data batch for it, so it counts as not
+    * advancing the watermark.
+    */
+  private def committed(spark: SparkSession, ckpt: String): Option[Committed] =
+    new CommitLog(spark, s"$ckpt/commits").getLatestBatchId().flatMap(id =>
+      new OffsetSeqLog(spark, s"$ckpt/offsets").get(id)).flatMap(_.offsets.head)
+      .map(o => Committed(
+        LogFileOffset.fromJson(o.json).files.iterator.map(_.path).toSet,
+        advanced = false))
+
+  /** Blocks until the stats query has committed the batch that admitted
+    * every file in `visible` and, if that batch advanced the watermark,
+    * the batch after it. Only then are the rows that `visible` closes in
+    * the sink: a call that returned once the covering batch committed
+    * would miss the windows its advance closed. If the query dies, its
+    * error is thrown and the next call restarts it.
+    */
+  private def awaitStats(spark: SparkSession, w: StatsWatch,
+      visible: Set[String]): Unit = w.synchronized {
+    def covers(c: Option[Committed]) =
+      c.fold(visible.isEmpty)(b => visible.subsetOf(b.paths))
+    while (!(covers(w.last) && (!w.last.exists(_.advanced) || covers(w.prev)))) {
+      if (!w.query.isActive) {
+        spark.streams.removeListener(w)
+        throw w.query.exception.getOrElse(new IllegalStateException(
+          s"stage 1's stats query for ${w.workDir} stopped during a call"))
+      }
+      w.wait(100)
+    }
+  }
+
+  // ------------------------------------------------- drops on t_ops
+
+  /** EXACT per-query watermark-drop accumulator (see [[RunListener]] for
+    * why a listener and not `recentProgress`).
+    */
+  private class DropListener extends RunListener {
+    val wmDropped = new java.util.concurrent.atomic.AtomicLong(0L)
+    val maxBatchId = new java.util.concurrent.atomic.AtomicLong(-1L)
+    override protected def record(p: StreamingQueryProgress): Unit = {
+      wmDropped.addAndGet(p.stateOperators.map(_.numRowsDroppedByWatermark).sum)
+      maxBatchId.updateAndGet(m => math.max(m, p.batchId))
+      ()
+    }
   }
 
   /** Run `start` to completion with an exact drop accumulator attached,
@@ -477,11 +636,7 @@ object ApmGraph {
   private def awaitWithDropMetrics(spark: SparkSession,
       start: => StreamingQuery, stage: String, queueDir: String): Unit = {
     val l = new DropListener
-    spark.streams.addListener(l)
-    val q = try start catch {
-      case t: Throwable => spark.streams.removeListener(l); throw t
-    }
-    l.bind(q.runId)
+    val q = listened(spark, l)(start)
     try {
       q.awaitTermination()
       // the listener bus is async: wait (bounded) until the event for

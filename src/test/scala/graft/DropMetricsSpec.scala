@@ -12,7 +12,7 @@ import graft.streaming.{ApmGraph, ContractConsumer, FileTopic, QueueRegistry}
   * dropped any, so a process watching the queue sees drops that
   * otherwise live only in the stage's own JVM.
   */
-class DropMetricsSpec extends AnyFunSuite with TestSession {
+class DropMetricsSpec extends AnyFunSuite with GraphSuite {
 
   test("t_ops alarm channel: a zero-drop drain publishes nothing, a " +
       "watermark drop publishes its count") {

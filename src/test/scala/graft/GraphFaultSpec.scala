@@ -34,7 +34,7 @@ import graft.streaming.{ApmGraph, ApmStreaming}
   * provider a production deployment would run — proving resume
   * semantics don't depend on the state store backend.
   */
-class GraphFaultSpec extends AnyFunSuite with TestSession {
+class GraphFaultSpec extends AnyFunSuite with GraphSuite {
 
   private val fmt = DateTimeFormatter
     .ofPattern("yyyy-MM-dd HH:mm:ss,SSS").withZone(ZoneOffset.UTC)
@@ -42,12 +42,9 @@ class GraphFaultSpec extends AnyFunSuite with TestSession {
   private val t0 = 1578391200000L // 2020-01-07T10:00:00Z
 
   private def writeLog(dir: String, server: String, name: String,
-      lines: Seq[String]): Unit = {
-    val p = Paths.get(dir, "net", server, name)
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, lines.mkString("", "\n", "\n"))
-    ()
-  }
+      lines: Seq[String]): Unit =
+    StreamCorpus.publish(Paths.get(dir, "net", server, name),
+      lines.mkString("", "\n", "\n"))
 
   private def exitLine(id: Int, ms: Long, svc: String, elapsed: Long): String =
     s"[$id] ${lt(ms)} [a:b:42] INFO CommonTiming::Stop $svc handled in time $elapsed"
@@ -72,13 +69,13 @@ class GraphFaultSpec extends AnyFunSuite with TestSession {
       writeLog(logs, srv, "server.log", lines)
     }
     // stage 1: drain, then a far-future sentinel closes every real
-    // window, then drain twice more (each run is itself a checkpoint
-    // resume of the stage-1 queries)
+    // window, then drain twice more (the last call finds nothing new)
     ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
     writeLog(logs, "zz", "server.log",
       Seq(exitLine(999, t0 + 100000000L, "S:checkout", 1L)))
     ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
     ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
+    ApmGraph.stop(spark, work)
 
     // ---- fault 1: stop stage 2 mid-drain, then resume from checkpoint.
     // One stats file per epoch; stop as soon as the first epoch commits,

@@ -23,7 +23,7 @@ import graft.streaming.{ApmGraph, ApmStreaming, NioLocalFileSystem}
   * fork no `chmod` or `readlink` doing it, and that a warm drain reuses
   * the generated code that an earlier drain compiled.
   */
-class GraphSpec extends AnyFunSuite with TestSession {
+class GraphSpec extends AnyFunSuite with GraphSuite {
 
   private val fmt = DateTimeFormatter
     .ofPattern("yyyy-MM-dd HH:mm:ss,SSS").withZone(ZoneOffset.UTC)
@@ -31,12 +31,9 @@ class GraphSpec extends AnyFunSuite with TestSession {
   private val t0 = 1578391200000L // 2020-01-07T10:00:00Z
 
   private def writeLog(dir: String, server: String, name: String,
-      lines: Seq[String]): Unit = {
-    val p = Paths.get(dir, "net", server, name)
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, lines.mkString("", "\n", "\n"))
-    ()
-  }
+      lines: Seq[String]): Unit =
+    StreamCorpus.publish(Paths.get(dir, "net", server, name),
+      lines.mkString("", "\n", "\n"))
 
   private def exitLine(id: Int, ms: Long, svc: String, elapsed: Long): String =
     s"[$id] ${lt(ms)} [a:b:42] INFO CommonTiming::Stop $svc handled in time $elapsed"
@@ -57,8 +54,8 @@ class GraphSpec extends AnyFunSuite with TestSession {
 
   /** Drain round 1 (data), then the far-future sentinel advances the
     * watermark so every real window closes, then drain twice more (the
-    * second run re-emits nothing; the third flushes no-data batches),
-    * then stages 2-4. `conf` is the stream conf the session names (see
+    * third call finds nothing new), then stages 2-4, and stop the graph.
+    * `conf` is the stream conf the session names (see
     * [[withStreamConf]]).
     */
   private def drainWithSentinel(logs: String, work: String,
@@ -72,7 +69,21 @@ class GraphSpec extends AnyFunSuite with TestSession {
       ApmGraph.runStage2(spark, work, cfg)
       ApmGraph.runStage3(spark, work, cfg)
       ApmGraph.runStage4(spark, work, cfg)
+      ApmGraph.stop(spark, work)
     }
+
+  /** The batch windowed stats over the logs under `logs`, sentinel host
+    * left out.
+    */
+  private def batchStats(logs: String): org.apache.spark.sql.DataFrame =
+    ApmStreaming.slidingStatsStream(
+        Parsing.extractStdExit(
+            LogFileSource.batch(spark, s"$logs/net/*/*")
+              .filter(col("log_type") === "server_log"))
+          .select(col("server"), col("service"),
+            timestamp_millis(col("end_ms")).as("end_ts"), col("elapsed")),
+        ApmGraph.WindowLen, ApmGraph.Slide, ApmGraph.Lateness)
+      .filter(col("server") =!= "zz")
 
   test("LogFileSource.route: server + log-type classification") {
     val dir = Files.createTempDirectory("graft_route").toString
@@ -245,6 +256,8 @@ class GraphSpec extends AnyFunSuite with TestSession {
         ApmGraph.runStage2(spark, work, cfg)
         ApmGraph.runStage3(spark, work, cfg)
         ApmGraph.runStage4(spark, work, cfg)
+        // the stats query then resumes from this checkpoint too
+        ApmGraph.stop(spark, work)
       }
       writeCorpus(logs, "server.log.1", 10 until 19)
       drainWithSentinel(logs, work, cfg, resumeWith)
@@ -327,5 +340,84 @@ class GraphSpec extends AnyFunSuite with TestSession {
     val n = compiles.getCount - before
     info(s"$n classes compiled in the warm drain")
     assert(n <= 5, s"the warm drain compiled $n classes")
+  }
+
+  // ------------------------------------- stage 1 between calls
+
+  private def active(work: String): Seq[org.apache.spark.sql.streaming.StreamingQuery] =
+    spark.streams.active.toSeq.filter(_.name.endsWith(s"@$work"))
+
+  private def statsRunId(work: String): java.util.UUID = {
+    val q = spark.streams.active.find(_.name == s"stats@$work")
+    assert(q.nonEmpty, s"no stats query running for $work")
+    q.get.runId
+  }
+
+  test("stage 1's stats query runs between calls, one work dir at a time, " +
+      "until stop") {
+    val base = Files.createTempDirectory("graft_lifecycle").toString
+    val cfg = ApmGraph.GraphCfg()
+    def dir(tag: String) = (s"$base/$tag/logs", s"$base/$tag/work")
+    val (logsA, workA) = dir("a")
+    val (logsB, workB) = dir("b")
+    writeCorpus(logsA, "server.log", 0 until 10)
+    writeCorpus(logsB, "server.log", 0 until 10)
+    ApmGraph.runStage1(spark, s"$logsA/net/*/*", workA, cfg)
+    val run = statsRunId(workA)
+    writeCorpus(logsA, "server.log.1", 10 until 19)
+    ApmGraph.runStage1(spark, s"$logsA/net/*/*", workA, cfg)
+    assert(statsRunId(workA) == run, "the second call restarted the query")
+
+    ApmGraph.runStage1(spark, s"$logsB/net/*/*", workB, cfg)
+    assert(active(workA).isEmpty,
+      s"left active: ${active(workA).map(_.name)}")
+    statsRunId(workB)
+
+    ApmGraph.stop(spark, workB)
+    assert(active(workB).isEmpty, s"left active: ${active(workB).map(_.name)}")
+  }
+
+  test("a stats query stopped outside a call restarts from its checkpoint " +
+      "on the next call, bit-exact") {
+    val base = Files.createTempDirectory("graft_restart").toString
+    val (logs, work) = (s"$base/logs", s"$base/work")
+    val cfg = ApmGraph.GraphCfg()
+    writeCorpus(logs, "server.log", 0 until 10)
+    ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
+    val run = statsRunId(work)
+    spark.streams.active.filter(_.runId == run).foreach(_.stop())
+    writeCorpus(logs, "server.log.1", 10 until 19)
+    writeLog(logs, "zz", "server.log",
+      Seq(exitLine(999, t0 + 100000000L, "S:checkout", 1L)))
+    ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
+    assert(statsRunId(work) != run, "the stopped query was not restarted")
+    ApmGraph.stop(spark, work)
+
+    val statsB = batchStats(logs)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select(
+      statsB.columns.map(col).toSeq: _*).collect().map(_.toSeq)
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    val expected = rows(statsB)
+    assert(expected.nonEmpty)
+    assert(rows(spark.read.parquet(s"$work/stats")) == expected)
+  }
+
+  test("a call whose stats query dies throws its error; the next call " +
+      "restarts it") {
+    val base = Files.createTempDirectory("graft_died").toString
+    val (logs, work) = (s"$base/logs", s"$base/work")
+    val cfg = ApmGraph.GraphCfg()
+    writeCorpus(logs, "server.log", 0 until 10)
+    ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
+    val run = statsRunId(work)
+    // a file the line reader cannot decode: its batch fails on every run
+    writeLog(logs, "hostA", "server.log.gz", Seq("not gzip"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg))
+    assert(spark.streams.active.forall(_.runId != run))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg))
+    ApmGraph.stop(spark, work)
+    assert(active(work).isEmpty)
   }
 }

@@ -8,6 +8,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.collection.mutable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSinkLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,7 +20,7 @@ import graft.streaming.{ApmGraph, ApmStreaming}
   * however many files it tails, admit files oldest first under a file
   * bound, and yield exactly the rows the batch text read yields.
   */
-class LogFileStreamSpec extends AnyFunSuite with TestSession {
+class LogFileStreamSpec extends AnyFunSuite with GraphSuite {
 
   private val fmt = DateTimeFormatter
     .ofPattern("yyyy-MM-dd HH:mm:ss,SSS").withZone(ZoneOffset.UTC)
@@ -28,31 +29,30 @@ class LogFileStreamSpec extends AnyFunSuite with TestSession {
   private val nHosts = 8
   private val nChunks = 13 // 8 x 13 = 104 files, above the 32-path threshold
 
+  /** Host `h`'s exit lines for the 10 s interval `k`. */
+  private def intervalLines(k: Int, h: Int): Seq[String] =
+    for (svc <- services; j <- 0 until 3) yield {
+      val ms = t0 + k * 10000L + j * 3000L
+      s"[$k$j] ${fmt.format(Instant.ofEpochMilli(ms))} [a:b:42] INFO " +
+        s"CommonTiming::Stop $svc handled in time ${100 + (k * 7 + h + j) % 90}"
+    }
+
   /** One rotated chunk file per host per 10 s interval, the live tail's
     * shape. Names run against time (chunk k is `server.log.<99-k>`) so
     * path order is the reverse of age; mtimes follow the chunk index.
     */
   private def writeChunks(logs: Path): Seq[Path] =
     for (k <- 0 until nChunks; h <- 0 until nHosts) yield {
-      val lines = for (svc <- services; j <- 0 until 3) yield {
-        val ms = t0 + k * 10000L + j * 3000L
-        s"[$k$j] ${fmt.format(Instant.ofEpochMilli(ms))} [a:b:42] INFO " +
-          s"CommonTiming::Stop $svc handled in time ${100 + (k * 7 + h + j) % 90}"
-      }
       val p = logs.resolve(s"net/host$h/server.log.${99 - k}")
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, lines.mkString("", "\n", "\n"))
-      p.toFile.setLastModified(1600000000000L + k * 1000L)
+      StreamCorpus.publish(p, intervalLines(k, h).mkString("", "\n", "\n"),
+        Some(1600000000000L + k * 1000L))
       p
     }
 
-  private def writeSentinel(logs: Path): Unit = {
-    val p = logs.resolve("net/zz/server.log")
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, s"[999] ${fmt.format(Instant.ofEpochMilli(t0 + 100000000L))} " +
-      "[a:b:42] INFO CommonTiming::Stop S:checkout handled in time 1\n")
-    ()
-  }
+  private def writeSentinel(logs: Path): Unit =
+    StreamCorpus.publish(logs.resolve("net/zz/server.log"),
+      s"[999] ${fmt.format(Instant.ofEpochMilli(t0 + 100000000L))} " +
+        "[a:b:42] INFO CommonTiming::Stop S:checkout handled in time 1\n")
 
   /** The batch windowed stats over the same files, sentinel host left out. */
   private def batchStats(glob: String, cfg: ApmGraph.GraphCfg): DataFrame =
@@ -64,11 +64,18 @@ class LogFileStreamSpec extends AnyFunSuite with TestSession {
         cfg.windowLen, cfg.slide, cfg.lateness)
       .filter(col("server") =!= "zz")
 
+  /** The stats sink holds exactly the batch windows over `glob` that end
+    * by `closedBy` (every window, by default). The sink's files are taken
+    * from its log first, so a batch that commits while the reference is
+    * computed does not count.
+    */
   private def assertStatsEqual(work: String, glob: String,
-      cfg: ApmGraph.GraphCfg): Unit = {
-    val statsB = batchStats(glob, cfg)
+      cfg: ApmGraph.GraphCfg, closedBy: Long = Long.MaxValue): Unit = {
+    val files = new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark,
+      s"$work/stats/_spark_metadata", None).allFiles().map(_.path).toSeq
+    val statsB = batchStats(glob, cfg).filter(col("ts_ms") <= closedBy)
     val bRows = statsB.collect().map(_.toSeq).toSet
-    val sRows = spark.read.parquet(s"$work/stats")
+    val sRows = spark.read.schema(ApmGraph.statsSchema).parquet(files: _*)
       .select(statsB.columns.map(col).toSeq: _*).collect().map(_.toSeq).toSet
     assert(bRows.nonEmpty)
     assert(sRows == bRows,
@@ -133,6 +140,7 @@ class LogFileStreamSpec extends AnyFunSuite with TestSession {
     writeSentinel(logs)
     ApmGraph.runStage1(spark, glob, work, cfg)
     assertStatsEqual(work, glob, cfg)
+    ApmGraph.stop(spark, work)
   }
 
   test("stage1MaxFiles = 10 admits oldest mtime first and drops no window") {
@@ -177,6 +185,36 @@ class LogFileStreamSpec extends AnyFunSuite with TestSession {
     writeSentinel(logs)
     ApmGraph.runStage1(spark, glob, work, cfg)
     assertStatsEqual(work, glob, cfg)
+    ApmGraph.stop(spark, work)
+  }
+
+  test("each stage-1 call returns with the windows its visible logs close " +
+      "in the sink") {
+    val base = Files.createTempDirectory("graft_logsrc")
+    val logs = base.resolve("logs")
+    val work = base.resolve("work").toString
+    val glob = s"$logs/net/*/*"
+    val cfg = ApmGraph.GraphCfg()
+    val lateness = 10000L
+    assert(ApmGraph.Lateness == "10 seconds")
+    // 19 intervals in four chunk files, then the sentinel: five calls.
+    // Each call's rows advance the watermark, and the windows that the
+    // advance closes come out only in the batch after the one that read
+    // them, so a call that returned once its files' batch committed
+    // would leave them out.
+    Seq(0 until 5, 5 until 10, 10 until 15, 15 until 19).zipWithIndex
+      .foreach { case (ks, c) =>
+        StreamCorpus.publish(logs.resolve(s"net/host0/server.log.$c"),
+          ks.flatMap(intervalLines(_, 0)).mkString("", "\n", "\n"))
+        ApmGraph.runStage1(spark, glob, work, cfg)
+        // the last line of interval k is at k * 10 s + 6 s
+        assertStatsEqual(work, glob, cfg,
+          closedBy = t0 + ks.last * 10000L + 6000L - lateness)
+      }
+    writeSentinel(logs)
+    ApmGraph.runStage1(spark, glob, work, cfg)
+    assertStatsEqual(work, glob, cfg)
+    ApmGraph.stop(spark, work)
   }
 
   test("stream rows == batch text rows: file URI, CR/CRLF splits, hidden files") {

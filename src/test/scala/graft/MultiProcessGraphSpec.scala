@@ -31,7 +31,7 @@ import graft.streaming.{ApmGraph, ApmStreaming, ContractConsumer, FileTopic, Que
   * idempotent producer fences and per-stage checkpoints survive a hard
   * process death with no loss and no duplication.
   */
-class MultiProcessGraphSpec extends AnyFunSuite with TestSession {
+class MultiProcessGraphSpec extends AnyFunSuite with GraphSuite {
 
   private val fmt = DateTimeFormatter
     .ofPattern("yyyy-MM-dd HH:mm:ss,SSS").withZone(ZoneOffset.UTC)

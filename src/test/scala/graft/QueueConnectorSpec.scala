@@ -15,7 +15,7 @@ import graft.streaming.{ApmGraph, ContractConsumer, FileTopic, QueueRegistry, Qu
   * with results identical to the parquet-topic handoff. Every test owns
   * a fresh topic base directory (the connector's required `dir`).
   */
-class QueueConnectorSpec extends AnyFunSuite with TestSession {
+class QueueConnectorSpec extends AnyFunSuite with GraphSuite {
 
   private def ckpt(): String =
     Files.createTempDirectory("graft_qckpt").toString
@@ -198,12 +198,9 @@ class QueueConnectorSpec extends AnyFunSuite with TestSession {
     def exitLine(id: Int, ms: Long, svc: String, elapsed: Long): String =
       s"[$id] ${fmt.format(Instant.ofEpochMilli(ms))} " +
         s"[a:b:42] INFO CommonTiming::Stop $svc handled in time $elapsed"
-    def writeLog(dir: String, server: String, lines: Seq[String]): Unit = {
-      val p = Paths.get(dir, "net", server, "server.log")
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, lines.mkString("", "\n", "\n"))
-      ()
-    }
+    def writeLog(dir: String, server: String, lines: Seq[String]): Unit =
+      StreamCorpus.publish(Paths.get(dir, "net", server, "server.log"),
+        lines.mkString("", "\n", "\n"))
     val base = Files.createTempDirectory("graft_qgraph").toString
     val logs = s"$base/logs"
     val work = s"$base/work"
@@ -215,6 +212,7 @@ class QueueConnectorSpec extends AnyFunSuite with TestSession {
     ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
     writeLog(logs, "zz", Seq(exitLine(999, t0 + 100000000L, "S:checkout", 1L)))
     ApmGraph.runStage1(spark, s"$logs/net/*/*", work, cfg)
+    ApmGraph.stop(spark, work)
     ApmGraph.runStage2(spark, work, cfg)
     // parquet-topic handoff (the baseline)
     ApmGraph.runStage3(spark, work, cfg)

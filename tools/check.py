@@ -26,6 +26,13 @@ def canon(rows, cols):
     out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
     return [c for _, c in sorted(zip(order, sorted(cols)))], out
 
+def materialize(con, table, sql):
+    """Runs `sql` once into the temp table `table` and returns a relation
+    over it. A DuckDB relation re-runs its query on every fetch, and both
+    the rows and the dtypes are read from each result."""
+    con.execute(f"CREATE OR REPLACE TEMP TABLE {table} AS {sql.strip().rstrip(';')}")
+    return con.table(table)
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for p in glob.glob(f"{sf_dir}/*.parquet"):
@@ -38,9 +45,10 @@ def main(sf_dir, out_dir):
         if not os.path.isdir(spark_dir):
             print(f"FAIL {name}: no spark output dir"); n_fail += 1; continue
         try:
-            got = con.sql(f"SELECT * FROM read_parquet('{spark_dir}/*.parquet')")
+            got = materialize(con, "_got",
+                              f"SELECT * FROM read_parquet('{spark_dir}/*.parquet')")
             gcols, grows = got.columns, got.fetchall()
-            exp = con.sql(sql)
+            exp = materialize(con, "_exp", sql)
             ecols, erows = exp.columns, exp.fetchall()
         except Exception as e:
             print(f"FAIL {name}: {e}"); n_fail += 1; continue
