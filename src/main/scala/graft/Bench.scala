@@ -1,12 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.lang.management.ManagementFactory
+import java.math.RoundingMode
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
-/** Benchmark main. Prints ONE bare JSON line as the LAST stdout line (and
-  * also writes it to /tmp/bench.json) so the driver's extractor can't miss
-  * it regardless of logger prefixes.
+/** Benchmark main. Times every registered query except
+  * `SparkEntry.oracleOnly` standalone, the same bodies Verify checks.
+  * Prints two bare JSON lines, the compact total LAST (see [[main]]), so
+  * the driver's extractor can't miss it regardless of logger prefixes,
+  * and writes the full artifact to /tmp/bench.json.
   *
   * Timing discipline (this box has documented episodic host-level vCPU
   * stalls — wall>>cpu with idle load — that min-of-2 didn't survive):
@@ -20,33 +25,36 @@ import scala.collection.mutable
   * query whose cost is in the computed columns.
   */
 object Bench {
-  /** A JSON number with `digits` decimals, formatted under `Locale.ROOT`
-    * so a comma-decimal default locale cannot break the emitted JSON.
+  /** The JSON writer for Bench's lines and the tools' records. Its node
+    * factory keeps a BigDecimal's trailing zeros, so a [[decimal]]
+    * prints with exactly the digits it was rounded to; Jackson escapes
+    * every string and writes numbers independent of the default locale.
     */
-  def jnum(v: Double, digits: Int = 3): String =
-    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+  val json: ObjectMapper = new ObjectMapper()
+    .setNodeFactory(JsonNodeFactory.withExactBigDecimals(true))
 
-  /** A JSON string literal: backslash, quote and ALL control chars
-    * (< 0x20) escaped, so a tab in a path or in builder-authored SQL
-    * cannot break a machine-parsed line (Bench's stdout lines, Verify's
-    * `oracle_sql.json`).
-    */
-  def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** `v` rounded half-up to `digits` decimals. */
+  def decimal(v: Double, digits: Int = 3): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(v).setScale(digits, RoundingMode.HALF_UP)
+
+  private def errorsNode(parent: ObjectNode, errors: Map[String, String]): Unit = {
+    val node = parent.putObject("errors")
+    errors.toSeq.sorted.foreach { case (k, v) => node.put(k, v) }
+  }
 
   /** The compact final stdout line: headline scalars only (see the
-    * clip note in [[main]]); `errJson` and `stream` are pre-rendered.
+    * clip note in [[main]]).
     */
-  def compactLine(total: Double, nQueries: Int, errJson: String,
-      stream: String, calib: Double, sfDir: String): String =
-    s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n_queries":$nQueries,"errors":$errJson$stream,"calib":${jnum(calib)},"sf":${jstr(sfDir)},"detail":"bench_out.json"}"""
+  def compactLine(total: Double, nQueries: Int, errors: Map[String, String],
+      calib: Double, sfDir: String): String = {
+    val line = json.createObjectNode()
+      .put("metric", "total").put("value", decimal(total)).put("unit", "sec")
+      .put("n_queries", nQueries)
+    errorsNode(line, errors)
+    line.put("calib", decimal(calib)).put("sf", sfDir)
+      .put("detail", "bench_out.json")
+    json.writeValueAsString(line)
+  }
 
   /** The files a run's full JSON goes to: always `/tmp/bench.json`. A
     * full-suite run also writes the repo-visible `bench_out.json` and a
@@ -102,7 +110,7 @@ object Bench {
     val errors = mutable.Map.empty[String, String]
     // Returns (wallSec, cpuSec); a crashed query is marked, not hidden.
     def timeOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
+        fn: (SparkSession, String) => DataFrame): (Double, Double) = {
       val c0 = osBean.getProcessCpuTime
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -131,28 +139,12 @@ object Bench {
     // full suite.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // Query families (SparkEntry.families) share one materialized build:
-    // each member times only its own incremental work over it, the way a
-    // production tee would run, and the build's cost stays with the
-    // family's unshared trainer query. A family is built at its first
-    // member (outside the timed passes) and its checkpointed frames are
-    // unpersisted right after its LAST member — so no family's resident
-    // blocks leak heap pressure into unrelated queries later in the
-    // alphabet (the round-4 d7 in-suite scaling outlier was exactly that).
-    val fams = SparkEntry.families(spark, sfDir)
     val runList = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) =>
         only.forall(_.contains(n)) &&
           (!SparkEntry.oracleOnly.contains(n) || only.exists(_.contains(n)))
       }
-    val runNames = runList.map(_._1).toSet
-    val results = runList.map { case (name, fn0) =>
-      val fam = fams.find(_.members.contains(name))
-      val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-        fam.fold(fn0) { f =>
-          f.frames // build before the first timed pass
-          (_, _) => f.members(name)()
-        }
+    val results = runList.map { case (name, fn) =>
       val passes = mutable.Buffer.empty[(Double, Double)]
       passes += timeOnce(name, fn)
       passes += timeOnce(name, fn)
@@ -165,155 +157,47 @@ object Bench {
       // (per-pass GC inside timeOnce also serves the between-queries
       // role: broadcast/shuffle driver state the ContextCleaner only
       // reclaims on a driver GC never accumulates across the suite)
-      fam.filter(_.members.keySet.intersect(runNames).max == name).foreach { f =>
-        f.frames.foreach(_.unpersist(blocking = true))
-        System.gc() // let ContextCleaner reap the chain's broadcasts
-      }
       (name, median(passes.map(_._1).toSeq), median(passes.map(_._2).toSeq),
         passes.map(_._1).toSeq)
     }
-    // ---- Streaming throughput: the reference's only published number is
-    // sustained derived-stats rows/s through its six-process chain
-    // (stream_insert_db.js:3-4, ~76 fs-rows/s). Measure the SAME unit by
-    // draining the four-stage file->parse->stats->zscore->alert graph
-    // (ApmGraph, AvailableNow triggers, real checkpoints + parquet
-    // handoffs) over a synthesized log corpus, end to end. One pass —
-    // the run is long enough (~10^5 input lines) to dominate startup.
-    // Skipped under the dev-only SPARK_GRAFT_ONLY filter.
-    // (full-artifact variant, compact-stdout variant): the whole-graph
-    // file-transport detail goes to the FILE only; the stdout line gets
-    // a single g_lps scalar (the ~400 B driver log-tail clip).
-    val streamPair: (String, String) =
-      if (only.nonEmpty) ("", "") else {
-      try {
-        val base = Files.createTempDirectory("graft_stream_bench")
-        val logs = base.resolve("logs").toString
-        val work = base.resolve("work").toString
-        // the bench-shaped corpus (8 hosts x 1200 10-s intervals;
-        // elapsed drifts into the hard-max band late in the range so
-        // the vote/cooldown stages do real work) — ONE generator shared
-        // with tools.StreamScaleProbe so scaling rows stay comparable
-        val nLines = StreamCorpus.writeHosts(logs, nHosts = 8,
-          nIntervals = 1200)
-        val cfg = graft.streaming.ApmGraph.GraphCfg()
-        val glob = s"$logs/net/*/*"
-        val s0 = System.nanoTime()
-        // Drain 1 ingests the corpus; the far-future sentinel then
-        // advances the watermark so every real window closes in drain 2
-        // (same recipe GraphSpec pins for stream==batch equality).
-        graft.streaming.ApmGraph.runStage1(spark, glob, work, cfg)
-        StreamCorpus.writeSentinel(logs, offsetMs = 100000000L)
-        graft.streaming.ApmGraph.runStage1(spark, glob, work, cfg)
-        // the stats query runs between stage-1 calls; no more follow
-        graft.streaming.ApmGraph.stop(spark, work)
-        graft.streaming.ApmGraph.runStage2(spark, work, cfg)
-        // stages 3+4 timed separately: the same boundary also runs over
-        // the FILE-BACKED queue transport below, and s34_sec is the
-        // parquet-handoff number it compares against
-        val s34t0 = System.nanoTime()
-        graft.streaming.ApmGraph.runStage3(spark, work, cfg)
-        graft.streaming.ApmGraph.runStage4(spark, work, cfg)
-        val s34Sec = (System.nanoTime() - s34t0) / 1e9
-        val streamSec = (System.nanoTime() - s0) / 1e9
-        def cnt(dir: String): Long =
-          try spark.read.option("recursiveFileLookup", "true")
-            .parquet(dir).count()
-          catch { case _: Throwable => 0L }
-        val statsRows = cnt(s"$work/stats")
-        val alertRows = cnt(s"$work/alerts")
-        System.err.println(f"[bench] stream lines=$nLines sec=$streamSec%.1f " +
-          f"stats=$statsRows alerts=$alertRows")
-        // ---- The deployable transport's cost, measured: the SAME
-        // stage-3 -> stage-4 handoff again, but through the file-backed
-        // queue topic (graftqueue over `dir` — the multi-process
-        // transport MultiProcessGraphSpec forks JVMs over) instead of a
-        // parquet topic directory. Same zscore input (one writer, many
-        // consumers; this consumer brings its own checkpoints), fresh
-        // work dir, so stream_file.sec vs stream.s34_sec isolates the
-        // transport delta at identical data and identical stage code.
-        val workF = base.resolve("workf").toString
-        val f0 = System.nanoTime()
-        val firedTopic = graft.streaming.ApmGraph.Topic("bench_fired",
-          base.resolve("qdir").toString)
-        graft.streaming.ApmGraph.runStage3Queued(spark, workF, cfg,
-          graft.streaming.ApmGraph.ParquetDir(s"$work/zscore"), firedTopic)
-        graft.streaming.ApmGraph.runStage4Queued(spark, workF, cfg, firedTopic)
-        val fileSec = (System.nanoTime() - f0) / 1e9
-        val alertsF = cnt(s"$workF/alerts")
-        System.err.println(f"[bench] stream_file s34=$fileSec%.1f s " +
-          f"(parquet s34=$s34Sec%.1f s) alerts=$alertsF")
-        // ---- The WHOLE graph over the file transport: all four stages
-        // with EVERY boundary a FileTopic (the fabric the forked
-        // topology runs on), drained sequentially in this JVM over the
-        // same corpus (the sentinel file already exists, so one extra
-        // stage-1 drain plays the window-close no-data pass). vs the
-        // `stream` block above this prices the end-to-end transport
-        // cost, not just the stage-3->4 handoff.
-        val workG = base.resolve("workg").toString
-        val qdirG = base.resolve("qdirg").toString
-        val g0 = System.nanoTime()
-        Seq(1, 1, 2, 3, 4).foreach(s => graft.streaming.ApmGraph
-          .runStageQueued(spark, s, glob, workG, qdirG, cfg))
-        val graphSec = (System.nanoTime() - g0) / 1e9
-        val alertsG = cnt(s"$workG/alerts")
-        val statsG = {
-          val t = new graft.streaming.FileTopic(
-            Paths.get(qdirG, "t_stats"))
-          t.endOffsets.values.sum
-        }
-        System.err.println(f"[bench] stream_file WHOLE graph sec=" +
-          f"$graphSec%.1f lines/s=${nLines / graphSec}%.0f " +
-          f"stats=$statsG alerts=$alertsG (in-mem sec=$streamSec%.1f)")
-        val streamCore =
-          s""","stream":{"lines":$nLines,"sec":${jnum(streamSec, 1)},"lines_per_sec":${jnum(nLines / streamSec, 0)},"stats_rows":$statsRows,"stats_rows_per_sec":${jnum(statsRows / streamSec, 0)},"alerts":$alertRows,"s34_sec":${jnum(s34Sec, 1)}}"""
-        (streamCore +
-          s""","stream_file":{"s34_sec":${jnum(fileSec, 1)},"alerts":$alertsF,"graph_sec":${jnum(graphSec, 1)},"graph_lines_per_sec":${jnum(nLines / graphSec, 0)},"graph_stats_rows":$statsG,"graph_stats_rows_per_sec":${jnum(statsG / graphSec, 0)},"graph_alerts":$alertsG}""",
-         streamCore +
-          s""","stream_file":{"s34_sec":${jnum(fileSec, 1)},"g_lps":${jnum(nLines / graphSec, 0)}}""")
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream bench FAILED: ${e.getClass.getName}: ${e.getMessage}")
-        errors("stream_graph") = e.getClass.getSimpleName
-        ("", "")
-      }
-    }
-    val streamJson = streamPair._1
-    val streamJsonCompact = streamPair._2
-    val qs = results.map { case (k, w, _, _) => s""""$k":${jnum(w)}""" }.mkString("{", ",", "}")
-    val cpu = results.map { case (k, _, c, _) => s""""$k":${jnum(c)}""" }.mkString("{", ",", "}")
-    val passJson = results.map { case (k, _, _, ps) =>
-      s""""$k":${ps.map(jnum(_)).mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
-    val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val loadEnd = loadavg()
     val calibEnd = calibrate()
+    val full = json.createObjectNode()
+      .put("metric", "total").put("value", decimal(total)).put("unit", "sec")
+    val qs = full.putObject("queries")
+    val cpu = full.putObject("cpu_sec")
+    results.foreach { case (k, w, c, _) =>
+      qs.put(k, decimal(w)); cpu.put(k, decimal(c)) }
+    // `oracle_only`: registered queries deliberately absent from the
+    // timed set (`SparkEntry.oracleOnly`) — the artifact names them so a
+    // round-over-round comparison knows the set shrank by design
+    val oracleOnly = full.putArray("oracle_only")
+    SparkEntry.oracleOnly.toSeq.sorted.foreach(oracleOnly.add)
+    // `gc_note`: medians exclude inter-pass GC (System.gc between passes
+    // keeps the previous pass's collection work out of the next timed
+    // section), which stabilizes medians but means allocation-heavy
+    // queries don't pay their GC here.
+    full.put("gc_note", "per-query medians exclude inter-pass System.gc")
+    errorsNode(full, errors.toMap)
     // run-attribution block: two runs of identical code divide their
     // calib medians to get the host-speed scalar; loadavg names the
     // concurrent load; per-query pass lists expose which passes a stall
     // hit (median-only artifacts hid all of this in round 6)
-    val ctxJson = s""","calib_sec":{"start":${jnum(calibStart)},"end":${jnum(calibEnd)}}""" +
-      s""","loadavg":{"start":${jstr(loadStart)},"end":${jstr(loadEnd)}}""" +
-      s""","passes":$passJson"""
-    // `shared`: queries timed as INCREMENTAL work over a family frame
-    // whose build cost is attributed to the family's unshared trainer
-    // query (r2_candidates / e2_pq_codes / s7_ivfpq / d4) — pipeline-view
-    // numbers, not standalone-chain numbers. `gc_note`: medians exclude
-    // inter-pass GC (System.gc between passes keeps the previous pass's
-    // collection work out of the next timed section), which stabilizes
-    // medians but means allocation-heavy queries don't pay their GC here.
-    val sharedJson = runList.map(_._1).filter(n => fams.exists(_.members.contains(n)))
-      .map(n => s""""$n"""").mkString("[", ",", "]")
-    // `oracle_only`: registered queries deliberately absent from the
-    // timed set (`SparkEntry.oracleOnly`) — the artifact names them so a
-    // round-over-round comparison knows the set shrank by design
-    val oracleOnlyJson = SparkEntry.oracleOnly.toSeq.sorted
-      .map(n => s""""$n"""").mkString("[", ",", "]")
-    val full = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"cpu_sec":$cpu,"shared":$sharedJson,"oracle_only":$oracleOnlyJson,"gc_note":"per-query medians exclude inter-pass System.gc","errors":$errJson$streamJson$ctxJson,"sf":${jstr(sfDir)}}"""
+    full.putObject("calib_sec")
+      .put("start", decimal(calibStart)).put("end", decimal(calibEnd))
+    full.putObject("loadavg").put("start", loadStart).put("end", loadEnd)
+    val passJson = full.putObject("passes")
+    results.foreach { case (k, _, _, ps) =>
+      val a = passJson.putArray(k)
+      ps.foreach(p => a.add(decimal(p)))
+    }
+    full.put("sf", sfDir)
     // Full artifact (per-query wall + cpu maps, ~4 KB) goes to FILES,
     // because a 4 KB stdout line overflows the driver's log-tail buffer
     // (rounds 1 and 2 both lost the parsed bench signal that way).
     outputPaths(only.nonEmpty, cpus).foreach { path =>
-      try Files.writeString(Paths.get(path), full)
+      try Files.writeString(Paths.get(path), json.writeValueAsString(full))
       catch { case e: Throwable =>
         System.err.println(s"[bench] $path write failed: ${e.getMessage}") }
     }
@@ -322,10 +206,10 @@ object Bench {
     // hundred bytes (r3's 2.8 KB wall-only map still arrived mid-key;
     // the r14 BENCH artifact's stored tail is 2000 chars). The stdout
     // line carries only the headline scalars — total wall, query count,
-    // error map, stream block, sf — and points at bench_out.json for
-    // the per-query detail. Must stay under 400 B.
-    val compact = compactLine(total, results.size, errJson, streamJsonCompact,
-      calibEnd, sfDir)
+    // error map, calib, sf — and points at bench_out.json for the
+    // per-query detail. Must stay under 400 B.
+    val compact = compactLine(total, results.size, errors.toMap, calibEnd,
+      sfDir)
     spark.stop()
     // Per-query wall map as its OWN stdout line, printed BEFORE the
     // compact total line (r14 verdict item 1: the driver's PERF
@@ -337,9 +221,11 @@ object Bench {
     // when the tail buffer is large enough and sees no change when it
     // is not (a clipped fragment no longer starts with '{' and parses
     // as nothing). Centisecond precision keeps it ~3.5 KB.
-    val qsCenti = results.map { case (k, w, _, _) => s""""$k":${jnum(w, 2)}""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"queries","unit":"sec","cpus":$cpus,"queries":$qsCenti}""")
+    val perQuery = json.createObjectNode()
+      .put("metric", "queries").put("unit", "sec").put("cpus", cpus)
+    val qsCenti = perQuery.putObject("queries")
+    results.foreach { case (k, w, _, _) => qsCenti.put(k, decimal(w, 2)) }
+    println(json.writeValueAsString(perQuery))
     // Bare, final stdout line (spark.stop() already happened so nothing
     // logs after it; run/outputStrategy passes it through un-prefixed).
     println(compact)

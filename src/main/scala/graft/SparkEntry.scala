@@ -278,150 +278,6 @@ object SparkEntry {
     */
   val oracleOnly: Set[String] = Set("d6_embed_recall")
 
-  /** A bench sharing family: `members` maps each registered query it
-    * serves to that query's incremental work over frames built once;
-    * `frames` builds them on first access and is what the bench
-    * unpersists after the family's last member. Each registered query
-    * stays independently derivable from parquet (Verify uses
-    * [[queries]]); a family shares the common chain the way a production
-    * pipeline would, so the bench attributes the chain's cost once, to
-    * the family's unshared trainer query, and each member's incremental
-    * cost to itself. Builds are eager: `localCheckpoint` runs its job
-    * when `frames` is forced.
-    */
-  final class Family(val members: Map[String, () => DataFrame],
-      build: => Seq[DataFrame]) {
-    lazy val frames: Seq[DataFrame] = build
-  }
-
-  /** Every bench sharing family. Constructing them runs nothing. */
-  def families(spark: SparkSession, dir: String): Seq[Family] = Seq(
-    alertFamily(spark, dir), annFamily(spark, dir), dedupFamily(spark, dir),
-    bpeFamily(spark, dir), hybridFamily(spark, dir))
-
-  /** The alert-family consumers of ONE candidates frame (compute
-    * candidates once, tee to alerts/digest/db/email); the chain's cost
-    * stays with the unshared r2_candidates.
-    */
-  private def alertFamily(spark: SparkSession, dir: String): Family = {
-    lazy val cand = Alerts.candidates(zWin(spark, dir), alertCfg).localCheckpoint()
-    new Family(Map(
-      "r3_alerts"       -> (() => Alerts.alerts(cand, alertCfg)),
-      "r5_assembly"     -> (() => Alerts.assemblyRoundtrip(cand)),
-      "r7_digest"       -> (() => Alerts.digest(cand)),
-      "s6_db_stats"     -> (() => Alerts.dbStatsRoundtrip(cand)),
-      "s8_email_rows"   -> (() => Alerts.emailRows(cand)),
-      "s8_email_digest" -> (() => Alerts.emailDigest(cand, alertCfg))),
-      Seq(cand))
-  }
-
-  /** Same chain-sharing for the ANN index families: the PQ index is
-    * trained once (cost attributed to the unshared e2_pq_codes trainer),
-    * searches serve from it; the IVF-PQ search result feeds its recall
-    * consumer (cost attributed to the unshared s7_ivfpq).
-    */
-  private def annFamily(spark: SparkSession, dir: String): Family = {
-    lazy val trained = Similarity.pqTrainedShared(spark, dir)
-    // persisted-index serving (s16): train + WRITE the snapshot once in
-    // the family build (the training cost is already represented by the
-    // unshared s7_ivfpq; the write is one-time index-build work a
-    // production deployment amortizes over every query) — the timed s16
-    // is the pure STORED-INDEX serve path, which is the number that
-    // matters at serving time
-    // deterministic within a session (reruns overwrite); applicationId
-    // keeps concurrent sessions from clobbering each other's snapshot
-    lazy val annDir = {
-      val d = s"${System.getProperty("java.io.tmpdir")}/graft_ann_bench_" +
-        Integer.toHexString(dir.hashCode) + "_" +
-        spark.sparkContext.applicationId
-      Similarity.persistIvfPqIndex(spark, dir, d, "bench")
-      d
-    }
-    // s8's recall input is served FROM that snapshot instead of training
-    // a second IVF-PQ index: serve == train-and-serve exactly (the
-    // AnnIndexSpec contract), so results are identical and the family
-    // build trains once
-    lazy val ivfpq = Similarity.ivfPqServe(spark, dir, annDir, "bench")
-      .localCheckpoint()
-    new Family(Map(
-      "s5_pq_adc"       -> (() => Similarity.pqAdcFrom(spark, dir,
-        trained._1, trained._2)),
-      "s6_pq_recall"    -> (() => Similarity.pqRecallFrom(spark, dir,
-        Similarity.pqAdcFrom(spark, dir, trained._1, trained._2))),
-      "s10_pq_refine"   -> (() => Similarity.pqRefineRecallFrom(spark, dir,
-        Similarity.pqAdcFrom(spark, dir, trained._1, trained._2, k = 25))),
-      "s8_ivfpq_recall" -> (() => Similarity.ivfPqRecallFrom(spark, dir, ivfpq)),
-      "s16_index_serve" -> (() => Similarity.ivfPqServe(spark, dir,
-        annDir, "bench")),
-      // s19 serves from the same stored snapshot with the tombstone
-      // anti-join — the timed work is exactly what the delete path adds
-      // over s16 (training stays attributed to the unshared s7_ivfpq)
-      "s19_index_delete" -> (() => Similarity.indexDeleteServeFrom(spark,
-        dir, Similarity.loadIvfPqIndex(spark, annDir, "bench"))),
-      // s20's retrained leg is exactly the family's served IVF-PQ; the
-      // timed work is the frozen-index leg (base train + append encode
-      // + serve + recall), which is s20's own contribution
-      "s20_append_drift" -> (() => Similarity.indexAppendDriftFrom(spark,
-        dir, ivfpq)),
-      // s21 sweeps probe depths over the family's stored index — the
-      // timed work is |probes| serves + the shared truth scan
-      "s21_probe_sweep"  -> (() => Similarity.probeSweepFrom(spark, dir,
-        Similarity.loadIvfPqIndex(spark, annDir, "bench"))),
-      // s22 writes the snapshot chain from the family's trained index
-      // and sweeps it — the timed work is the persist/compact/sweep
-      // lifecycle, not training. The stored snapshot seeds the chain as
-      // a byte-copy (srcDir), the immutable-snapshot discipline.
-      "s22_retention"    -> (() => Similarity.indexRetentionFrom(spark, dir,
-        annDir + "_retn", Similarity.loadIvfPqIndex(spark, annDir, "bench"),
-        srcDir = Some(s"$annDir/snapshot_id=bench")))),
-      Seq(trained._1, ivfpq))
-  }
-
-  /** LSH pair-graph sharing: the banded candidate pairs are the common
-    * input of clustering, PageRank and the leak split; the banding cost
-    * stays attributed to the unshared d4_dedup_minhash_lsh. c2 times
-    * its CC rounds over the shared pairs; c22 times split+leak joins
-    * over eagerly-built clusters.
-    */
-  private def dedupFamily(spark: SparkSession, dir: String): Family = {
-    lazy val pairs = Dedup.minhashLsh(spark, dir)
-      .select("id_a", "id_b").localCheckpoint()
-    lazy val clusters = Dedup.dupClustersFrom(spark, dir, pairs).localCheckpoint()
-    new Family(Map(
-      "c2_dup_clusters" -> (() => Dedup.dupClustersFrom(spark, dir, pairs)),
-      "c18_pagerank"    -> (() => Dedup.pagerankFrom(pairs)),
-      "c22_leak_split"  -> (() => Curation.leakSplitFrom(spark, dir, clusters)),
-      // the APPLY step consumes the same shared clusters (cluster once,
-      // apply once — its timed work is the sizes agg + doc joins; the
-      // chain cost stays visible via the unshared d4/c2 timings)
-      "c7_dedup_apply"  -> (() => Dedup.dedupApplyFrom(spark, dir, clusters))),
-      Seq(pairs, clusters))
-  }
-
-  /** BPE train-once/apply-many sharing: the trainer query
-    * (t15_bpe_merges, unshared) keeps the full 8-round training cost;
-    * t16_bpe_tokens times only the tokenize join over the shared trained
-    * vocab — the production shape (a tokenizer is trained once and
-    * applied to every corpus shard).
-    */
-  private def bpeFamily(spark: SparkSession, dir: String): Family = {
-    lazy val vocab = TextAnalysis.bpeTrainedVocab(spark, dir).localCheckpoint()
-    new Family(Map(
-      "t16_bpe_tokens" -> (() => TextAnalysis.bpeTokensFrom(spark, dir, vocab))),
-      Seq(vocab))
-  }
-
-  /** Hybrid-grading sharing: the fused ranking + truth legs ARE the s12
-    * chain, built once (cost stays with the unshared s12_rrf_fusion
-    * trainer query); s17 times only the O(nQ*k) grading over them.
-    */
-  private def hybridFamily(spark: SparkSession, dir: String): Family = {
-    lazy val parts = Similarity.rankMetricsSharedParts(spark, dir)
-    new Family(Map(
-      "s17_rank_metrics" -> (() => Similarity.rankMetricsFrom(parts._1, parts._2, 10))),
-      Seq(parts._1, parts._2))
-  }
-
   /** Alert config used by registered queries: thresholds tuned so the test
     * data produces a mix of firing and quiet intervals; one per-service
     * hard-max override exercises the J4 broadcast-config join.

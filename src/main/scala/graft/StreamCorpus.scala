@@ -3,19 +3,18 @@ package graft
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 
-/** The synthesized log corpus shared by the bench's streaming leg
-  * (Bench.scala stream block) and the scaling probe
-  * (tools.StreamScaleProbe): ONE generator so the probe's rows stay
-  * comparable to the bench's by construction, with the deliberate
-  * divergences (host/interval counts, sentinel offset) as named
-  * parameters instead of silently edited constants.
+/** The synthesized log corpus of the streaming scaling probe
+  * (tools.StreamScaleProbe), with its growth axes (host/interval
+  * counts, sentinel offset) as named parameters instead of silently
+  * edited constants. The specs publish their log files through
+  * [[publish]].
   *
   * Shape: per host, `nIntervals` 10-second intervals x 4 services x 3
   * lines; elapsed drifts into the 150 ms hard-max band late in each
   * 1200-interval block (`i % 1200 > 900`) so the vote/cooldown stages
   * do real work, and the slow band REPEATS per block so the work mix
-  * is invariant when a probe scales `nIntervals` (for the bench's
-  * nIntervals = 1200 the predicate equals the historical `i > 900`).
+  * is invariant when a probe scales `nIntervals` (for nIntervals =
+  * 1200 the predicate equals the historical `i > 900`).
   */
 object StreamCorpus {
   val t0 = 1578391200000L // 2020-01-07T10:00:00Z
@@ -52,8 +51,8 @@ object StreamCorpus {
 
   /** The far-future sentinel that closes every real window on the next
     * stage-1 drain; `offsetMs` past `t0` must clear the corpus's whole
-    * event-time span (the bench's 1200-interval corpus uses 1e8 ms; a
-    * time-scaled probe corpus needs more).
+    * event-time span (1e8 ms clears a 1200-interval corpus; a
+    * time-scaled corpus needs more).
     */
   def writeSentinel(logsDir: String, offsetMs: Long): Unit =
     publish(Paths.get(logsDir, "net", "zz", "server.log"), s"[999999] ${

@@ -833,13 +833,9 @@ object Curation {
     * LSH candidates.
     */
   def leakSplit(spark: SparkSession, sfDir: String,
-      valPermille: Int = 100): DataFrame =
-    leakSplitFrom(spark, sfDir,
-      graft.operators.Dedup.dupClusters(spark, sfDir), valPermille)
-
-  def leakSplitFrom(spark: SparkSession, sfDir: String,
-      clustersIn: DataFrame, valPermille: Int = 100): DataFrame = {
-    val clusters = clustersIn.select(col("doc_id"), col("cluster_id"))
+      valPermille: Int = 100): DataFrame = {
+    val clusters = graft.operators.Dedup.dupClusters(spark, sfDir)
+      .select(col("doc_id"), col("cluster_id"))
     val h = poly_hash(concat(col("doc_id").cast("string"), lit("#split")))
     val hc = poly_hash(concat(col("cluster_id").cast("string"), lit("#split")))
     val split = Tables.load(spark, sfDir, "documents").select(col("doc_id"))

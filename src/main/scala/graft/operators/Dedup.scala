@@ -604,16 +604,8 @@ object Dedup {
     * is exact regardless of round counts.
     */
   def dupClusters(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.4): DataFrame =
-    dupClustersFrom(spark, sfDir,
-      minhashLsh(spark, sfDir, threshold).select("id_a", "id_b"))
-
-  /** Clustering over an already-materialized pair graph — the serving
-    * entry point (bench chain-sharing: the LSH banding cost stays
-    * attributed to d4; consumers time only their own graph work).
-    */
-  def dupClustersFrom(spark: SparkSession, sfDir: String,
-      pairs: DataFrame): DataFrame = {
+      threshold: Double = 0.4): DataFrame = {
+    val pairs = minhashLsh(spark, sfDir, threshold).select("id_a", "id_b")
     val nodes = Tables.load(spark, sfDir, "documents").select("doc_id")
     connectedComponents(nodes, pairs)
       .select(col("doc_id"), col("label").as("cluster_id"),
@@ -653,11 +645,8 @@ object Dedup {
     * loop. Driver holds no data — only the loop counter.
     */
   def pagerank(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.4, iters: Int = 8): DataFrame =
-    pagerankFrom(minhashLsh(spark, sfDir, threshold).select("id_a", "id_b"),
-      iters)
-
-  def pagerankFrom(pairs: DataFrame, iters: Int = 8): DataFrame = {
+      threshold: Double = 0.4, iters: Int = 8): DataFrame = {
+    val pairs = minhashLsh(spark, sfDir, threshold).select("id_a", "id_b")
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .localCheckpoint()
@@ -959,16 +948,8 @@ object Dedup {
     * [[dupClusters]] itself.
     */
   def dedupApply(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.4): DataFrame =
-    dedupApplyFrom(spark, sfDir, dupClusters(spark, sfDir, threshold))
-
-  /** [[dedupApply]] over an already-built cluster frame — the bench
-    * family surface (the LSH pair + connected-components chain is shared
-    * with c2/c18/c22; apply times only its own sizes + joins, the way a
-    * production pipeline clusters once and applies once).
-    */
-  def dedupApplyFrom(spark: SparkSession, sfDir: String,
-      clusters: DataFrame): DataFrame = {
+      threshold: Double = 0.4): DataFrame = {
+    val clusters = dupClusters(spark, sfDir, threshold)
     val sizes = clusters.groupBy("cluster_id")
       .agg(count(lit(1)).as("cluster_size"))
     clusters.filter(col("is_canonical") === 1)

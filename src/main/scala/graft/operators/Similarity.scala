@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ShutdownDelete
 import graft.Tables
 
 /** Similarity search over the `embeddings` table (`vec_id`,
@@ -819,16 +820,6 @@ object Similarity {
   private def pqTrained(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
     pqTrainedFrom(vecsDoubleChecked(spark, sfDir).select("vec_id", "v"))
 
-  /** The trained index materialized once for a family of searches: final
-    * assignment checkpointed (the codebook already is). Bench attributes
-    * training cost to the trainer query (e2_pq_codes) and serves
-    * s5/s6/s10 from this, the way a production index is shared.
-    */
-  def pqTrainedShared(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val (asg, cb) = pqTrained(spark, sfDir)
-    (asg.localCheckpoint(), cb)
-  }
-
   def pqCodes(spark: SparkSession, sfDir: String): DataFrame = {
     val (asg, _) = pqTrained(spark, sfDir)
     def codeAt(s: Int) = max(when(col("sub") === s, col("code"))).as(s"code$s")
@@ -904,17 +895,6 @@ object Similarity {
   def pqAdc(spark: SparkSession, sfDir: String,
       k: Int = 5, nQueries: Int = 20): DataFrame = {
     val (asg, cb) = pqTrained(spark, sfDir)
-    pqAdcFrom(spark, sfDir, asg, cb, k, nQueries)
-  }
-
-  /** ADC search over an already-trained index — the serving-time entry
-    * point (and the bench chain-sharing surface: training cost stays
-    * attributed to the trainer query, searches time only their own
-    * work, the way a served index runs).
-    */
-  def pqAdcFrom(spark: SparkSession, sfDir: String,
-      asg: DataFrame, cb: DataFrame,
-      k: Int = 5, nQueries: Int = 20): DataFrame = {
     val qlut = pqSubs(spark, sfDir).filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("sub"), col("sv"))
       .join(broadcast(cb), Seq("sub"))
@@ -960,10 +940,6 @@ object Similarity {
     * [[ivfRecall]]: the approximation ships with its recall number).
     */
   def pqRecall(spark: SparkSession, sfDir: String,
-      k: Int = 5, nQueries: Int = 20): DataFrame =
-    pqRecallFrom(spark, sfDir, pqAdc(spark, sfDir, k, nQueries), k, nQueries)
-
-  def pqRecallFrom(spark: SparkSession, sfDir: String, adcRes: DataFrame,
       k: Int = 5, nQueries: Int = 20): DataFrame = {
     val vecs = vecsDouble(spark, sfDir)
     val q = vecs.filter(col("vec_id") < nQueries)
@@ -975,7 +951,7 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("q_id", "n_id")
-    val adc = adcRes
+    val adc = pqAdc(spark, sfDir, k, nQueries)
       .select(col("q_id").as("aq"), col("n_id").as("an"))
     exact.join(adc, col("q_id") === col("aq") && col("n_id") === col("an"),
         "left")
@@ -1177,6 +1153,18 @@ object Similarity {
     ivfPqServeFrom(all.filter(col("vec_id") < nQueries), appended, k, nprobe)
   }
 
+  /** `java.io.tmpdir/<prefix><corpus hash>_<applicationId>`, deleted
+    * when the JVM exits.
+    */
+  private def sessionTempDir(spark: SparkSession, sfDir: String,
+      prefix: String): String = {
+    val dir = s"${System.getProperty("java.io.tmpdir")}/$prefix" +
+      Integer.toHexString(sfDir.hashCode) + "_" +
+      spark.sparkContext.applicationId
+    ShutdownDelete.register(dir)
+    dir
+  }
+
   /** s16 — the end-to-end persist/serve round-trip as a verify entry:
     * train + write the snapshot, then answer from the STORED artifacts.
     * Output (and oracle) are exactly s7's.
@@ -1186,13 +1174,11 @@ object Similarity {
     // deterministic per-corpus-per-SESSION location (overwritten each
     // call) rather than a fresh temp dir per invocation — repeated
     // verify/bench cycles within a session reuse one snapshot's disk
-    // instead of leaking a full codes table each run. The applicationId
-    // discriminator keeps two concurrent sessions on the same corpus
-    // from overwriting each other's snapshot mid-read (parquet
-    // mode=overwrite is not atomic).
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_ann_index_" +
-      Integer.toHexString(sfDir.hashCode) + "_" +
-      spark.sparkContext.applicationId
+    // instead of leaking a full codes table each run, and the JVM
+    // deletes it at exit. The applicationId discriminator keeps two
+    // concurrent sessions on the same corpus from overwriting each
+    // other's snapshot mid-read (parquet mode=overwrite is not atomic).
+    val tmp = sessionTempDir(spark, sfDir, "graft_ann_index_")
     persistIvfPqIndex(spark, sfDir, tmp, "s16")
     ivfPqServe(spark, sfDir, tmp, "s16", k, nQueries, nprobe)
   }
@@ -1235,8 +1221,8 @@ object Similarity {
     indexDeleteServeFrom(spark, sfDir, ivfPqTrain(all), k, nQueries, nprobe)
   }
 
-  /** [[indexDeleteServe]] over an already-trained/loaded index — the
-    * bench family path (training cost stays with the unshared s7).
+  /** [[indexDeleteServe]] over an already-trained or loaded index (the
+    * spec serves a stored snapshot through it).
     */
   def indexDeleteServeFrom(spark: SparkSession, sfDir: String,
       idx: IvfPqIndex, k: Int = 5, nQueries: Int = 20,
@@ -1351,24 +1337,8 @@ object Similarity {
     */
   def indexRetention(spark: SparkSession, sfDir: String,
       keepLast: Int = 2): DataFrame = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_ann_retn_" +
-      Integer.toHexString(sfDir.hashCode) + "_" +
-      spark.sparkContext.applicationId
-    indexRetentionFrom(spark, sfDir, root,
-      ivfPqTrain(vecsDouble(spark, sfDir).select("vec_id", "v")), keepLast)
-  }
-
-  /** [[indexRetention]] over an already-trained index (bench family
-    * path — training cost stays with the unshared s7 trainer). When the
-    * index is itself a STORED snapshot, pass its dir as `srcDir` and the
-    * 0001 write becomes a filesystem byte-copy (bit-identical, zero
-    * Spark jobs) instead of three parquet re-encodes — the production
-    * lifecycle never re-encodes an immutable snapshot to seed a chain.
-    */
-  def indexRetentionFrom(spark: SparkSession, sfDir: String, root: String,
-      idx: => IvfPqIndex, keepLast: Int = 2,
-      srcDir: Option[String] = None): DataFrame = {
     import spark.implicits._
+    val root = sessionTempDir(spark, sfDir, "graft_ann_retn_")
     val all = vecsDouble(spark, sfDir).select("vec_id", "v")
     // deterministic rerun: clear any previous chain under this root
     val rootPath = new org.apache.hadoop.fs.Path(root)
@@ -1377,22 +1347,13 @@ object Similarity {
     // the lifecycle chain: 0001 full -> 0002 folds the %7 revocations ->
     // 0003 additionally folds the %5 batch (compaction tombstones are
     // cumulative — each snapshot is the previous minus its batch)
-    srcDir match {
-      case Some(src) =>
-        // idx is by-name and deliberately NOT forced here: the stored
-        // snapshot seeds the chain as a byte-copy, so the caller's index
-        // (a loadIvfPqIndex or a training chain) is never even planned
-        copyParquetDir(spark, src, s"$root/snapshot_id=0001",
-          Seq("centroids", "codebook", "codes"))
-      case None =>
-        val idx0 = idx // force the by-name exactly once
-        idx0.cents.write.mode("overwrite")
-          .parquet(s"$root/snapshot_id=0001/centroids")
-        idx0.codebook.write.mode("overwrite")
-          .parquet(s"$root/snapshot_id=0001/codebook")
-        idx0.codes.write.mode("overwrite")
-          .parquet(s"$root/snapshot_id=0001/codes")
-    }
+    val idx = ivfPqTrain(vecsDouble(spark, sfDir).select("vec_id", "v"))
+    idx.cents.write.mode("overwrite")
+      .parquet(s"$root/snapshot_id=0001/centroids")
+    idx.codebook.write.mode("overwrite")
+      .parquet(s"$root/snapshot_id=0001/codebook")
+    idx.codes.write.mode("overwrite")
+      .parquet(s"$root/snapshot_id=0001/codes")
     compactIvfPqIndex(spark, root, "0001", "0002", tombstonesOf(all))
     compactIvfPqIndex(spark, root, "0002", "0003",
       all.select(col("vec_id").as("n_id")).filter(col("n_id") % 5 === 2))
@@ -1603,21 +1564,12 @@ object Similarity {
     * all-pairs).
     */
   def indexAppendDrift(spark: SparkSession, sfDir: String,
-      k: Int = 5, nQueries: Int = 20, nprobe: Int = 2): DataFrame =
-    indexAppendDriftFrom(spark, sfDir,
-      ivfPq(spark, sfDir, k, nQueries, nprobe), k, nQueries, nprobe)
-
-  /** [[indexAppendDrift]] with the retrained serve supplied — the bench
-    * family path: the retrained leg IS the family's served IVF-PQ (the
-    * s8 input), so s20 times its own real work, the frozen-index leg.
-    */
-  def indexAppendDriftFrom(spark: SparkSession, sfDir: String,
-      retrainedServe: DataFrame, k: Int = 5, nQueries: Int = 20,
-      nprobe: Int = 2): DataFrame = {
+      k: Int = 5, nQueries: Int = 20, nprobe: Int = 2): DataFrame = {
     val frozen = ivfPqRecallFrom(spark, sfDir,
         indexAppendServe(spark, sfDir, k, nQueries, nprobe), k, nQueries)
       .withColumnRenamed("recall_at_k", "recall_frozen")
-    val retrained = ivfPqRecallFrom(spark, sfDir, retrainedServe, k, nQueries)
+    val retrained = ivfPqRecallFrom(spark, sfDir,
+        ivfPq(spark, sfDir, k, nQueries, nprobe), k, nQueries)
       .withColumnRenamed("recall_at_k", "recall_retrained")
     frozen.join(retrained, Seq("q_id"))
   }
@@ -1709,17 +1661,8 @@ object Similarity {
     * point.
     */
   def probeSweep(spark: SparkSession, sfDir: String, k: Int = 5,
-      nQueries: Int = 20, probes: Seq[Int] = Seq(1, 2, 4)): DataFrame =
-    probeSweepFrom(spark, sfDir,
-      ivfPqTrain(vecsDouble(spark, sfDir).select("vec_id", "v")),
-      k, nQueries, probes)
-
-  /** [[probeSweep]] over an already-trained/loaded index (bench family
-    * path — training cost stays with the unshared s7 trainer).
-    */
-  def probeSweepFrom(spark: SparkSession, sfDir: String, idx: IvfPqIndex,
-      k: Int = 5, nQueries: Int = 20,
-      probes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
+      nQueries: Int = 20, probes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
+    val idx = ivfPqTrain(vecsDouble(spark, sfDir).select("vec_id", "v"))
     val vecs = vecsDouble(spark, sfDir).select("vec_id", "v")
     val queries = vecs.filter(col("vec_id") < nQueries)
     val q = queries.select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -1821,12 +1764,8 @@ object Similarity {
     * is what makes exact re-ranking affordable at all.
     */
   def pqRefineRecall(spark: SparkSession, sfDir: String,
-      k: Int = 5, cand: Int = 25, nQueries: Int = 20): DataFrame =
-    pqRefineRecallFrom(spark, sfDir, pqAdc(spark, sfDir, cand, nQueries),
-      k, nQueries)
-
-  def pqRefineRecallFrom(spark: SparkSession, sfDir: String,
-      coarse: DataFrame, k: Int = 5, nQueries: Int = 20): DataFrame = {
+      k: Int = 5, cand: Int = 25, nQueries: Int = 20): DataFrame = {
+    val coarse = pqAdc(spark, sfDir, cand, nQueries)
     val vecs = vecsDouble(spark, sfDir)
     val q = vecs.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -2689,19 +2628,6 @@ object Similarity {
         .select(col("q_id"), col("doc_id"), col("rank")),
       denseExactRanks(spark, sfDir, nQ, k)
         .select(col("q_id"), col("doc_id"), lit(1).as("rel")), k)
-
-  /** Bench/test sharing hook: the fused ranking and truth legs built
-    * once (checkpointed; chain cost attributed to the unshared
-    * s12_rrf_fusion trainer query the way the other families do it) so
-    * the timed s17 is the O(nQ*k) grading alone.
-    */
-  def rankMetricsSharedParts(spark: SparkSession, sfDir: String,
-      nQ: Int = 8, n: Int = 30, k: Int = 10): (DataFrame, DataFrame) = (
-    rrfFusion(spark, sfDir, nQ, n, k)
-      .select(col("q_id"), col("doc_id"), col("rank")).localCheckpoint(),
-    denseExactRanks(spark, sfDir, nQ, k)
-      .select(col("q_id"), col("doc_id"), lit(1).as("rel"))
-      .localCheckpoint())
 
   /** The grading core over any (q_id, doc_id, rank) ranking and
     * (q_id, doc_id, rel=1) truth relation — public so the spec can

@@ -845,16 +845,8 @@ object TextAnalysis {
     * step costs one word-keyed join at any scale.
     */
   def bpeTokens(spark: SparkSession, sfDir: String,
-      nMerges: Int = 8): DataFrame =
-    bpeTokensFrom(spark, sfDir, bpeTrainCore(spark, sfDir, nMerges)._2)
-
-  /** The apply step alone, over an already-trained segmented vocab —
-    * the bench serves t16 from the t15 trainer's vocab through this
-    * (train once, tokenize many: the production shape; training cost
-    * stays attributed to the trainer query).
-    */
-  def bpeTokensFrom(spark: SparkSession, sfDir: String,
-      vocab: DataFrame): DataFrame = {
+      nMerges: Int = 8): DataFrame = {
+    val vocab = bpeTrainCore(spark, sfDir, nMerges)._2
     val segLen = vocab.select(col("w"), size(col("syms")).cast("long").as("n_sym"))
     Tables.loadSpread(spark, sfDir, "documents")
       .select(col("doc_id"),
@@ -864,10 +856,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_words"),
         sum("n_sym").as("n_bpe_tokens"))
   }
-
-  /** Trained segmented vocab (w, freq, syms) for family sharing. */
-  def bpeTrainedVocab(spark: SparkSession, sfDir: String,
-      nMerges: Int = 8): DataFrame = bpeTrainCore(spark, sfDir, nMerges)._2
 
   def bpeTokensSql(nMerges: Int = 8): String =
     s"""${bpeLayersSql(nMerges)},

@@ -665,7 +665,9 @@ object ApmGraph {
       queueDir: String): Unit =
     if (wmDropped > 0) {
       QueueRegistry.topic("t_ops", queueDir, 1)
-        .produce(stage, s"""{"stage":"$stage","wm_dropped":$wmDropped}""")
+        .produce(stage, graft.Bench.json.writeValueAsString(
+          graft.Bench.json.createObjectNode()
+            .put("stage", stage).put("wm_dropped", wmDropped)))
       ()
     }
 }

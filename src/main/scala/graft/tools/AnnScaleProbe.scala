@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.Bench.{jnum, jstr}
+import graft.Bench.{decimal, json}
 import graft.operators.Similarity
 
 /** Measures whether the LSH/ANN candidate volume stays LINEAR in corpus
@@ -81,10 +81,12 @@ object AnnScaleProbe {
       val sec = (System.nanoTime() - t0) / 1e9
       val nRows = baseRows * f
       val perPair = candidates.toDouble / (nRows * (nRows - 1) / 2)
-      s"""{"leg": ${jstr(name)}, "factor": $f, "rows": $nRows, """ +
-        s""""candidates": $candidates, "cand_per_pair": ${jnum(perPair, 5)}, """ +
-        s""""confirmed": $conf, "cross_replica": $cross, """ +
-        s""""exact_cross_replica": $exactCross, "sec": ${jnum(sec, 2)}}"""
+      json.writeValueAsString(json.createObjectNode()
+        .put("leg", name).put("factor", f).put("rows", nRows)
+        .put("candidates", candidates)
+        .put("cand_per_pair", decimal(perPair, 5))
+        .put("confirmed", conf).put("cross_replica", cross)
+        .put("exact_cross_replica", exactCross).put("sec", decimal(sec, 2)))
     }
 
     val lines = factors.map(f =>

@@ -3,7 +3,8 @@ package graft.tools
 import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
-import graft.Bench.{jnum, jstr}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.Bench.{decimal, json}
 import graft.streaming.{ApmGraph, ApmStreaming}
 
 /** Dev harness: measured evidence for the day-lag z-score state claim.
@@ -43,7 +44,7 @@ object RocksLagProbe {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    def run(tag: String, lagN: Int): String = {
+    def run(tag: String, lagN: Int): ObjectNode = {
       val rnd = new scala.util.Random(7)
       val in = MemoryStream[ApmStreaming.ZIn]
       val out = ApmStreaming.zScoreStream(in.toDS())
@@ -68,23 +69,25 @@ object RocksLagProbe {
         val sec = (System.nanoTime() - t0) / 1e9
         val nRows = nKeys.toLong * per * chunks
         val so = q.lastProgress.stateOperators.headOption
+        val rec = json.createObjectNode()
+          .put("tag", tag).put("lag", lagN).put("keys", nKeys)
+          .put("rows", nRows).put("sec", decimal(sec, 1))
+          .put("rows_per_sec", decimal(nRows / sec, 0))
+          .put("state_rows", so.map(_.numRowsTotal).getOrElse(-1L))
         // size-ish RocksDB store metrics, whatever this Spark names them
-        val sizes = so.map { s =>
+        val sizes = rec.putObject("store_size_metrics")
+        so.foreach { s =>
           import scala.jdk.CollectionConverters._
           s.customMetrics.asScala.collect {
             case (k, v) if (k.toLowerCase.contains("size") ||
               k.toLowerCase.contains("memory") ||
               k.toLowerCase.contains("bytes")) &&
               v.asInstanceOf[Number].longValue > 0L =>
-              s"""${jstr(k)}:${v.asInstanceOf[Number].longValue}"""
-          }.toSeq.sorted.mkString("{", ",", "}")
-        }.getOrElse("{}")
-        val stateRows = so.map(_.numRowsTotal).getOrElse(-1L)
-        val commitMs = so.map(_.allUpdatesTimeMs).getOrElse(-1L)
-        s"""{"tag":${jstr(tag)},"lag":$lagN,"keys":$nKeys,"rows":$nRows,""" +
-          s""""sec":${jnum(sec, 1)},"rows_per_sec":${jnum(nRows / sec, 0)},""" +
-          s""""state_rows":$stateRows,"store_size_metrics":$sizes,""" +
-          s""""last_batch_update_ms":$commitMs}"""
+              k -> v.asInstanceOf[Number].longValue
+          }.toSeq.sorted.foreach { case (k, v) => sizes.put(k, v) }
+        }
+        rec.put("last_batch_update_ms",
+          so.map(_.allUpdatesTimeMs).getOrElse(-1L))
       } finally q.stop()
     }
 
@@ -93,7 +96,10 @@ object RocksLagProbe {
     run("warmup", 60)
     val ctl = run("control", 60)
     val day = run("daylag", lag)
-    println(s"""{"probe":"rocks_lag","control":$ctl,"daylag":$day}""")
+    val line = json.createObjectNode().put("probe", "rocks_lag")
+    line.set[ObjectNode]("control", ctl)
+    line.set[ObjectNode]("daylag", day)
+    println(json.writeValueAsString(line))
     spark.stop()
   }
 }

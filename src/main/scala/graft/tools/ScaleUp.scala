@@ -67,7 +67,8 @@ object ScaleUp {
 
   /** The one JSON line printed when the scaled copy is written. */
   def doneLine(out: String, factor: Int): String =
-    s"""{"scaled": ${Bench.jstr(out)}, "factor": $factor}"""
+    Bench.json.writeValueAsString(Bench.json.createObjectNode()
+      .put("scaled", out).put("factor", factor))
 
   def main(args: Array[String]): Unit = {
     val (src, out, factor) = (args(0), args(1), args(2).toInt)

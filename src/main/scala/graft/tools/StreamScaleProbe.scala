@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 /** Streaming-graph scaling probe (SCALING.md round-10 row): drains the
   * WHOLE four-stage graph — tail/parse/stats, z-score, vote, cooldown,
   * every boundary a FileTopic (the multi-process fabric) — over the
-  * bench's synthesized corpus at growing factors, reporting the units
+  * synthesized [[graft.StreamCorpus]] at growing factors, reporting the units
   * the graph is priced in (lines/s, stats-rows/s).
   *
   * Two growth axes, both run (`runMain ... <axis> <factorsCsv>`):
@@ -43,14 +43,13 @@ object StreamScaleProbe {
         if (axis == "hosts") (8 * factor, 1200) else (8, 1200 * factor)
       val base = Files.createTempDirectory(s"graft_sscale_$factor")
       val logs = base.resolve("logs").toString
-      // the bench stream leg's corpus, scaled along the chosen axis —
-      // ONE generator shared with Bench (graft.StreamCorpus), so these
-      // rows stay comparable to the bench's by construction; its
+      // the 8 x 1200 corpus scaled along the chosen axis; its
       // per-1200-interval slow band keeps the alert-side work mix
       // factor-invariant. Sentinel offset must clear a time-scaled
-      // corpus's whole span (nIntervals * 10 s), hence 1e9 not the
-      // bench's 1e8. Written up front: drain 1 ingests corpus AND
-      // sentinel in one batch, drain 2 plays the window-close pass.
+      // corpus's whole span (nIntervals * 10 s), hence 1e9, not the
+      // 1e8 that clears factor 1. Written up front: drain 1 ingests
+      // corpus AND sentinel in one batch, drain 2 plays the
+      // window-close pass.
       val nLines = graft.StreamCorpus.writeHosts(logs, nHosts, nIntervals)
       graft.StreamCorpus.writeSentinel(logs, offsetMs = 1000000000L)
 

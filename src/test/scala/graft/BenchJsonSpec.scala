@@ -7,37 +7,57 @@ import org.scalatest.funsuite.AnyFunSuite
   * follow the JVM's default locale, and their strings must be escaped.
   */
 class BenchJsonSpec extends AnyFunSuite {
-  test("jnum keeps a '.' decimal point under a comma-decimal default locale") {
+  private def germany[T](body: => T): T = {
     val saved = Locale.getDefault
     Locale.setDefault(Locale.GERMANY)
     try {
       assert(f"${1.5}%.2f" == "1,50", "the default locale is not comma-decimal")
-      assert(Bench.jnum(1.5) == "1.500")
-      assert(Bench.jnum(1234.567, 2) == "1234.57")
-      assert(Bench.jnum(9600 / 4.0, 0) == "2400")
+      body
     } finally Locale.setDefault(saved)
+  }
+
+  test("numbers keep their decimals and a '.' point under a comma-decimal locale") {
+    germany {
+      val line = Bench.json.writeValueAsString(Bench.json.createObjectNode()
+        .put("a", Bench.decimal(1.5)).put("b", Bench.decimal(1234.567, 2))
+        .put("c", Bench.decimal(9600 / 4.0, 0))
+        .put("d", Bench.decimal(2.675, 2)).put("e", Bench.decimal(0.0, 3)))
+      // half-up on the shortest decimal form, as String.format rounds
+      assert(line == """{"a":1.500,"b":1234.57,"c":2400,"d":2.68,"e":0.000}""")
+    }
   }
 
   test("the total line parses with a quote, a backslash and a tab in the sf path") {
-    val sf = "/data/a\"b\\c\td"
-    val line = Bench.compactLine(12.5, 3, """{"q1":"Boom"}""", "", 0.25, sf)
-    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
-    assert(json.get("sf").asText == sf)
-    assert(json.get("n_queries").asInt == 3)
-    assert(json.get("errors").get("q1").asText == "Boom")
-    assert(Bench.jstr("\u0001") == "\"\\u0001\"")
+    val odd = "/data/a\"b\\c\td\u0001e"
+    germany {
+      val line = Bench.compactLine(12.5, 3, Map("q1" -> odd, "q0" -> "Boom"),
+        0.25, odd)
+      val json = Bench.json.readTree(line)
+      assert(line.contains("\"value\":12.500,"))
+      assert(line.contains("\"calib\":0.250,"))
+      assert(json.get("metric").asText == "total")
+      assert(json.get("sf").asText == odd)
+      assert(json.get("n_queries").asInt == 3)
+      assert(json.get("errors").get("q1").asText == odd)
+      assert(json.get("errors").get("q0").asText == "Boom")
+      assert(json.get("detail").asText == "bench_out.json")
+      assert(line.getBytes("UTF-8").length < 400, line)
+      // the keys and their order are the line's contract
+      import scala.jdk.CollectionConverters._
+      assert(json.fieldNames.asScala.toSeq == Seq("metric", "value", "unit",
+        "n_queries", "errors", "calib", "sf", "detail"))
+      assert(json.get("errors").fieldNames.asScala.toSeq == Seq("q0", "q1"))
+    }
   }
 
   test("ScaleUp's line parses under a comma-decimal locale with a quote and a backslash in the path") {
-    val saved = Locale.getDefault
-    Locale.setDefault(Locale.GERMANY)
-    try {
+    germany {
       val out = "/data/sf\"x\\y"
       val line = graft.tools.ScaleUp.doneLine(out, 4)
-      val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+      val json = Bench.json.readTree(line)
       assert(json.get("scaled").asText == out)
       assert(json.get("factor").asInt == 4)
-    } finally Locale.setDefault(saved)
+    }
   }
 
   test("a SPARK_GRAFT_ONLY run writes only /tmp, never the committed full-suite files") {

@@ -67,27 +67,13 @@ class IntegrationSpec extends AnyFunSuite with TestSession {
     }
   }
 
-  test("bench families serve only registered queries, each from one " +
-      "family, and never a family's unshared trainer") {
-    val members = SparkEntry.families(spark, "unused").map(_.members.keySet)
-    val all = members.flatten
-    assert(all.toSet.subsetOf(SparkEntry.queries.keySet),
-      s"not registered: ${all.toSet -- SparkEntry.queries.keySet}")
-    assert(all.size == all.toSet.size,
-      s"in two families: ${all.diff(all.distinct)}")
-    val trainers = Set("r2_candidates", "e2_pq_codes", "s7_ivfpq",
-      "d4_dedup_minhash_lsh", "t15_bpe_merges", "s12_rrf_fusion")
-    assert(trainers.intersect(all.toSet).isEmpty)
-    // an oracle-only query is registered, oracle-gated, and never timed
-    // as a family member
+  test("oracle-only queries are registered and oracle-gated") {
     val oracleOnly = SparkEntry.oracleOnly
     assert(oracleOnly.nonEmpty)
     assert(oracleOnly.subsetOf(SparkEntry.queries.keySet),
       s"oracle-only but not registered: ${oracleOnly -- SparkEntry.queries.keySet}")
     assert(oracleOnly.subsetOf(SparkEntry.oracleSql.keySet),
       s"oracle-only without oracle SQL: ${oracleOnly -- SparkEntry.oracleSql.keySet}")
-    assert(oracleOnly.intersect(all.toSet).isEmpty,
-      s"oracle-only in a family: ${oracleOnly.intersect(all.toSet)}")
   }
 
   test("full pipeline composes: streaming stats -> parquet -> batch z-score -> alert candidates") {
