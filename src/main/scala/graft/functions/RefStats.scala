@@ -94,8 +94,9 @@ object RefStats {
   }
 
   /** Direct Scala port of the z-score step (stream_calc_z_score.js:66-104)
-    * — ground truth for tests and the building block of the faithful
-    * influence-feedback fold in [[graft.operators.ZScore]].
+    * over the reference's list of influenced values — used only by tests
+    * as the ground truth for `ZScore.MetricWindow`, the step that the
+    * batch fold and the streaming graph run.
     *
     * @return (influencedValue, avg, lb, ub, signal)
     */

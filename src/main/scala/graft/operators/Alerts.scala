@@ -105,6 +105,32 @@ object Alerts {
           FROM ($fsSql) fs LEFT JOIN ($ovr) o ON fs.service = o.service)"""
   }
 
+  // The R3 and R4 rules, one copy each for the batch fold below and the
+  // streaming graph's stages 3 and 4 (ApmStreaming.voteStream and
+  // cooldownStream). firedRef/alertsRef and alertsSql restate them on
+  // purpose: tests and the oracle compare both folds against those.
+
+  /** R3 counter update (stream_process_alerts.js:374-386): +1 per bad
+    * interval saturating at windowSz+1, -1 per good interval floored
+    * at 0.
+    */
+  private[graft] def nextCount(c: Int, bad: Boolean, cfg: AlertCfg): Int =
+    if (bad) { if (c <= cfg.windowSz) c + 1 else c }
+    else if (c > 0) c - 1 else c
+
+  /** R3 fire test on the counter [[nextCount]] returned for the row. */
+  private[graft] def fires(c: Int, bad: Boolean, cfg: AlertCfg): Boolean =
+    bad && c >= cfg.voteThreshold
+
+  /** R4 cooldown test (stream_process_alerts.js:449-467): a fired row
+    * is emitted when its service has emitted nothing yet
+    * (`lastEmit == Long.MinValue`) or its last emission is more than
+    * the cooldown before `ts`.
+    */
+  private[graft] def coolsDown(ts: Long, lastEmit: Long, cfg: AlertCfg): Boolean =
+    lastEmit == Long.MinValue ||
+      (ts - lastEmit) / 1000.0 > cfg.cooldownMs / 1000.0
+
   /** R3 + R4 — the stateful tail of the alert pipeline: leaky-bucket
     * vote counter per (server, service, lag), then per-service cooldown
     * dedup. Input: [[candidates]] output. [[alCsvCol]] assembles an
@@ -135,12 +161,9 @@ object Alerts {
           if (curKey == null || curKey != ((srv, svc, lag))) {
             curKey = (srv, svc, lag); c = 0
           }
-          var fire = false
-          if (bad == 1) {
-            if (c <= cfg.windowSz) c += 1 // saturate at windowSz+1 (:374-378)
-            fire = c >= cfg.voteThreshold
-          } else if (c > 0) c -= 1
-          if (fire) Some((srv, svc, lag, ts, causes)) else None
+          c = nextCount(c, bad == 1, cfg)
+          if (fires(c, bad == 1, cfg)) Some((srv, svc, lag, ts, causes))
+          else None
         }
       }
     // Phase 2 (R4): per-service cooldown on *emitted* alerts — keyed on
@@ -154,10 +177,10 @@ object Alerts {
         var lastEmit = Long.MinValue
         it.flatMap { case (srv, svc, lag, ts, causes) =>
           if (curSvc == null || curSvc != svc) { curSvc = svc; lastEmit = Long.MinValue }
-          val emit = lastEmit == Long.MinValue ||
-            (ts - lastEmit) / 1000.0 > cfg.cooldownMs / 1000.0
-          if (emit) { lastEmit = ts; Some((ts, srv, svc, lag, causes)) }
-          else None
+          if (coolsDown(ts, lastEmit, cfg)) {
+            lastEmit = ts
+            Some((ts, srv, svc, lag, causes))
+          } else None
         }
       }
       .toDF("alert_ts_ms", "server", "service", "lag", "causes")

@@ -26,9 +26,10 @@ import graft.functions.RefStats
   *  - [[zScoreFold]] — the *faithful* reference semantics including
   *    influence feedback (on signal, the stored value becomes
   *    `influence*x + (1-influence)*prev` — a sequential per-key recurrence,
-  *    stream_calc_z_score.js:95-97,301-305). Ordered per-key fold via
-  *    `groupByKey.flatMapGroups`; property-tested against the direct port
-  *    in [[RefStats.zScoreStepRef]] (no SQL oracle exists for a recurrence).
+  *    stream_calc_z_score.js:95-97,301-305). Ordered per-key fold whose
+  *    step, [[MetricWindow]], the streaming graph's stage 2 runs too;
+  *    property-tested against the direct port in [[RefStats.zScoreStepRef]]
+  *    and checked by the DuckDB recurrence of [[zScoreFoldSql]].
   *
   * Scale notes: the windowed variant is one shuffle on (server, service) —
   * every lag's frame aggregations run in one window-pass chain over one
@@ -36,9 +37,9 @@ import graft.functions.RefStats
   * is an explode over per-lag structs, so the stats input is evaluated
   * exactly once regardless of |lags| (r15; the former union-of-branches
   * re-evaluated the whole upstream stats subtree per lag). The fold
-  * variant shuffles once on (server, service, lag) and streams each
-  * group's rows through a fixed-size ring buffer (O(lag) memory per key,
-  * not O(history)).
+  * variant shuffles once on (server, service) and streams each key's
+  * rows through one fixed-size ring per lag and metric (O(lag) memory
+  * per key, not O(history)).
   */
 object ZScore {
 
@@ -510,15 +511,47 @@ object ZScore {
     * queue (`toIndexedSeq`) and re-materialized `flatten`/`map` lists
     * per (row x lag x metric) — O(lag) boxed ALLOCATION per step, which
     * at lag=144 over 130k rows is ~10^8 transient objects and made the
-    * fold GC-bound. Equality with zScoreStepRef is pinned by
-    * SparkOpsSpec ("zScoreFold == per-key loop over zScoreStepRef").
+    * fold GC-bound. Equality with zScoreStepRef is pinned, for all
+    * three metrics' avg/lb/ub/signal, by SparkOpsSpec ("zScoreFold ==
+    * per-key loop over zScoreStepRef").
+    *
+    * This is the one z-score step of main code: [[zScoreFold]] keeps a
+    * window per (key, lag, metric) while it walks a sorted partition, and
+    * the streaming graph's stage 2 (`ApmStreaming.zScoreStep`) keeps one
+    * per metric of a keyed group, [[load]]ing it from the group's stored
+    * state and storing [[saved]] back after the group's rows.
     */
-  private[operators] final class MetricWindow(lagCap: Int) {
+  private[graft] final class MetricWindow(lagCap: Int) {
     private val cap = math.max(lagCap, 1)
     private val vals = new Array[Double](cap)
     private val defd = new Array[Boolean](cap)
     private var start = 0
     private var used = 0
+
+    /** Replaces the window with `ring`, oldest first, where NaN marks an
+      * undefined slot — the stored form of `ApmStreaming.ZState`. A
+      * defined value is never NaN: the stream's metrics encode undefined
+      * as NaN, and an influenced value mixes two defined ones.
+      */
+    def load(ring: Array[Double]): this.type = {
+      var i = 0
+      while (i < ring.length) {
+        defd(i) = !ring(i).isNaN
+        vals(i) = if (defd(i)) ring(i) else 0.0
+        i += 1
+      }
+      start = 0
+      used = ring.length
+      this
+    }
+
+    /** The window, oldest first, NaN for an undefined slot: what [[load]]
+      * reads back.
+      */
+    def saved: Array[Double] = Array.tabulate(used) { i =>
+      val j = (start + i) % cap
+      if (defd(j)) vals(j) else Double.NaN
+    }
 
     /** zScoreStepRef + dequeue-at-lag + enqueue(influenced) in one call.
       * Returns (avg, lb, ub, signal) for the CURRENT window state (i.e.

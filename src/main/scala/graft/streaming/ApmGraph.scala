@@ -54,9 +54,13 @@ import graft.sources.{LogFileMicroBatchStream, LogFileOffset, LogFileSource}
   * committed-offset resume, at-least-once redelivery) is modeled and
   * test-pinned on [[FileTopic]].
   *
-  * (3 and 4 are separate queries because a flatMapGroupsWithState must be
-  * the last stateful operator of its query — exactly the reason the
-  * reference splits these into separate processes, too.)
+  * Stages 3 and 4 are separate queries by choice, not by a Spark limit:
+  * Spark runs the vote and cooldown flatMapGroupsWithState folds chained
+  * in one Append query (StreamingSpec's "alert vote + cooldown streams"
+  * test does). The split gives the cooldown its own service-keyed edge,
+  * checkpoint and, over the queue handoff, process. The reference runs
+  * both rules in its one alerts process (stream_process_alerts.js), so
+  * fusing the two stages would match it as well.
   */
 object ApmGraph {
 
@@ -285,13 +289,24 @@ object ApmGraph {
     }
   }
 
-  /** Stage 2: stats -> lag fan-out (Z5) -> keyed z-score state (Z1/Z2). */
+  /** Stage 2: stats -> lag fan-out (Z5) -> keyed z-score state (Z1/Z2).
+    * The graph runs the one lag config [[Lag]], so the fan-out is a
+    * projection of its literals; an undefined metric becomes NaN, the
+    * [[ApmStreaming.ZIn]] encoding.
+    */
   private def stage2(spark: SparkSession, workDir: String, in: Edge,
       out: Edge, limit: Option[Int]): StreamingQuery = {
     prepareStreams(spark)
+    import spark.implicits._
     val stats = read(spark, in, statsSchema, "stage2", limit)
-    write(ApmStreaming.zScoreStream(
-        ApmStreaming.fanOutLags(stats, Seq(Lag))).toDF(),
+    val zIn = stats.select(col("server"), col("service"),
+        lit(Lag.lag).as("lag"), lit(Lag.threshold).as("threshold"),
+        lit(Lag.influence).as("influence"), col("ts_ms"), col("tpm"),
+        coalesce(col("average"), lit(Double.NaN)).as("average"),
+        coalesce(col("per75"), lit(Double.NaN)).as("per75"),
+        coalesce(col("per95"), lit(Double.NaN)).as("per95"))
+      .as[ApmStreaming.ZIn]
+    write(ApmStreaming.zScoreStream(zIn).toDF(),
       Seq("server", "service"), out, checkpoint(workDir, "z", out))
   }
 

@@ -3,14 +3,15 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import scala.collection.mutable
 import graft.functions.RefStats
 import graft.operators.{Alerts, ZScore}
 
 /** Structured Streaming realization of the reference pipeline (SURVEY.md
-  * §2.8): the same column expressions as the batch operators, driven by
-  * `readStream` sources with watermarks, windowed aggregation, and keyed
-  * state.
+  * §2.8): the same column expressions and fold rules as the batch
+  * operators, driven by `readStream` sources with watermarks, windowed
+  * aggregation, and keyed state. Each keyed fold keeps its own state
+  * shape but calls the batch operator's rule for every row, so a rule
+  * has one implementation in main code.
   *
   * Reference mapping:
   *  - S1 file-tail source -> `spark.readStream` (file/kafka source); here
@@ -20,9 +21,11 @@ import graft.operators.{Alerts, ZScore}
   *    watermark delay; exact percentiles via sort_array(collect_list).
   *  - Z2 z-score -> flatMapGroupsWithState keyed on (server, service,
   *    lag), bounded per-key list state — the faithful influence-feedback
-  *    recurrence (stream_calc_z_score.js:232-307).
+  *    recurrence (stream_calc_z_score.js:232-307), stepped by the batch
+  *    fold's `ZScore.MetricWindow`.
   *  - R3/R4 alert folds -> flatMapGroupsWithState: leaky-bucket counter
-  *    keyed (server, service, lag); cooldown keyed (service).
+  *    keyed (server, service, lag); cooldown keyed (service). Both call
+  *    `Alerts.nextCount`/`fires`/`coolsDown`, like `Alerts.alerts`.
   *  - S6 buffered DB sink -> `foreachBatch` micro-batch writer (count/
   *    time flush becomes the trigger interval; exactly-once via
   *    checkpoint + idempotent write).
@@ -98,31 +101,26 @@ object ApmStreaming {
       per75_avg: Double, per75_lb: Double, per75_ub: Double, per75_signal: Int,
       per95_avg: Double, per95_lb: Double, per95_ub: Double, per95_signal: Int)
 
-  private def od(d: Double): Option[Double] = if (d.isNaN) None else Some(d)
-  private def dd(o: Option[Double]): Double = o.getOrElse(Double.NaN)
-
+  /** One keyed group's z-score fold: each metric's window is a
+    * [[ZScore.MetricWindow]], the step the batch [[ZScore.zScoreFold]]
+    * runs, loaded from and saved back to `st`'s arrays.
+    */
   def zScoreStep(rows: Iterator[ZIn], st: ZState, key: ZKey): (Iterator[ZOut], ZState) = {
-    val lists = Array(
-      mutable.Queue(st.avgL.map(od): _*),
-      mutable.Queue(st.p75L.map(od): _*),
-      mutable.Queue(st.p95L.map(od): _*))
+    val wins = Array(st.avgL, st.p75L, st.p95L)
+      .map(new ZScore.MetricWindow(key.lag).load(_))
     val out = rows.toArray.sortBy(_.ts_ms).map { r =>
-      val ms = Array(od(r.average), od(r.per75), od(r.per95))
-      val zs = (0 until 3).map { i =>
-        val (infl, avgV, lb, ub, sig) = RefStats.zScoreStepRef(
-          key.lag, key.threshold, key.influence, ms(i), lists(i).toIndexedSeq)
-        if (lists(i).size >= key.lag) lists(i).dequeue()
-        lists(i).enqueue(infl)
-        (dd(avgV), dd(lb), dd(ub), sig)
+      val zs = Array(r.average, r.per75, r.per95).zip(wins).map { case (m, w) =>
+        val (avg, lb, ub, sig) = w.stepAndPush(key.lag, key.threshold,
+          key.influence, Some(m).filterNot(_.isNaN))
+        (avg.getOrElse(Double.NaN), lb.getOrElse(Double.NaN),
+          ub.getOrElse(Double.NaN), sig)
       }
       ZOut(r.server, r.service, r.ts_ms, r.lag, r.tpm, r.average, r.per75, r.per95,
         zs(0)._1, zs(0)._2, zs(0)._3, zs(0)._4,
         zs(1)._1, zs(1)._2, zs(1)._3, zs(1)._4,
         zs(2)._1, zs(2)._2, zs(2)._3, zs(2)._4)
     }
-    (out.iterator,
-      ZState(lists(0).toArray.map(dd), lists(1).toArray.map(dd),
-        lists(2).toArray.map(dd)))
+    (out.iterator, ZState(wins(0).saved, wins(1).saved, wins(2).saved))
   }
 
   /** Z1-Z5 as a stateful streaming transform. Input: a streaming stats
@@ -142,21 +140,6 @@ object ApmStreaming {
       }
   }
 
-  /** Fan a streaming stats frame out per lag config (Z5) into [[ZIn]]. */
-  def fanOutLags(stats: DataFrame, lags: Seq[ZScore.LagCfg]): Dataset[ZIn] = {
-    import stats.sparkSession.implicits._
-    val lagRows = lags.map(c => (c.lag, c.threshold, c.influence))
-    val lagDf = stats.sparkSession.createDataFrame(lagRows)
-      .toDF("lag", "threshold", "influence")
-    stats.crossJoin(broadcast(lagDf))
-      .select(col("server"), col("service"), col("lag"), col("threshold"),
-        col("influence"), col("ts_ms"), col("tpm"),
-        coalesce(col("average"), lit(Double.NaN)).as("average"),
-        coalesce(col("per75"), lit(Double.NaN)).as("per75"),
-        coalesce(col("per95"), lit(Double.NaN)).as("per95"))
-      .as[ZIn]
-  }
-
   // ------------------------------------------------------------- alerts
 
   case class VoteIn(server: String, service: String, lag: Int, ts_ms: Long,
@@ -173,12 +156,9 @@ object ApmStreaming {
         (key: (String, String, Int), rows: Iterator[VoteIn], state: GroupState[Int]) =>
           var c = state.getOption.getOrElse(0)
           val out = rows.toArray.sortBy(_.ts_ms).flatMap { r =>
-            var fire = false
-            if (r.bad == 1) {
-              if (c <= cfg.windowSz) c += 1
-              fire = c >= cfg.voteThreshold
-            } else if (c > 0) c -= 1
-            if (fire) Some(VoteOut(r.server, r.service, r.lag, r.ts_ms, r.causes))
+            c = Alerts.nextCount(c, r.bad == 1, cfg)
+            if (Alerts.fires(c, r.bad == 1, cfg))
+              Some(VoteOut(r.server, r.service, r.lag, r.ts_ms, r.causes))
             else None
           }
           state.update(c)
@@ -210,9 +190,8 @@ object ApmStreaming {
         (svc: String, rows: Iterator[VoteOut], state: GroupState[Long]) =>
           var last = state.getOption.getOrElse(Long.MinValue)
           val out = rows.toArray.sortBy(r => (r.ts_ms, r.server, r.lag)).flatMap { r =>
-            val emit = last == Long.MinValue ||
-              (r.ts_ms - last) / 1000.0 > cfg.cooldownMs / 1000.0
-            if (emit) { last = r.ts_ms; Some(r) } else None
+            if (Alerts.coolsDown(r.ts_ms, last, cfg)) { last = r.ts_ms; Some(r) }
+            else None
           }
           state.update(last)
           out.iterator

@@ -173,10 +173,7 @@ object JdbcSink {
     * (stream_insert_db.js:339-353 semantics, crash-safe).
     */
   def sinkToJdbc(df: DataFrame, url: String, table: String,
-      checkpoint: String, parkDir: String,
-      availableNow: Boolean = true, trigger: String = "5 seconds")
-      : StreamingQuery =
+      checkpoint: String, parkDir: String): StreamingQuery =
     ApmStreaming.sinkWithRequeue(df, checkpoint, parkDir,
-      (batch, _) => writeBatch(batch, url, table),
-      availableNow = availableNow, trigger = trigger)
+      (batch, _) => writeBatch(batch, url, table))
 }

@@ -2,13 +2,21 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-/** Dev tool: dump `explain("formatted")` physical plans of flagship
-  * queries to PLANS.md — committed evidence for the plan properties the
-  * engine is designed around (pushdown, pruning, broadcast, partial
-  * aggregation, codegen spans). PlanSpec asserts the load-bearing
-  * properties; this artifact makes them reviewable without a REPL.
+/** Dev tool: dump `explain("formatted")` physical plans of registered
+  * queries.
+  *
+  * With no query names it writes the flagship queries' plans to
+  * PLANS.md — committed evidence for the plan properties the engine is
+  * designed around (pushdown, pruning, broadcast, partial aggregation,
+  * codegen spans). PlanSpec asserts the load-bearing properties; this
+  * artifact makes them reviewable without a REPL.
+  *
+  * Given registered query names, it prints their plans to stdout
+  * instead, so any query's scan pushdown (PushedFilters/ReadSchema),
+  * broadcast joins and WholeStageCodegen spans can be reviewed.
   *
   * Usage: runMain graft.tools.PlansMain [sfDir] [outFile]
+  *        runMain graft.tools.PlansMain <sfDir> <queryName>...
   */
 object PlansMain {
   private val flagships: Seq[(String, String)] = Seq(
@@ -29,20 +37,28 @@ object PlansMain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.drop(1).headOption.getOrElse("PLANS.md")
+    val rest = args.drop(1)
     val spark = graft.GraftSession()
-    val sb = new StringBuilder
-    sb.append("# PLANS — flagship physical plans (generated by graft.tools.PlansMain)\n\n")
-    sb.append(s"Source data: `$sfDir`. The load-bearing properties below are\n")
-    sb.append("asserted by PlanSpec; this file is the reviewable evidence.\n")
-    flagships.foreach { case (name, why) =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n$why\n\n```\n$plan```\n")
+    def plan(name: String): String =
+      graft.SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+    if (rest.nonEmpty && rest.forall(graft.SparkEntry.queries.contains)) {
+      rest.foreach { name =>
+        println(s"\n===================== $name =====================")
+        println(plan(name))
+      }
+    } else {
+      val out = rest.headOption.getOrElse("PLANS.md")
+      val sb = new StringBuilder
+      sb.append("# PLANS — flagship physical plans (generated by graft.tools.PlansMain)\n\n")
+      sb.append(s"Source data: `$sfDir`. The load-bearing properties below are\n")
+      sb.append("asserted by PlanSpec; this file is the reviewable evidence.\n")
+      flagships.foreach { case (name, why) =>
+        sb.append(s"\n## $name\n\n$why\n\n```\n${plan(name)}```\n")
+      }
+      Files.writeString(Paths.get(out), sb.toString)
+      println(s"wrote $out (${sb.length} chars)")
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"wrote $out (${sb.length} chars)")
     spark.stop()
   }
 }

@@ -34,28 +34,39 @@ class SparkOpsSpec extends AnyFunSuite with TestSession {
   test("zScoreFold == per-key loop over zScoreStepRef") {
     import spark.implicits._
     val rnd = new Random(5)
+    def metric(): Option[Double] =
+      if (rnd.nextDouble() < 0.15) None else Some(rnd.nextDouble() * 100)
     val rows = for {
       srv <- Seq("s0", "s1"); svc <- Seq("a", "b"); i <- 0 until 40
-    } yield (srv, svc, i * 1000L, Some(1.0),
-      if (rnd.nextDouble() < 0.15) None else Some(rnd.nextDouble() * 100),
-      Some(rnd.nextDouble() * 100), Some(rnd.nextDouble() * 100))
+    } yield (srv, svc, i * 1000L, Some(1.0), metric(), metric(), metric())
     val df = rows.toDF("server", "service", "ts_ms", "tpm", "average", "per75", "per95")
     val cfg = ZScore.LagCfg(5, 2.0, 0.3)
+    val zCols = for {
+      m <- Seq("average", "per75", "per95"); f <- Seq("avg", "lb", "ub", "signal")
+    } yield s"${m}_$f"
+    // key -> per metric (avg, lb, ub, signal)
     val got = ZScore.zScoreFold(df, Seq(cfg))
-      .select("server", "service", "ts_ms", "average_avg", "average_signal")
+      .select((Seq("server", "service", "ts_ms") ++ zCols).map(col): _*)
       .collect()
       .map(r => ((r.getString(0), r.getString(1), r.getLong(2)),
-        (Option(r.get(3)).map(_.asInstanceOf[Double]), r.getInt(4)))).toMap
-    // naive per-key replay
+        (0 until 3).map { m =>
+          def d(i: Int) = Option(r.get(3 + 4 * m + i)).map(_.asInstanceOf[Double])
+          (d(0), d(1), d(2), r.getInt(3 + 4 * m + 3))
+        })).toMap
+    assert((0 until 3).forall(m => got.values.exists(_(m)._4 != 0)),
+      "a metric never signals")
+    // naive per-key replay, one reference list per metric
     rows.groupBy(r => (r._1, r._2)).foreach { case ((srv, svc), rs) =>
-      val lst = scala.collection.mutable.Queue.empty[Option[Double]]
-      rs.sortBy(_._3).foreach { case (_, _, ts, _, a, _, _) =>
-        val (infl, avg, _, _, sig) =
-          RefStats.zScoreStepRef(cfg.lag, cfg.threshold, cfg.influence, a, lst.toIndexedSeq)
-        if (lst.size >= cfg.lag) lst.dequeue()
-        lst.enqueue(infl)
-        val (gAvg, gSig) = got((srv, svc, ts))
-        assert(gAvg == avg && gSig == sig, s"$srv/$svc@$ts")
+      val lsts = Seq.fill(3)(scala.collection.mutable.Queue.empty[Option[Double]])
+      rs.sortBy(_._3).foreach { case (_, _, ts, _, a, p75, p95) =>
+        Seq(a, p75, p95).zip(lsts).zipWithIndex.foreach { case ((x, lst), m) =>
+          val (infl, avg, lb, ub, sig) =
+            RefStats.zScoreStepRef(cfg.lag, cfg.threshold, cfg.influence, x, lst.toIndexedSeq)
+          if (lst.size >= cfg.lag) lst.dequeue()
+          lst.enqueue(infl)
+          assert(got((srv, svc, ts))(m) == ((avg, lb, ub, sig)),
+            s"$srv/$svc@$ts ${zCols(4 * m)}")
+        }
       }
     }
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -61,36 +62,51 @@ class StreamingSpec extends AnyFunSuite with TestSession with RocksDbSupport {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val rnd = new scala.util.Random(17)
-    val cfg = ZScore.LagCfg(4, 2.0, 0.5)
+    // lag 12 exceeds the 10 rows a key gets per chunk, so each chunk
+    // steps a ring that was saved to and loaded from the state store
+    // mid-window; ~15% of metrics are undefined (NaN) and ~10% spike
+    val cfg = ZScore.LagCfg(12, 1.5, 0.5)
+    def metric(): Double =
+      if (rnd.nextDouble() < 0.15) Double.NaN
+      else rnd.nextDouble() * (if (rnd.nextDouble() < 0.1) 1000 else 100)
     val data = for {
-      srv <- Seq("s0", "s1"); i <- 0 until 30
+      srv <- Seq("s0", "s1"); i <- 0 until 40
     } yield ApmStreaming.ZIn(srv, "svc", cfg.lag, cfg.threshold, cfg.influence,
-      i * 1000L, 1.0, rnd.nextDouble() * 100,
-      rnd.nextDouble() * 100, rnd.nextDouble() * 100)
+      i * 1000L, 1.0, metric(), metric(), metric())
+    val zCols = for {
+      m <- Seq("average", "per75", "per95"); f <- Seq("avg", "lb", "ub", "signal")
+    } yield s"${m}_$f"
+    // (server, ts_ms) -> the 12 z columns, null and NaN both read as NaN
+    def byKey(df: DataFrame): Map[(String, Long), Seq[Double]] =
+      df.select((Seq("server", "ts_ms") ++ zCols).map(col): _*).collect().map { r =>
+        (r.getString(0), r.getLong(1)) -> (2 until r.length).map { i =>
+          if (r.isNullAt(i)) Double.NaN
+          else r.get(i) match { case d: Double => d; case n: Int => n.toDouble }
+        }
+      }.toMap
     val in = MemoryStream[ApmStreaming.ZIn]
     val out = ApmStreaming.zScoreStream(in.toDS())
     val q = out.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName(s"z_out$tag").start()
     try {
-      // feed in two chunks to exercise state persistence across batches
-      val (c1, c2) = data.partition(_.ts_ms < 15000L)
-      in.addData(c1); q.processAllAvailable()
-      in.addData(c2); q.processAllAvailable()
-      val got = spark.table(s"z_out$tag").as[ApmStreaming.ZOut].collect()
-        .map(o => (o.server, o.ts_ms) -> ((o.average_avg, o.average_signal))).toMap
-      // batch fold over the same data
+      // four 10 s chunks: the state crosses three batch boundaries
+      data.groupBy(_.ts_ms / 10000L).toSeq.sortBy(_._1).foreach { case (_, chunk) =>
+        in.addData(chunk); q.processAllAvailable()
+      }
+      val got = byKey(spark.table(s"z_out$tag"))
       val statsDf = data.map(z => (z.server, z.service, z.ts_ms, Some(z.tpm),
-          Some(z.average), Some(z.per75), Some(z.per95)))
+          Some(z.average).filterNot(_.isNaN), Some(z.per75).filterNot(_.isNaN),
+          Some(z.per95).filterNot(_.isNaN)))
         .toDF("server", "service", "ts_ms", "tpm", "average", "per75", "per95")
-      val exp = ZScore.zScoreFold(statsDf, Seq(cfg))
-        .select("server", "ts_ms", "average_avg", "average_signal")
-        .collect().map(r => (r.getString(0), r.getLong(1)) ->
-          ((Option(r.get(2)).map(_.asInstanceOf[Double]).getOrElse(Double.NaN), r.getInt(3)))).toMap
-      assert(got.size == exp.size)
-      exp.foreach { case (k, (eAvg, eSig)) =>
-        val (gAvg, gSig) = got(k)
-        assert((gAvg.isNaN && eAvg.isNaN) || gAvg == eAvg, s"$k avg")
-        assert(gSig == eSig, s"$k sig")
+      val exp = byKey(ZScore.zScoreFold(statsDf, Seq(cfg)))
+      assert(got.keySet == exp.keySet)
+      Seq(3, 7, 11).foreach { i =>
+        assert(exp.values.exists(_(i) != 0.0), s"no ${zCols(i)} fired")
+      }
+      exp.foreach { case (k, e) =>
+        got(k).zip(e).zip(zCols).foreach { case ((g, x), c) =>
+          assert((g.isNaN && x.isNaN) || g == x, s"$k $c: stream $g, batch $x")
+        }
       }
     } finally q.stop()
   }
